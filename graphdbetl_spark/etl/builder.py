@@ -13,7 +13,16 @@ type compiles to ONE lazy DataFrame:
 
 so Catalyst owns pushdown/pruning and the write is partition-parallel
 columnar parquet (replacing the row-append sink R9 and the BLOCK_SIZE
-TODO D8).
+TODO D8). Across a build the pipeline runs each piece of work once:
+
+    plan each source once per file version (sources.catalog.read_cached)
+      -> write each type once (write)
+      -> export reads the written graph (neo4j_export, serialize_data)
+
+After ``write()`` (parquet) each type's ``dataframe`` is the written
+table, read back with the schema it was built with, so later consumers
+scan those files instead of re-running scan -> merge -> join from the
+sources — and agree with the written graph even if a source changed.
 
 Config dialect (examples/comptox_ai/config.yml):
 
@@ -38,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from graphdbetl_spark.etl.schema import conform_to_schema, merge_schemas
 from graphdbetl_spark.operators.dedup import dedup_merge_first_wins
-from graphdbetl_spark.sources.readers import read_source
+from graphdbetl_spark.sources.catalog import read_cached
 
 # Canonical output columns added to every node table.
 NODE_ID = "_id"  # harmonized id (reference id_key, graph_db_builder.py:463-467)
@@ -57,6 +66,7 @@ class NodeType:
     id_key_label: str | None
     sources: dict[str, dict[str, Any]]  # source name -> {table, id_key, uri_key}
     dataframe: DataFrame | None = None
+    written_to: str | None = None  # parquet dir ``dataframe`` reads, after write()
 
 
 @dataclass
@@ -69,6 +79,7 @@ class RelationshipType:
     start_node: str | None = None
     end_node: str | None = None
     dataframe: DataFrame | None = None
+    written_to: str | None = None  # parquet dir ``dataframe`` reads, after write()
 
 
 @dataclass
@@ -79,7 +90,8 @@ class GraphDBBuilder:
     Unlike the reference, construction is side-effect free (no server
     connections at __init__ — SURVEY.md flags the reference's
     construction-time side effects, graph_db_builder.py:113-115);
-    ``build()`` produces lazy plans, ``write()`` executes them.
+    ``build()`` produces lazy plans, ``write()`` executes them and
+    rebinds each type's ``dataframe`` to the written table.
     """
 
     spark: SparkSession
@@ -113,7 +125,7 @@ class GraphDBBuilder:
         return spec
 
     def _read(self, source_name: str, table: str) -> DataFrame:
-        return read_source(self.spark, self._source_spec(source_name), table)
+        return read_cached(self.spark, self._source_spec(source_name), table)
 
     # -- node pipeline (reference stages R2-R10 collapsed into one plan)
 
@@ -174,15 +186,19 @@ class GraphDBBuilder:
             if kind == "foreign_key":
                 start, end = src["start"], src["end"]
                 rel.start_node, rel.end_node = start.get("node"), end.get("node")
-                sdf = self._read(src_name, start["table"])
-                edf = self._read(src_name, end["table"])
+                # Aliased sides: a self-referencing FK reads one cached
+                # plan for both, and only the alias tells its sides apart.
+                sdf = self._read(src_name, start["table"]).alias("_s")
+                edf = self._read(src_name, end["table"]).alias("_e")
+                s_col = lambda c: F.col(f"_s.`{c}`")  # noqa: E731
+                e_col = lambda c: F.col(f"_e.`{c}`")  # noqa: E731
                 # Equi-join on the FK; dimension side broadcasts when small
                 # (AQE/threshold decide; no manual hint needed at scale).
-                joined = sdf.join(edf, sdf[start["key"]] == edf[end["key"]], "inner")
+                joined = sdf.join(edf, s_col(start["key"]) == e_col(end["key"]), "inner")
                 frames.append(
                     joined.select(
-                        F.concat(F.lit(f"{start['table']}:"), sdf[start.get("id_key", start["key"])].cast("string")).alias(EDGE_SRC_ID),
-                        F.concat(F.lit(f"{end['table']}:"), edf[end.get("id_key", end["key"])].cast("string")).alias(EDGE_DST_ID),
+                        F.concat(F.lit(f"{start['table']}:"), s_col(start.get("id_key", start["key"])).cast("string")).alias(EDGE_SRC_ID),
+                        F.concat(F.lit(f"{end['table']}:"), e_col(end.get("id_key", end["key"])).cast("string")).alias(EDGE_DST_ID),
                         F.lit(src_name).alias(NODE_SRC),
                     )
                 )
@@ -239,21 +255,30 @@ class GraphDBBuilder:
     def write(self, out_dir: str, fmt: str = "parquet") -> None:
         """Materialize the graph DB: ``out/nodes/<Label>``,
         ``out/relationships/<Type>`` (reference /nodes and
-        /relationships HDF5 groups, :153-155; CSV export covers D6)."""
+        /relationships HDF5 groups, :153-155; CSV export covers D6).
+
+        A parquet write rebinds each type's ``dataframe`` to the table
+        it wrote, so the type's plan executes once per build; CSV keeps
+        the plan, since reading CSV back would lose the column types."""
         if not self.nodes and not self.relationships:
             self.build()
         for label, node in self.nodes.items():
-            self._write_one(node.dataframe, os.path.join(out_dir, "nodes", label), fmt)
+            self._write_one(node, os.path.join(out_dir, "nodes", label), fmt)
         for label, rel in self.relationships.items():
-            self._write_one(rel.dataframe, os.path.join(out_dir, "relationships", label), fmt)
+            self._write_one(rel, os.path.join(out_dir, "relationships", label), fmt)
 
-    @staticmethod
-    def _write_one(df: DataFrame, path: str, fmt: str) -> None:
-        writer = df.write.mode("overwrite")
+    def _write_one(self, t: NodeType | RelationshipType, path: str, fmt: str) -> None:
+        path = os.path.abspath(path)
+        if fmt != "csv" and t.written_to == path:
+            return  # ``dataframe`` already is this table; it cannot overwrite itself
+        writer = t.dataframe.write.mode("overwrite")
         if fmt == "csv":
             writer.option("header", "true").csv(path)
-        else:
-            writer.parquet(path)
+            return
+        writer.parquet(path)
+        # The given schema spares the read-back a footer-inference job.
+        t.dataframe = self.spark.read.schema(t.dataframe.schema).parquet(path)
+        t.written_to = path
 
     # Reference parity alias (build_hdf5_database -> parquet database).
     def serialize_data(self, out_dir: str, to: str = "csv") -> None:

@@ -9,6 +9,11 @@ cluster scale each partition's shard is one import file. (The live
 `org.neo4j.spark.DataSource` connector would slot in behind the same
 method if its jar is on the classpath; CSV is the dependency-free
 path.)
+
+After ``GraphDBBuilder.write()`` each type's ``dataframe`` is the
+written parquet table, so the export is one scan-and-write job per type
+over the written graph: no source re-read, merge shuffle or FK join,
+and the CSVs hold exactly the rows the parquet graph holds.
 """
 
 from __future__ import annotations

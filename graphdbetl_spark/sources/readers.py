@@ -121,6 +121,23 @@ def mysql_source_to_jdbc(source: dict[str, Any]) -> dict[str, Any]:
     return {"source type": "jdbc", "url": url, **opts}
 
 
+def source_kind(source: dict[str, Any]) -> str:
+    """The declared source type, lower-cased; parquet when absent."""
+    return (source.get("source type") or source.get("type") or "parquet").lower()
+
+
+def resolve_path(source: dict[str, Any], table: str) -> str:
+    """The file or directory a file-format source reads for ``table``:
+    ``{path}/{table}.{ext}`` if it exists, else ``{path}/{table}``, or
+    ``path`` itself when it is not a directory."""
+    path = source["path"]
+    if os.path.isdir(path):
+        kind = source_kind(source)
+        candidate = os.path.join(path, f"{table}.{kind}")
+        path = candidate if os.path.exists(candidate) else os.path.join(path, table)
+    return path
+
+
 def read_source(
     spark: SparkSession,
     source: dict[str, Any],
@@ -135,7 +152,7 @@ def read_source(
     (with partitionColumn options) parallel range reads, replacing the
     reference's single unbuffered cursor (``graph_db_builder.py:482-486``).
     """
-    kind = (source.get("source type") or source.get("type") or "parquet").lower()
+    kind = source_kind(source)
     if kind == "mysql":
         source = mysql_source_to_jdbc(source)
         kind = "jdbc"
@@ -148,12 +165,7 @@ def read_source(
         reader = reader.option("dbtable", source.get("dbtable", table))
         return reader.load()
 
-    path = source["path"]
-    if os.path.isdir(path):
-        ext = "csv" if kind == "csv" else kind
-        candidate = os.path.join(path, f"{table}.{ext}")
-        path = candidate if os.path.exists(candidate) else os.path.join(path, table)
-
+    path = resolve_path(source, table)
     if kind == "parquet":
         return spark.read.parquet(path)
     if kind == "orc":

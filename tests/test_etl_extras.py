@@ -35,6 +35,28 @@ def test_neo4j_export_headers(spark, tmp_path):
     assert header.startswith(":START_ID,:END_ID,:TYPE")
 
 
+def test_export_after_write_is_one_shuffle_free_job_per_type(spark, tmp_path):
+    """After write(), the export reads the written tables: one job per
+    type, each a single stage with no shuffle (no re-run merge or join)."""
+    builder = GraphDBBuilder(spark, fixture_config(SF_DIR)).build()
+    builder.write(str(tmp_path / "graph"))
+    sc = spark.sparkContext
+    sc.setJobGroup("neo4j-export-shape", "neo4j-export-shape")
+    try:
+        export_for_neo4j_admin(builder, str(tmp_path / "neo4j"))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup("neo4j-export-shape")
+    assert len(jobs) == len(builder.nodes) + len(builder.relationships) == 5
+    for j in jobs:
+        stage_ids = store.job(j).stageIds()
+        assert stage_ids.size() == 1
+        stage = store.lastStageAttempt(stage_ids.apply(0))
+        assert stage.shuffleReadBytes() == 0 and stage.shuffleWriteBytes() == 0
+
+
 def test_soft_fail_skips_bad_source(spark):
     cfg = fixture_config(SF_DIR)
     cfg["Nodes"]["Broken"] = {

@@ -116,3 +116,123 @@ def test_mixed_format_sources_harmonize(spark, tmp_path):
     # both sources' uri keys survive harmonization
     assert df.filter(F.col("c_name").isNotNull()).count() == pq_rows
     assert df.filter(F.col("s_name").isNotNull()).count() == cs_rows
+
+
+# -- source-plan cache and materialize-once ---------------------------------
+
+
+def _copy_sf(dst) -> str:
+    """A writable copy of the sf0.001 fixture (the original is read-only)."""
+    import shutil
+
+    os.makedirs(dst)
+    for name in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, name), os.path.join(dst, name))
+    return str(dst)
+
+
+def _rewrite(spark, sf: str, table: str, n: int) -> None:
+    """Overwrite ``table`` of the copy ``sf`` with ``n`` of its rows, as
+    Spark rewrites a table: new part files, the old ones deleted."""
+    src = spark.read.parquet(os.path.join(SF_DIR, f"{table}.parquet"))
+    src.limit(n).write.mode("overwrite").parquet(os.path.join(sf, f"{table}.parquet"))
+
+
+def _jobs_in(spark, group: str, fn):
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_build_over_unchanged_files_runs_no_jobs(spark, tmp_path):
+    cfg = fixture_config(_copy_sf(tmp_path / "sf"))
+    _, first = _jobs_in(spark, "plan-cache-first", lambda: GraphDBBuilder(spark, cfg).build())
+    b, second = _jobs_in(spark, "plan-cache-second", lambda: GraphDBBuilder(spark, cfg).build())
+    assert first > 0  # parquet footer jobs of the first planning
+    assert second == 0
+    assert b.nodes["Party"].dataframe.count() == 160
+
+
+def test_rewritten_source_is_seen_by_next_build(spark, tmp_path):
+    from graphdbetl_spark.sources import catalog
+
+    sf = _copy_sf(tmp_path / "sf")
+    cfg = fixture_config(sf)
+    assert GraphDBBuilder(spark, cfg).build_node("Party").count() == 160
+    size = len(catalog._table_cache)
+    _rewrite(spark, sf, "customer", 40)
+    assert GraphDBBuilder(spark, cfg).build_node("Party").count() == 40 + 10
+    assert len(catalog._table_cache) == size  # the new plan took the old one's slot
+    assert GraphDBBuilder(spark, cfg).build_relationship("CUSTOMER_FROM_NATION").count() == 40
+
+
+def test_load_table_sees_rewritten_table(spark, tmp_path):
+    from graphdbetl_spark.sources.catalog import load_table
+
+    sf = _copy_sf(tmp_path / "sf")
+    assert load_table(spark, sf, "orders").count() == 1500
+    assert load_table(spark, sf, "orders") is load_table(spark, sf, "orders")
+    _rewrite(spark, sf, "orders", 123)
+    assert load_table(spark, sf, "orders").count() == 123
+
+
+def test_self_referencing_foreign_key(spark):
+    """Both sides of a self-FK come from one cached plan; the join must
+    still tell them apart (nation -> the nation whose key is its region)."""
+    import pyarrow.parquet as pq
+
+    cfg = fixture_config(SF_DIR)
+    cfg["Relationships"] = {"NATION_REGION_TWIN": {"sources": {"TPCH": {
+        "type": "foreign_key",
+        "start": {"table": "nation", "key": "n_regionkey", "id_key": "n_nationkey"},
+        "end": {"table": "nation", "key": "n_nationkey"},
+    }}}}
+    rel = GraphDBBuilder(spark, cfg).build_relationship("NATION_REGION_TWIN")
+    nation = pq.read_table(os.path.join(SF_DIR, "nation.parquet")).to_pylist()
+    want = sorted((f"nation:{n['n_nationkey']}", f"nation:{n['n_regionkey']}") for n in nation)
+    assert sorted((r._start_id, r._end_id) for r in rel.collect()) == want
+
+
+def test_write_rebinds_each_type_to_the_written_table(spark, tmp_path):
+    b = GraphDBBuilder(spark, fixture_config(SF_DIR)).build()
+    out = str(tmp_path / "graph")
+    b.write(out)
+    party = b.nodes["Party"]
+    assert party.written_to == os.path.join(out, "nodes", "Party")
+    files = party.dataframe.inputFiles()
+    assert files and all(f"{party.written_to}/part-" in f for f in files)
+    # Writing the same graph to the same place again is a no-op, not a
+    # read-while-overwrite error; to a new place it copies the table.
+    b.write(out)
+    b.write(str(tmp_path / "graph2"))
+    back = spark.read.parquet(str(tmp_path / "graph2" / "nodes" / "Party"))
+    assert back.count() == 160
+
+
+def test_export_matches_written_graph_after_source_change(spark, tmp_path):
+    """The neo4j export of a written graph holds the written rows, even
+    when a source changed between write() and the export."""
+    from graphdbetl_spark.etl.neo4j_export import export_for_neo4j_admin
+
+    sf = _copy_sf(tmp_path / "sf")
+    b = GraphDBBuilder(spark, fixture_config(sf)).build()
+    out = str(tmp_path / "out")
+    b.write(os.path.join(out, "graph"))
+    _rewrite(spark, sf, "customer", 40)
+    _rewrite(spark, sf, "lineitem", 100)
+    export_for_neo4j_admin(b, os.path.join(out, "neo4j"))
+
+    def rows(kind: str, label: str, written_cols: list[str], csv_cols: list[str]):
+        written = spark.read.parquet(os.path.join(out, "graph", kind, label))
+        csv = spark.read.option("header", "true").csv(os.path.join(out, "neo4j", kind, label))
+        return (sorted(tuple(r) for r in written.select(*written_cols).collect()),
+                sorted(tuple(r) for r in csv.select(*[f"`{c}`" for c in csv_cols]).collect()))
+
+    written, exported = rows("nodes", "Party", ["_id", "c_name", "s_name"], ["nodeId:ID", "c_name", "s_name"])
+    assert len(written) == 160 and exported == written
+    for label, n in (("CUSTOMER_FROM_NATION", 150), ("ORDER_CONTAINS_PART", 6000)):
+        written, exported = rows("relationships", label, ["_start_id", "_end_id"], [":START_ID", ":END_ID"])
+        assert len(written) == n and exported == written

@@ -47,6 +47,24 @@ def test_jdbc_predicate_pushdown(spark, derby_url):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "SCORE" in plan
 
+def test_jdbc_and_mysql_sources_never_enter_plan_cache(spark, derby_url):
+    """A database table can change under an unchanged URL, so JDBC and
+    MySQL reads are planned afresh every time, builder reads included."""
+    from graphdbetl_spark.etl.builder import GraphDBBuilder
+    from graphdbetl_spark.sources import catalog
+
+    src = {"source type": "jdbc", "url": derby_url, "driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
+    keys = set(catalog._table_cache)
+    assert catalog.read_cached(spark, src, "people") is not catalog.read_cached(spark, src, "people")
+    cfg = {"Database": {"name": "g"}, "Sources": {"DB": src},
+           "Nodes": {"Person": {"sources": {"DB": {"table": "people", "id_key": "ID", "uri_key": "NAME"}}}}}
+    assert GraphDBBuilder(spark, cfg).build_node("Person").count() == 3
+    mysql = {"source type": "mysql", "database name": "x", "host": "127.0.0.1", "port": 1}
+    with pytest.raises(Exception):
+        catalog.read_cached(spark, mysql, "people")
+    assert set(catalog._table_cache) == keys
+
+
 class TestMysqlOptionFile:
     """The reference's actual connection contract: ~/.my.cnf-style
     option files (sql_io.py:4-13) and the -m CLI flag
