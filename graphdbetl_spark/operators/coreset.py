@@ -19,8 +19,8 @@ cost model as train_quality_classifier's gradient rounds.
 Determinism / oracle parity (the sim_cosine_topk conventions):
 - distance is cosine distance 1 − dot/(‖a‖·‖b‖), the dot and both
   squared norms accumulated dimension-major over raw doubles (TRUE left
-  folds, `_np_seq_sum`) and divided by the PRODUCT of the two norms —
-  bit-identical to DuckDB's ``list_cosine_similarity``;
+  folds, ``fold_dots``/``seq_sum``) and divided by the PRODUCT of the
+  two norms — bit-identical to DuckDB's ``list_cosine_similarity``;
 - max-over-centers is exact (IEEE max has no rounding);
 - the next center is argmin of max-cosine with ties to the LOWER id,
   via a (score ASC, id ASC) total order both engines replay;
@@ -55,57 +55,20 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from graphdbetl_spark.operators.similarity import _np_seq_sum
+from graphdbetl_spark.functions.vectors import (
+    arrow_matrix,
+    fold_dots,
+    list_column,
+    seq_sum,
+)
 from graphdbetl_spark.operators.skew import adaptive_parallelism
 
-# Plan-evidence hook (r11 verdict #6): the committed plan dumps for
-# iterative operators showed only the final 8-row trajectory frame
-# (Scan ExistingRDD) — nothing about the per-round job the §2/§4
-# optimizations target. tools/dump_plans_r12.py sets this to a callable
-# receiving (label, DataFrame) for ONE round's pre-collect frame; None
-# in production (a single identity check per round).
+# Plan-evidence hook: the final frame of an iterative operator is the
+# driver-built trajectory (Scan ExistingRDD), which shows nothing about
+# the per-round job. tools/dump_plans.py sets this to a callable
+# receiving (label, DataFrame) for each round's pre-collect frame and
+# keeps the first; None in production (one identity check per round).
 PLAN_PROBE = None
-
-
-def _arrow_ids_vecs(rb, id_col: str):
-    """(ids, vectors) from a mapInArrow record batch whose columns are
-    (id_col, __v list<double>, ...): ids as int64 ndarray, vectors as a
-    zero-copy (n, dim) float64 view over the list column's values
-    buffer (guide §4.2 — no per-row tolist, no pandas object Series).
-
-    Uniform row width is ASSERTED from the list offsets before the
-    reshape (r11 ADVICE): ``reshape(n, -1)`` alone only checks total
-    divisibility, so a ragged or null-list batch whose flattened
-    length happens to divide n would silently misalign every
-    subsequent vector — wrong-but-plausible cosine scores where the
-    old tolist() path raised. Null rows/elements are rejected for the
-    same reason (a NaN-filled row would desync the trajectory)."""
-    import numpy as np
-
-    ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
-        zero_copy_only=False
-    )
-    lv = rb.column(rb.schema.get_field_index("__v"))
-    if lv.null_count:
-        raise ValueError(
-            f"null embedding rows in '{id_col}' batch — filter them "
-            "out before selection"
-        )
-    widths = np.diff(np.asarray(lv.offsets))
-    if widths.size and (widths != widths[0]).any():
-        raise ValueError(
-            "ragged embedding column: row widths "
-            f"{np.unique(widths).tolist()} — embeddings must share one "
-            "dimension"
-        )
-    flat = lv.flatten()
-    if flat.null_count:
-        raise ValueError(
-            "null elements inside embedding vectors — filter or impute "
-            "before selection"
-        )
-    v = np.asarray(flat, dtype=np.float64).reshape(rb.num_rows, -1)
-    return ids, v
 
 
 def _arrow_out(id_col: str, ids, vecs, extra: dict):
@@ -113,8 +76,7 @@ def _arrow_out(id_col: str, ids, vecs, extra: dict):
     kernels' per-batch top-p rows."""
     import pyarrow as pa
 
-    cols = [pa.array(ids, type=pa.int64()),
-            pa.array(list(vecs), type=pa.list_(pa.float64()))]
+    cols = [pa.array(ids, type=pa.int64()), list_column(vecs)]
     names = [id_col, "__v"]
     for name, arr in extra.items():
         cols.append(pa.array(arr, type=pa.float64()))
@@ -129,7 +91,7 @@ def _norms(m):
     desync)."""
     import numpy as np
 
-    n = np.sqrt(_np_seq_sum(m * m, axis=1))
+    n = np.sqrt(seq_sum(m * m, axis=1))
     if np.any(n == 0.0):
         raise ValueError(
             "zero-norm embedding — cosine distance is undefined; "
@@ -145,12 +107,7 @@ def _max_cos(v, vn, cm, cn):
     driver-side batch re-verify produce bit-identical scores (IEEE
     max over a set is order-independent; each pairwise dot folds the
     dimensions in the same sequence on both paths)."""
-    import numpy as np
-
-    dots = np.zeros((v.shape[0], cm.shape[0]))
-    for i in range(cm.shape[1]):  # dim-major: left-fold per pair
-        dots = dots + v[:, i : i + 1] * cm[None, :, i]
-    return (dots / (vn[:, None] * cn[None, :])).max(axis=1)
+    return (fold_dots(v, cm) / (vn[:, None] * cn[None, :])).max(axis=1)
 
 
 def kcenter_select(
@@ -193,17 +150,11 @@ def kcenter_select(
             picked_arr = np.fromiter(picked, dtype=np.int64, count=len(picked))
 
             def kern(batches, cm=cm, cn=cn, picked_arr=picked_arr, p=p):
-                # mapInArrow, not mapInPandas: the list<double> column
-                # arrives as one contiguous values buffer viewed as an
-                # (n, dim) matrix — no per-row tolist / object Series
-                # (guide §4.2) — and the measured per-job boundary cost
-                # drops to the JVM-job floor. The arithmetic
-                # (_max_cos dim-major fold) is unchanged, so the
-                # trajectory stays bit-identical.
                 for rb in batches:
                     if rb.num_rows == 0:
                         continue
-                    ids, v = _arrow_ids_vecs(rb, id_col)
+                    ids = rb.column(id_col).to_numpy(zero_copy_only=False)
+                    v = arrow_matrix(rb, "__v", width=cm.shape[1])
                     keep = ~np.isin(ids, picked_arr)
                     if not keep.any():
                         continue
@@ -333,11 +284,11 @@ def mmr_select(
     qn = float(_norms(qv[None, :])[0])
 
     def rel_kern(batches, qv=qv, qn=qn, qid=qid):
-        # mapInArrow (guide §4.2): see kcenter_select's kern comment.
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            ids, v = _arrow_ids_vecs(rb, id_col)
+            ids = rb.column(id_col).to_numpy(zero_copy_only=False)
+            v = arrow_matrix(rb, "__v", width=qv.shape[0])
             keep = ids != qid
             if not keep.any():
                 continue
@@ -363,11 +314,11 @@ def mmr_select(
             picked_arr = np.fromiter(picked, dtype=np.int64, count=len(picked))
 
             def kern(batches, cm=cm, cn=cn, picked_arr=picked_arr, p=p):
-                # mapInArrow (guide §4.2): see kcenter_select's kern.
                 for rb in batches:
                     if rb.num_rows == 0:
                         continue
-                    ids, v = _arrow_ids_vecs(rb, id_col)
+                    ids = rb.column(id_col).to_numpy(zero_copy_only=False)
+                    v = arrow_matrix(rb, "__v", width=qv.shape[0])
                     rel = rb.column(
                         rb.schema.get_field_index("__rel")
                     ).to_numpy(zero_copy_only=False).astype(np.float64)

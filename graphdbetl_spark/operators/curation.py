@@ -1344,23 +1344,22 @@ def semantic_decontaminate(
     actually audit for it.
 
     Scale shape: the eval side is a benchmark — MBs against a 100 TB
-    corpus — so it is explicitly BROADCAST and the corpus streams ONCE
-    through a codegen'd dot-product scan; the per-corpus-row max is a
-    map-side-combined aggregate, so the only shuffle carries one
-    (id, max) row per corpus vector, independent of |eval|. For eval
-    sets that grow with the corpus, block both sides with the
+    corpus — so it is collected into the kernel closure and the corpus
+    streams ONCE through a numpy Arrow kernel that emits one (id, max)
+    row per corpus vector, independent of |eval|, with no shuffle. For
+    eval sets that grow with the corpus, block both sides with the
     hyperplane-bucket machinery (dedup_embedding_lsh_blocked) instead.
 
     Returns (id_col, max_eval_cosine rounded 6, contaminated bool);
     the threshold compares the UNROUNDED max on both engines.
 
-    The pair scan is a vectorized Arrow kernel, not DataFrame
+    The pair scan is a numpy Arrow kernel, not DataFrame
     higher-order functions: interpreted lambda folds cost ~2 µs per
     element (SCALING.md r2 lesson), and |corpus|·|eval| 64-element
     dots put the HOF form at 105 s for 22.5M pairs on the 30× replica
     — numpy does the identical arithmetic per Arrow batch in seconds.
     Bit-parity with the DuckDB oracle: both sides unit-normalize once,
-    every reduction runs in TRUE left-fold order (`_np_seq_sum`; the
+    every reduction runs in TRUE left-fold order (``seq_sum``; the
     per-pair dot accumulates dimension-by-dimension so each pair's sum
     is sequential, matching `list_reduce` — 0.0 + x1 == x1 in IEEE),
     max is order-independent, and rounding + thresholding stay JVM-side
@@ -1376,14 +1375,14 @@ def semantic_decontaminate(
     fold it replaced.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from graphdbetl_spark.operators.similarity import _np_seq_sum
+    from graphdbetl_spark.functions.vectors import arrow_matrix, seq_sum
 
     ev = np.array(
         [r[0] for r in eval_df.select(vec_col).collect()], dtype=np.float64
     )
-    eu = ev / np.sqrt(_np_seq_sum(ev * ev, axis=1))[:, None]
+    eu = ev / np.sqrt(seq_sum(ev * ev, axis=1))[:, None]
 
     eu32 = eu.astype(np.float32)
 
@@ -1403,12 +1402,14 @@ def semantic_decontaminate(
             _fold_pairs_fp64,
         )
 
-        for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cu = v / np.sqrt(_np_seq_sum(v * v, axis=1))[:, None]
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            v = arrow_matrix(rb, vec_col, width=eu.shape[1])
+            cu = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
             cu32 = cu.astype(np.float32)
-            chunk = max(1, 40_000_000 // max(len(pdf), 1))
-            mx = np.full(len(pdf), -np.inf)
+            chunk = max(1, 40_000_000 // rb.num_rows)
+            mx = np.full(rb.num_rows, -np.inf)
             for lo in range(0, eu.shape[0], chunk):
                 a32 = cu32 @ eu32[lo : lo + chunk].T
                 rowmax32 = a32.max(axis=1)
@@ -1417,13 +1418,15 @@ def semantic_decontaminate(
                 )
                 acc = _fold_pairs_fp64(cu, ci, eu, lo + ei)
                 np.maximum.at(mx, ci, acc)
-            yield pd.DataFrame({id_col: pdf[id_col], "__mx": mx})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(mx)], names=[id_col, "__mx"]
+            )
 
     src = ensure_scan_parallelism(corpus, id_col).select(
         F.col(id_col), F.col(vec_col)
     )
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(screen, schema=f"{id_col} {id_type}, __mx double").select(
+    return src.mapInArrow(screen, schema=f"{id_col} {id_type}, __mx double").select(
         id_col,
         F.round("__mx", 6).alias("max_eval_cosine"),
         (F.col("__mx") >= F.lit(threshold)).alias("contaminated"),
@@ -1492,12 +1495,12 @@ def semantic_decontaminate_ivf(
     properties against the exact form.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from graphdbetl_spark.functions.vectors import arrow_matrix, fold_dots, seq_sum
     from graphdbetl_spark.operators.similarity import (
         _SCREEN_MARGIN,
         _fold_pairs_fp64,
-        _np_seq_sum,
         md5_sampled_centroid_list,
     )
 
@@ -1508,25 +1511,21 @@ def semantic_decontaminate_ivf(
         n_cells = max(8, len(ev) // 1024)
     cents = md5_sampled_centroid_list(eval_df, id_col, vec_col, k=n_cells, seed=seed)
     cm = np.array([c for _, c in cents], dtype=np.float64)  # ascending cell
-    eu = ev / np.sqrt(_np_seq_sum(ev * ev, axis=1))[:, None]
-    acc = np.zeros((eu.shape[0], cm.shape[0]))
-    for i in range(cm.shape[1]):  # dim-major: left-fold per pair
-        acc = acc + eu[:, i : i + 1] * cm[None, :, i]
-    ev_cell = np.argmax(acc, axis=1)  # first max = lowest cell on ties
+    eu = ev / np.sqrt(seq_sum(ev * ev, axis=1))[:, None]
+    ev_cell = np.argmax(fold_dots(eu, cm), axis=1)  # first max = lowest cell on ties
     eu_by_cell = [eu[ev_cell == c] for c in range(n_cells)]
     eu32_by_cell = [m.astype(np.float32) for m in eu_by_cell]
 
     def screen(batches):
-        for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cu = v / np.sqrt(_np_seq_sum(v * v, axis=1))[:, None]
-            qd = np.zeros((len(pdf), cm.shape[0]))
-            for i in range(cm.shape[1]):  # dim-major: left-fold per pair
-                qd = qd + cu[:, i : i + 1] * cm[None, :, i]
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            v = arrow_matrix(rb, vec_col, width=cm.shape[1])
+            cu = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
             # stable sort on -dot keeps ascending cell order on ties
-            order = np.argsort(-qd, axis=1, kind="stable")[:, :n_probe]
+            order = np.argsort(-fold_dots(cu, cm), axis=1, kind="stable")[:, :n_probe]
             cu32 = cu.astype(np.float32)
-            mx = np.full(len(pdf), -np.inf)
+            mx = np.full(rb.num_rows, -np.inf)
             for c in range(n_cells):
                 rows = np.nonzero((order == c).any(axis=1))[0]
                 ec32 = eu32_by_cell[c]
@@ -1540,13 +1539,16 @@ def semantic_decontaminate_ivf(
                 ex = _fold_pairs_fp64(cu, rows[ci], eu_by_cell[c], ei)
                 np.maximum.at(mx, rows[ci], ex)
             hit = mx > -np.inf
-            yield pd.DataFrame({id_col: pdf[id_col][hit], "__mx": mx[hit]})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col).filter(pa.array(hit)), pa.array(mx[hit])],
+                names=[id_col, "__mx"],
+            )
 
     src = ensure_scan_parallelism(corpus, id_col).select(
         F.col(id_col), F.col(vec_col)
     )
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(screen, schema=f"{id_col} {id_type}, __mx double").select(
+    return src.mapInArrow(screen, schema=f"{id_col} {id_type}, __mx double").select(
         id_col,
         F.round("__mx", 6).alias("max_eval_cosine"),
         (F.col("__mx") >= F.lit(threshold)).alias("contaminated"),

@@ -12,7 +12,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from graphdbetl_spark.functions.vectors import cosine_similarity, l2_norm
+from graphdbetl_spark.functions.vectors import (
+    arrow_matrix,
+    cosine_similarity,
+    fold_dots,
+    l2_norm,
+    list_column,
+    seq_sum,
+    sign_buckets,
+)
 from graphdbetl_spark.operators.skew import (
     ensure_scan_parallelism as _ensure_scan_parallelism,
 )
@@ -47,6 +55,61 @@ def md5_cap_corpus(
     return df.filter(coin if keep is None else (coin | keep))
 
 
+def _pairs_batch(ids, qids, qi, ni, scores, score_col: str):
+    """(query_id, neighbor_id, score_col) record batch for the query
+    rows ``qids[qi]`` against the batch rows ``ids[ni]``; query ids take
+    the corpus id type, like the declared output schema."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(qids[qi], type=ids.type), ids.take(ni), pa.array(scores)],
+        names=["query_id", "neighbor_id", score_col],
+    )
+
+
+def _scan_topk(src, id_col: str, vec_col: str, qids, qm, k: int, eligible):
+    """One mapInArrow pass of the corpus ``src`` against the query
+    matrix ``qm`` (rows ``qids``): per batch, cosine of every
+    (row, query) pair, then each query's top-k among the rows
+    ``eligible(rb, nids)`` allows (an (n, Q) mask), cut by
+    (-cosine, neighbor_id) — the total order the final rank window
+    ranks by, so float-equal ties survive the partial cut. The exchange
+    carries ≤ batches·|Q|·k rows into that window.
+
+    Bit-parity: dot and both squared norms are true left folds over
+    the raw doubles (``fold_dots``/``seq_sum``), then one IEEE divide
+    by the norm product — the arithmetic of the JVM cosine fold."""
+    import numpy as np
+
+    qn = np.sqrt(seq_sum(qm * qm, axis=1))
+
+    def kern(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            v = arrow_matrix(rb, vec_col, width=qm.shape[1])
+            cn = np.sqrt(seq_sum(v * v, axis=1))
+            scores = fold_dots(v, qm) / (cn[:, None] * qn[None, :])
+            ids = rb.column(id_col)
+            nids = ids.to_numpy(zero_copy_only=False)
+            ok = eligible(rb, nids)
+            qsel, nsel = [], []
+            for qi in range(len(qids)):
+                valid = np.flatnonzero(ok[:, qi])
+                order = valid[np.lexsort((nids[valid], -scores[valid, qi]))][:k]
+                qsel.append(np.full(order.size, qi))
+                nsel.append(order)
+            qsel, nsel = np.concatenate(qsel), np.concatenate(nsel)
+            yield _pairs_batch(ids, qids, qsel, nsel, scores[nsel, qsel], "cosine")
+
+    id_type = dict(src.dtypes)[id_col]
+    scored = src.mapInArrow(
+        kern, schema=f"query_id {id_type}, neighbor_id {id_type}, cosine double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -54,70 +117,32 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector (self-pairs
+    excluded).
 
-    ``queries`` is small by contract (they broadcast in the DataFrame
-    form; here they're collected into the kernel closure — the PQ
-    codebook-closure pattern, bounded by construction). The corpus
-    streams ONCE through a vectorized Arrow kernel that emits each
-    query's per-batch top-k — the same partial-top-k-before-the-
-    shuffle that WindowGroupLimit performed, but without the
-    |corpus|·|queries| interpreted cosine folds that preceded it: one
-    fold-dot plus two fold-norms per pair put the DataFrame form past
-    900 s at the 100× replica, where the kernel takes seconds. The
-    exchange carries ≤ batches·|Q|·k rows into the final rank window.
-
-    Bit-parity: the kernel reproduces the old JVM cosine EXACTLY —
-    dot and both squared-norm reductions accumulate dimension-major
-    over the raw doubles (true left folds, `_np_seq_sum`), then one
-    IEEE divide by the norm product — and the per-batch cut sorts by
-    (-cosine, neighbor_id), the same total order the global window
-    ranks by, so float-equal ties survive the partial cut correctly
-    (duplicate vectors are common in dedup fixtures).
+    ``queries`` is small by contract: they are collected into the
+    kernel closure (the PQ codebook-closure pattern, bounded by
+    construction). The corpus streams ONCE through the numpy Arrow
+    kernel of :func:`_scan_topk`, which emits each query's per-batch
+    top-k — the same partial-top-k-before-the-shuffle that
+    WindowGroupLimit performed, but without the |corpus|·|queries|
+    interpreted cosine folds that preceded it: one fold-dot plus two
+    fold-norms per pair put the DataFrame form past 900 s at the 100×
+    replica, where the kernel takes seconds. Scores are bit-identical
+    to the JVM cosine fold (see :func:`_scan_topk`).
     """
     import numpy as np
-    import pandas as pd
 
     from graphdbetl_spark.operators.skew import adaptive_parallelism
 
     qrows = queries.select(id_col, vec_col).collect()
-    qids = [r[0] for r in qrows]
+    qids = np.array([r[0] for r in qrows])
     qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.sqrt(_np_seq_sum(qm * qm, axis=1))
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cn = np.sqrt(_np_seq_sum(v * v, axis=1))
-            dots = np.zeros((len(pdf), qm.shape[0]))
-            for i in range(qm.shape[1]):  # dim-major: left-fold per pair
-                dots = dots + v[:, i : i + 1] * qm[None, :, i]
-            scores = dots / (cn[:, None] * qn[None, :])
-            nids = pdf[id_col].values
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(qids):
-                s = scores[:, qi]
-                valid = np.flatnonzero(nids != qid)
-                if valid.size == 0:
-                    continue
-                order = valid[np.lexsort((nids[valid], -s[valid]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(nids[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_s}
-            )
-
     src = adaptive_parallelism(corpus, id_col).select(id_col, vec_col)
-    id_type = dict(src.dtypes)[id_col]
-    scored = src.mapInPandas(
-        kern,
-        schema=f"query_id {id_type}, neighbor_id {id_type}, cosine double",
+    return _scan_topk(
+        src, id_col, vec_col, qids, qm, k,
+        lambda rb, nids: nids[:, None] != qids[None, :],
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ivf_cosine_topk(
@@ -408,60 +433,31 @@ def mine_hard_negatives(
     mostly easy; mined ones dominate gradient signal).
 
     Same scale shape as brute-force top-k: anchors live in the kernel
-    closure (bounded by construction), the corpus streams once through
-    the vectorized Arrow scan with the label-mismatch predicate applied
-    BEFORE the per-batch top-k cut (the cosine_topk_bruteforce kernel
-    with labels instead of self-exclusion — identical left-fold
-    arithmetic and (-cosine, id) tie order). Swap the scan for an
-    IVF/PQ index probe when the anchor set stops being broadcastable.
+    closure (bounded by construction) and the corpus streams once
+    through the numpy Arrow kernel of :func:`_scan_topk`, with the
+    label-mismatch predicate applied BEFORE the per-batch top-k cut
+    (the cosine_topk_bruteforce kernel with labels instead of
+    self-exclusion — identical left-fold arithmetic and (-cosine, id)
+    tie order). Swap the scan for an IVF/PQ index probe when the
+    anchor set stops being broadcastable.
 
     Returns (query_id, neighbor_id, cosine, rank).
     """
     import numpy as np
-    import pandas as pd
 
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
     qrows = queries.select(id_col, vec_col, label_col).collect()
-    qids = [r[0] for r in qrows]
+    qids = np.array([r[0] for r in qrows])
     qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qlabels = [r[2] for r in qrows]
-    qn = np.sqrt(_np_seq_sum(qm * qm, axis=1))
+    qlabels = np.array([r[2] for r in qrows])
 
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cn = np.sqrt(_np_seq_sum(v * v, axis=1))
-            dots = np.zeros((len(pdf), qm.shape[0]))
-            for i in range(qm.shape[1]):  # dim-major: left-fold per pair
-                dots = dots + v[:, i : i + 1] * qm[None, :, i]
-            scores = dots / (cn[:, None] * qn[None, :])
-            nids = pdf[id_col].values
-            nlabels = pdf[label_col].values
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(qids):
-                s = scores[:, qi]
-                valid = np.flatnonzero(nlabels != qlabels[qi])
-                if valid.size == 0:
-                    continue
-                order = valid[np.lexsort((nids[valid], -s[valid]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(nids[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_s}
-            )
+    def eligible(rb, nids):
+        nlabels = rb.column(label_col).to_numpy(zero_copy_only=False)
+        return nlabels[:, None] != qlabels[None, :]
 
     src = ensure_scan_parallelism(corpus, id_col).select(id_col, vec_col, label_col)
-    id_type = dict(src.dtypes)[id_col]
-    scored = src.mapInPandas(
-        kern,
-        schema=f"query_id {id_type}, neighbor_id {id_type}, cosine double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _scan_topk(src, id_col, vec_col, qids, qm, k, eligible)
 
 
 def label_centroids(
@@ -490,48 +486,6 @@ def _pq_fold(arr) -> F.Column:
     """Left fold sum from 0.0 — the exact sequential order DuckDB's
     list_reduce replays, so oracle doubles match bit for bit."""
     return F.aggregate(arr, F.lit(0.0), lambda a, v: a + v)
-
-
-def _arrow_vecs(rb, col: str, dtype=None):
-    """Zero-copy (n, width) matrix view over a mapInArrow record
-    batch's fixed-width list column (guide §4.2 — no per-row tolist /
-    object Series). Uniform row width is asserted from the list
-    offsets and null rows/elements rejected (the coreset ragged-batch
-    guard): ``reshape(n, -1)`` alone only checks total divisibility
-    and would silently misalign a ragged batch."""
-    import numpy as np
-
-    lv = rb.column(rb.schema.get_field_index(col))
-    if lv.null_count:
-        raise ValueError(f"null rows in list column '{col}'")
-    widths = np.diff(np.asarray(lv.offsets))
-    if widths.size and (widths != widths[0]).any():
-        raise ValueError(
-            f"ragged list column '{col}': widths {np.unique(widths).tolist()}"
-        )
-    flat = lv.flatten()
-    if flat.null_count:
-        raise ValueError(f"null elements in list column '{col}'")
-    a = np.asarray(flat)
-    if dtype is not None:
-        a = a.astype(dtype, copy=False)
-    return a.reshape(rb.num_rows, -1)
-
-
-def _np_seq_sum(a, axis: int):
-    """Sequential (left-fold) summation along ``axis`` — REQUIRED for
-    bit-exactness against the engine folds: np.add.reduce/np.sum use
-    pairwise blocking internally, which differs from a sequential fold
-    by ULPs and would make numpy kernels drift from the DataFrame/
-    DuckDB float order. Vectorized across every other axis; the loop
-    runs only over the (small, fixed) reduced dimension."""
-    import numpy as np
-
-    moved = np.moveaxis(a, axis, 0)
-    out = np.zeros(moved.shape[1:], dtype=np.float64)
-    for sl in moved:
-        out = out + sl
-    return out
 
 
 # Certified fp32-screen margin for the tiered-precision exact kernels.
@@ -731,7 +685,7 @@ def md5_sampled_centroid_list(
     cents: list[tuple[int, list[float]]] = []
     for cell, r in enumerate(rows):
         v = np.array(r[vec_col], dtype=np.float64)
-        nrm = float(np.sqrt(_np_seq_sum(v[None, :] * v[None, :], axis=1)[0]))
+        nrm = float(np.sqrt(seq_sum(v[None, :] * v[None, :], axis=1)[0]))
         u = v / nrm if nrm != 0.0 else v
         cents.append((cell, [float(x) for x in u]))
     return cents
@@ -780,7 +734,7 @@ def ivf_assign_cells_md5(
     same reason (ivf_append_report's batch tag: one scan, zero
     re-attach shuffles).
 
-    The scoring is a vectorized Arrow kernel, not the broadcast
+    The scoring is a numpy Arrow kernel, not the broadcast
     crossJoin + HOF-fold + struct-min it used to be: interpreted
     lambda folds cost ~2 µs per element (SCALING.md r2 lesson), and
     |corpus|·n_cells 64-element dots put the DataFrame form at 55.7 s
@@ -795,10 +749,9 @@ def ivf_assign_cells_md5(
 
     Bit-parity with the DuckDB oracle (the semantic_decontaminate
     kernel treatment): normalization divides by
-    sqrt(left-fold Σ x²) (`_np_seq_sum` — matches the engines' fold
-    order; sqrt and division are IEEE-exact), the per-pair dot
-    accumulates dimension-major so each pair's sum is a TRUE left
-    fold (matches ``list_reduce``; 0.0 + x1 == x1 in IEEE), and the
+    sqrt(left-fold Σ x²) (``seq_sum`` — matches the engines' fold
+    order; sqrt and division are IEEE-exact), the per-pair dot is a
+    TRUE left fold (``fold_dots``, matching ``list_reduce``), and the
     argmax scans cells in ascending id order so float-equal ties
     break to the lowest cell exactly like the struct-min did. The
     centroid table is collected bounded-by-construction (n_cells rows
@@ -806,7 +759,7 @@ def ivf_assign_cells_md5(
     are out of contract either way.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if isinstance(cents, DataFrame):
         pairs = sorted(
@@ -816,32 +769,33 @@ def ivf_assign_cells_md5(
         pairs = sorted(cents)
     cm = np.array([c for _, c in pairs], dtype=np.float64)
     cells = np.array([i for i, _ in pairs], dtype=np.int32)
+    names = [id_col, *(["__unit"] if passthrough else []), "cell", *keep]
 
     def assign(batches):
-        for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            v = arrow_matrix(rb, vec_col, width=cm.shape[1])
             if normalize:
-                v = v / np.sqrt(_np_seq_sum(v * v, axis=1))[:, None]
-            acc = np.zeros((len(pdf), cm.shape[0]))
-            for i in range(cm.shape[1]):  # dim-major: left-fold per pair
-                acc = acc + v[:, i : i + 1] * cm[None, :, i]
-            out = {id_col: pdf[id_col]}
-            if passthrough:
-                out["__unit"] = list(v) if normalize else pdf[vec_col]
-            out["cell"] = cells[np.argmax(acc, axis=1)]
-            for c in keep:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+                v = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
+            cell = pa.array(cells[np.argmax(fold_dots(v, cm), axis=1)])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(id_col),
+                    *([list_column(v)] if passthrough else []),
+                    cell,
+                    *(rb.column(c) for c in keep),
+                ],
+                names=names,
+            )
 
     src = u.select(id_col, vec_col, *keep)
     types = dict(src.dtypes)
     id_type = types[id_col]
     unit_part = ", __unit array<double>" if passthrough else ""
     keep_part = "".join(f", {c} {types[c]}" for c in keep)
-    return src.mapInPandas(
+    return src.mapInArrow(
         assign, schema=f"{id_col} {id_type}{unit_part}, cell int{keep_part}"
-    ).select(
-        id_col, *(["__unit"] if passthrough else []), "cell", *keep
     )
 
 
@@ -952,7 +906,7 @@ def lsh_cosine_topk_md5(
     the oracle replays exactly that.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
@@ -965,37 +919,34 @@ def lsh_cosine_topk_md5(
         # treatment): the DataFrame form paid n_planes interpreted
         # 64-element folds per row PLUS the CollapseProject-inlined
         # unit-normalize quadratic, twice per side (bucketing + the
-        # verification re-normalize). Parity: plane dots accumulate
-        # dimension-major over the raw doubles (left fold, matching the
-        # oracle's list_reduce), sign → bit OR is integer, and the
-        # normalize is the _np_seq_sum fold. The planes stay md5-derived
-        # Python literals shared verbatim with the generated oracle SQL.
+        # verification re-normalize). Parity: plane dots are left folds
+        # over the raw doubles (``fold_dots``, matching the oracle's
+        # list_reduce), sign → bit OR is integer, and the normalize is
+        # the ``seq_sum`` fold. The planes stay md5-derived Python
+        # literals shared verbatim with the generated oracle SQL.
         def kern(batches):
-            for pdf in batches:
-                v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                un = v / np.sqrt(_np_seq_sum(v * v, axis=1))[:, None]
-                acc = np.zeros((len(pdf), pm.shape[0]))
-                for i in range(pm.shape[1]):  # dim-major: left-fold dots
-                    acc = acc + v[:, i : i + 1] * pm[None, :, i]
-                n = len(pdf)
+            for rb in batches:
+                n = rb.num_rows
+                if n == 0:
+                    continue
+                v = arrow_matrix(rb, vec_col, width=pm.shape[1])
+                unit = list_column(v / np.sqrt(seq_sum(v * v, axis=1))[:, None])
+                acc = fold_dots(v, pm)
                 for t in range(n_tables):
-                    bk = np.zeros(n, dtype=np.int64)
-                    for j in range(per_t):
-                        bk = bk + (
-                            (acc[:, t * per_t + j] >= 0).astype(np.int64) << j
-                        )
-                    yield pd.DataFrame(
-                        {
-                            alias_id: pdf[id_col],
-                            "tbl": np.full(n, t, dtype=np.int32),
-                            "bk": bk.astype(np.int32),
-                            "__unit": list(un),
-                        }
+                    bk = sign_buckets(acc[:, t * per_t : (t + 1) * per_t])
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            rb.column(id_col),
+                            pa.array(np.full(n, t, dtype=np.int32)),
+                            pa.array(bk),
+                            unit,
+                        ],
+                        names=[alias_id, "tbl", "bk", "__unit"],
                     )
 
         src = df.select(id_col, vec_col)
         id_type = dict(src.dtypes)[id_col]
-        return src.mapInPandas(
+        return src.mapInArrow(
             kern, schema=f"{alias_id} {id_type}, tbl int, bk int, __unit array<double>"
         )
 
@@ -1245,15 +1196,8 @@ def pq_assign_codes(
     # batch. The codebook is collected bounded (m × k_codes rows — an
     # index artifact, not data) and shipped in the UDF closure.
     #
-    # r12: mapInArrow, not mapInPandas (guide §4.2) — the list<double>
-    # column arrives as ONE contiguous values buffer viewed zero-copy
-    # as an (n, dim) float64 matrix instead of a pandas object Series
-    # rebuilt per row via tolist(), and the (n, m) code matrix leaves
-    # as one ListArray over its ravel (no per-row boxing either way).
-    # The arithmetic between those boundaries is unchanged.
-    #
     # Bit-exactness vs the DuckDB oracle: every reduction goes through
-    # _np_seq_sum (true left-fold order — np.add.reduce is pairwise
+    # ``seq_sum`` (true left-fold order — np.add.reduce is pairwise
     # and drifts by ULPs), and np.argmax takes the FIRST maximum
     # (matches array_position-of-max). Pinned by
     # tests/test_similarity.py kernel-vs-fold equality tests.
@@ -1264,7 +1208,7 @@ def pq_assign_codes(
     cb = np.zeros((m, k_codes, sub))
     for r in cb_rows:
         cb[r["sub"], r["code"], :] = r["centroid"]
-    half_norms = _np_seq_sum(cb * cb, axis=2) / 2.0
+    half_norms = seq_sum(cb * cb, axis=2) / 2.0
 
     def assign(batches):
         import pyarrow as pa
@@ -1273,15 +1217,14 @@ def pq_assign_codes(
             n = rb.num_rows
             if n == 0:
                 continue
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            v = _arrow_vecs(rb, vec_col, dtype=np.float64)
-            norm = np.sqrt(_np_seq_sum(v * v, axis=1))
+            v = arrow_matrix(rb, vec_col, width=dim)
+            norm = np.sqrt(seq_sum(v * v, axis=1))
             x = (v / norm[:, None]).reshape(n, m, sub)
-            scores = _np_seq_sum(x[:, :, None, :] * cb[None, :, :, :], axis=3) - half_norms
+            scores = seq_sum(x[:, :, None, :] * cb[None, :, :, :], axis=3) - half_norms
             codes = scores.argmax(axis=2).astype(np.int32)
-            offsets = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))
-            codes_arr = pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))
-            yield pa.RecordBatch.from_arrays([ids, codes_arr], names=[id_col, "codes"])
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), list_column(codes)], names=[id_col, "codes"]
+            )
 
     id_type = dict(corpus.dtypes)[id_col]
     return u.mapInArrow(assign, schema=f"{id_col} {id_type}, codes array<int>")
@@ -1325,7 +1268,7 @@ def pq_adc_topk(
     # batch, not data); collect it and score the codes scan with one
     # vectorized numpy gather per Arrow batch — the interpreted
     # m-lookup fold costs ~64 lambda evals per (query, vector) pair
-    # and never codegens. _np_seq_sum over j replays the fold's float
+    # and never codegens. seq_sum over j replays the fold's float
     # order exactly (pinned by test), so the oracle stays bit-green.
     # For oversized query batches, fall back to the broadcast-join JVM
     # path (same semantics, no driver collect).
@@ -1339,21 +1282,16 @@ def pq_adc_topk(
         id_type = dict(codes.dtypes)[id_col]
 
         def score_batches(batches):
-            # mapInArrow (r12, guide §4.2): the (n, m) code matrix is a
-            # zero-copy view over the ListArray values buffer, and the
-            # (Q·n)-row output is three flat arrays — the old pandas
-            # path rebuilt the codes via tolist() and concatenated Q
-            # DataFrames per batch. Gather + left-fold unchanged.
             import pyarrow as pa
 
             for rb in batches:
                 n = rb.num_rows
                 if n == 0:
                     continue
-                ids = rb.column(rb.schema.get_field_index(id_col))
-                cmat = _arrow_vecs(rb, "codes")  # (n, m) ints
+                ids = rb.column(id_col)
+                cmat = arrow_matrix(rb, "codes", dtype=np.int32, width=m)
                 picked = L[:, jj, cmat]  # (Q, n, m) gather
-                s = _np_seq_sum(picked, axis=2)  # left-fold over j
+                s = seq_sum(picked, axis=2)  # left-fold over j
                 qarr = pa.concat_arrays(
                     [pa.array([qid] * n, type=ids.type) for qid in qids]
                 )
@@ -1528,7 +1466,7 @@ def ivfpq_query(
     # (bounded: one per query in the batch) ride in the scoring
     # kernel's closure instead of being replicated onto every candidate
     # row. Scoring itself is the same vectorized gather as pq_adc_topk
-    # (_np_seq_sum — fold-order exact); the interpreted fold join
+    # (``seq_sum`` — fold-order exact); the interpreted fold join
     # remains as the oversized-batch fallback.
     lut_rows = ql.collect()  # bounded: one row per query
     candidates = (
@@ -1539,32 +1477,33 @@ def ivfpq_query(
     )
     if len(lut_rows) <= 256:
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        qids = [r["query_id"] for r in lut_rows]
-        qidx = {qid: i for i, qid in enumerate(qids)}
+        qset = pa.array([r["query_id"] for r in lut_rows])
         L = np.array([r["__lut"] for r in lut_rows])  # (Q, m, k_codes)
         jj = np.arange(m)
-        id_type = dict(cells.dtypes).get("neighbor_id", "bigint")
+        types = dict(candidates.dtypes)
 
         def score_rows(batches):
-            for pdf in batches:
-                if not len(pdf):
+            for rb in batches:
+                if rb.num_rows == 0:
                     continue
-                cmat = np.array(pdf["codes"].tolist())  # (n, m)
-                qi = pdf["query_id"].map(qidx).to_numpy()
+                cmat = arrow_matrix(rb, "codes", dtype=np.int32, width=m)
+                qcol = rb.column("query_id")
+                qi = pc.index_in(qcol, value_set=qset.cast(qcol.type)).to_numpy()
                 picked = L[qi[:, None], jj[None, :], cmat]  # (n, m)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": pdf["neighbor_id"],
-                        "adc_cosine": _np_seq_sum(picked, axis=1),
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [qcol, rb.column("neighbor_id"), pa.array(seq_sum(picked, axis=1))],
+                    names=["query_id", "neighbor_id", "adc_cosine"],
                 )
 
-        scored = candidates.mapInPandas(
+        scored = candidates.mapInArrow(
             score_rows,
-            schema=f"query_id {id_type}, neighbor_id {id_type}, adc_cosine double",
+            schema=(
+                f"query_id {types['query_id']}, "
+                f"neighbor_id {types['neighbor_id']}, adc_cosine double"
+            ),
         )
     else:
         score = _adc_score(m)
@@ -1638,9 +1577,10 @@ def cosine_range_search(
     """Exact cosine RANGE search (the FAISS ``range_search`` surface,
     complementing the top-k family): every corpus vector within the
     similarity radius of each query, not a fixed-k cut. Queries are
-    broadcast; the corpus streams ONCE through a codegen'd dot-product
-    scan and the radius filter runs inside it — no window, no top-k
-    state, output size is data-dependent by definition. Linear in
+    collected into the kernel closure; the corpus streams ONCE through
+    a numpy Arrow kernel and the radius filter runs inside it — no
+    window, no top-k state, output size is data-dependent by
+    definition. Linear in
     |corpus|·|queries| like any exact multi-query scan: right while
     the query batch is bounded; for query sets that grow with the
     corpus, block both sides with the hyperplane-bucket machinery
@@ -1661,44 +1601,39 @@ def cosine_range_search(
     semantic_decontaminate treatment) so kernel working memory stays
     bounded as the query batch grows."""
     import numpy as np
-    import pandas as pd
 
     from graphdbetl_spark.operators.skew import adaptive_parallelism
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows])
     qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.sqrt(_np_seq_sum(qm * qm, axis=1))
+    qn = np.sqrt(seq_sum(qm * qm, axis=1))
 
     def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cn = np.sqrt(_np_seq_sum(v * v, axis=1))
-            nids = pdf[id_col].values
-            chunk = max(1, 40_000_000 // max(len(pdf), 1))
-            frames = []
+            v = arrow_matrix(rb, vec_col, width=qm.shape[1])
+            cn = np.sqrt(seq_sum(v * v, axis=1))
+            ids = rb.column(id_col)
+            nids = ids.to_numpy(zero_copy_only=False)
+            chunk = max(1, 40_000_000 // rb.num_rows)
+            qsel, nsel, cos = [], [], []
             for lo in range(0, qm.shape[0], chunk):
-                qc, qnc, qidc = qm[lo : lo + chunk], qn[lo : lo + chunk], qids[lo : lo + chunk]
-                ci, qi, scores = _screened_pair_fold(v, cn, qc, qnc, threshold)
-                keep = nids[ci] != qidc[qi]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qidc[qi[keep]],
-                            "neighbor_id": nids[ci[keep]],
-                            "__cos": scores[keep],
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "__cos": []}
+                sl = slice(lo, lo + chunk)
+                ci, qi, scores = _screened_pair_fold(v, cn, qm[sl], qn[sl], threshold)
+                keep = nids[ci] != qids[lo + qi]
+                qsel.append(lo + qi[keep])
+                nsel.append(ci[keep])
+                cos.append(scores[keep])
+            yield _pairs_batch(
+                ids, qids, np.concatenate(qsel), np.concatenate(nsel),
+                np.concatenate(cos), "__cos",
             )
 
     src = adaptive_parallelism(corpus, id_col).select(id_col, vec_col)
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(
+    return src.mapInArrow(
         kern, schema=f"query_id {id_type}, neighbor_id {id_type}, __cos double"
     ).select("query_id", "neighbor_id", F.round("__cos", 6).alias("cosine"))
 

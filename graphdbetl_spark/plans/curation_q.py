@@ -557,9 +557,10 @@ def decontaminate_semantic(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-tier benchmark decontamination: flag training vectors
     whose max cosine to the held-out eval split (md5 buckets 0-9)
     reaches 0.35 — catches paraphrased eval leakage that shares no
-    5-gram with `decontaminate_ngrams`. Eval side broadcast, corpus
-    scanned once, per-row max map-side-combined (see
-    operators/curation.py semantic_decontaminate)."""
+    5-gram with `decontaminate_ngrams`. Eval side in the kernel
+    closure, corpus scanned once by a numpy mapInArrow kernel that
+    emits each row's max (see operators/curation.py
+    semantic_decontaminate)."""
     from graphdbetl_spark.operators.curation import semantic_decontaminate
 
     e = T(spark, sf, "embeddings").withColumn(

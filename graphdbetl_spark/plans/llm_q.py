@@ -598,34 +598,35 @@ def _pair_cosine_scores(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     va: str = "va", vb: str = "vb",
 ) -> DataFrame:
-    """Candidate-pair cosine scoring as a vectorized Arrow kernel: the
+    """Candidate-pair cosine scoring as a numpy Arrow kernel: the
     interpreted fold costs ~190 lambda evaluations per pair (dot + two
     norms over 64 dims) and dominated the blocked dedup at the 30×
-    replica (~65 s of a 66 s query). Reductions go through
-    _np_seq_sum (true left-fold order; np.add.reduce is pairwise and
-    drifts by ULPs) so dot / (‖a‖·‖b‖) matches the DataFrame fold
-    bit-for-bit — pinned by tests/test_similarity.py. Returns
-    (id_a, id_b, cos)."""
+    replica (~65 s of a 66 s query). Reductions go through ``seq_sum``
+    (true left-fold order; np.add.reduce is pairwise and drifts by
+    ULPs) so dot / (‖a‖·‖b‖) matches the DataFrame fold bit-for-bit —
+    pinned by tests/test_similarity.py. Returns (id_a, id_b, cos)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from graphdbetl_spark.functions.vectors import arrow_matrix, seq_sum
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            from graphdbetl_spark.operators.similarity import _np_seq_sum
-
-            a = np.array(pdf[va].tolist(), dtype=np.float64)
-            b = np.array(pdf[vb].tolist(), dtype=np.float64)
-            dot = _np_seq_sum(a * b, axis=1)
-            na = np.sqrt(_np_seq_sum(a * a, axis=1))
-            nb = np.sqrt(_np_seq_sum(b * b, axis=1))
-            yield pd.DataFrame(
-                {id_a: pdf[id_a], id_b: pdf[id_b], "cos": dot / (na * nb)}
+            a = arrow_matrix(rb, va)
+            b = arrow_matrix(rb, vb, width=a.shape[1])
+            dot = seq_sum(a * b, axis=1)
+            na = np.sqrt(seq_sum(a * a, axis=1))
+            nb = np.sqrt(seq_sum(b * b, axis=1))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_a), rb.column(id_b), pa.array(dot / (na * nb))],
+                names=[id_a, id_b, "cos"],
             )
 
-    return pairs.mapInPandas(
-        score, schema=f"{id_a} bigint, {id_b} bigint, cos double"
+    types = dict(pairs.dtypes)
+    return pairs.mapInArrow(
+        score, schema=f"{id_a} {types[id_a]}, {id_b} {types[id_b]}, cos double"
     )
 
 
@@ -654,9 +655,9 @@ def _embedding_blocked_pairs(
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from graphdbetl_spark.operators.similarity import _np_seq_sum  # noqa: F401
+    from graphdbetl_spark.functions.vectors import arrow_matrix, fold_dots, sign_buckets
     from graphdbetl_spark.operators.skew import adaptive_parallelism
 
     e = T(spark, sf, "embeddings")
@@ -669,33 +670,21 @@ def _embedding_blocked_pairs(
 
     # Sign buckets in an Arrow kernel (the sim_lsh_topk prep treatment):
     # n_planes interpreted 64-element folds per row cost ~10 s of the
-    # 100× wall; the kernel's dim-major accumulation is the same left
-    # fold the oracle's list_reduce replays, and sign → bit OR is
-    # integer arithmetic.
+    # 100× wall; ``fold_dots`` is the same left fold the oracle's
+    # list_reduce replays, and sign → bit OR is integer arithmetic.
     def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            vv = np.array(pdf["v"].tolist(), dtype=np.float64)
-            acc = np.zeros((len(pdf), pm.shape[0]))
-            for i in range(pm.shape[1]):  # dim-major: left-fold dots
-                acc = acc + vv[:, i : i + 1] * pm[None, :, i]
-            bk = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(pm.shape[0]):
-                bk = bk + ((acc[:, j] >= 0).astype(np.int64) << j)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "v": pdf["v"],
-                    "bucket": bk.astype(np.int32),
-                }
+            v = arrow_matrix(rb, "v", width=pm.shape[1])
+            bk = sign_buckets(fold_dots(v, pm))
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, pa.array(bk)], names=[*rb.schema.names, "bucket"]
             )
 
     u = adaptive_parallelism(e, "vec_id").select("vec_id", "label", v.alias("v"))
-    bkt = u.mapInPandas(
-        kern, schema="vec_id bigint, label int, v array<double>, bucket int"
-    )
+    schema = ", ".join(f"{c} {t}" for c, t in u.dtypes)
+    bkt = u.mapInArrow(kern, schema=f"{schema}, bucket int")
     a = bkt.select(F.col("vec_id").alias("id_a"), F.col("label").alias("la"),
                    F.col("bucket").alias("ba"), F.col("v").alias("va"))
     b = bkt.select(F.col("vec_id").alias("id_b"), F.col("label").alias("lb"),
@@ -797,12 +786,16 @@ def dedup_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     Returns (vec_id, cell, keep) for the whole corpus; downstream
     filters keep = true. Candidate generation, assignment, and keep
     policy are ALL replayed by the DuckDB oracle."""
-    from graphdbetl_spark.operators.similarity import md5_sampled_centroids
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from graphdbetl_spark.operators.similarity import _np_seq_sum
+    from graphdbetl_spark.functions.vectors import (
+        arrow_matrix,
+        fold_dots,
+        seq_sum,
+        sign_buckets,
+    )
+    from graphdbetl_spark.operators.similarity import md5_sampled_centroids
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
     e = T(spark, sf, "embeddings")
@@ -838,32 +831,26 @@ def dedup_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     pm = np.array(planes, dtype=np.float64)
 
     def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            v = np.array(pdf["v"].tolist(), dtype=np.float64)
-            un = v / np.sqrt(_np_seq_sum(v * v, axis=1))[:, None]
-            acc_c = np.zeros((len(pdf), cm.shape[0]))
-            acc_p = np.zeros((len(pdf), pm.shape[0]))
-            for i in range(cm.shape[1]):  # dim-major: left-fold dots
-                acc_c = acc_c + un[:, i : i + 1] * cm[None, :, i]
-                acc_p = acc_p + v[:, i : i + 1] * pm[None, :, i]
-            bk = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(pm.shape[0]):
-                bk = bk + ((acc_p[:, j] >= 0).astype(np.int64) << j)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "cell": cell_ids[np.argmax(acc_c, axis=1)],
-                    "bucket": bk.astype(np.int32),
-                }
+            v = arrow_matrix(rb, "v", width=cm.shape[1])
+            un = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
+            cell = cell_ids[np.argmax(fold_dots(un, cm), axis=1)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("vec_id"),
+                    rb.column("v"),
+                    pa.array(cell),
+                    pa.array(sign_buckets(fold_dots(v, pm))),
+                ],
+                names=["vec_id", "v", "cell", "bucket"],
             )
 
     src = ensure_scan_parallelism(e, "vec_id").select(
         "vec_id", _dvec(F.col("embedding")).alias("v")
     )
-    bkt = src.mapInPandas(
+    bkt = src.mapInArrow(
         kern, schema="vec_id bigint, v array<double>, cell int, bucket int"
     )
     a = bkt.select(F.col("vec_id").alias("id_a"), F.col("cell").alias("ca"),
@@ -1043,8 +1030,10 @@ def dedup_cluster_components(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def sim_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force exact cosine top-10 for 5 query vectors: broadcast
-    queries × one corpus scan, JVM-side dot products, partial top-k."""
+    """Brute-force exact cosine top-10 for 5 query vectors: the queries
+    ride in the kernel closure and the corpus streams once through a
+    numpy mapInArrow kernel (left-fold dot products, per-batch partial
+    top-k) into one rank window."""
     e = T(spark, sf, "embeddings").withColumn("embedding", _dvec(F.col("embedding")))
     q = e.filter(F.col("vec_id") < 5)
     out = cosine_topk_bruteforce(e, q, "vec_id", "embedding", k=10)
@@ -1070,10 +1059,11 @@ def sim_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
 def mine_hard_negatives_q(spark: SparkSession, sf: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per anchor, the
     top-3 most-similar corpus vectors with a DIFFERENT label — anchors
-    broadcast, label-mismatch predicate applied before scoring, one
-    codegen corpus scan (operators/similarity.py mine_hard_negatives).
-    Exact, hence fully oracle-checked; swap the scan for an IVF/PQ
-    probe when the anchor set outgrows a broadcast."""
+    in the kernel closure, label-mismatch predicate applied before the
+    per-batch top-k cut, one numpy mapInArrow corpus scan
+    (operators/similarity.py mine_hard_negatives). Exact, hence fully
+    oracle-checked; swap the scan for an IVF/PQ probe when the anchor
+    set outgrows the closure."""
     from graphdbetl_spark.operators.similarity import mine_hard_negatives
 
     e = T(spark, sf, "embeddings").withColumn("embedding", _dvec(F.col("embedding")))
@@ -3253,8 +3243,9 @@ def text_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
 def sim_range_search(spark: SparkSession, sf: str) -> DataFrame:
     """Exact cosine RANGE search (FAISS range_search surface): all
     corpus vectors within similarity radius 0.25 of each query
-    (vec_id % 100 == 0), broadcast queries × one codegen'd corpus
-    scan. See operators/similarity.py cosine_range_search."""
+    (vec_id % 100 == 0): queries in the kernel closure × one numpy
+    mapInArrow corpus scan. See operators/similarity.py
+    cosine_range_search."""
     from graphdbetl_spark.operators.similarity import cosine_range_search
 
     e = T(spark, sf, "embeddings").withColumn("embedding", _dvec(F.col("embedding")))

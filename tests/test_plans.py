@@ -350,12 +350,31 @@ def test_pq_query_path_single_shuffle(spark):
     multi-split cluster inputs)."""
     plan = plan_of(spark, "sim_pq_topk_md5")
     assert node_count(plan, "Exchange") in (1, 2)
-    # r12: assign + ADC numpy kernels run as mapInArrow (zero-copy list
-    # views, guide §4.2) — MapInArrow nodes, no pandas boxing anywhere
-    assert plan.count("MapInArrow") >= 2
-    assert plan.count("MapInPandas") == 0
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize(
+    "name, min_arrow",
+    [
+        ("sim_pq_topk_md5", 2),  # code assignment + ADC scoring
+        ("sim_cosine_topk", 1),
+        ("mine_hard_negatives", 1),
+        ("sim_range_search", 1),
+        ("sim_lsh_topk", 1),
+        ("sim_ivf_topk", 1),
+        ("dedup_embedding_cosine", 1),
+        ("dedup_semantic_clusters", 1),
+        ("decontaminate_semantic", 1),
+    ],
+)
+def test_vector_kernels_run_as_map_in_arrow(spark, name, min_arrow):
+    """Every numpy vector kernel crosses the Python boundary as
+    mapInArrow over the guarded list view — MapInArrow nodes, no
+    pandas boxing anywhere in the plan."""
+    plan = plan_of(spark, name)
+    assert plan.count("MapInArrow") >= min_arrow
+    assert plan.count("MapInPandas") == 0
 
 
 def test_repeated_ngram_scrub_broadcasts_filtered_grams(spark):

@@ -95,12 +95,11 @@ def test_adaptive_parallelism_directions(spark):
     assert adaptive_parallelism(wide, "k", bytes_per_task=1 << 40) is wide
 
 
-def test_arrow_ids_vecs_rejects_ragged_and_null(spark):
-    import numpy as np
+def test_arrow_matrix_rejects_ragged_and_null():
     import pyarrow as pa
     import pytest
 
-    from graphdbetl_spark.operators.coreset import _arrow_ids_vecs
+    from graphdbetl_spark.functions.vectors import arrow_matrix
 
     def rb(vecs):
         return pa.RecordBatch.from_arrays(
@@ -109,13 +108,17 @@ def test_arrow_ids_vecs_rejects_ragged_and_null(spark):
             names=["vec_id", "__v"],
         )
 
-    ids, v = _arrow_ids_vecs(rb([[1.0, 2.0], [3.0, 4.0]]), "vec_id")
-    assert v.shape == (2, 2) and ids.tolist() == [1, 2]
+    v = arrow_matrix(rb([[1.0, 2.0], [3.0, 4.0]]), "__v")
+    assert v.shape == (2, 2) and v.tolist() == [[1.0, 2.0], [3.0, 4.0]]
     # ragged widths whose total still divides num_rows: the silent-
-    # misalignment case the r11 ADVICE flagged — must raise, not skew
+    # misalignment case — must raise, not skew
     with pytest.raises(ValueError, match="ragged"):
-        _arrow_ids_vecs(rb([[1.0, 2.0, 3.0], [4.0]]), "vec_id")
-    with pytest.raises(ValueError, match="null embedding"):
-        _arrow_ids_vecs(rb([[1.0, 2.0], None]), "vec_id")
+        arrow_matrix(rb([[1.0, 2.0, 3.0], [4.0]]), "__v")
+    # uniform within the batch but narrower than the kernel's width:
+    # a corpus ragged ACROSS batches
+    with pytest.raises(ValueError, match="ragged .* expected 2"):
+        arrow_matrix(rb([[1.0], [4.0]]), "__v", width=2)
+    with pytest.raises(ValueError, match="null rows"):
+        arrow_matrix(rb([[1.0, 2.0], None]), "__v")
     with pytest.raises(ValueError, match="null elements"):
-        _arrow_ids_vecs(rb([[1.0, None], [2.0, 3.0]]), "vec_id")
+        arrow_matrix(rb([[1.0, None], [2.0, 3.0]]), "__v")

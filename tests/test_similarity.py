@@ -395,3 +395,39 @@ def test_md5_ann_variants_recall_floors_and_determinism(spark):
         assert {(x.query_id, x.neighbor_id, x.rank) for x in rows} == {
             (x.query_id, x.neighbor_id, x.rank) for x in again
         }
+
+
+# widths 2 + 3 + 1 = 3 rows × 2: a reshape alone would accept the batch
+RAGGED = [(0, [1.0, 0.0]), (1, [0.0, 1.0, 1.0]), (2, [1.0])]
+NULL_ROW = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None)]
+
+
+@pytest.mark.parametrize("rows, word", [(RAGGED, "ragged"), (NULL_ROW, "null")],
+                         ids=["ragged", "null"])
+@pytest.mark.parametrize(
+    "kernel", ["cosine_topk_bruteforce", "cosine_range_search", "_pair_cosine_scores"]
+)
+def test_vector_kernels_name_ragged_and_null_rows(spark, kernel, rows, word):
+    """A ragged or null embedding row inside a batch fails the kernel
+    with an error that names the defect, instead of a generic numpy
+    shape error or a silently misaligned matrix."""
+    from pyspark.errors import PythonException
+
+    from graphdbetl_spark.operators.similarity import cosine_range_search
+    from graphdbetl_spark.plans.llm_q import _pair_cosine_scores
+
+    if kernel == "_pair_cosine_scores":
+        pairs = spark.createDataFrame(
+            [(0, i, [1.0, 0.0], v) for i, v in rows],
+            "id_a long, id_b long, va array<double>, vb array<double>",
+        ).coalesce(1)
+        out = _pair_cosine_scores(pairs)
+    else:
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        ).coalesce(1)
+        fn = {"cosine_topk_bruteforce": cosine_topk_bruteforce,
+              "cosine_range_search": cosine_range_search}[kernel]
+        out = fn(emb, emb.filter("vec_id = 0"))
+    with pytest.raises(PythonException, match=word):
+        out.collect()

@@ -1,22 +1,23 @@
-"""Dump .explain("formatted") for headline queries to plans/r12/.
+"""Dump .explain("formatted") for registry queries to plans/<OUT_SUBDIR>/.
 
-Optimization-round evidence: plans/r12/<query>_<tag>.txt holds the
-formatted physical plan for each query at the bench scale factor, so
-plan-shape claims in OPTIMIZATION_r12.md can be checked without
-running Spark.
+plans/<OUT_SUBDIR>/<query>_<tag>.txt holds the formatted physical plan
+of each query, so plan-shape claims can be checked without running
+Spark. For the ITERATIVE operators (kcenter / mmr / logreg) the final
+frame is a driver-built trajectory (Scan ExistingRDD) that shows
+nothing about the per-round job, so for those entries the tool also
+hooks ``coreset.PLAN_PROBE`` and writes the FIRST round's pre-collect
+plan to plans/<OUT_SUBDIR>/<query>_round_<tag>.txt.
 
-r11 verdict #6: for the ITERATIVE operators (kcenter / mmr / logreg)
-the final frame is a driver-built trajectory (Scan ExistingRDD) that
-shows nothing about the per-round job the optimizations target — so
-for those entries this tool additionally hooks
-``coreset.PLAN_PROBE`` and dumps the FIRST round's pre-collect plan to
-plans/r12/<query>_round_<tag>.txt.
+Queries read the parquet tables under $SPARK_GRAFT_SF_DIR (the bench's
+data directory); with no NAME the bench headline set is dumped.
 
-Usage: python tools/dump_plans_r12.py TAG [NAME...]   (TAG = before|after)
+Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...]
+       (TAG = before|after)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -31,6 +32,7 @@ ITERATIVE = {
     "select_kcenter_coreset",
     "select_kcenter_coreset_batched",
     "select_mmr_diverse",
+    "select_mmr_diverse_batched",
     "train_quality_classifier",
 }
 
@@ -42,16 +44,17 @@ def _fmt(df) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r12"
+    if len(sys.argv) < 3 or "SPARK_GRAFT_SF_DIR" not in os.environ:
+        raise SystemExit(__doc__)
+    sub, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / sub
     out_dir.mkdir(parents=True, exist_ok=True)
-    import bench
-
     if not names:
+        import bench
+
         names = list(bench.HEADLINE)
-    sf_dir = "/root/testdata/sf0.1"
-    spark = get_spark("dump-plans-r12")
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
+    spark = get_spark("dump-plans")
     qs = all_queries()
     for name in names:
         captured: dict[str, str] = {}
@@ -65,10 +68,8 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             plan = _fmt(df)
             if name in ITERATIVE:
-                # iterative operators run their rounds at BUILD time
-                # (the query fn drives the loop), so the probe has
-                # fired by now; still, force an action for any lazy
-                # tail so the dump reflects an executed query.
+                # the query fn drives the rounds at build time, so the
+                # probe has fired; the action covers any lazy tail
                 df.write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 - record, keep dumping
             plan = f"EXPLAIN FAILED: {exc}"
