@@ -185,20 +185,23 @@ def rolling_fingerprints(
     arbitrary-precision ints compute the identical residues (pure
     integer arithmetic, code-point parity with ascii()/ord) in
     seconds. Returns (id, fingerprint string)."""
-    import pandas as pd
+    import pyarrow as pa
 
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
     def kern(batches):
-        for pdf in batches:
+        for rb in batches:
             out = []
-            for t in pdf[text_col]:
+            for t in rb.column(text_col).to_pylist():
                 h = 0
                 for ch in t or "":
                     h = (h * base + ord(ch)) % mod
                 out.append(str(h))
-            yield pd.DataFrame({id_col: pdf[id_col], "fingerprint": out})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(out, pa.string())],
+                names=[id_col, "fingerprint"],
+            )
 
     src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(kern, schema=f"{id_col} {id_type}, fingerprint string")
+    return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fingerprint string")

@@ -391,7 +391,7 @@ def bpe_apply_merges(
     """
     import re
 
-    import pandas as pd
+    import pyarrow as pa
 
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
@@ -403,22 +403,23 @@ def bpe_apply_merges(
     ws_re = re.compile(r"\s+", re.ASCII)
 
     def kern(batches):
-        for pdf in batches:
+        for rb in batches:
             nw, ns = [], []
-            for t in pdf[text_col]:
+            for t in rb.column(text_col).to_pylist():
                 words = [w for w in ws_re.split((t or "").strip(" ")) if w]
                 nw.append(len(words))
                 enc = w_.join(d_ + (d_ + d_).join(w) + d_ for w in words)
                 for pat, rep in rules:
                     enc = enc.replace(pat, rep)
                 ns.append(enc.count(d_) // 2)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_words": nw, "n_subwords": ns}
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(nw, pa.int64()), pa.array(ns, pa.int64())],
+                names=[id_col, "n_words", "n_subwords"],
             )
 
     src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(
+    return src.mapInArrow(
         kern, schema=f"{id_col} {id_type}, n_words long, n_subwords long"
     )
 

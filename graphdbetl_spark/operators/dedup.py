@@ -136,7 +136,7 @@ def winnow_fingerprints(
     import hashlib
     import re as _re
 
-    import pandas as pd
+    import pyarrow as pa
 
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
@@ -152,9 +152,9 @@ def winnow_fingerprints(
                 memo[g] = h
             return h
 
-        for pdf in batches:
-            ids, fps = [], []
-            for did, t in zip(pdf[id_col], pdf[text_col]):
+        for rb in batches:
+            rows, fps = [], []
+            for row, t in enumerate(rb.column(text_col).to_pylist()):
                 toks = ws_re.split((t or "").strip(" "))
                 gh = [
                     ghash(" ".join(toks[i : i + k]))
@@ -167,13 +167,19 @@ def winnow_fingerprints(
                     wins = {min(gh)}
                 else:
                     continue
-                ids.extend([did] * len(wins))
+                rows.extend([row] * len(wins))
                 fps.extend(wins)
-            yield pd.DataFrame({id_col: ids, "fp": fps})
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(id_col).take(pa.array(rows, pa.int64())),
+                    pa.array(fps, pa.int64()),
+                ],
+                names=[id_col, "fp"],
+            )
 
     src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
-    return src.mapInPandas(kern, schema=f"{id_col} {id_type}, fp long")
+    return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fp long")
 
 
 def minhash_near_duplicates(
@@ -814,7 +820,7 @@ def ngram_containment_collapsed_pairs(
     groups = dedup_normalized_exact_groups(df, text_col, id_col)
     # counts feeds THREE consumers (survivor semi-join + both dup-count
     # joins); materialize it eagerly so the Arrow digest pass over the
-    # corpus runs exactly once — unpersisted, the mapInPandas digest +
+    # corpus runs exactly once — unpersisted, the digest kernel +
     # hash agg re-ran per consumer (measured 42 s → 17 s cold at
     # sf0.01). Tiny residency: two fixed-width columns, one row per
     # normalized group (same eager-localCheckpoint discipline as
@@ -1223,21 +1229,27 @@ def _normalized_digest_kernel(text_col: str, id_col: str):
     into that alphabet (Latin capitals, U+212A KELVIN SIGN → k) map
     identically under Python ``str.lower`` and UTF8String's
     locale-independent lowercasing. Verified digest-identical against
-    the JVM chain on the full 30× replica corpus."""
+    the JVM chain on the full 30× replica corpus. A null text digests
+    to NULL, as ``md5(normalize_text(NULL))`` and the oracle do."""
     import hashlib
 
-    import pandas as pd
+    import pyarrow as pa
 
     def kern(batches):
         table = _normalize_delete_table()
-        for pdf in batches:
+        for rb in batches:
             digests = [
-                hashlib.md5(
+                None
+                if s is None
+                else hashlib.md5(
                     " ".join(s.lower().translate(table).split()).encode()
                 ).hexdigest()
-                for s in pdf[text_col]
+                for s in rb.column(text_col).to_pylist()
             ]
-            yield pd.DataFrame({id_col: pdf[id_col], "norm_digest": digests})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(digests, pa.string())],
+                names=[id_col, "norm_digest"],
+            )
 
     return kern
 
@@ -1266,7 +1278,7 @@ def dedup_normalized_exact_groups(
     )
     id_type = dict(src.dtypes)[id_col]
     return (
-        src.mapInPandas(
+        src.mapInArrow(
             _normalized_digest_kernel(text_col, id_col),
             schema=f"{id_col} {id_type}, norm_digest string",
         )

@@ -3,7 +3,7 @@
 Contract (north-star): image/audio/video payloads ride as
 ``binary`` columns (or out-of-line as storage paths) next to a typed
 metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched ``mapInPandas`` stages so each Python batch touches a
+as Arrow-batched ``mapInArrow`` stages so each Python batch touches a
 bounded number of payload bytes.
 
 The decode path is REAL for the uncompressed formats a pure-Python
@@ -19,11 +19,12 @@ from __future__ import annotations
 
 import os
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from graphdbetl_spark.operators.skew import adaptive_parallelism
 from pyspark.sql.types import (
@@ -89,7 +90,7 @@ _DECODE_BPT = int(os.environ.get("SPARK_GRAFT_DECODE_BPT", str(128 << 10)))
 
 def _fan(df: DataFrame, *cols: str) -> DataFrame:
     """Fan-out posture for the decode kernels (r12): project to ONLY
-    the columns the kernel reads FIRST (§4.1 — an opaque mapInPandas
+    the columns the kernel reads FIRST (§4.1 — an opaque mapInArrow
     otherwise ships every column AND sizes the stats on them), then
     size-derived partitioning at decode weight. The r11 posture
     (``ensure_scan_parallelism``: fan every small scan to the core
@@ -102,12 +103,53 @@ def _fan(df: DataFrame, *cols: str) -> DataFrame:
     return adaptive_parallelism(df.select(*cols), cols[0], _DECODE_BPT)
 
 
-def _rows(pdf: pd.DataFrame, *cols: str):
-    """Row iteration over plain Python lists. ``pdf.iterrows()`` boxes
-    a pandas Series PER ROW — for the 48-pixel fixtures that costs more
-    than the decode it wraps (guide §4.2: batch-level work, not row
-    boxing); zipping the columns' object lists is C-speed."""
-    return zip(*(pdf[c].tolist() for c in cols))
+def _column(rb: pa.RecordBatch, col: str, what: str = "payload") -> pa.Array:
+    """Column ``col`` of a record batch, refusing nulls by name. A null
+    payload has nothing to decode and a null seed has no pattern;
+    left alone they fail deep inside the kernel (``bytes(None)``,
+    ``len(None)``) without saying which column held them."""
+    arr = rb.column(col)
+    if arr.null_count:
+        raise ValueError(f"null {what} in column '{col}'")
+    return arr
+
+
+def _map_typed(df: DataFrame, schema: StructType, kernel) -> DataFrame:
+    """Run ``kernel`` (record batch → one column per field of
+    ``schema``) under mapInArrow. Every output batch is built against
+    ``to_arrow_schema(schema)``, computed once here: Arrow arrays
+    (pass-through ids) are cast to the declared type and Python lists
+    are built with it. mapInArrow does not coerce: an int64 array for
+    an ``int`` field fails in the JVM."""
+    target = to_arrow_schema(schema)
+
+    def batches(it):
+        for rb in it:
+            cols = [
+                c.cast(f.type) if isinstance(c, pa.Array) else pa.array(c, f.type)
+                for c, f in zip(kernel(rb), target)
+            ]
+            yield pa.RecordBatch.from_arrays(cols, schema=target)
+
+    return df.mapInArrow(batches, schema)
+
+
+def _attach(df: DataFrame, id_col: str, seed_col: str, payloads_of) -> DataFrame:
+    """Shared body of the ``attach_synthetic_*`` fixture generators:
+    the :func:`_fan` projection, then per batch one payload per row
+    from ``payloads_of(seeds)`` (the non-null ``seed_col`` values as
+    a numpy array) next to the passed-through ``id_col``. Arrow-batched
+    and partition-local (no shuffle)."""
+    cols = (id_col,) if seed_col == id_col else (id_col, seed_col)
+    schema = StructType(
+        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
+    )
+
+    def kernel(rb):
+        seeds = _column(rb, seed_col, "seed").to_numpy()
+        return [rb.column(id_col), payloads_of(seeds)]
+
+    return _map_typed(_fan(df, *cols), schema, kernel)
 
 
 def _synthetic_rgb_batch(ids, width: int, height: int):
@@ -116,8 +158,6 @@ def _synthetic_rgb_batch(ids, width: int, height: int):
     int64 modular arithmetic is exact, so this is the same function
     evaluated batch-wise (guide §4.2: hand whole batches to NumPy
     instead of per-pixel Python loops). Parity pinned by pytest."""
-    import numpy as np
-
     ida = np.asarray(ids, dtype=np.int64)[:, None, None]
     x = np.arange(width, dtype=np.int64)[None, None, :]
     y = np.arange(height, dtype=np.int64)[None, :, None]
@@ -131,8 +171,6 @@ def _synthetic_rgb_batch(ids, width: int, height: int):
 def _synthetic_rgb_cluster_batch(ids, width: int, height: int):
     """Vectorized :func:`synthetic_rgb_cluster` (same treatment as
     :func:`_synthetic_rgb_batch`; parity pinned by pytest)."""
-    import numpy as np
-
     ida = np.asarray(ids, dtype=np.int64)
     k = ida[:, None] // 10
     c = ida[:, None] % 10
@@ -252,34 +290,28 @@ def attach_synthetic_images(
     width: int = 8,
     height: int = 6,
     fmt: str = "ppm",
+    key_col: str | None = None,
 ) -> DataFrame:
     """Attach a REAL encoded image payload (PPM or BMP) derived
     deterministically from the id — the fixture generator for the
-    decode → feature → resize pipeline. mapInPandas keeps payload
-    construction Arrow-batched and partition-local (no shuffle)."""
-    encode = encode_ppm if fmt == "ppm" else encode_bmp
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
+    decode → feature → resize pipeline. With ``key_col`` the pixel
+    pattern is generated from that column while the row keeps its own
+    ``id_col`` — the fixture for duplicate-image corpora (rows sharing
+    a key carry byte-identical payloads under distinct ids)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            if fmt == "ppm":
-                # vectorized generate + slice-free encode (guide §4.2)
-                payloads = _encode_ppm_batch(
-                    _synthetic_rgb_batch(ids, width, height), width, height
-                )
-            else:  # BMP keeps the reference per-row path (BGR + padding)
-                payloads = [
-                    encode(width, height, synthetic_rgb(int(i), width, height))
-                    for i in ids
-                ]
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def payloads_of(seeds):
+        if fmt == "ppm":
+            # vectorized generate + slice-free encode (guide §4.2)
+            return _encode_ppm_batch(
+                _synthetic_rgb_batch(seeds, width, height), width, height
+            )
+        # BMP keeps the reference per-row path (BGR + padding)
+        return [
+            encode_bmp(width, height, synthetic_rgb(int(s), width, height))
+            for s in seeds
+        ]
 
-    return _fan(df, id_col).mapInPandas(
-        batches, schema
-    )
+    return _attach(df, id_col, key_col or id_col, payloads_of)
 
 
 DECODE_SCHEMA = StructType(
@@ -301,41 +333,31 @@ def decode_features(df: DataFrame, payload_col: str = "payload", id_col: str = "
     sums. Sums are exact integers, so the comparison against an oracle
     carries zero float-formatting risk."""
 
-    import numpy as np
+    def kernel(rb):
+        fmts, ws, hs, bufs = [], [], [], []
+        for pl in _column(rb, payload_col).to_pylist():
+            fmt, w, h, rgb = decode_image(pl)
+            fmts.append(fmt)
+            ws.append(w)
+            hs.append(h)
+            bufs.append(rgb)
+        return [rb.column(id_col), fmts, ws, hs, *_channel_sums(bufs)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {k.name: [] for k in DECODE_SCHEMA.fields}
-            bufs: list = []
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                fmt, w, h, rgb = decode_image(bytes(pl))
-                rows["doc_id"].append(rid)
-                rows["format"].append(fmt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                bufs.append(rgb)
-            # exact integer channel sums: uniform geometry (the common
-            # corpus shape) sums the whole batch as ONE stacked int64
-            # matrix (guide §4.2 — per-row numpy loses to per-row
-            # Python sums at 48-pixel images; batch numpy beats both);
-            # mixed geometries keep the per-row reference sums.
-            sizes = {len(b) for b in bufs}
-            if bufs and len(sizes) == 1 and next(iter(sizes)):
-                mat = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(
-                    len(bufs), -1, 3
-                )
-                s = mat.astype(np.int64).sum(axis=1)
-                rows["sum_r"] = s[:, 0].tolist()
-                rows["sum_g"] = s[:, 1].tolist()
-                rows["sum_b"] = s[:, 2].tolist()
-            else:
-                for rgb in bufs:
-                    rows["sum_r"].append(sum(rgb[0::3]))
-                    rows["sum_g"].append(sum(rgb[1::3]))
-                    rows["sum_b"].append(sum(rgb[2::3]))
-            yield pd.DataFrame(rows)
+    return _map_typed(df.select(id_col, payload_col), DECODE_SCHEMA, kernel)
 
-    return df.select(id_col, payload_col).mapInPandas(batches, DECODE_SCHEMA)
+
+def _channel_sums(bufs: list[bytes]):
+    """Exact integer (sum_r, sum_g, sum_b) of row-major RGB buffers.
+    Uniform geometry (the common corpus shape) sums the whole batch as
+    ONE stacked int64 matrix (guide §4.2 — per-row numpy loses to
+    per-row Python sums at 48-pixel images; batch numpy beats both);
+    mixed geometries keep the per-row reference sums."""
+    sizes = {len(b) for b in bufs}
+    if bufs and len(sizes) == 1 and next(iter(sizes)):
+        mat = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(len(bufs), -1, 3)
+        s = mat.astype(np.int64).sum(axis=1)
+        return s[:, 0], s[:, 1], s[:, 2]
+    return tuple([sum(rgb[c::3]) for rgb in bufs] for c in range(3))
 
 
 FRAME_SCHEMA = StructType(
@@ -355,36 +377,36 @@ def frame_sample(
     stride: int = 256,
 ) -> DataFrame:
     """Frame sampling over binary payloads (the video path): one input
-    row fans out to N frame rows — mapInPandas is a flat map, so the
+    row fans out to N frame rows — mapInArrow is a flat map, so the
     one-to-many shape needs no explode. The 'decoder' slices fixed
     windows from the byte stream (deterministic stand-in for a codec's
     keyframe extraction; swap the slicing for a real decoder at
-    deployment). Output partitioning follows the input — no shuffle."""
+    deployment). A null payload samples as empty bytes (no frames).
+    Output partitioning follows the input — no shuffle."""
 
-    def batches(it):
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for rid, data in _rows(pdf, id_col, payload_col):
-                data = data or b""
-                for i, off in enumerate(range(0, len(data), stride)):
-                    ids.append(rid)
-                    idxs.append(i)
-                    frames.append(bytes(data[off : off + frame_size]))
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames})
+    def kernel(rb):
+        ids, idxs, frames = [], [], []
+        for rid, data in zip(
+            rb.column(id_col).to_pylist(), rb.column(payload_col).to_pylist()
+        ):
+            data = data or b""
+            for i, off in enumerate(range(0, len(data), stride)):
+                ids.append(rid)
+                idxs.append(i)
+                frames.append(data[off : off + frame_size])
+        return [ids, idxs, frames]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, FRAME_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), FRAME_SCHEMA, kernel)
 
 
 def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
-    """Feature extraction over binary payloads via mapInPandas.
+    """Feature extraction over binary payloads via mapInArrow.
 
     Arrow streams batches of (id, payload); Python computes per-payload
     features. Here the 'feature' is a deterministic byte-mean fake
     (decode stubbed), but the batch shape, schema, and partition flow
     are exactly what a real decoder uses.
     """
-
-    import numpy as np
 
     def _mean(b: bytes) -> str:
         if not len(b):
@@ -393,18 +415,11 @@ def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = 
         s = int(np.frombuffer(b, dtype=np.uint8).astype(np.int64).sum())
         return f"{(s / len(b)):.4f}"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[payload_col].map(len).astype("int64"),
-                    "byte_mean": pdf[payload_col].map(_mean),
-                }
-            )
-            yield out
+    def kernel(rb):
+        pls = _column(rb, payload_col).to_pylist()
+        return [rb.column(id_col), [len(b) for b in pls], [_mean(b) for b in pls]]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), FEATURE_SCHEMA, kernel)
 
 
 RESIZED_SCHEMA = StructType(
@@ -423,67 +438,51 @@ def resize_media(
     payload_col: str = "payload",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Resize stage over binary payloads via mapInPandas (the image
+    """Resize stage over binary payloads via mapInArrow (the image
     path): decodable payloads (PPM/BMP) get a REAL nearest-neighbor
     resample to ``width×height`` and are re-encoded in their own
     format; undecodable payloads fall back to deterministic byte
-    stride-subsampling / zero-padding (format 'fake'). A deployment
-    swaps only the codec branch of ``decode_image`` for compressed
-    formats. The Arrow batch shape, output schema (payload + typed
-    metadata), and partition flow (follows input, no shuffle) are the
-    production plumbing.
+    stride-subsampling / zero-padding (format 'fake'); a null payload
+    resizes as empty bytes. A deployment swaps only the codec branch of
+    ``decode_image`` for compressed formats. The Arrow batch shape,
+    output schema (payload + typed metadata), and partition flow
+    (follows input, no shuffle) are the production plumbing.
     """
     target = width * height
 
-    import numpy as np
+    def resize(data: bytes) -> tuple[str, bytes]:
+        try:
+            fmt, sw, sh, rgb = decode_image(data)
+            # nearest-neighbor resample as one fancy-indexed gather
+            # (guide §4.2). Same truncating float map as the per-pixel
+            # reference: int(y*sh/height) == float64-divide then trunc
+            # on both paths.
+            sy = np.minimum((np.arange(height) * sh / height).astype(np.int64), sh - 1)
+            sx = np.minimum((np.arange(width) * sw / width).astype(np.int64), sw - 1)
+            a = np.frombuffer(rgb, dtype=np.uint8).reshape(sh, sw, 3)
+            encode = encode_ppm if fmt == "ppm" else encode_bmp
+            return fmt, encode(width, height, a[sy][:, sx].tobytes())
+        except (NotImplementedError, ValueError, IndexError, struct.error):
+            if len(data) >= target:
+                idx = (np.arange(target) * (len(data) / target)).astype(np.int64)
+                return "fake", np.frombuffer(data, dtype=np.uint8)[idx].tobytes()
+            return "fake", data + b"\x00" * (target - len(data))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_payloads, out_meta = [], [], []
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                data = bytes(pl or b"")
-                try:
-                    fmt, sw, sh, rgb = decode_image(data)
-                    # nearest-neighbor resample as one fancy-indexed
-                    # gather (guide §4.2). Same truncating float map as
-                    # the per-pixel reference: int(y*sh/height) ==
-                    # float64-divide then trunc on both paths.
-                    sy = np.minimum(
-                        (np.arange(height) * sh / height).astype(np.int64), sh - 1
-                    )
-                    sx = np.minimum(
-                        (np.arange(width) * sw / width).astype(np.int64), sw - 1
-                    )
-                    a = np.frombuffer(rgb, dtype=np.uint8).reshape(sh, sw, 3)
-                    resampled = a[sy][:, sx].tobytes()
-                    encode = encode_ppm if fmt == "ppm" else encode_bmp
-                    resized = encode(width, height, resampled)
-                except (NotImplementedError, ValueError, IndexError, struct.error):
-                    fmt = "fake"
-                    if len(data) >= target:
-                        step = len(data) / target
-                        idx = (np.arange(target) * step).astype(np.int64)
-                        resized = (
-                            np.frombuffer(data, dtype=np.uint8)[idx].tobytes()
-                        )
-                    else:
-                        resized = data + b"\x00" * (target - len(data))
-                out_ids.append(rid)
-                out_payloads.append(resized)
-                out_meta.append(
-                    {
-                        "media_type": "image",
-                        "format": fmt,
-                        "width": width,
-                        "height": height,
-                        "n_bytes": len(resized),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "payload": out_payloads, "media_meta": out_meta}
-            )
+    def kernel(rb):
+        out = [resize(pl or b"") for pl in rb.column(payload_col).to_pylist()]
+        meta = [
+            {
+                "media_type": "image",
+                "format": fmt,
+                "width": width,
+                "height": height,
+                "n_bytes": len(resized),
+            }
+            for fmt, resized in out
+        ]
+        return [rb.column(id_col), [resized for _, resized in out], meta]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, RESIZED_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), RESIZED_SCHEMA, kernel)
 
 
 # ----------------------------------------------------------- audio (WAV/PCM)
@@ -540,8 +539,6 @@ def _synthetic_pcm16_batch(ids, n_samples: int):
     """Vectorized :func:`synthetic_pcm16`: (n, n_samples) little-endian
     int16 matrix, row i byte-identical to ``synthetic_pcm16(ids[i])``
     (int64 arithmetic exact; '<i2' matches struct.pack '<h')."""
-    import numpy as np
-
     ida = np.asarray(ids, dtype=np.int64)[:, None]
     i = np.arange(n_samples, dtype=np.int64)[None, :]
     return (((ida * 31 + i * 7) % 65536) - 32768).astype("<i2")
@@ -564,25 +561,14 @@ def attach_synthetic_audio(
 ) -> DataFrame:
     """Attach a REAL encoded WAV payload derived deterministically from
     the id — Arrow-batched, partition-local (no shuffle)."""
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            pcm = _synthetic_pcm16_batch(ids, n_samples)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": [
-                        encode_wav(sample_rate, 1, row.tobytes()) for row in pcm
-                    ],
-                }
-            )
-
-    return _fan(df, id_col).mapInPandas(
-        batches, schema
+    return _attach(
+        df,
+        id_col,
+        id_col,
+        lambda seeds: [
+            encode_wav(sample_rate, 1, row.tobytes())
+            for row in _synthetic_pcm16_batch(seeds, n_samples)
+        ],
     )
 
 
@@ -591,23 +577,20 @@ def audio_features(df: DataFrame, payload_col: str = "payload", id_col: str = "d
     emit format fields plus exact integer sample sums (sum and sum-of-
     absolute — the integer core of DC offset and mean amplitude), so
     oracle comparison carries zero float risk."""
-    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {f.name: [] for f in AUDIO_SCHEMA.fields}
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                rate, ch, samples = decode_wav(bytes(pl))
-                a = np.asarray(samples, dtype=np.int64)
-                rows["doc_id"].append(rid)
-                rows["sample_rate"].append(rate)
-                rows["channels"].append(ch)
-                rows["n_samples"].append(len(samples))
-                rows["sum_samples"].append(int(a.sum()))
-                rows["sum_abs"].append(int(np.abs(a).sum()))
-            yield pd.DataFrame(rows)
+    def kernel(rb):
+        rates, chs, ns, sums, absums = [], [], [], [], []
+        for pl in _column(rb, payload_col).to_pylist():
+            rate, ch, samples = decode_wav(pl)
+            a = np.asarray(samples, dtype=np.int64)
+            rates.append(rate)
+            chs.append(ch)
+            ns.append(len(samples))
+            sums.append(int(a.sum()))
+            absums.append(int(np.abs(a).sum()))
+        return [rb.column(id_col), rates, chs, ns, sums, absums]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, AUDIO_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), AUDIO_SCHEMA, kernel)
 
 
 # ------------------------------------------------- video (PPM frame stream)
@@ -655,40 +638,27 @@ def attach_synthetic_video(
     n_frames: int = 8,
     width: int = 8,
     height: int = 6,
+    key_col: str | None = None,
 ) -> DataFrame:
     """Attach a REAL multi-frame video payload (concatenated PPM
     frames, frame f seeded by doc_id*1000+f) — Arrow-batched,
-    partition-local."""
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
+    partition-local. With ``key_col`` the frames are seeded from that
+    column instead (frame f of key k uses pattern k*1000+f) — the
+    duplicate-video corpus generator."""
+    hdr = b"P6\n%d %d\n255\n" % (width, height)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payloads_of(seeds):
+        # all (seed, frame) patterns generated in one vectorized pass
+        frame_seeds = (
+            np.asarray(seeds, dtype=np.int64)[:, None] * 1000
+            + np.arange(n_frames, dtype=np.int64)[None, :]
+        )
+        mat = _synthetic_rgb_batch(frame_seeds.ravel(), width, height).reshape(
+            len(seeds), n_frames, -1
+        )
+        return [b"".join(hdr + fr.tobytes() for fr in doc) for doc in mat]
 
-        hdr = b"P6\n%d %d\n255\n" % (width, height)
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            # all (id, frame) seeds generated in one vectorized pass
-            seeds = (
-                np.asarray(ids, dtype=np.int64)[:, None] * 1000
-                + np.arange(n_frames, dtype=np.int64)[None, :]
-            )
-            mat = _synthetic_rgb_batch(seeds.ravel(), width, height).reshape(
-                len(ids), n_frames, -1
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": [
-                        b"".join(hdr + fr.tobytes() for fr in doc) for doc in mat
-                    ],
-                }
-            )
-
-    return _fan(df, id_col).mapInPandas(
-        batches, schema
-    )
+    return _attach(df, id_col, key_col or id_col, payloads_of)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -714,46 +684,26 @@ def video_frame_features(
     ``every``-th frame (keyframe-style temporal subsampling — the
     standard vision-pretraining reduction), decode each kept frame, and
     emit exact per-channel pixel sums. One input row fans out to
-    ceil(n_frames/every) rows inside mapInPandas — no explode, no
+    ceil(n_frames/every) rows inside mapInArrow — no explode, no
     shuffle; output partitioning follows the input."""
 
-    import numpy as np
+    def kernel(rb):
+        ids, idxs, ws, hs, bufs = [], [], [], [], []
+        for rid, pl in zip(
+            rb.column(id_col).to_pylist(), _column(rb, payload_col).to_pylist()
+        ):
+            for idx, frame in enumerate(split_ppm_stream(pl)):
+                if idx % every:
+                    continue
+                _fmt, w, h, rgb = decode_image(frame)
+                ids.append(rid)
+                idxs.append(idx)
+                ws.append(w)
+                hs.append(h)
+                bufs.append(rgb)
+        return [ids, idxs, ws, hs, *_channel_sums(bufs)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {f.name: [] for f in VIDEO_FRAME_SCHEMA.fields}
-            bufs: list = []
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                for idx, frame in enumerate(split_ppm_stream(bytes(pl))):
-                    if idx % every:
-                        continue
-                    _fmt, w, h, rgb = decode_image(frame)
-                    rows["doc_id"].append(rid)
-                    rows["frame_idx"].append(idx)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    bufs.append(rgb)
-            # batch-stacked exact channel sums for uniform frames, the
-            # decode_features treatment (per-row reference otherwise)
-            sizes = {len(b) for b in bufs}
-            if bufs and len(sizes) == 1 and next(iter(sizes)):
-                s = (
-                    np.frombuffer(b"".join(bufs), dtype=np.uint8)
-                    .reshape(len(bufs), -1, 3)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                rows["sum_r"] = s[:, 0].tolist()
-                rows["sum_g"] = s[:, 1].tolist()
-                rows["sum_b"] = s[:, 2].tolist()
-            else:
-                for rgb in bufs:
-                    rows["sum_r"].append(sum(rgb[0::3]))
-                    rows["sum_g"].append(sum(rgb[1::3]))
-                    rows["sum_b"].append(sum(rgb[2::3]))
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(batches, VIDEO_FRAME_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), VIDEO_FRAME_SCHEMA, kernel)
 
 
 AUDIO_CHUNK_SCHEMA = StructType(
@@ -777,72 +727,31 @@ def audio_chunk_features(
     feature pipeline starts with (10 ms frames at 16 kHz = 160
     samples): decode each WAV ONCE, then emit one row per window with
     exact integer sums. One-to-many fan-out inside Arrow-batched
-    mapInPandas, partition-local like frame_sample — no shuffle, no
+    mapInArrow, partition-local like frame_sample — no shuffle, no
     payload duplication (windows carry reduced features, not bytes).
     The final (possibly short) window is kept, so windows partition the
     samples exactly: per-chunk sums must re-add to the whole-file sums
     (asserted in tests and by the shared oracle formula)."""
 
-    import numpy as np
+    def kernel(rb):
+        ids, idxs, ns, sums, absums = [], [], [], [], []
+        for rid, pl in zip(
+            rb.column(id_col).to_pylist(), _column(rb, payload_col).to_pylist()
+        ):
+            _rate, _ch, samples = decode_wav(pl)
+            a = np.asarray(samples, dtype=np.int64)
+            # per-window exact integer sums in one reduceat pass
+            # (windows partition the samples exactly, final short
+            # window included — same invariant as the loop form)
+            starts = np.arange(0, len(a), chunk_samples)
+            ids += [rid] * len(starts)
+            idxs += range(len(starts))
+            ns += np.diff(np.append(starts, len(a))).tolist()
+            sums += np.add.reduceat(a, starts).tolist()
+            absums += np.add.reduceat(np.abs(a), starts).tolist()
+        return [ids, idxs, ns, sums, absums]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {f.name: [] for f in AUDIO_CHUNK_SCHEMA.fields}
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                _rate, _ch, samples = decode_wav(bytes(pl))
-                a = np.asarray(samples, dtype=np.int64)
-                # per-window exact integer sums in one reduceat pass
-                # (windows partition the samples exactly, final short
-                # window included — same invariant as the loop form)
-                starts = np.arange(0, len(a), chunk_samples)
-                sums = np.add.reduceat(a, starts)
-                absums = np.add.reduceat(np.abs(a), starts)
-                ns = np.diff(np.append(starts, len(a)))
-                for j in range(len(starts)):
-                    rows["doc_id"].append(rid)
-                    rows["chunk_idx"].append(j)
-                    rows["n_samples"].append(int(ns[j]))
-                    rows["sum_samples"].append(int(sums[j]))
-                    rows["sum_abs"].append(int(absums[j]))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(batches, AUDIO_CHUNK_SCHEMA)
-
-
-def attach_synthetic_images_keyed(
-    df: DataFrame,
-    id_col: str,
-    key_col: str,
-    width: int = 8,
-    height: int = 6,
-    fmt: str = "ppm",
-) -> DataFrame:
-    """Like :func:`attach_synthetic_images`, but the pixel pattern is
-    generated from ``key_col`` while the row keeps its own ``id_col`` —
-    the fixture for duplicate-image corpora (rows sharing a key carry
-    byte-identical payloads under distinct ids)."""
-    encode = encode_ppm if fmt == "ppm" else encode_bmp
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keys = pdf[key_col].tolist()
-            if fmt == "ppm":
-                payloads = _encode_ppm_batch(
-                    _synthetic_rgb_batch(keys, width, height), width, height
-                )
-            else:  # BMP keeps the reference per-row path
-                payloads = [
-                    encode(width, height, synthetic_rgb(int(k), width, height))
-                    for k in keys
-                ]
-            yield pd.DataFrame({id_col: pdf[id_col].tolist(), "payload": payloads})
-
-    return _fan(df, id_col, key_col).mapInPandas(
-        batches, schema
-    )
+    return _map_typed(df.select(id_col, payload_col), AUDIO_CHUNK_SCHEMA, kernel)
 
 
 AHASH_SCHEMA = StructType(
@@ -861,35 +770,33 @@ def ahash_features(
     images (small luminance perturbations) mostly hash equal — the
     cheap first tier of image dedup before embedding similarity.
 
-    Runs inside the same Arrow mapInPandas stage shape as
+    Runs inside the same Arrow mapInArrow stage shape as
     :func:`decode_features` — decode + hash per batch, no shuffle; the
     dedup that follows is one groupBy on the 8-byte hash, exactly
     ``dedup_exact``'s cost model with images instead of text.
     """
 
-    import numpy as np
+    def kernel(rb):
+        return [rb.column(id_col), _ahashes(_column(rb, payload_col).to_pylist())]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            bufs, npixs = [], []
-            for pl in pdf[payload_col].tolist():
-                _, w, h, rgb = decode_image(bytes(pl))
-                bufs.append(np.frombuffer(rgb, dtype=np.uint8))
-                npixs.append(w * h)
-            if bufs and len(set(npixs)) == 1 and 0 < npixs[0] <= 63:
-                # uniform geometry (the common corpus shape): hash the
-                # whole batch as one stacked matrix (guide §4.2). ≤63
-                # pixel-bits keeps the packed hash inside int64 — the
-                # LongType output column's existing bound.
-                hashes = _ahash_batch(np.stack(bufs), npixs[0]).tolist()
-            else:  # mixed geometries / oversized: per-row reference
-                hashes = [
-                    _ahash_rgb(b.tobytes(), n) for b, n in zip(bufs, npixs)
-                ]
-            yield pd.DataFrame({"doc_id": ids, "ahash": hashes})
+    return _map_typed(df.select(id_col, payload_col), AHASH_SCHEMA, kernel)
 
-    return df.select(id_col, payload_col).mapInPandas(batches, AHASH_SCHEMA)
+
+def _ahashes(images: list[bytes]) -> list[int]:
+    """Decode each image payload and average-hash it. Uniform geometry
+    (the common corpus shape) hashes the whole list as one stacked
+    matrix (guide §4.2); ≤63 pixel-bits keeps the packed hash inside
+    int64 — the LongType output column's bound. Mixed geometries or
+    oversized images take the per-row reference."""
+    bufs, npixs = [], []
+    for im in images:
+        _fmt, w, h, rgb = decode_image(im)
+        bufs.append(rgb)
+        npixs.append(w * h)
+    if bufs and len(set(npixs)) == 1 and 0 < npixs[0] <= 63:
+        mat = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(len(bufs), -1)
+        return _ahash_batch(mat, npixs[0]).tolist()
+    return [_ahash_rgb(b, n) for b, n in zip(bufs, npixs)]
 
 
 def _ahash_rgb(rgb: bytes, npix: int) -> int:
@@ -909,8 +816,6 @@ def _ahash_batch(mat, npix: int):
     int64 arithmetic is exact and, for npix ≤ 63, the packed weight sum
     stays ≤ 2⁶³−1, so results equal the per-row reference bit for bit
     (pinned by pytest parity). Returns an int64 array."""
-    import numpy as np
-
     a = mat.astype(np.int64).reshape(mat.shape[0], npix, 3)
     grays = a.sum(axis=2) // 3
     total = grays.sum(axis=1)
@@ -939,8 +844,6 @@ def _synthetic_pcm16_mixed_batch(keys, n_samples: int):
     ``% 65536`` result (numpy % is sign-of-divisor, i.e. non-negative)
     equals Python's arbitrary-precision result for every integer key
     (pinned by pytest parity, large keys included)."""
-    import numpy as np
-
     ka = np.asarray(keys, dtype=np.int64)[:, None]
     i = np.arange(1, n_samples + 1, dtype=np.int64)[None, :]
     with np.errstate(over="ignore"):
@@ -958,24 +861,14 @@ def attach_synthetic_audio_keyed(
     """WAV fixture with the PCM pattern generated from ``key_col``
     (rows sharing a key carry byte-identical audio) — the
     duplicate-audio corpus generator."""
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pcm = _synthetic_pcm16_mixed_batch(pdf[key_col].tolist(), n_samples)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].tolist(),
-                    "payload": [
-                        encode_wav(sample_rate, 1, row.tobytes()) for row in pcm
-                    ],
-                }
-            )
-
-    return _fan(df, id_col, key_col).mapInPandas(
-        batches, schema
+    return _attach(
+        df,
+        id_col,
+        key_col,
+        lambda seeds: [
+            encode_wav(sample_rate, 1, row.tobytes())
+            for row in _synthetic_pcm16_mixed_batch(seeds, n_samples)
+        ],
     )
 
 
@@ -995,66 +888,21 @@ def audio_fingerprint_features(
     enough to run at ingest; dedup is then one groupBy on the packed
     fingerprint, dedup_exact's cost model on audio."""
 
-    import numpy as np
+    def fingerprint(payload: bytes) -> int:
+        _rate, _ch, samples = decode_wav(payload)
+        a = np.abs(np.asarray(samples, dtype=np.int64))
+        energies = np.add.reduceat(a, np.arange(0, len(a), chunk))
+        fp = 0
+        # bit c-1 set iff e_c > e_{c-1}: pack only the set bits
+        for c in np.nonzero(energies[1:] > energies[:-1])[0]:
+            fp |= 1 << int(c)
+        return fp
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fps = [], []
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                _rate, _ch, samples = decode_wav(bytes(pl))
-                a = np.abs(np.asarray(samples, dtype=np.int64))
-                energies = np.add.reduceat(a, np.arange(0, len(a), chunk))
-                fp = 0
-                # bit c-1 set iff e_c > e_{c-1}: pack only the set bits
-                for c in np.nonzero(energies[1:] > energies[:-1])[0]:
-                    fp |= 1 << int(c)
-                ids.append(rid)
-                fps.append(fp)
-            yield pd.DataFrame({"doc_id": ids, "afp": fps})
+    def kernel(rb):
+        pls = _column(rb, payload_col).to_pylist()
+        return [rb.column(id_col), [fingerprint(pl) for pl in pls]]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, AUDIO_FP_SCHEMA)
-
-
-def attach_synthetic_video_keyed(
-    df: DataFrame,
-    id_col: str,
-    key_col: str,
-    n_frames: int = 8,
-    width: int = 8,
-    height: int = 6,
-) -> DataFrame:
-    """Concatenated-PPM video fixture with frames seeded from
-    ``key_col`` (frame f of key k uses pattern k*1000+f) — the
-    duplicate-video corpus generator."""
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        hdr = b"P6\n%d %d\n255\n" % (width, height)
-        for pdf in it:
-            keys = pdf[key_col].tolist()
-            seeds = (
-                np.asarray(keys, dtype=np.int64)[:, None] * 1000
-                + np.arange(n_frames, dtype=np.int64)[None, :]
-            )
-            mat = _synthetic_rgb_batch(seeds.ravel(), width, height).reshape(
-                len(keys), n_frames, -1
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].tolist(),
-                    "payload": [
-                        b"".join(hdr + fr.tobytes() for fr in doc) for doc in mat
-                    ],
-                }
-            )
-
-    return _fan(df, id_col, key_col).mapInPandas(
-        batches, schema
-    )
+    return _map_typed(df.select(id_col, payload_col), AUDIO_FP_SCHEMA, kernel)
 
 
 VIDEO_SIG_SCHEMA = StructType(
@@ -1072,29 +920,15 @@ def video_signature_features(
     commutative frame-hash fold)."""
     import hashlib
 
-    import numpy as np
+    def signature(payload: bytes) -> str:
+        joined = ",".join(str(h) for h in _ahashes(split_ppm_stream(payload)))
+        return hashlib.md5(joined.encode()).hexdigest()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, sigs = [], []
-            for rid, pl in _rows(pdf, id_col, payload_col):
-                bufs, npixs = [], []
-                for frame in split_ppm_stream(bytes(pl)):
-                    _fmt, w, h, rgb = decode_image(frame)
-                    bufs.append(np.frombuffer(rgb, dtype=np.uint8))
-                    npixs.append(w * h)
-                if bufs and len(set(npixs)) == 1 and 0 < npixs[0] <= 63:
-                    hashes = _ahash_batch(np.stack(bufs), npixs[0]).tolist()
-                else:
-                    hashes = [
-                        _ahash_rgb(b.tobytes(), n) for b, n in zip(bufs, npixs)
-                    ]
-                joined = ",".join(str(h) for h in hashes)
-                ids.append(rid)
-                sigs.append(hashlib.md5(joined.encode()).hexdigest())
-            yield pd.DataFrame({"doc_id": ids, "vsig": sigs})
+    def kernel(rb):
+        pls = _column(rb, payload_col).to_pylist()
+        return [rb.column(id_col), [signature(pl) for pl in pls]]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, VIDEO_SIG_SCHEMA)
+    return _map_typed(df.select(id_col, payload_col), VIDEO_SIG_SCHEMA, kernel)
 
 
 def synthetic_rgb_cluster(doc_id: int, width: int, height: int) -> bytes:
@@ -1133,24 +967,11 @@ def attach_synthetic_image_clusters(
 ) -> DataFrame:
     """Attach the near-dup-cluster PPM payloads of
     :func:`synthetic_rgb_cluster` — Arrow-batched, partition-local."""
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("payload", BinaryType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col].tolist()
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": _encode_ppm_batch(
-                        _synthetic_rgb_cluster_batch(ids, width, height),
-                        width,
-                        height,
-                    ),
-                }
-            )
-
-    return _fan(df, id_col).mapInPandas(
-        batches, schema
+    return _attach(
+        df,
+        id_col,
+        id_col,
+        lambda seeds: _encode_ppm_batch(
+            _synthetic_rgb_cluster_batch(seeds, width, height), width, height
+        ),
     )

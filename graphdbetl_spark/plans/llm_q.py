@@ -2322,7 +2322,7 @@ def pack_sequences_q(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """Binary-payload feature extraction via Arrow mapInPandas: the
+    """Binary-payload feature extraction via mapInArrow: the
     multimodal plumbing (binary column + metadata struct + batched
     Python stage) with a deterministic fake feature; see
     multimodal_decode for the REAL decode path."""
@@ -2350,7 +2350,7 @@ def multimodal_decode(spark: SparkSession, sf: str) -> DataFrame:
     """REAL image decode end to end: per doc, an encoded binary PPM
     payload (deterministic pixel pattern) is built, parsed back by the
     pure-Python decoder, and reduced to decoded dimensions + exact
-    per-channel pixel sums — all inside Arrow-batched mapInPandas
+    per-channel pixel sums — all inside Arrow-batched mapInArrow
     stages. The oracle recomputes the pixel sums from the generating
     formula, so a header mis-parse, stride bug, or channel swap in
     encode OR decode breaks the hash match."""
@@ -2396,13 +2396,13 @@ def dedup_image_ahash(spark: SparkSession, sf: str) -> DataFrame:
     operators/multimodal.py ahash_features."""
     from graphdbetl_spark.operators.multimodal import (
         ahash_features,
-        attach_synthetic_images_keyed,
+        attach_synthetic_images,
     )
 
     d = T(spark, sf, "documents").select(
         "doc_id", (F.col("doc_id") % 50).alias("img_key")
     )
-    imgs = attach_synthetic_images_keyed(d, "doc_id", "img_key", width=8, height=6)
+    imgs = attach_synthetic_images(d, "doc_id", width=8, height=6, key_col="img_key")
     return (
         ahash_features(imgs, "payload", "doc_id")
         .groupBy("ahash")
@@ -2611,14 +2611,14 @@ def dedup_video_signature(spark: SparkSession, sf: str) -> DataFrame:
     sequence digest from the generating formula. See
     operators/multimodal.py video_signature_features."""
     from graphdbetl_spark.operators.multimodal import (
-        attach_synthetic_video_keyed,
+        attach_synthetic_video,
         video_signature_features,
     )
 
     d = T(spark, sf, "documents").select(
         "doc_id", (F.col("doc_id") % 30).alias("vid_key")
     )
-    vids = attach_synthetic_video_keyed(d, "doc_id", "vid_key", n_frames=8)
+    vids = attach_synthetic_video(d, "doc_id", n_frames=8, key_col="vid_key")
     return (
         video_signature_features(vids, "payload", "doc_id")
         .groupBy("vsig")
@@ -2714,7 +2714,7 @@ def multimodal_audio_decode(spark: SparkSession, sf: str) -> DataFrame:
     multimodal_decode): per doc, a deterministic PCM16 waveform is
     encoded into a RIFF/WAVE container, parsed back by the pure-Python
     decoder, and reduced to format fields + exact integer sample sums
-    inside Arrow-batched mapInPandas stages. The oracle recomputes the
+    inside Arrow-batched mapInArrow stages. The oracle recomputes the
     sums from the generating formula, so a header mis-parse, chunk-walk
     bug, or endianness error in encode OR decode breaks the match."""
     from graphdbetl_spark.operators.multimodal import attach_synthetic_audio, audio_features
@@ -2779,7 +2779,7 @@ def multimodal_video_frames(spark: SparkSession, sf: str) -> DataFrame:
     stream (raw-MJPEG shape) is built, demuxed by walking frame
     headers, temporally subsampled (every 2nd frame), and each kept
     frame decoded to exact per-channel pixel sums — all inside
-    Arrow-batched mapInPandas with no shuffle. The oracle recomputes
+    Arrow-batched mapInArrow with no shuffle. The oracle recomputes
     the sampled frames' sums from the generating formula, so demux
     offsets, the sampling cadence, and the decoder all gate the hash."""
     from graphdbetl_spark.operators.multimodal import (

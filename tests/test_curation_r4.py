@@ -56,7 +56,7 @@ def test_normalized_digest_kernel_astral_parity(spark):
         (8, ""),
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    kern_rows = df.mapInPandas(
+    kern_rows = df.mapInArrow(
         _normalized_digest_kernel("text", "doc_id"),
         schema="doc_id bigint, norm_digest string",
     ).collect()
@@ -68,6 +68,30 @@ def test_normalized_digest_kernel_astral_parity(spark):
     assert kern == oracle
     # emoji doc collapses onto its stripped twin
     assert kern[1] == kern[2]
+
+
+def test_normalized_exact_null_text_matches_column_twin(spark):
+    """A null text gets a NULL digest (its own group), exactly as the
+    Column twin md5(normalize_text(text)) and the oracle give it."""
+    import pyspark.sql.functions as F
+
+    from graphdbetl_spark.operators.dedup import normalize_text
+
+    df = spark.createDataFrame(
+        [(1, "Hello, world"), (2, "hello world"), (3, None)],
+        "doc_id long, text string",
+    )
+    twin = (
+        df.groupBy(F.md5(normalize_text(F.col("text"))).alias("norm_digest"))
+        .agg(
+            F.min("doc_id").alias("keep_id"),
+            F.count(F.lit(1)).cast("long").alias("dup_count"),
+        )
+        .collect()
+    )
+    got = dedup_normalized_exact_groups(df, "text", "doc_id").collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, twin), key=repr)
+    assert (None, 3, 1) in {tuple(r) for r in got}
 
 
 def test_canonicalize_url_cases(spark):

@@ -304,6 +304,7 @@ class TestResizeMedia:
         with contextlib.redirect_stdout(plan):
             resize_media(attach_media_columns(df, "text"), 4, 4).explain("formatted")
         assert "Exchange" not in plan.getvalue()  # partition flow follows input
+        assert "MapInArrow" in plan.getvalue()
 
 
 class TestNativeUdtfAndGroupedAgg:
@@ -517,6 +518,29 @@ class TestAudio:
             assert sum(r.sum_samples for r in mine) == whole[i].sum_samples
             assert sum(r.sum_abs for r in mine) == whole[i].sum_abs
 
+    def test_audio_chunks_project_before_the_boundary(self, spark):
+        """Only (id, payload) cross into Python: a column the kernel
+        never reads must not appear in the MapInArrow node's arguments."""
+        import contextlib
+        import io
+
+        from graphdbetl_spark.operators.multimodal import (
+            audio_chunk_features,
+            encode_wav,
+            synthetic_pcm16,
+        )
+
+        df = spark.createDataFrame(
+            [(4, encode_wav(16000, 1, synthetic_pcm16(4, 32)), "x")],
+            "doc_id long, payload binary, junk string",
+        )
+        plan = io.StringIO()
+        with contextlib.redirect_stdout(plan):
+            audio_chunk_features(df, chunk_samples=16).explain("formatted")
+        node = plan.getvalue().split("MapInArrow\n")[-1]
+        args = next(l for l in node.splitlines() if l.startswith("Arguments:"))
+        assert "payload" in args and "junk" not in args
+
 
 class TestVideo:
     def test_split_rejects_garbage_midstream(self):
@@ -618,6 +642,38 @@ def test_video_signature_is_order_sensitive(spark):
     assert got[1] == got[2]
     assert got[3] != got[1]  # a commutative fold would collide here
     assert got[4] != got[1]
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "decode_features",
+        "extract_features",
+        "audio_features",
+        "video_frame_features",
+        "ahash_features",
+        "video_signature_features",
+        "audio_chunk_features",
+        "audio_fingerprint_features",
+        "attach_synthetic_images",
+    ],
+)
+def test_null_payload_or_seed_is_named(spark, kernel):
+    """A null payload (decoders) or a null seed (the attach generators'
+    shared path) fails with a ValueError naming the column, not a
+    TypeError from deep inside the decoder."""
+    from pyspark.errors import PythonException
+
+    from graphdbetl_spark.operators import multimodal
+
+    if kernel == "attach_synthetic_images":
+        df = spark.createDataFrame([(1,), (None,)], "doc_id long")
+        expect = r"null seed in column 'doc_id'"
+    else:
+        df = spark.createDataFrame([(2, None)], "doc_id long, payload binary")
+        expect = r"null payload in column 'payload'"
+    with pytest.raises(PythonException, match=expect):
+        getattr(multimodal, kernel)(df).collect()
 
 
 def test_binaryfile_source_feeds_decode_pipeline(spark, tmp_path):

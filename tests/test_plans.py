@@ -13,12 +13,15 @@ from graphdbetl_spark.plans.registry import all_queries
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = all_queries()[name](spark, SF)
+def formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    return formatted(all_queries()[name](spark, SF))
 
 
 def node_count(plan: str, node: str) -> int:
@@ -366,14 +369,40 @@ def test_pq_query_path_single_shuffle(spark):
         ("dedup_embedding_cosine", 1),
         ("dedup_semantic_clusters", 1),
         ("decontaminate_semantic", 1),
+        # multimodal: attach generator + decoder
+        ("dedup_image_hamming", 2),
+        ("dedup_image_ahash", 2),
+        ("dedup_audio_fingerprint", 2),
+        ("dedup_video_signature", 2),
+        ("multimodal_decode", 2),
+        ("multimodal_audio_decode", 2),
+        ("multimodal_audio_chunks", 2),
+        ("multimodal_video_frames", 2),
+        ("multimodal_features", 1),
+        # text kernels
+        ("text_fingerprint", 1),
+        ("text_winnow_fingerprints", 1),
+        ("dedup_winnow_pairs", 1),  # behind a localCheckpoint
+        ("dedup_normalized_exact", 1),
+        ("bpe_tokenize_corpus", 1),
     ],
 )
-def test_vector_kernels_run_as_map_in_arrow(spark, name, min_arrow):
-    """Every numpy vector kernel crosses the Python boundary as
-    mapInArrow over the guarded list view — MapInArrow nodes, no
-    pandas boxing anywhere in the plan."""
-    plan = plan_of(spark, name)
-    assert plan.count("MapInArrow") >= min_arrow
+def test_python_kernels_run_as_map_in_arrow(spark, monkeypatch, name, min_arrow):
+    """Every Python kernel crosses the boundary as mapInArrow —
+    MapInArrow nodes, no pandas boxing anywhere in the plan. Frames
+    the query materializes with localCheckpoint are planned too, since
+    the final plan shows only their Scan ExistingRDD."""
+    frame_cls = type(spark.range(1))
+    checkpointed: list[str] = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(formatted(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    plan = "\n".join([plan_of(spark, name), *checkpointed])
+    assert node_count(plan, "MapInArrow") >= min_arrow
     assert plan.count("MapInPandas") == 0
 
 
