@@ -19,6 +19,9 @@ TODO D8). Across a build the pipeline runs each piece of work once:
       -> write each type once (write)
       -> export reads the written graph (neo4j_export, serialize_data)
 
+The types do not depend on each other once planned, so ``write()`` and
+the export submit every type's jobs at once, one driver thread per type
+(``_each_type``), and Spark's one scheduler runs them side by side.
 After ``write()`` (parquet) each type's ``dataframe`` is the written
 table, read back with the schema it was built with, so later consumers
 scan those files instead of re-running scan -> merge -> join from the
@@ -38,12 +41,14 @@ Config dialect (examples/comptox_ai/config.yml):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 import yaml
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from graphdbetl_spark.etl.schema import conform_to_schema, merge_schemas
 from graphdbetl_spark.operators.dedup import dedup_merge_first_wins
@@ -55,6 +60,11 @@ NODE_URI = "_uri"  # derived uri (reference uri_key, graph_db_builder.py:467-469
 NODE_SRC = "_source"  # provenance: which declared source produced the row
 EDGE_SRC_ID = "_start_id"
 EDGE_DST_ID = "_end_id"
+
+
+def _type_name(kind: str, label: str) -> str:
+    """``node type 'Label'`` / ``relationship type 'TYPE'``."""
+    return f"{kind[:-1]} type {label!r}"
 
 
 @dataclass
@@ -256,20 +266,61 @@ class GraphDBBuilder:
         """Materialize the graph DB: ``out/nodes/<Label>``,
         ``out/relationships/<Type>`` (reference /nodes and
         /relationships HDF5 groups, :153-155; CSV export covers D6).
+        The types are written concurrently (``_each_type``).
 
         A parquet write rebinds each type's ``dataframe`` to the table
         it wrote, so the type's plan executes once per build; CSV keeps
-        the plan, since reading CSV back would lose the column types."""
+        the plan, since reading CSV back would lose the column types.
+        A CSV write over a directory some type's ``dataframe`` reads
+        raises ``ValueError`` before any job runs: overwrite mode would
+        delete that parquet before reading it."""
         if not self.nodes and not self.relationships:
             self.build()
-        for label, node in self.nodes.items():
-            self._write_one(node, os.path.join(out_dir, "nodes", label), fmt)
-        for label, rel in self.relationships.items():
-            self._write_one(rel, os.path.join(out_dir, "relationships", label), fmt)
+        paths = self._output_paths(out_dir, may_overwrite_input=fmt != "csv")
+        self._each_type(lambda kind, label, t: self._write_one(t, paths[kind][label], fmt))
+
+    def _output_paths(self, out_dir: str, may_overwrite_input: bool = False) -> dict[str, dict[str, str]]:
+        """``{"nodes": {label: path}, "relationships": {type: path}}``
+        under ``out_dir``, in config order. Unless ``may_overwrite_input``,
+        a path that is some type's ``written_to`` raises ``ValueError``
+        naming that type: overwriting it would delete the type's input."""
+        paths: dict[str, dict[str, str]] = {"nodes": {}, "relationships": {}}
+        for kind, label, _ in self._types():
+            paths[kind][label] = os.path.join(out_dir, kind, label)
+        if not may_overwrite_input:
+            reads = {t.written_to: (kind, label) for kind, label, t in self._types() if t.written_to}
+            clash = [reads[p] for by_label in paths.values() for p in map(os.path.abspath, by_label.values())
+                     if p in reads]
+            if clash:
+                raise ValueError(
+                    f"writing to {out_dir!r} would overwrite the parquet read by "
+                    + ", ".join(_type_name(kind, label) for kind, label in clash)
+                )
+        return paths
+
+    def _types(self):
+        yield from (("nodes", label, t) for label, t in self.nodes.items())
+        yield from (("relationships", label, t) for label, t in self.relationships.items())
+
+    def _each_type(self, fn: Callable[[str, str, NodeType | RelationshipType], None]) -> None:
+        """Run ``fn(kind, label, t)`` for every node type, then every
+        relationship type, each on its own thread, so their Spark jobs
+        run concurrently. Each thread keeps the caller's job group and
+        local properties. Waits for all of them; if any failed, raises
+        one ``RuntimeError`` naming every failed type, chained from the
+        first failure. The other types are not cancelled: each writes
+        only its own directory, so they finish and stay valid."""
+        types = list(self._types())
+        with ThreadPoolExecutor(max_workers=max(1, len(types)), thread_name_prefix="graph-type") as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(fn), *kt) for kt in types]
+        errors = [f.exception() for f in futures]
+        failed = [_type_name(kind, label) for (kind, label, _), e in zip(types, errors) if e]
+        if failed:
+            raise RuntimeError("graph types failed: " + ", ".join(failed)) from next(filter(None, errors))
 
     def _write_one(self, t: NodeType | RelationshipType, path: str, fmt: str) -> None:
         path = os.path.abspath(path)
-        if fmt != "csv" and t.written_to == path:
+        if t.written_to == path:
             return  # ``dataframe`` already is this table; it cannot overwrite itself
         writer = t.dataframe.write.mode("overwrite")
         if fmt == "csv":

@@ -13,12 +13,11 @@ path.)
 After ``GraphDBBuilder.write()`` each type's ``dataframe`` is the
 written parquet table, so the export is one scan-and-write job per type
 over the written graph: no source re-read, merge shuffle or FK join,
-and the CSVs hold exactly the rows the parquet graph holds.
+and the CSVs hold exactly the rows the parquet graph holds. The per-type
+jobs are submitted together and run concurrently.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 
@@ -27,6 +26,8 @@ from graphdbetl_spark.etl.builder import (
     EDGE_SRC_ID,
     NODE_ID,
     GraphDBBuilder,
+    NodeType,
+    RelationshipType,
 )
 
 
@@ -37,34 +38,23 @@ def export_for_neo4j_admin(
     CSVs. Returns ``{"nodes": {label: path}, "relationships": {type:
     path}}`` — keyed by kind, so a node label and a relationship type
     sharing a name can't overwrite each other's entry. Property columns
-    keep their names; canonical columns map onto the import headers."""
+    keep their names; canonical columns map onto the import headers.
+    Like ``write(fmt="csv")``, an ``out_dir`` that would overwrite the
+    parquet a type reads raises ``ValueError`` before any job runs."""
     if not builder.nodes and not builder.relationships:
         builder.build()
-    written: dict[str, dict[str, str]] = {"nodes": {}, "relationships": {}}
+    written = builder._output_paths(out_dir)
 
-    for label, node in builder.nodes.items():
-        df = node.dataframe
+    def export_one(kind: str, label: str, t: NodeType | RelationshipType) -> None:
+        df = t.dataframe
         props = [c for c in df.columns if not c.startswith("_")]
-        out = df.select(
-            F.col(NODE_ID).alias("nodeId:ID"),
-            F.lit(label).alias(":LABEL"),
-            *[F.col(c).cast("string").alias(c) for c in props],
-        )
-        path = os.path.join(out_dir, "nodes", label)
-        out.write.mode("overwrite").option("header", "true").option("emptyValue", "").csv(path)
-        written["nodes"][label] = path
+        if kind == "nodes":
+            ids = [F.col(NODE_ID).alias("nodeId:ID"), F.lit(label).alias(":LABEL")]
+        else:
+            ids = [F.col(EDGE_SRC_ID).alias(":START_ID"), F.col(EDGE_DST_ID).alias(":END_ID"),
+                   F.lit(label).alias(":TYPE")]
+        out = df.select(*ids, *[F.col(c).cast("string").alias(c) for c in props])
+        out.write.mode("overwrite").option("header", "true").option("emptyValue", "").csv(written[kind][label])
 
-    for label, rel in builder.relationships.items():
-        df = rel.dataframe
-        props = [c for c in df.columns if not c.startswith("_")]
-        out = df.select(
-            F.col(EDGE_SRC_ID).alias(":START_ID"),
-            F.col(EDGE_DST_ID).alias(":END_ID"),
-            F.lit(label).alias(":TYPE"),
-            *[F.col(c).cast("string").alias(c) for c in props],
-        )
-        path = os.path.join(out_dir, "relationships", label)
-        out.write.mode("overwrite").option("header", "true").option("emptyValue", "").csv(path)
-        written["relationships"][label] = path
-
+    builder._each_type(export_one)
     return written

@@ -57,7 +57,10 @@ _configured_sessions: "set[int]" = set()
 # only such site today is the AQE toggle in curation._logreg_fit). The
 # lock below makes the invariant ENFORCED rather than assumed: a second
 # concurrent override raises instead of silently running some other
-# query under the wrong conf (r9 ADVICE).
+# query under the wrong conf (r9 ADVICE). The graph builder's write()
+# and Neo4j export do run their types' jobs concurrently, from one
+# driver thread per type (etl/builder.py _each_type); none of those
+# threads sets a session conf, so the lock still guards all it protects.
 _CONF_OVERRIDE_LOCK = __import__("threading").Lock()
 
 

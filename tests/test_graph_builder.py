@@ -236,3 +236,76 @@ def test_export_matches_written_graph_after_source_change(spark, tmp_path):
     for label, n in (("CUSTOMER_FROM_NATION", 150), ("ORDER_CONTAINS_PART", 6000)):
         written, exported = rows("relationships", label, ["_start_id", "_end_id"], [":START_ID", ":END_ID"])
         assert len(written) == n and exported == written
+
+
+# -- concurrent write and export -----------------------------------------------
+
+
+def test_csv_write_over_own_parquet_is_refused(spark, tmp_path):
+    """A CSV write (or export) into the directory a previous parquet
+    write() left would delete that parquet before reading it: it raises
+    before any job runs and the written graph survives."""
+    from graphdbetl_spark.etl.neo4j_export import export_for_neo4j_admin
+
+    b = GraphDBBuilder(spark, fixture_config(SF_DIR)).build()
+    out = str(tmp_path / "graph")
+    b.write(out)
+    with pytest.raises(ValueError, match="node type 'Party'"):
+        b.write(out, fmt="csv")
+    with pytest.raises(ValueError, match="relationship type 'ORDER_CONTAINS_PART'"):
+        export_for_neo4j_admin(b, out)
+    assert spark.read.parquet(os.path.join(out, "nodes", "Party")).count() == 160
+    assert b.nodes["Party"].dataframe.count() == 160
+
+
+def test_write_runs_the_types_concurrently(spark, tmp_path, monkeypatch):
+    """Every type's write waits on one barrier before it starts, so
+    writes run one after another would break it. Each type's jobs run in
+    the caller's job group, and the jobs overlap in time."""
+    import threading
+
+    b = GraphDBBuilder(spark, fixture_config(SF_DIR)).build()
+    labels = [*b.nodes, *b.relationships]
+    barrier = threading.Barrier(len(labels), timeout=60)
+    write_one = GraphDBBuilder._write_one
+
+    def gated(self, t, path, fmt):
+        spark.sparkContext.setJobDescription(t.label)  # this thread's jobs only
+        barrier.wait()
+        write_one(self, t, path, fmt)
+
+    monkeypatch.setattr(GraphDBBuilder, "_write_one", gated)
+    sc = spark.sparkContext
+    sc.setJobGroup("concurrent-write", "concurrent-write")
+    try:
+        b.write(str(tmp_path / "graph"))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup("concurrent-write")]
+    assert sorted({j.description().get() for j in jobs}) == sorted(labels)
+    spans = sorted((j.submissionTime().get().getTime(), j.completionTime().get().getTime()) for j in jobs)
+    assert any(start < end for (_, end), (start, _) in zip(spans, spans[1:]))
+
+
+def test_failed_type_keeps_its_plan_and_the_others_are_rebound(spark, tmp_path):
+    """One type failing at run time: the error names it, it is not
+    rebound, and every other type still commits and is rebound."""
+    b = GraphDBBuilder(spark, fixture_config(SF_DIR)).build()
+    broken = b.relationships["CUSTOMER_FROM_NATION"]
+    bad = broken.dataframe.withColumn(
+        "_source", F.coalesce(F.raise_error(F.lit("injected failure")).cast("string"), F.col("_source"))
+    )
+    broken.dataframe = bad
+    out = str(tmp_path / "graph")
+    with pytest.raises(RuntimeError, match="relationship type 'CUSTOMER_FROM_NATION'") as err:
+        b.write(out)
+    assert "node type" not in str(err.value)
+    assert "injected failure" in str(err.value.__cause__)
+    assert broken.written_to is None and broken.dataframe is bad
+    for kind, label, n in (("nodes", "Party", 160), ("nodes", "Nation", 25), ("nodes", "Order", 1500),
+                           ("relationships", "ORDER_CONTAINS_PART", 6000)):
+        t = (b.nodes if kind == "nodes" else b.relationships)[label]
+        assert t.written_to == os.path.join(out, kind, label)
+        assert t.dataframe.inputFiles() and t.dataframe.count() == n
