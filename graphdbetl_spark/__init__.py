@@ -9,7 +9,8 @@ operators (dedup, similarity search, text analysis, multimodal columns).
 
 Everything is declared through the DataFrame/SQL API so Catalyst +
 Tungsten own the physical plan; Python UDFs appear only where built-in
-operators cannot express the semantics (Arrow-batched pandas UDFs).
+operators cannot express the semantics, and they take and return Arrow
+(mapInArrow, applyInArrow, arrow_udf); no module imports pandas.
 """
 
 from graphdbetl_spark.session import configure_session, get_spark

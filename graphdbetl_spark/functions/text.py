@@ -2,9 +2,9 @@
 
 R8: the reference ASCII-folds strings on insert via
 ``unicodedata.normalize('NFKD', d).encode('ascii', 'ignore')``
-(``graph_db_builder.py:521-527``) — a per-row Python loop there; here a
-vectorized Arrow-batched pandas UDF (the sanctioned slow path), since
-no Spark built-in does NFKD decomposition.
+(``graph_db_builder.py:521-527``) — a per-row Python loop there; here an
+Arrow-batched scalar UDF (the one sanctioned Python path), since no
+Spark built-in does NFKD decomposition.
 
 The rest are built-in-only column expressions: token counting,
 quality scoring, n-gram language ID, rolling-hash fingerprints.
@@ -14,22 +14,26 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 
 # DataType instance (not DDL string): a string return type would need an
 # active SparkSession to parse at import time.
-@pandas_udf(StringType())
-def nfkd_ascii_fold(s: pd.Series) -> pd.Series:
-    """NFKD-normalize and drop non-ASCII ('Müller café ☃' → 'Muller cafe ')."""
-    return s.map(
-        lambda v: unicodedata.normalize("NFKD", v).encode("ascii", "ignore").decode("ascii")
-        if v is not None
-        else None
+@F.arrow_udf(StringType())
+def nfkd_ascii_fold(s: pa.Array) -> pa.Array:
+    """NFKD-normalize and drop non-ASCII ('Müller café ☃' → 'Muller cafe ');
+    a null stays null."""
+    return pa.array(
+        [
+            unicodedata.normalize("NFKD", v).encode("ascii", "ignore").decode("ascii")
+            if v is not None
+            else None
+            for v in s.to_pylist()
+        ],
+        pa.string(),
     )
 
 

@@ -67,6 +67,25 @@ def _pairs_batch(ids, qids, qi, ni, scores, score_col: str):
     )
 
 
+def _collect_queries(corpus: DataFrame, queries: DataFrame, *cols: str):
+    """Collect the query set (small by contract) into a corpus-scan
+    kernel's closure: ``(corpus, ids, matrix, *extras)`` for ``cols`` =
+    (id, vector, *extra), with the matrix shaped (n, d) float64. An
+    empty set comes back as a (0, 0) matrix and the corpus cut to
+    ``limit(0)``: the caller builds its usual plan, so its schema is
+    unchanged, and the optimizer folds the corpus scan into an empty
+    relation."""
+    import numpy as np
+
+    rows = queries.select(*cols).collect()
+    if not rows:
+        return (corpus.limit(0), np.array([]), np.zeros((0, 0)),
+                *(np.array([]) for _ in cols[2:]))
+    ids, vecs, *extras = zip(*rows)
+    return (corpus, np.array(ids), np.array(vecs, dtype=np.float64),
+            *(np.array(c) for c in extras))
+
+
 def _scan_topk(src, id_col: str, vec_col: str, qids, qm, k: int, eligible):
     """One mapInArrow pass of the corpus ``src`` against the query
     matrix ``qm`` (rows ``qids``): per batch, cosine of every
@@ -131,13 +150,9 @@ def cosine_topk_bruteforce(
     replica, where the kernel takes seconds. Scores are bit-identical
     to the JVM cosine fold (see :func:`_scan_topk`).
     """
-    import numpy as np
-
     from graphdbetl_spark.operators.skew import adaptive_parallelism
 
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows])
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
+    corpus, qids, qm = _collect_queries(corpus, queries, id_col, vec_col)
     src = adaptive_parallelism(corpus, id_col).select(id_col, vec_col)
     return _scan_topk(
         src, id_col, vec_col, qids, qm, k,
@@ -443,14 +458,9 @@ def mine_hard_negatives(
 
     Returns (query_id, neighbor_id, cosine, rank).
     """
-    import numpy as np
-
     from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
-    qrows = queries.select(id_col, vec_col, label_col).collect()
-    qids = np.array([r[0] for r in qrows])
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qlabels = np.array([r[2] for r in qrows])
+    corpus, qids, qm, qlabels = _collect_queries(corpus, queries, id_col, vec_col, label_col)
 
     def eligible(rb, nids):
         nlabels = rb.column(label_col).to_numpy(zero_copy_only=False)
@@ -1604,9 +1614,7 @@ def cosine_range_search(
 
     from graphdbetl_spark.operators.skew import adaptive_parallelism
 
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows])
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
+    corpus, qids, qm = _collect_queries(corpus, queries, id_col, vec_col)
     qn = np.sqrt(seq_sum(qm * qm, axis=1))
 
     def kern(batches):

@@ -98,7 +98,7 @@ def adaptive_parallelism(
     scoring, iterated map-only frames): target tasks = clamp(plan
     bytes / ``bytes_per_task``, 1, defaultParallelism), so a tiny
     corpus is not fanned out to the full core count. The r11 bench
-    measured the fan-out tax directly: one mapInPandas pass + top-k
+    measured the fan-out tax directly: one Python-kernel pass + top-k
     over a 2 000-row cached frame costs ~1.0 s at 32 partitions vs
     ~0.3 s at ≤4 (each task pays a fixed Python-worker/Arrow exchange
     setup, and an 8-round trajectory pays it every round). At scale

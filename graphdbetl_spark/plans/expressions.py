@@ -1,6 +1,6 @@
 """Scalar expression families (SURVEY.md §2B scalar functions):
 string / date-time / math / conditional / array / map-struct / json,
-plus the reference's NFKD ascii-fold (R8) as a pandas UDF.
+plus the reference's NFKD ascii-fold (R8) as an Arrow UDF.
 
 All expressions stay inside whole-stage codegen except the NFKD UDF
 (Arrow-batched by design). Cross-engine gotchas handled here:
@@ -258,7 +258,7 @@ def from_json_struct(spark: SparkSession, sf: str) -> DataFrame:
 )
 def nfkd_fold(spark: SparkSession, sf: str) -> DataFrame:
     """R8: the reference's NFKD+ascii-ignore insert normalization
-    (graph_db_builder.py:521-527), vectorized as an Arrow pandas UDF.
+    (graph_db_builder.py:521-527), as an Arrow-batched ``arrow_udf``.
     (Oracle note: testdata names are ASCII so strip_accents agrees;
     non-ASCII behavior is pinned by tests/test_functions.py.)"""
     c = T(spark, sf, "customer")

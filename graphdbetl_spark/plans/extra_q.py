@@ -8,9 +8,11 @@ function waves.
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -249,22 +251,28 @@ def udtf_explode(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def udaf_grouped(spark: SparkSession, sf: str) -> DataFrame:
-    """Custom grouped aggregation via applyInPandas (Arrow-batched):
-    per-language sample covariance of (n_chars, token_count) — the
-    UDAF surface for logic built-ins can't express."""
+    """Custom grouped aggregation via applyInArrow (one Arrow table per
+    group): per-language sample covariance of (n_chars, token_count)
+    over the rows where both are non-null — the UDAF surface for logic
+    built-ins can't express. ``n_docs`` counts every row."""
     d = T(spark, sf, "documents").select("lang", "n_chars", "text")
 
-    def covar(pdf: pd.DataFrame) -> pd.DataFrame:
-        toks = pdf["text"].str.strip().str.split(r"\s+", regex=True).str.len()
-        return pd.DataFrame(
+    def covar(t: pa.Table) -> pa.Table:
+        pairs = [
+            (c, len(re.split(r"\s+", s.strip())))
+            for c, s in zip(t.column("n_chars").to_pylist(), t.column("text").to_pylist())
+            if c is not None and s is not None
+        ]
+        cov = np.cov(*np.array(pairs, np.float64).T, ddof=1)[0, 1] if pairs else np.nan
+        return pa.table(
             {
-                "lang": [pdf["lang"].iloc[0]],
-                "chars_tokens_cov": [round(float(pdf["n_chars"].cov(toks.astype("float64"))), 4)],
-                "n_docs": [len(pdf)],
+                "lang": t.column("lang").slice(0, 1),
+                "chars_tokens_cov": pa.array([round(float(cov), 4)], pa.float64()),
+                "n_docs": pa.array([t.num_rows], pa.int64()),
             }
         )
 
-    return d.groupBy("lang").applyInPandas(
+    return d.groupBy("lang").applyInArrow(
         covar, "lang string, chars_tokens_cov double, n_docs long"
     )
 

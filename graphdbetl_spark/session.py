@@ -9,7 +9,7 @@ Two entry shapes:
 Scale posture (SURVEY.md §4/§7 M6): AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), broadcast joins for
 dimension tables, UTC session time zone so timestamp semantics match
-the DuckDB oracle, Arrow for any pandas-UDF exchange.
+the DuckDB oracle, Arrow for a caller's pandas exchange.
 """
 
 from __future__ import annotations
@@ -35,8 +35,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # Dimension tables (region/nation/supplier/part at test scale; any
     # <=64MB side at cluster scale) should broadcast instead of shuffle.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Arrow transfer for pandas UDFs / toPandas — the only sanctioned
-    # Python-side path.
+    # Arrow transfer for a caller's toPandas / createDataFrame(pandas).
+    # The package itself calls neither: its Python kernels take and
+    # return Arrow (mapInArrow, applyInArrow, arrow_udf).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Runtime bloom-filter pushdown: build a bloom filter from the small
     # join side and row-filter the big side's scan (shuffle-reduction at
@@ -46,6 +47,14 @@ RUNTIME_CONFS: dict[str, str] = {
     # ~25-40% smaller files at comparable scan speed — at 100 TB that is
     # tens of TB of storage and scan I/O per copy of the corpus.
     "spark.sql.parquet.compression.codec": "zstd",
+    # RocksDB state store: streaming state lives off the executor heap,
+    # and transformWithState (streaming/stateful.py) needs it — the
+    # default HDFS-backed provider rejects the processor's column
+    # families. A query restarted from a checkpoint keeps the provider
+    # recorded there.
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
 }
 
 _configured_sessions: "set[int]" = set()

@@ -129,7 +129,3 @@ def _read_catalog(spark: SparkSession, path: str, name: str) -> DataFrame:
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

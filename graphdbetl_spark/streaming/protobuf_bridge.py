@@ -1,6 +1,6 @@
 """Sandbox bridge for the transformWithState protobuf dependency.
 
-Spark 4.x's transformWithStateInPandas talks to the JVM state server
+Spark 4.x's transformWithState talks to the JVM state server
 over a protobuf-framed protocol; the Python side
 (``pyspark.sql.streaming.proto.StateMessage_pb2``) needs the
 ``google.protobuf`` runtime, which this environment does not ship as a

@@ -1,20 +1,25 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Custom stateful streaming operator via ``transformWithState``.
 
 Where built-in streaming aggregations can't express the semantics
 (running per-key totals emitted every batch, custom eviction), the
-sanctioned path is an Arrow-batched grouped-state function: state is a
-typed tuple per key, batches stream through pandas, and a processing-
-time timeout evicts idle keys — state size stays bounded by the active
-key set, which is what survives an unbounded stream.
+sanctioned path is Spark 4.x's arbitrary stateful processing: a
+``StatefulProcessor`` keeps named, typed state handles (a ValueState
+here) in the state store — composable with timers and TTL — and each
+key's new rows reach it as an iterator of ``Row``. State size stays
+bounded by the active key set, which is what survives an unbounded
+stream.
+
+The state store must be the RocksDB provider
+(``spark.sql.streaming.stateStore.providerClass`` =
+``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``),
+which ``session.get_spark`` and ``session.configure_session`` set:
+Spark's default provider rejects the processor's column families with
+``UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, Row
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -28,7 +33,7 @@ from graphdbetl_spark.streaming.protobuf_bridge import install_protobuf_bridge
 # StatefulProcessor imports this module before the TWS state client
 # makes its first (method-local) StateMessage_pb2 import. No-op where
 # a real google.protobuf exists; see protobuf_bridge docstring.
-HAS_PROTOBUF = install_protobuf_bridge()
+install_protobuf_bridge()
 
 RUNNING_TOTALS_OUTPUT = StructType(
     [
@@ -41,42 +46,13 @@ RUNNING_TOTALS_OUTPUT = StructType(
 _STATE = StructType([StructField("n", LongType()), StructField("total", DoubleType())])
 
 
-def _update_running_totals(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 6)]})
-
-
-def stateful_running_totals(stream: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) that persists across micro-batches
-    and re-emits the updated totals each time the user appears."""
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_running_totals,
-            outputStructType=RUNNING_TOTALS_OUTPUT,
-            stateStructType=_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def make_running_totals_processor():
     """Build the ``StatefulProcessor`` behind
-    :func:`stateful_running_totals_tws`. Module-level (not closed over
+    :func:`stateful_running_totals`. Module-level (not closed over
     the query builder) so the processor's accumulation contract is
     directly testable against a handle implementing the
-    ``getValueState``/``get``/``exists``/``update`` surface — the TWS
-    state-server transport itself is Spark's protobuf-framed protocol,
-    absent in environments without ``google.protobuf``, and the
-    contract test must not depend on it."""
+    ``getValueState``/``get``/``exists``/``update`` surface, without
+    Spark's protobuf-framed state-server transport."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -102,17 +78,12 @@ def make_running_totals_processor():
 
         def handleInputRows(self, key, rows, timerValues):
             n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
+            for row in rows:  # a null value counts as an event, adds nothing
+                n += 1
+                if row.value is not None:
+                    total += row.value
             self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
+            yield Row(user_id=key[0], n_events=n, total_value=round(total, 6))
 
         def close(self) -> None:
             pass
@@ -120,20 +91,15 @@ def make_running_totals_processor():
     return RunningTotals()
 
 
-def stateful_running_totals_tws(stream: DataFrame) -> DataFrame:
-    """The same per-key running totals through ``transformWithState``
-    (the Spark 4.x arbitrary-stateful-processing API, successor to
-    applyInPandasWithState): state lives in named, typed handles
-    (ValueState here) managed by the state store — composable with
-    timers, TTL, and the RocksDB provider — instead of one opaque
-    tuple per key. Kept alongside the legacy form so both stateful
-    surfaces stay covered; parity between them and with a batch
-    aggregation is pinned by test.
-    """
+def stateful_running_totals(stream: DataFrame) -> DataFrame:
+    """Per-user running (count, sum) that persists across micro-batches
+    and re-emits the updated totals each time the user appears
+    (update output mode). Needs the RocksDB state store provider, which
+    the engine's session confs set; see the module docstring."""
     return (
         stream.select("user_id", "value")
         .groupBy("user_id")
-        .transformWithStateInPandas(
+        .transformWithState(
             statefulProcessor=make_running_totals_processor(),
             outputStructType=RUNNING_TOTALS_OUTPUT,
             outputMode="Update",

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter
 
 # -- batch forms (same expressions Structured Streaming uses)
 
@@ -110,11 +109,6 @@ def streaming_interval_join(
         F.col("c.ts").alias("click_ts"),
         F.col("p.value").alias("purchase_value"),
     )
-
-
-def write_memory_sink(df: DataFrame, name: str) -> DataStreamWriter:
-    """Complete-mode memory sink for tests."""
-    return df.writeStream.format("memory").queryName(name).outputMode("complete")
 
 
 def streaming_dedup_within_watermark(

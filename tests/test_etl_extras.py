@@ -4,7 +4,6 @@ custom stateful streaming operator."""
 import os
 import warnings
 
-import pyspark.sql.functions as F
 import pytest
 
 from graphdbetl_spark.etl.builder import GraphDBBuilder
@@ -114,41 +113,52 @@ def test_reference_example_config_parses_unchanged(spark):
     assert builder.nodes == {} and builder.relationships == {}
 
 
-def test_stateful_running_totals_across_batches(spark, tmp_path):
+def _stream_running_totals(spark, tmp_path, batches, name):
+    """Replay ``batches`` as successive micro-batches of a parquet file
+    stream through ``stateful_running_totals`` and return every row it
+    emitted, in emission order. The query runs on the session's
+    configured state store (RocksDB, from ``session.RUNTIME_CONFS``)."""
+    import shutil
+
     from graphdbetl_spark.streaming.stateful import stateful_running_totals
 
-    src = str(tmp_path / "events_state")
-    os.makedirs(src)
+    src = tmp_path / f"{name}_src"
+    src.mkdir()
 
-    def write_batch(rows, name):
-        df = spark.createDataFrame(rows, ["user_id", "value"]).withColumn(
-            "user_id", F.col("user_id").cast("long")
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
-        import shutil
+    def write_batch(i):
+        staged = tmp_path / f"{name}_b{i}"
+        spark.createDataFrame(batches[i], "user_id long, value double").coalesce(
+            1
+        ).write.parquet(str(staged))
+        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
+        shutil.copy(staged / part, src / f"b{i}.parquet")
 
-        for f in os.listdir(str(tmp_path / name)):
-            if f.endswith(".parquet"):
-                shutil.copy(os.path.join(str(tmp_path / name), f), os.path.join(src, f"{name}.parquet"))
-
-    write_batch([(1, 10.0), (1, 5.0), (2, 1.0)], "b1")
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    write_batch(0)
+    stream = spark.readStream.schema(spark.read.parquet(str(src)).schema).parquet(str(src))
     q = (
         stateful_running_totals(stream)
         .writeStream.format("memory")
-        .queryName("state_test")
+        .queryName(name)
         .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
         .start()
     )
     try:
         q.processAllAvailable()
-        write_batch([(1, 2.0)], "b2")  # user 1 reappears -> state accumulates
-        q.processAllAvailable()
+        for i in range(1, len(batches)):
+            write_batch(i)
+            q.processAllAvailable()
     finally:
         q.stop()
-    rows = spark.sql("SELECT * FROM state_test").collect()
-    # last emission for user 1 must include all 3 events across batches
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def test_stateful_running_totals_across_batches(spark, tmp_path):
+    rows = _stream_running_totals(
+        spark, tmp_path, [[(1, 10.0), (1, 5.0), (2, 1.0)], [(1, 2.0)]], "state_test"
+    )
+    # user 1 reappears in the second batch: its last emission includes
+    # all 3 events across batches
     latest_u1 = [r for r in rows if r.user_id == 1][-1]
     assert latest_u1.n_events == 3
     assert latest_u1.total_value == pytest.approx(17.0)
@@ -202,24 +212,18 @@ def test_parquet_corrupt_file_skip(spark, tmp_path):
 
 
 def test_transform_with_state_parity(spark, tmp_path):
-    """The Spark 4.x transformWithState surface: the typed-handle
-    StatefulProcessor accumulates identically to the legacy
-    applyInPandasWithState operator across micro-batches.
+    """The typed-handle StatefulProcessor behind
+    ``stateful_running_totals`` accumulates per key across
+    micro-batches, both driven directly and through Spark.
 
-    The processor's CONTRACT (init/handleInputRows against the
-    ValueState handle surface) is driven directly with a dict-backed
-    handle — that part is our code and runs everywhere. The TWS
-    transport itself is Spark's protobuf-framed state-server protocol;
-    where google.protobuf exists the same batches additionally run
-    through a real transformWithStateInPandas streaming query and
-    must agree, so the full protocol path is covered wherever the
-    dependency is present (r6 verdict #7: no skip either way)."""
-    import pandas as pd
+    The contract arm drives init/handleInputRows with ``Row`` iterators
+    against a dict-backed ValueState handle — that part is our code.
+    The streaming arm runs the same batches through a real
+    transformWithState query (Spark's protobuf-framed state-server
+    protocol, bridged by streaming/protobuf_bridge.py) and must agree."""
+    from pyspark.sql import Row
 
-    from graphdbetl_spark.streaming.stateful import (
-        make_running_totals_processor,
-        stateful_running_totals,
-    )
+    from graphdbetl_spark.streaming.stateful import make_running_totals_processor
 
     batches = [
         [(1, 10.0), (1, 5.0), (2, 1.0)],
@@ -255,93 +259,21 @@ def test_transform_with_state_parity(spark, tmp_path):
     proc.init(FakeHandle(state))
     contract_latest = {}
     for batch in batches:  # each list = one micro-batch
-        by_key: dict[int, list[tuple[int, float]]] = {}
+        by_key: dict[int, list[Row]] = {}
         for uid, v in batch:
-            by_key.setdefault(uid, []).append((uid, v))
+            by_key.setdefault(uid, []).append(Row(user_id=uid, value=v))
         for uid, rows in by_key.items():
             state.current_key = uid
-            pdf = pd.DataFrame(rows, columns=["user_id", "value"])
-            for out in proc.handleInputRows((uid,), iter([pdf]), None):
-                contract_latest[int(out["user_id"][0])] = (
-                    int(out["n_events"][0]),
-                    float(out["total_value"][0]),
-                )
+            for out in proc.handleInputRows((uid,), iter(rows), None):
+                contract_latest[out.user_id] = (out.n_events, out.total_value)
     proc.close()
     assert contract_latest == expected
     # the handle's persisted state matches the emissions (update-mode
     # contract: state IS the latest emission)
-    assert {k: v for k, v in state.store.items()} == expected
+    assert dict(state.store) == expected
 
-    # --- legacy-operator arm through a real streaming query
-    src = str(tmp_path / "events_tws")
-    os.makedirs(src)
-
-    def write_batch(rows, name):
-        df = spark.createDataFrame(rows, ["user_id", "value"]).withColumn(
-            "user_id", F.col("user_id").cast("long")
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
-        import shutil
-
-        for f in os.listdir(str(tmp_path / name)):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(str(tmp_path / name), f),
-                    os.path.join(src, f"{name}.parquet"),
-                )
-
-    write_batch(batches[0], "t1")
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        stateful_running_totals(stream)
-        .writeStream.format("memory")
-        .queryName("tws_legacy_parity")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_batch(batches[1], "t2")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    legacy_latest = {}
-    for r in spark.sql("SELECT * FROM tws_legacy_parity").collect():
-        legacy_latest[r.user_id] = (r.n_events, r.total_value)
-    assert legacy_latest == contract_latest == expected
-
-    # --- full-protocol arm: the protobuf_bridge makes the runtime
-    # available in this sandbox (cloud-sdk pure-python runtime aliased
-    # under google.protobuf — see streaming/protobuf_bridge.py), so
-    # this arm RUNS here rather than silently short-circuiting
-    # (r8 verdict #8); it degrades only where no runtime exists at all.
-    from graphdbetl_spark.streaming.stateful import HAS_PROTOBUF
-
-    if HAS_PROTOBUF:
-        from graphdbetl_spark.streaming.stateful import stateful_running_totals_tws
-
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        q = (
-            stateful_running_totals_tws(spark.readStream.schema(schema).parquet(src))
-            .writeStream.format("memory")
-            .queryName("tws_test")
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            if old:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        tws_latest = {}
-        for r in spark.sql("SELECT * FROM tws_test").collect():
-            tws_latest[r.user_id] = (r.n_events, r.total_value)
-        assert tws_latest == expected
+    # --- streaming arm: the same batches through a real query
+    streamed_latest = {}
+    for r in _stream_running_totals(spark, tmp_path, batches, "tws_parity"):
+        streamed_latest[r.user_id] = (r.n_events, r.total_value)
+    assert streamed_latest == contract_latest == expected

@@ -309,7 +309,7 @@ class TestResizeMedia:
 
 class TestNativeUdtfAndGroupedAgg:
     """SURVEY §2B UDF/UDTF rows: the DataFrame-native forms (explode,
-    applyInPandas) carry the oracle-checked queries; these pin the
+    applyInArrow) carry the oracle-checked queries; these pin the
     native Python UDTF and GROUPED_AGG pandas_udf APIs themselves."""
 
     def test_python_udtf(self, spark):

@@ -406,6 +406,33 @@ def test_python_kernels_run_as_map_in_arrow(spark, monkeypatch, name, min_arrow)
     assert plan.count("MapInPandas") == 0
 
 
+def test_package_crosses_the_python_boundary_through_arrow_only():
+    """No module of the package imports pandas, builds a pandas_udf or
+    calls a ``*InPandas*`` DataFrame/GroupedData method: every Python
+    kernel takes and returns Arrow."""
+    import ast
+    from pathlib import Path
+
+    import graphdbetl_spark
+
+    root = Path(graphdbetl_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                bad = [a.name for a in node.names if a.name.split(".")[0] == "pandas"]
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                bad = [mod] if mod.split(".")[0] == "pandas" else []
+                bad += [a.name for a in node.names if a.name == "pandas_udf"]
+            elif isinstance(node, ast.Attribute):
+                bad = [node.attr] if "InPandas" in node.attr or node.attr == "pandas_udf" else []
+            else:
+                continue
+            found += [f"{path.relative_to(root)}:{node.lineno} {b}" for b in bad]
+    assert found == []
+
+
 def test_repeated_ngram_scrub_broadcasts_filtered_grams(spark):
     """Span scrub: the df>=2-filtered repeated-gram table (a sliver of
     the vocabulary) lands on the broadcast side of the join back, and

@@ -431,3 +431,28 @@ def test_vector_kernels_name_ragged_and_null_rows(spark, kernel, rows, word):
         out = fn(emb, emb.filter("vec_id = 0"))
     with pytest.raises(PythonException, match=word):
         out.collect()
+
+
+@pytest.mark.parametrize(
+    "kernel", ["cosine_topk_bruteforce", "mine_hard_negatives", "cosine_range_search"]
+)
+def test_empty_query_set_returns_empty_frame_without_scanning(spark, kernel):
+    """An empty query set has no vector width: the brute-force kernels
+    answer with an empty frame of the usual schema, and the plan holds
+    no corpus scan."""
+    from graphdbetl_spark.operators.similarity import cosine_range_search, mine_hard_negatives
+
+    emb = load_table(spark, SF_DIR, "embeddings").withColumn("label", F.col("vec_id") % 3)
+    fn = {
+        "cosine_topk_bruteforce": lambda q: cosine_topk_bruteforce(emb, q, k=3),
+        "mine_hard_negatives": lambda q: mine_hard_negatives(emb, q, k=1),
+        "cosine_range_search": lambda q: cosine_range_search(emb, q),
+    }[kernel]
+
+    def plan(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+    empty, full = fn(emb.limit(0)), fn(emb.limit(2))
+    assert empty.schema == full.schema
+    assert "Scan parquet" in plan(full) and "Scan parquet" not in plan(empty)
+    assert empty.collect() == []

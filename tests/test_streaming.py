@@ -267,8 +267,8 @@ def test_append_mode_emits_only_finalized_windows(spark, events_dir):
 def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
     """The at-scale state backend: RocksDB keeps streaming state off the
     executor heap (HDFS-backed in-memory maps OOM at large key
-    cardinality). Pin that the bundled provider loads and a stateful
-    dedup runs under it — the config is the entire migration."""
+    cardinality). Pin that the engine's session selects the bundled
+    provider and a stateful dedup runs under it."""
     src = str(tmp_path / "rocks_events")
     spark.createDataFrame(
         [(1, "2024-01-01 00:00:00", "click"), (1, "2024-01-01 00:00:00", "click"),
@@ -278,10 +278,9 @@ def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
         "overwrite"
     ).parquet(src)
 
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    # The engine's session confs select the provider for every query.
+    assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     deduped = streaming_dedup(stream, ["user_id", "event_type"], "ts", "10 minutes")
@@ -295,12 +294,5 @@ def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    # provider is set per-query via the session conf at start time
-    try:
-        q.awaitTermination(120)
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    q.awaitTermination(120)
     assert len(spark.sql("SELECT * FROM rocksdb_dedup").collect()) == 2
