@@ -19,6 +19,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 from pyspark.sql.types import StringType
 
+from graphdbetl_spark.operators.skew import fan
+
 
 # DataType instance (not DDL string): a string return type would need an
 # active SparkSession to parse at import time.
@@ -191,8 +193,6 @@ def rolling_fingerprints(
     seconds. Returns (id, fingerprint string)."""
     import pyarrow as pa
 
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     def kern(batches):
         for rb in batches:
             out = []
@@ -206,6 +206,6 @@ def rolling_fingerprints(
                 names=[id_col, "fingerprint"],
             )
 
-    src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
+    src = fan(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
     return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fingerprint string")

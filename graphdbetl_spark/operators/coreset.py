@@ -61,7 +61,7 @@ from graphdbetl_spark.functions.vectors import (
     list_column,
     seq_sum,
 )
-from graphdbetl_spark.operators.skew import adaptive_parallelism
+from graphdbetl_spark.operators.skew import BYTES_PER_TASK, fan
 
 # Plan-evidence hook: the final frame of an iterative operator is the
 # driver-built trajectory (Scan ExistingRDD), which shows nothing about
@@ -132,7 +132,7 @@ def kcenter_select(
     p = max(1, int(batch_p)) if batch_p else 1
     spark = emb.sparkSession
     src = (
-        adaptive_parallelism(emb, id_col)
+        fan(emb, id_col, BYTES_PER_TASK)
         .select(id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v"))
         .persist()
     )
@@ -275,7 +275,7 @@ def mmr_select(
 
     p = max(1, int(batch_p)) if batch_p else 1
     spark = emb.sparkSession
-    base = adaptive_parallelism(emb, id_col).select(
+    base = fan(emb, id_col, BYTES_PER_TASK).select(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
     )
     qrow = base.orderBy(F.col(id_col).asc()).limit(1).collect()[0]

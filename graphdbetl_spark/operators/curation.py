@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from graphdbetl_spark.operators.dedup import _tokens, _word_ngram_hashes, _word_ngrams
-from graphdbetl_spark.operators.skew import ensure_scan_parallelism
+from graphdbetl_spark.operators.skew import fan, iterate_partitions
 from graphdbetl_spark.operators.sampling import hash_bucket
 
 # PII patterns chosen to be portable between Java regex (Spark) and
@@ -63,7 +63,7 @@ def decontaminate_against_eval(
     eval_grams = eval_df.select(F.explode(grams).alias("gfp")).distinct()
     if force_broadcast:
         eval_grams = F.broadcast(eval_grams)
-    doc_grams = ensure_scan_parallelism(df, id_col).select(
+    doc_grams = fan(df, id_col).select(
         F.col(id_col), F.explode(grams).alias("gfp")
     )
     contaminated = (
@@ -109,7 +109,7 @@ def repeated_ngram_coverage(
     documents survive with zeros via ``explode_outer``.
     """
     grams = F.array_distinct(_word_ngram_hashes(_tokens(F.col(text_col)), n))
-    ex = ensure_scan_parallelism(df, id_col).select(
+    ex = fan(df, id_col).select(
         F.col(id_col), F.explode_outer(grams).alias("gfp")
     )
     repeated = (
@@ -228,7 +228,7 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     engines is ~1e-13).
     """
     toks = _tokens(F.col(text_col))
-    ex = ensure_scan_parallelism(df, id_col).select(
+    ex = fan(df, id_col).select(
         F.col(id_col), F.explode(toks).alias("tok")
     )
     cnt = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("__c"))
@@ -393,8 +393,6 @@ def bpe_apply_merges(
 
     import pyarrow as pa
 
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     d_, w_ = "\x1f", "\x1e"
     rules = [
         (d_ + left + d_ + d_ + right + d_, d_ + merged + d_)
@@ -417,7 +415,7 @@ def bpe_apply_merges(
                 names=[id_col, "n_words", "n_subwords"],
             )
 
-    src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
+    src = fan(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
     return src.mapInArrow(
         kern, schema=f"{id_col} {id_type}, n_words long, n_subwords long"
@@ -489,7 +487,7 @@ def repeated_ngram_scrub(
     with nothing scrubbed survive with their text reassembled
     (single-space normalized) and n_removed = 0.
     """
-    df = ensure_scan_parallelism(df, id_col)
+    df = fan(df, id_col)
     gh = _word_ngram_hashes(_tokens(F.col(text_col)), n)
     # Document frequency WITHOUT a (doc, gram) distinct exchange: dedup
     # gram fingerprints doc-locally (array_distinct in the scan
@@ -558,7 +556,7 @@ def segment_dedup(
         lambda i: F.array_join(F.slice(toks, i * width + 1, width), " "),
     )
     ex = (
-        ensure_scan_parallelism(df, id_col)
+        fan(df, id_col)
         .select(F.col(id_col), F.posexplode(segs).alias("seg_idx", "seg"))
     )
     keepers = (
@@ -636,7 +634,7 @@ def bloom_decontaminate(
         .distinct()
     )
     doc_slots = (
-        ensure_scan_parallelism(df, id_col)
+        fan(df, id_col)
         .select(F.col(id_col), F.posexplode(grams).alias("gidx", "g"))
         .select(F.col(id_col), F.col("gidx"), F.explode(slots(F.col("g"))).alias("pos"))
     )
@@ -685,7 +683,7 @@ def char_entropy(
     to the old fold's, only the summation order changes (hash-agg vs
     sorted-run walk), the same ~1e-15 accumulation-noise class the
     round-6 contract with the oracle's ratio form already absorbs."""
-    df = ensure_scan_parallelism(df, id_col)
+    df = fan(df, id_col)
     # split('','') yields [''] — size 1 — so an empty document would
     # report n_chars=1 and count '' as a character, diverging from the
     # oracle's len(text)=0 (r4 ADVICE). length() is the ground truth;
@@ -801,7 +799,7 @@ def bigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.slice(toks, 2, m),
         lambda a, b: F.struct(a.alias("a"), b.alias("b")),
     )
-    ex = ensure_scan_parallelism(df, id_col).select(
+    ex = fan(df, id_col).select(
         F.col(id_col), F.explode(pairs).alias("p")
     ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
     # NOTE (r11): measured NOT worth making size-conditional — without
@@ -1045,7 +1043,7 @@ def _logreg_fit(
     # sums stay on the round-6 grid under any partitioning (the
     # documented ~1e-14 order noise).
     feats = (
-        ensure_scan_parallelism(df, id_col)
+        fan(df, id_col)
         .select(
             (n / F.lit(100.0)).alias("x1"),
             (total_len / n / F.lit(10.0)).alias("x2"),
@@ -1071,10 +1069,8 @@ def _logreg_fit(
     # (same behavior as the r11-measured win), 1000× → the clamp.
     # Gradient sums stay on the round-6 grid under any partitioning
     # (documented ~1e-14 order noise).
-    from graphdbetl_spark.operators.skew import iterate_partitions
-
     try:
-        feats = feats.repartition(iterate_partitions(feats, 4 << 20))
+        feats = feats.repartition(iterate_partitions(feats))
     except Exception:  # non-classic sessions: cache as-is
         pass
     feats = feats.cache()
@@ -1266,7 +1262,7 @@ def bigram_lm_persist(df: DataFrame, text_col: str, id_col: str, path: str) -> N
         F.slice(toks, 2, m),
         lambda a, b: F.struct(a.alias("a"), b.alias("b")),
     )
-    ex = ensure_scan_parallelism(df, id_col).select(
+    ex = fan(df, id_col).select(
         F.col(id_col), F.explode(pairs).alias("p")
     ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
     # NOTE (r11): measured NOT worth making size-conditional — without
@@ -1379,10 +1375,9 @@ def semantic_decontaminate(
     import pyarrow as pa
 
     from graphdbetl_spark.functions.vectors import arrow_matrix, seq_sum
+    from graphdbetl_spark.operators.similarity import _collect_queries
 
-    ev = np.array(
-        [r[0] for r in eval_df.select(vec_col).collect()], dtype=np.float64
-    )
+    corpus, _, ev = _collect_queries(corpus, eval_df, id_col, vec_col)
     eu = ev / np.sqrt(seq_sum(ev * ev, axis=1))[:, None]
 
     eu32 = eu.astype(np.float32)
@@ -1423,7 +1418,7 @@ def semantic_decontaminate(
                 [rb.column(id_col), pa.array(mx)], names=[id_col, "__mx"]
             )
 
-    src = ensure_scan_parallelism(corpus, id_col).select(
+    src = fan(corpus, id_col).select(
         F.col(id_col), F.col(vec_col)
     )
     id_type = dict(src.dtypes)[id_col]
@@ -1501,13 +1496,14 @@ def semantic_decontaminate_ivf(
     from graphdbetl_spark.functions.vectors import arrow_matrix, fold_dots, seq_sum
     from graphdbetl_spark.operators.similarity import (
         _SCREEN_MARGIN,
+        _collect_queries,
         _fold_pairs_fp64,
         md5_sampled_centroid_list,
     )
 
-    ev = np.array(
-        [r[0] for r in eval_df.select(vec_col).collect()], dtype=np.float64
-    )
+    corpus, _, ev = _collect_queries(corpus, eval_df, id_col, vec_col)
+    if not len(ev):  # no eval vector, no cells: the exact form's empty frame
+        return semantic_decontaminate(corpus, eval_df, id_col, vec_col, threshold)
     if n_cells == "auto":
         n_cells = max(8, len(ev) // 1024)
     cents = md5_sampled_centroid_list(eval_df, id_col, vec_col, k=n_cells, seed=seed)
@@ -1545,7 +1541,7 @@ def semantic_decontaminate_ivf(
                 names=[id_col, "__mx"],
             )
 
-    src = ensure_scan_parallelism(corpus, id_col).select(
+    src = fan(corpus, id_col).select(
         F.col(id_col), F.col(vec_col)
     )
     id_type = dict(src.dtypes)[id_col]
@@ -1585,7 +1581,7 @@ def importance_resample(
     accumulation-order noise.
     """
     toks = _tokens(F.col(text_col))
-    ex = ensure_scan_parallelism(df, id_col).select(
+    ex = fan(df, id_col).select(
         F.col(id_col), target_pred.alias("__t"), F.explode(toks).alias("__tok")
     )
     cnt = ex.groupBy("__tok").agg(

@@ -19,6 +19,8 @@ import random
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from graphdbetl_spark.operators.skew import BYTES_PER_TASK, checkpoint_if_scaled, fan
+
 
 def dedup_merge_first_wins(
     df: DataFrame, id_col: str, order_by: list[str] | None = None
@@ -138,8 +140,6 @@ def winnow_fingerprints(
 
     import pyarrow as pa
 
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     ws_re = _re.compile(r"\s+", _re.ASCII)
 
     def kern(batches):
@@ -177,7 +177,7 @@ def winnow_fingerprints(
                 names=[id_col, "fp"],
             )
 
-    src = ensure_scan_parallelism(df, id_col).select(id_col, text_col)
+    src = fan(df, id_col).select(id_col, text_col)
     id_type = dict(src.dtypes)[id_col]
     return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fp long")
 
@@ -462,8 +462,6 @@ def _capped_gram_slim(
     :func:`_capped_gram_index` for consumers that derive per-doc
     counts from a grouped-array form instead (the screened containment
     path) — the window is an index-wide sort they never need."""
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     grams = F.array_distinct(_word_ngrams(_tokens(F.col(text_col)), n))
     base_cols = [F.col(id_col), grams.alias("grams")] + [F.col(c) for c in (block_cols or [])]
     # tokenize+explode is the CPU of the whole family and small test
@@ -472,7 +470,7 @@ def _capped_gram_slim(
     # TWICE (the stop-gram broadcast build and the index itself), so
     # checkpoint the slim hashed explode BEFORE the cap aggregation —
     # one wide tokenize pass, every downstream reads fixed-width rows.
-    g = ensure_scan_parallelism(df, id_col).select(*base_cols)
+    g = fan(df, id_col).select(*base_cols)
     gh = F.conv(F.substring(F.md5(F.col("__gram")), 1, 15), 16, 10).cast("long")
     # SIZE-CONDITIONAL materialization (r11): the eager checkpoint is
     # what makes the 30×/100× rungs linear (one wide tokenize pass),
@@ -480,8 +478,6 @@ def _capped_gram_slim(
     # recompute (~0.9 s vs ~0.17 s at sf0.1) — below the threshold the
     # deterministic explode is recomputed per consumer and the
     # self-join's identical sides share one exchange via ReuseExchange.
-    from graphdbetl_spark.operators.skew import checkpoint_if_scaled
-
     ex = checkpoint_if_scaled(
         g.select(id_col, *(block_cols or []), F.explode("grams").alias("__gram"))
         .select(id_col, *(block_cols or []), gh.alias("gh")),
@@ -714,8 +710,6 @@ def containment_screened_pairs(
     # doc-sized materialization is the scale device; at tiny scale the
     # three consumers recompute the deterministic grouped form cheaper
     # than the checkpoint job costs.
-    from graphdbetl_spark.operators.skew import checkpoint_if_scaled
-
     garr = checkpoint_if_scaled(garr, size_of=df)
     s = garr.select(
         F.col(id_col).alias("__sid"),
@@ -1271,9 +1265,7 @@ def dedup_normalized_exact_groups(
 
     Returns (norm_digest, keep_id, dup_count) with keep_id = min id
     per group (deterministic survivor)."""
-    from graphdbetl_spark.operators.skew import adaptive_parallelism
-
-    src = adaptive_parallelism(df, id_col).select(
+    src = fan(df, id_col, BYTES_PER_TASK).select(
         F.col(id_col), F.col(text_col)
     )
     id_type = dict(src.dtypes)[id_col]

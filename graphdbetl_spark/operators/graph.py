@@ -216,6 +216,8 @@ def pagerank(
     )
     verts = e.select(F.col("u").alias("id")).union(e.select("v")).distinct().localCheckpoint()
     n = verts.count()
+    if n == 0:  # no vertices: the usual (id, rank) schema, no rows
+        return verts.withColumn("rank", F.lit(0.0))
 
     # Every per-round join side is vertex-sized and stats-less after
     # localCheckpoint — at the 100× replica the planner broadcast the

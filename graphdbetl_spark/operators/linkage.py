@@ -17,6 +17,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from graphdbetl_spark.operators.skew import fan
+
 
 def default_block(name: Column) -> list[Column]:
     """Default blocking key: (length, last-4 suffix). Works when noise
@@ -58,13 +60,11 @@ def fuzzy_match_pairs(
     clones every customer name 100×: distinct-level matching cut the
     levenshtein evaluations 10⁴-fold and the wall 48.1 → ~8 s).
     """
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     # The id-level expansion below is usually two BROADCAST joins, so
     # its parallelism is the probe side's partitioning — a few-row-group
     # parquet scan would serialize the whole clone-pair fan-out on a
     # handful of cores (measured 507 s -> 18 s at the 100× replica).
-    left = ensure_scan_parallelism(left, left_id)
+    left = fan(left, left_id)
     lb = block(F.col(left_name))
     rb = block(F.col(right_name))
     ld = left.select(left_name).distinct().select(

@@ -17,7 +17,6 @@ installed here); at deployment only the codec branch of
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
@@ -26,7 +25,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from graphdbetl_spark.operators.skew import adaptive_parallelism
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -35,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from graphdbetl_spark.operators.skew import DECODE_BYTES_PER_TASK, fan
 
 # Canonical multimodal schema fragment.
 MEDIA_META = StructType(
@@ -78,31 +78,6 @@ def encode_ppm(width: int, height: int, rgb: bytes) -> bytes:
     return b"P6\n%d %d\n255\n" % (width, height) + rgb
 
 
-# Decode-weight partitioning knob: bytes of (already column-pruned)
-# plan stats per task. 128 KB of id-column stats ≈ 5-7k rows ≈ ~100 ms
-# of vectorized attach+decode+hash per task — heavy enough to amortize
-# the fixed per-task Python/Arrow cost, light enough that a replica
-# rung reaches full parallelism (sf0.1 → 1 task, winning A/B arm; 30×
-# → ~26 tasks, where full fan-out won the rung A/B). Config-exposed so
-# a deployment with a real codec (heavier per row) can lower it.
-_DECODE_BPT = int(os.environ.get("SPARK_GRAFT_DECODE_BPT", str(128 << 10)))
-
-
-def _fan(df: DataFrame, *cols: str) -> DataFrame:
-    """Fan-out posture for the decode kernels (r12): project to ONLY
-    the columns the kernel reads FIRST (§4.1 — an opaque mapInArrow
-    otherwise ships every column AND sizes the stats on them), then
-    size-derived partitioning at decode weight. The r11 posture
-    (``ensure_scan_parallelism``: fan every small scan to the core
-    count) was built for the per-pixel-Python kernels; with the
-    vectorized kernels the driver's own 8-vs-32-core data (r11 scaling
-    ratios 0.47/0.48) showed the 32-way fan-out tax dominating at
-    sf0.1, and the paired A/B confirmed (1-task arm won 9/10 rounds at
-    sf0.1; full fan-out won the 30× rung — this sizing reproduces both
-    winners)."""
-    return adaptive_parallelism(df.select(*cols), cols[0], _DECODE_BPT)
-
-
 def _column(rb: pa.RecordBatch, col: str, what: str = "payload") -> pa.Array:
     """Column ``col`` of a record batch, refusing nulls by name. A null
     payload has nothing to decode and a null seed has no pattern;
@@ -136,7 +111,9 @@ def _map_typed(df: DataFrame, schema: StructType, kernel) -> DataFrame:
 
 def _attach(df: DataFrame, id_col: str, seed_col: str, payloads_of) -> DataFrame:
     """Shared body of the ``attach_synthetic_*`` fixture generators:
-    the :func:`_fan` projection, then per batch one payload per row
+    project to ONLY the columns the kernel reads (an opaque mapInArrow
+    otherwise ships every column and sizes the stats on them), fan out
+    at decode weight, then per batch one payload per row
     from ``payloads_of(seeds)`` (the non-null ``seed_col`` values as
     a numpy array) next to the passed-through ``id_col``. Arrow-batched
     and partition-local (no shuffle)."""
@@ -149,7 +126,9 @@ def _attach(df: DataFrame, id_col: str, seed_col: str, payloads_of) -> DataFrame
         seeds = _column(rb, seed_col, "seed").to_numpy()
         return [rb.column(id_col), payloads_of(seeds)]
 
-    return _map_typed(_fan(df, *cols), schema, kernel)
+    return _map_typed(
+        fan(df.select(*cols), cols[0], DECODE_BYTES_PER_TASK), schema, kernel
+    )
 
 
 def _synthetic_rgb_batch(ids, width: int, height: int):

@@ -21,9 +21,7 @@ from graphdbetl_spark.functions.vectors import (
     seq_sum,
     sign_buckets,
 )
-from graphdbetl_spark.operators.skew import (
-    ensure_scan_parallelism as _ensure_scan_parallelism,
-)
+from graphdbetl_spark.operators.skew import BYTES_PER_TASK, fan
 
 
 def md5_cap_corpus(
@@ -150,10 +148,8 @@ def cosine_topk_bruteforce(
     replica, where the kernel takes seconds. Scores are bit-identical
     to the JVM cosine fold (see :func:`_scan_topk`).
     """
-    from graphdbetl_spark.operators.skew import adaptive_parallelism
-
     corpus, qids, qm = _collect_queries(corpus, queries, id_col, vec_col)
-    src = adaptive_parallelism(corpus, id_col).select(id_col, vec_col)
+    src = fan(corpus, id_col, BYTES_PER_TASK).select(id_col, vec_col)
     return _scan_topk(
         src, id_col, vec_col, qids, qm, k,
         lambda rb, nids: nids[:, None] != qids[None, :],
@@ -377,7 +373,7 @@ def pca_fit(
     import numpy as np
 
     pairs = (
-        _ensure_scan_parallelism(df, id_col)
+        fan(df, id_col)
         .select(F.posexplode(vec_col).alias("i", "__x"))
         .select("i", "__x")
     )
@@ -458,15 +454,13 @@ def mine_hard_negatives(
 
     Returns (query_id, neighbor_id, cosine, rank).
     """
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     corpus, qids, qm, qlabels = _collect_queries(corpus, queries, id_col, vec_col, label_col)
 
     def eligible(rb, nids):
         nlabels = rb.column(label_col).to_numpy(zero_copy_only=False)
         return nlabels[:, None] != qlabels[None, :]
 
-    src = ensure_scan_parallelism(corpus, id_col).select(id_col, vec_col, label_col)
+    src = fan(corpus, id_col).select(id_col, vec_col, label_col)
     return _scan_topk(src, id_col, vec_col, qids, qm, k, eligible)
 
 
@@ -856,8 +850,6 @@ def ivf_cosine_topk_md5(
     Returns (query_id, neighbor_id, rank) — integer-only output keeps
     the driver hash float-free.
     """
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     cent_list = md5_sampled_centroid_list(corpus, id_col, vec_col, k=n_cells, seed=seed)
     cents = corpus.sparkSession.createDataFrame(
         cent_list, schema="cell int, centroid array<double>"
@@ -867,7 +859,7 @@ def ivf_cosine_topk_md5(
     # corpus-sized self-join to re-attach the vectors; the assign
     # kernel takes the driver-side list (no LocalRelation re-collect)
     corpus_cells = ivf_assign_cells_md5(
-        ensure_scan_parallelism(corpus, id_col),
+        fan(corpus, id_col),
         id_col,
         cent_list,
         passthrough=True,
@@ -918,8 +910,6 @@ def lsh_cosine_topk_md5(
     import numpy as np
     import pyarrow as pa
 
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     planes = lsh_hyperplanes(n_planes, dim, seed)
     per_t = n_planes // n_tables
     pm = np.array(planes, dtype=np.float64)
@@ -961,7 +951,7 @@ def lsh_cosine_topk_md5(
         )
 
     qb = prep(queries, "query_id")
-    cb = prep(ensure_scan_parallelism(corpus, id_col), "neighbor_id")
+    cb = prep(fan(corpus, id_col), "neighbor_id")
     cand = (
         qb.select("query_id", "tbl", "bk")
         .join(cb.select("neighbor_id", "tbl", "bk"), ["tbl", "bk"])
@@ -1012,8 +1002,6 @@ def ivfpq_cosine_topk_md5(
     quality path, pytest recall-floor-checked.
 
     Returns (query_id, neighbor_id, rank)."""
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     _pq_check(dim, m)
     sub = dim // m
     cent_list = md5_sampled_centroid_list(corpus, id_col, vec_col, k=n_cells, seed=seed)
@@ -1021,7 +1009,7 @@ def ivfpq_cosine_topk_md5(
         cent_list, schema="cell int, centroid array<double>"
     )
     asn = ivf_assign_cells_md5(
-        ensure_scan_parallelism(corpus, id_col),
+        fan(corpus, id_col),
         id_col,
         cent_list,
         vec_col=vec_col,
@@ -1197,7 +1185,7 @@ def pq_assign_codes(
     both engines (first occurrence of the max)."""
     _pq_check(dim, m)
     sub = dim // m
-    u = _ensure_scan_parallelism(corpus, id_col).select(F.col(id_col), F.col(vec_col))
+    u = fan(corpus, id_col).select(F.col(id_col), F.col(vec_col))
     # Vectorized Arrow kernel instead of DataFrame higher-order
     # functions: unit normalization plus the m × k_codes score matrix
     # is ~600 lambda evaluations PER ROW, and Spark HOFs never enter
@@ -1612,8 +1600,6 @@ def cosine_range_search(
     bounded as the query batch grows."""
     import numpy as np
 
-    from graphdbetl_spark.operators.skew import adaptive_parallelism
-
     corpus, qids, qm = _collect_queries(corpus, queries, id_col, vec_col)
     qn = np.sqrt(seq_sum(qm * qm, axis=1))
 
@@ -1639,7 +1625,7 @@ def cosine_range_search(
                 np.concatenate(cos), "__cos",
             )
 
-    src = adaptive_parallelism(corpus, id_col).select(id_col, vec_col)
+    src = fan(corpus, id_col, BYTES_PER_TASK).select(id_col, vec_col)
     id_type = dict(src.dtypes)[id_col]
     return src.mapInArrow(
         kern, schema=f"query_id {id_type}, neighbor_id {id_type}, __cos double"
@@ -1713,8 +1699,6 @@ def ivf_append_report(
     drifted batch distribution piles into few cells, degrading probe
     recall; the hint is the trigger for scheduling a centroid refit.
     """
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
-
     cent_list = md5_sampled_centroid_list(
         corpus.filter(~new_pred), id_col, vec_col, k=n_cells, seed=seed
     )
@@ -1722,7 +1706,7 @@ def ivf_append_report(
     # corpus scan, no re-attach shuffle join; centroids stay a driver
     # list (no LocalRelation re-collect — the r7 bench regression)
     tagged = ivf_assign_cells_md5(
-        ensure_scan_parallelism(corpus.withColumn("__new", new_pred), id_col),
+        fan(corpus.withColumn("__new", new_pred), id_col),
         id_col,
         cent_list,
         vec_col=vec_col,

@@ -1,5 +1,10 @@
-"""Skew mitigation primitives (SURVEY.md §4: "salting only if dedup
-keys skew").
+"""Partition sizing and skew mitigation primitives (SURVEY.md §4:
+"salting only if dedup keys skew").
+
+Sizing: :func:`fan` is the engine's one fan-out rule (how many tasks a
+per-row kernel gets), :func:`iterate_partitions` its byte-derived
+sizing input, and :func:`checkpoint_if_scaled` the size-conditional
+materialization. The three byte budgets below are their only knobs.
 
 AQE's skew-join splitting handles most cases at runtime; these helpers
 cover the two shapes AQE can't: skewed *aggregation* keys, and skewed
@@ -15,38 +20,68 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 # Config exposure for the size-derived devices (r11 verdict #7): the
-# 4 MB defaults are single-host-measured constants (r11 paired A/Bs at
-# sf0.1 plus 30× rungs); a deployment tunes them without a code change.
-# Defaults keep the local bench behavior bit-identical.
+# byte budgets are single-host-measured constants (r11/r12 paired A/Bs
+# at sf0.1 plus 30× rungs); a deployment tunes them without a code
+# change. Defaults keep the local bench behavior bit-identical.
 BYTES_PER_TASK = int(os.environ.get("SPARK_GRAFT_BYTES_PER_TASK", str(4 << 20)))
 CHECKPOINT_BYTES = int(os.environ.get("SPARK_GRAFT_CHECKPOINT_BYTES", str(4 << 20)))
+DECODE_BYTES_PER_TASK = int(os.environ.get("SPARK_GRAFT_DECODE_BPT", str(128 << 10)))
 
 
-def ensure_scan_parallelism(df: DataFrame, key_col: str) -> DataFrame:
-    """Local-scale adapter for compute-bound per-row pipelines (n-gram
-    fingerprinting, PQ code assignment: hundreds of expression evals
-    per row). Small test files are single-row-group parquet, so the
-    scan is ONE task and the whole map side serializes on one core no
-    matter how many cores exist. When the incoming plan has materially
-    fewer partitions than the session's parallelism, hash-repartition
-    on the id column (deterministic, order-insensitive downstream; the
-    shuffled bytes are the small raw input, not the exploded
-    intermediate). At cluster scale inputs arrive in many splits, the
-    guard never fires, and no exchange is added to the hot path."""
+def fan(df: DataFrame, key: str, bytes_per_task: int | None = None) -> DataFrame:
+    """The engine's one fan-out rule: how many tasks a per-row kernel
+    gets. Target tasks are ``defaultParallelism`` when
+    ``bytes_per_task`` is None, else ``iterate_partitions(df,
+    bytes_per_task)`` (clamp(plan bytes / budget, 1,
+    defaultParallelism)). A target ≤ 1 keeps ``df``; a frame with at
+    most half the target's partitions is hash-repartitioned on ``key``
+    to the target (deterministic and order-insensitive downstream; the
+    shuffled bytes are the small raw input, not the kernel's exploded
+    intermediate); any other frame is kept, as is any frame whose
+    partitions or stats cannot be read (non-classic sessions).
+
+    Why small inputs need it: small parquet files are one row group,
+    so the scan is ONE task and the whole map side serializes on one
+    core. At cluster scale inputs arrive in many splits and no exchange
+    is added to the hot path. Only the few-splits → many-cores
+    direction is taken: a blind ``coalesce`` down would fuse into the
+    parent stage and collapse whatever upstream compute feeds the
+    frame, so coalescing is left to AQE where a shuffle follows.
+
+    The budgets, measured on one host (r11/r12 A/Bs):
+
+    - ``None`` for per-row-heavy kernels (n-gram explode + md5, PQ
+      code assignment): spreading even a small corpus over all cores
+      is the win.
+    - ``BYTES_PER_TASK`` (4 MB) for light vector kernels: each task
+      pays a fixed Python-worker/Arrow setup, and one kernel pass plus
+      top-k over a 2 000-row frame cost ~1.0 s at 32 partitions vs
+      ~0.3 s at ≤4 (an 8-round trajectory pays it every round).
+    - ``DECODE_BYTES_PER_TASK`` (128 KB) for the vectorized decode
+      kernels, applied to the projection they read: ≈ 5-7k rows or
+      ~100 ms of attach+decode+hash per task. sf0.1 gets 1 task (the
+      1-task arm won 9/10 paired rounds) and a 30× replica ~26 (full
+      fan-out won that rung); a heavier real codec lowers it.
+    """
     try:
+        if bytes_per_task is None:
+            target = df.sparkSession.sparkContext.defaultParallelism
+        else:
+            target = iterate_partitions(df, bytes_per_task)
+        if target <= 1:
+            return df
         nparts = df.rdd.getNumPartitions()
-        target = df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # non-classic sessions: keep the plan untouched
         return df
     if nparts * 2 <= target:
-        return df.repartition(target, F.col(key_col))
+        return df.repartition(target, F.col(key))
     return df
 
 
 def iterate_partitions(df: DataFrame, bytes_per_task: int | None = None) -> int:
     """Size-derived task count: clamp(optimized-plan bytes /
     ``bytes_per_task``, 1, defaultParallelism). The sizing input for
-    :func:`adaptive_parallelism` and for iterated cached frames (a
+    :func:`fan` and for iterated cached frames (a
     per-round job over a cached frame pays a fixed per-task cost every
     round, so a tiny frame should not hold core-count partitions).
     Raises whatever the underlying session raises on non-classic
@@ -88,47 +123,6 @@ def checkpoint_if_scaled(
         stats_bytes = threshold_bytes + 1
     if stats_bytes > threshold_bytes:
         return df.localCheckpoint(eager=True)
-    return df
-
-
-def adaptive_parallelism(
-    df: DataFrame, key_col: str, bytes_per_task: int | None = None
-) -> DataFrame:
-    """Size-derived partitioning for LIGHT per-row kernels (vector
-    scoring, iterated map-only frames): target tasks = clamp(plan
-    bytes / ``bytes_per_task``, 1, defaultParallelism), so a tiny
-    corpus is not fanned out to the full core count. The r11 bench
-    measured the fan-out tax directly: one Python-kernel pass + top-k
-    over a 2 000-row cached frame costs ~1.0 s at 32 partitions vs
-    ~0.3 s at ≤4 (each task pays a fixed Python-worker/Arrow exchange
-    setup, and an 8-round trajectory pays it every round). At scale
-    the byte-derived target reaches defaultParallelism and this
-    behaves exactly like :func:`ensure_scan_parallelism`.
-
-    Use :func:`ensure_scan_parallelism` instead when the kernel is
-    compute-bound per ROW (n-gram explode + md5, image decode) —
-    there, spreading even a small corpus over all cores is the win.
-
-    DIRECTION: this helper only guards the few-splits→many-cores
-    direction (repartition UP); a tiny frame that already arrives in
-    many splits keeps them (r11 ADVICE). Coalescing down is left to
-    AQE's partition coalescing where a shuffle follows; a blind
-    ``coalesce`` here would also collapse the parallelism of whatever
-    upstream compute feeds the frame (coalesce fuses into the parent
-    stage), which is exactly the regression this helper exists to
-    avoid — so the down direction is deliberately not taken.
-    """
-    try:
-        target = iterate_partitions(df, bytes_per_task)
-        if target <= 1:
-            # a single-task frame: a 1-split scan stays as-is; a
-            # multi-split scan keeps its natural (bytes/128MB) splits
-            return df
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # non-classic sessions: keep the plan untouched
-        return df
-    if nparts * 2 <= target:
-        return df.repartition(target, F.col(key_col))
     return df
 
 

@@ -8,6 +8,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from graphdbetl_spark.operators.skew import (
+    key_skew_report,
+    replicated_skew_join,
+    salted_count_sum,
+)
 from graphdbetl_spark.plans.registry import query
 from graphdbetl_spark.sources.catalog import load_table as T
 
@@ -409,8 +414,6 @@ def agg_salted(spark: SparkSession, sf: str) -> DataFrame:
     so the query exercises the operator on genuinely hot keys, and the
     oracle proves the two-phase split is lossless against a plain
     GROUP BY."""
-    from graphdbetl_spark.operators.skew import salted_count_sum
-
     # Scaled-integer sums (the _Q1_SQL idiom): bit-exact under ANY
     # partial-aggregation order, so the salted two-phase split stays
     # hash-identical to the oracle's single GROUP BY at every scale (a
@@ -453,8 +456,6 @@ def join_skew_salted(spark: SparkSession, sf: str) -> DataFrame:
     the dim side exceeds the broadcast threshold. The oracle proves the
     rewrite is result-identical to the plain join; dim-side cost (×8
     replication) is the documented price."""
-    from graphdbetl_spark.operators.skew import replicated_skew_join
-
     joined = replicated_skew_join(
         T(spark, sf, "lineitem").select("l_partkey", "l_quantity"),
         T(spark, sf, "part").select("p_partkey", "p_brand").withColumnRenamed(
@@ -504,8 +505,6 @@ def skew_report(spark: SparkSession, sf: str) -> DataFrame:
     salt buckets) — the numbers that pick plain join vs AQE skew split
     vs salting before the straggler burns a cluster-hour (see
     operators/skew.py key_skew_report)."""
-    from graphdbetl_spark.operators.skew import key_skew_report
-
     return key_skew_report(T(spark, sf, "lineitem"), "l_suppkey")
 
 

@@ -28,6 +28,7 @@ from graphdbetl_spark.operators.dedup import (
 )
 from graphdbetl_spark.operators.multimodal import attach_media_columns, extract_features
 from graphdbetl_spark.operators.similarity import cosine_topk_bruteforce, lsh_cosine_topk
+from graphdbetl_spark.operators.skew import BYTES_PER_TASK, fan
 from graphdbetl_spark.plans.registry import query
 from graphdbetl_spark.sources.catalog import load_table as T
 
@@ -658,7 +659,6 @@ def _embedding_blocked_pairs(
     import pyarrow as pa
 
     from graphdbetl_spark.functions.vectors import arrow_matrix, fold_dots, sign_buckets
-    from graphdbetl_spark.operators.skew import adaptive_parallelism
 
     e = T(spark, sf, "embeddings")
     n = e.count()
@@ -682,7 +682,7 @@ def _embedding_blocked_pairs(
                 [*rb.columns, pa.array(bk)], names=[*rb.schema.names, "bucket"]
             )
 
-    u = adaptive_parallelism(e, "vec_id").select("vec_id", "label", v.alias("v"))
+    u = fan(e, "vec_id", BYTES_PER_TASK).select("vec_id", "label", v.alias("v"))
     schema = ", ".join(f"{c} {t}" for c, t in u.dtypes)
     bkt = u.mapInArrow(kern, schema=f"{schema}, bucket int")
     a = bkt.select(F.col("vec_id").alias("id_a"), F.col("label").alias("la"),
@@ -796,7 +796,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
         sign_buckets,
     )
     from graphdbetl_spark.operators.similarity import md5_sampled_centroids
-    from graphdbetl_spark.operators.skew import ensure_scan_parallelism
 
     e = T(spark, sf, "embeddings")
     norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
@@ -847,7 +846,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
                 names=["vec_id", "v", "cell", "bucket"],
             )
 
-    src = ensure_scan_parallelism(e, "vec_id").select(
+    src = fan(e, "vec_id").select(
         "vec_id", _dvec(F.col("embedding")).alias("v")
     )
     bkt = src.mapInArrow(

@@ -664,16 +664,34 @@ def agg_approx_bounds(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def agg_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
-    """GROUPING SETS / rollup lattice in one pass — each input row feeds every matching grouping set's partial aggregate."""
+    """GROUPING SETS / rollup lattice in one pass — each input row feeds every matching grouping set's partial aggregate.
+
+    Spark's Expand emits nothing on an empty input, where SQL's ROLLUP
+    still emits the ``()`` grand-total row with count 0. A global
+    aggregate always emits one row, so one over the lattice counts its
+    grand-total rows and supplies the ``()`` row only when there is
+    none. It reads the lattice unfiltered (a filter on the grouping id
+    would be pushed below the exchange), so ReuseExchange shares the
+    rollup's exchange and customer is scanned once."""
     c = T(spark, sf, "customer")
     n = F.broadcast(T(spark, sf, "nation"))
     r = F.broadcast(T(spark, sf, "region"))
-    return (
+    lattice = (
         c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
         .rollup("r_name", "n_name")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
+        .agg(F.count(F.lit(1)).alias("n_customers"), F.grouping_id().alias("__g"))
     )
+    empty_total = (
+        lattice.agg(F.count(F.when(F.col("__g") == 3, F.col("n_customers"))).alias("__t"))
+        .filter(F.col("__t") == 0)
+        .select(
+            F.lit(None).cast("string").alias("r_name"),
+            F.lit(None).cast("string").alias("n_name"),
+            F.lit(0).cast("bigint").alias("n_customers"),
+        )
+    )
+    return lattice.drop("__g").unionByName(empty_total)
 
 
 @query(

@@ -241,7 +241,12 @@ def start_streaming_semantic_screen(
         flags = semantic_decontaminate(
             batch, eval_cached, id_col, vec_col, threshold=threshold
         )
-        routed = batch.join(flags.select(id_col, "contaminated"), id_col).cache()
+        # left join: an empty eval set flags no row, so every row is clean
+        routed = (
+            batch.join(flags.select(id_col, "contaminated"), id_col, "left")
+            .na.fill(False, ["contaminated"])
+            .cache()
+        )
         try:
             write_batch_exactly_once(
                 routed.filter(~F.col("contaminated")).drop("contaminated"),

@@ -1,0 +1,71 @@
+"""Empty inputs answer like the oracle: no crash, the usual schema."""
+
+import re
+import shutil
+
+import duckdb
+
+from graphdbetl_spark.plans.registry import all_oracles, all_queries
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+def test_pagerank_without_vertices_is_empty(spark):
+    from graphdbetl_spark.operators.graph import pagerank
+
+    some = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    empty = pagerank(some.limit(0), iterations=3)
+    assert empty.schema == pagerank(some, iterations=3).schema
+    assert empty.collect() == []
+
+
+def test_agg_grouping_sets_empty_customer_matches_oracle(spark, tmp_path):
+    """SQL's ROLLUP emits the () grand-total row on an empty input."""
+    for t in ("nation", "region"):
+        shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{SF_DIR}/customer.parquet') LIMIT 0) "
+        f"TO '{tmp_path}/customer.parquet' (FORMAT PARQUET)"
+    )
+    for t in ("customer", "nation", "region"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    want = con.execute(all_oracles()["agg_grouping_sets"]).fetchall()
+    got = all_queries()["agg_grouping_sets"](spark, str(tmp_path)).collect()
+    assert want == [(None, None, 0)]
+    assert [tuple(r) for r in got] == want
+
+
+def test_agg_grouping_sets_scans_customer_once(spark):
+    """The () fill row reads the rollup's own exchange (reused once the
+    plan has run), so customer is still scanned once."""
+    df = all_queries()["agg_grouping_sets"](spark, SF_DIR)
+    df.collect()
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    final = plan.split("== Initial Plan ==")[0]
+    ids = re.findall(r"Scan parquet\s+\((\d+)\)", final)
+    customer = [
+        i for i in ids if "customer.parquet" in plan.split(f"\n({i}) Scan parquet")[1]
+        .split("\n\n")[0]
+    ]
+    assert len(customer) == 1, plan
+
+
+def test_semantic_decontaminate_empty_eval_set(spark):
+    from graphdbetl_spark.operators.curation import (
+        semantic_decontaminate,
+        semantic_decontaminate_ivf,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    for fn in (semantic_decontaminate, semantic_decontaminate_ivf):
+        full = fn(corpus, corpus.limit(1))
+        empty = fn(corpus, corpus.limit(0))
+        assert empty.schema == full.schema
+        assert empty.collect() == []

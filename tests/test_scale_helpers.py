@@ -70,19 +70,35 @@ def test_checkpoint_if_scaled_fallback_keeps_scale_behavior(spark):
     assert "LogicalRDD" in cp._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_adaptive_parallelism_directions(spark):
-    from graphdbetl_spark.operators.skew import adaptive_parallelism
+def test_fan_both_budgets_and_fallbacks(spark):
+    from graphdbetl_spark.operators.skew import fan, iterate_partitions
 
     cores = spark.sparkContext.defaultParallelism
+    assert cores >= 2
     one = spark.range(1000).toDF("k").repartition(1)
-    # big byte-derived target, few splits -> repartition up to the clamp
-    up = adaptive_parallelism(one, "k", bytes_per_task=1)
-    assert up.rdd.getNumPartitions() == cores
+    # None: the target is the core count, read from no plan stats
+    up = fan(one, "k")
+    assert up is not one and up.rdd.getNumPartitions() == cores
+    # an integer budget: the byte-derived target (here the clamp)
+    assert iterate_partitions(one, 1) == cores
+    assert fan(one, "k", bytes_per_task=1).rdd.getNumPartitions() == cores
     # target <= 1 -> plan untouched (same object back)
-    assert adaptive_parallelism(one, "k", bytes_per_task=1 << 40) is one
-    # many splits already: guarded direction only — splits are kept
+    assert fan(one, "k", bytes_per_task=1 << 40) is one
+    # many splits already: only the up direction is taken, splits kept
     wide = spark.range(1000).toDF("k").repartition(cores)
-    assert adaptive_parallelism(wide, "k", bytes_per_task=1 << 40) is wide
+    assert fan(wide, "k") is wide
+    assert fan(wide, "k", bytes_per_task=1) is wide
+
+    class NoRdd:
+        # a frame whose partitions cannot be read (non-classic session)
+        sparkSession = spark
+
+        @property
+        def rdd(self):
+            raise RuntimeError("no RDD access")
+
+    blind = NoRdd()
+    assert fan(blind, "k") is blind
 
 
 def test_arrow_matrix_rejects_ragged_and_null():

@@ -371,3 +371,22 @@ def test_streaming_semantic_screen_routes_batches(spark, tmp_path):
         ).collect()
     }
     assert got_quar == {v for v, c in batch_flags.items() if c}
+
+
+def test_streaming_semantic_screen_empty_eval_set_keeps_every_row(spark, tmp_path):
+    from graphdbetl_spark.streaming.curation import start_streaming_semantic_screen
+
+    schema = "vec_id long, embedding array<double>"
+    src = str(tmp_path / "vec_src")
+    spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], schema).coalesce(
+        1
+    ).write.parquet(src)
+    clean, quarantine = str(tmp_path / "clean"), str(tmp_path / "quar")
+    q = start_streaming_semantic_screen(
+        spark.readStream.schema(schema).parquet(src),
+        spark.createDataFrame([], schema), "vec_id", "embedding",
+        clean, quarantine, str(tmp_path / "ck"),
+    )
+    q.awaitTermination(120)
+    assert {r.vec_id for r in spark.read.parquet(clean).collect()} == {1, 2}
+    assert spark.read.parquet(quarantine).count() == 0

@@ -9,9 +9,11 @@ hooks ``coreset.PLAN_PROBE`` and writes the FIRST round's pre-collect
 plan to plans/<OUT_SUBDIR>/<query>_round_<tag>.txt.
 
 Queries read the parquet tables under $SPARK_GRAFT_SF_DIR (the bench's
-data directory); with no NAME the bench headline set is dumped.
+data directory); with no NAME the bench headline set is dumped, and
+the name ALL dumps every registry entry (so a plan-identity claim can
+cover the whole registry).
 
-Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...]
+Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...|ALL]
        (TAG = before|after)
 """
 
@@ -56,6 +58,8 @@ def main() -> None:
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     spark = get_spark("dump-plans")
     qs = all_queries()
+    if names == ["ALL"]:
+        names = sorted(qs)
     for name in names:
         captured: dict[str, str] = {}
 
