@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from graphdbetl_spark.etl.schema import conform_to_schema, merge_schemas
-from graphdbetl_spark.operators.dedup import dedup_merge_first_wins
+from graphdbetl_spark.operators.dedup import dedup_merge_by_source
 from graphdbetl_spark.sources.catalog import read_cached
 
 # Canonical output columns added to every node table.
@@ -165,11 +165,11 @@ class GraphDBBuilder:
             # URI namespacing per source table keeps multi-source ids
             # collision-free (D9: F.concat(lit(prefix), col(uri_key))).
             db = self.config.get("Database", {}).get("name", "graph")
-            frames.append(
-                df.withColumn(NODE_ID, F.concat(F.lit(f"{src['table']}:"), id_col))
-                .withColumn(NODE_URI, F.concat_ws("/", F.lit(db), F.lit(label), uri_col))
-                .withColumn(NODE_SRC, F.lit(src_name))
-            )
+            frames.append(df.withColumns({
+                NODE_ID: F.concat(F.lit(f"{src['table']}:"), id_col),
+                NODE_URI: F.concat_ws("/", F.lit(db), F.lit(label), uri_col),
+                NODE_SRC: F.lit(src_name),
+            }))
 
         # Schema harmonization across sources (R5) + conform each (R6/R7).
         merged = merge_schemas([f.schema for f in frames])
@@ -178,9 +178,10 @@ class GraphDBBuilder:
         for other in conformed[1:]:
             unioned = unioned.unionByName(other)
 
-        # D1: merge-by-id — first non-null value per column wins, matching
-        # "merge the node data into an existing record" (:463-467, :493-497).
-        out = dedup_merge_first_wins(unioned, NODE_ID, order_by=[NODE_SRC])
+        # D1: merge-by-id — first non-null value per column wins, sources
+        # in name order, matching "merge the node data into an existing
+        # record" (:463-467, :493-497).
+        out = dedup_merge_by_source(unioned, NODE_ID, NODE_SRC, node.sources)
         node.dataframe = out
         self.nodes[label] = node
         return out

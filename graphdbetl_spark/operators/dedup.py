@@ -15,6 +15,7 @@ join.
 from __future__ import annotations
 
 import random
+from collections.abc import Iterable
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -45,6 +46,29 @@ def dedup_merge_first_wins(
     for c in value_cols:
         picked = F.min(F.when(F.col(c).isNotNull(), F.struct(*order_cols, F.col(c).alias("__v"))))
         aggs.append(picked.getField("__v").alias(c))
+    return df.groupBy(id_col).agg(*aggs)
+
+
+def dedup_merge_by_source(
+    df: DataFrame, id_col: str, src_col: str, sources: Iterable[str]
+) -> DataFrame:
+    """:func:`dedup_merge_first_wins` with ``order_by=[src_col]``, for a
+    frame whose ``src_col`` values are known at plan time (``sources``,
+    every value the column holds; never null).
+
+    Per column, the value comes from the first source in name order
+    that has it non-null, and a tie inside one source goes to the min
+    value: ``coalesce`` over one ``min(CASE WHEN src = s THEN c END)``
+    per source, in ``sorted`` order (Python's ``str`` order is Spark's
+    UTF-8 binary order). That is the struct-``min`` answer without
+    building and comparing a struct per row and column.
+    """
+    is_src = [F.col(src_col) == s for s in sorted(sources)]
+    aggs = [
+        F.coalesce(*(F.min(F.when(is_s, F.col(c))) for is_s in is_src)).alias(c)
+        for c in df.columns
+        if c != id_col
+    ]
     return df.groupBy(id_col).agg(*aggs)
 
 

@@ -732,19 +732,22 @@ def decontaminate_semantic_ivf_auto(spark: SparkSession, sf: str) -> DataFrame:
         F.col("contaminated").alias("__ic"),
     )
     j = iv.join(ex, "vec_id", "left")
+    # Over no rows a sum or max is NULL, and so is every comparison on
+    # it; coalesce each to its identity (0 flags, no gap) so an empty
+    # embeddings table attests true like the oracle.
     ivf_stats = j.agg(
-        F.sum(F.col("__emx").isNull().cast("long")).alias("__orphans"),
-        F.max(
+        F.coalesce(F.sum(F.col("__emx").isNull().cast("long")), F.lit(0)).alias("__orphans"),
+        F.coalesce(F.max(
             F.coalesce(F.col("__imx") - F.col("__emx"), F.lit(1.0))
-        ).alias("__maxgap"),
-        F.sum(
+        ), F.lit(0.0)).alias("__maxgap"),
+        F.coalesce(F.sum(
             (F.col("__ic") & ~F.coalesce(F.col("__ec"), F.lit(False)))
             .cast("long")
-        ).alias("__false_flags"),
-        F.sum(F.col("__ic").cast("long")).alias("__ivf_flagged"),
+        ), F.lit(0)).alias("__false_flags"),
+        F.coalesce(F.sum(F.col("__ic").cast("long")), F.lit(0)).alias("__ivf_flagged"),
     )
     exact_stats = exact.agg(
-        F.sum(F.col("contaminated").cast("long")).alias("exact_flagged")
+        F.coalesce(F.sum(F.col("contaminated").cast("long")), F.lit(0)).alias("exact_flagged")
     )
     n_twins = ev.agg(F.count(F.lit(1)).cast("long").alias("n_twins"))
     return (

@@ -19,23 +19,43 @@ def test_pagerank_without_vertices_is_empty(spark):
     assert empty.collect() == []
 
 
-def test_agg_grouping_sets_empty_customer_matches_oracle(spark, tmp_path):
-    """SQL's ROLLUP emits the () grand-total row on an empty input."""
-    for t in ("nation", "region"):
+def _answers_on(spark, tmp_path, name, empty, kept=()):
+    """(oracle rows, Spark rows) of entry ``name`` over ``SF_DIR``'s
+    tables, with every table in ``empty`` cut to its schema."""
+    for t in kept:
         shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
     con = duckdb.connect()
-    con.execute(
-        f"COPY (SELECT * FROM read_parquet('{SF_DIR}/customer.parquet') LIMIT 0) "
-        f"TO '{tmp_path}/customer.parquet' (FORMAT PARQUET)"
-    )
-    for t in ("customer", "nation", "region"):
+    for t in empty:
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet') LIMIT 0) "
+            f"TO '{tmp_path}/{t}.parquet' (FORMAT PARQUET)"
+        )
+    for t in (*empty, *kept):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
         )
-    want = con.execute(all_oracles()["agg_grouping_sets"]).fetchall()
-    got = all_queries()["agg_grouping_sets"](spark, str(tmp_path)).collect()
+    want = con.execute(all_oracles()[name]).fetchall()
+    got = all_queries()[name](spark, str(tmp_path)).collect()
+    return want, [tuple(r) for r in got]
+
+
+def test_agg_grouping_sets_empty_customer_matches_oracle(spark, tmp_path):
+    """SQL's ROLLUP emits the () grand-total row on an empty input."""
+    want, got = _answers_on(
+        spark, tmp_path, "agg_grouping_sets", ["customer"], ["nation", "region"]
+    )
     assert want == [(None, None, 0)]
-    assert [tuple(r) for r in got] == want
+    assert got == want
+
+
+def test_semantic_ivf_auto_empty_embeddings_matches_oracle(spark, tmp_path):
+    """Sums and a max over no rows are NULL; the attestation coalesces
+    them to their identities, so every boolean holds as in the oracle."""
+    want, got = _answers_on(
+        spark, tmp_path, "decontaminate_semantic_ivf_auto", ["embeddings"]
+    )
+    assert want == [(0, 0, True, True, True, True)]
+    assert got == want
 
 
 def test_agg_grouping_sets_scans_customer_once(spark):

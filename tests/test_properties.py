@@ -8,7 +8,7 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import types as T
 
 from graphdbetl_spark.etl.schema import merge_schemas
-from graphdbetl_spark.operators.dedup import dedup_merge_first_wins
+from graphdbetl_spark.operators.dedup import dedup_merge_by_source, dedup_merge_first_wins
 
 _TYPES = [T.LongType(), T.StringType(), T.DoubleType(), T.IntegerType(), T.BooleanType()]
 
@@ -71,6 +71,31 @@ def test_dedup_merge_idempotent_and_covering(spark, rows):
         vals = sorted(((s, v) for (j, v, s) in rows if j == i and v is not None))
         expected = vals[0][1] if vals else None
         assert got[i] == expected, (i, vals)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 4),  # id, repeated within and across sources
+            st.sampled_from(["b", "a", "cc", "c"]),  # source
+            st.one_of(st.none(), st.integers(0, 9)),
+            st.one_of(st.none(), st.text(alphabet="xyz", max_size=2)),
+        ),
+        min_size=1,
+        max_size=24,
+    )
+)
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_builder_merge_equals_struct_min_merge(spark, rows):
+    """The graph builder's per-source merge answers like the struct-min
+    merge ordered by source: first source in name order with a non-null
+    value, the min value on a tie inside one source."""
+    df = spark.createDataFrame(rows, schema="_id int, _source string, n int, s string")
+    sources = {r[1] for r in rows}
+    got = dedup_merge_by_source(df, "_id", "_source", sources)
+    want = dedup_merge_first_wins(df, "_id", order_by=["_source"])
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_cast_roundtrip(spark):
