@@ -14,6 +14,8 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from graphdbetl_spark.operators.skew import pinned
+
 
 def promote_staged(stage: str, path: str) -> None:
     """Promote a fully-written staging directory over ``path`` without a
@@ -250,14 +252,12 @@ def zorder_rank_exact(
     counts = tagged.groupBy("__t", "__v").agg(F.count(F.lit(1)).alias("__c"))
     # Two-phase prefix sum. Phase 0: range-partition the distinct
     # values (order-preserving across partition ids) and pin the
-    # partition id as data so both phases agree on it. Cached because
+    # partition id as data so both phases agree on it. Pinned because
     # both the offset aggregate and the final cum read it, and the
     # bounds are collected inside this call anyway.
     n_part = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    parts = (
-        counts.repartitionByRange(n_part, "__t", "__v")
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+    parts = counts.repartitionByRange(n_part, "__t", "__v").withColumn(
+        "__pid", F.spark_partition_id()
     )
     # Phase 1: per-(partition, tag) totals → exclusive running offset.
     # This window is over at most n_part × 2 rows — driver-tiny.
@@ -305,13 +305,13 @@ def zorder_rank_exact(
         )
         .distinct()
     )
-    rows = (
-        cum.join(F.broadcast(rdf), F.col("__cum") >= F.col("__r"))
-        .groupBy("__t", "__r")
-        .agg(F.min("__v").alias("__b"))
-        .collect()
-    )
-    parts.unpersist()
+    with pinned(parts):
+        rows = (
+            cum.join(F.broadcast(rdf), F.col("__cum") >= F.col("__r"))
+            .groupBy("__t", "__r")
+            .agg(F.min("__v").alias("__b"))
+            .collect()
+        )
     ba = sorted({float(r["__b"]) for r in rows if r["__t"] == 0})
     bb = sorted({float(r["__b"]) for r in rows if r["__t"] == 1})
     return _interleave_bits(
@@ -338,9 +338,10 @@ def compact_plan(
     executes. Deterministic and integer-exact, so fully oracle-able.
 
     The running total is DISTRIBUTED (the zorder_rank_exact treatment,
-    without its .persist(): a range seam here would silently misplace
-    offsets, so the slice id is a pure FUNCTION OF THE DATA rather
-    than spark_partition_id over a sampled repartitionByRange —
+    without its pinned range partitions: a range seam here would
+    silently misplace offsets, so the slice id is a pure FUNCTION OF
+    THE DATA rather than spark_partition_id over a sampled
+    repartitionByRange —
     ``(order - min) // block`` with block sized from one bounded
     min/max aggregate). Phase 1 computes per-(slice, part) totals
     (map-side combined) and turns them into exclusive offsets via a

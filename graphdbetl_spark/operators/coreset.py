@@ -61,7 +61,7 @@ from graphdbetl_spark.functions.vectors import (
     list_column,
     seq_sum,
 )
-from graphdbetl_spark.operators.skew import BYTES_PER_TASK, fan
+from graphdbetl_spark.operators.skew import BYTES_PER_TASK, fan, pinned
 
 # Plan-evidence hook: the final frame of an iterative operator is the
 # driver-built trajectory (Scan ExistingRDD), which shows nothing about
@@ -131,13 +131,16 @@ def kcenter_select(
 
     p = max(1, int(batch_p)) if batch_p else 1
     spark = emb.sparkSession
-    src = (
-        fan(emb, id_col, BYTES_PER_TASK)
-        .select(id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v"))
-        .persist()
+    src = fan(emb, id_col, BYTES_PER_TASK).select(
+        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
     )
-    try:
-        seed = src.orderBy(F.col(id_col).asc()).limit(1).collect()[0]
+    with pinned(src):
+        first = src.orderBy(F.col(id_col).asc()).limit(1).collect()
+        if not first:  # an empty corpus selects nothing
+            return spark.createDataFrame(
+                [], "step int, center_id bigint, radius double"
+            )
+        seed = first[0]
         centers = [(int(seed[id_col]), np.array(seed["__v"], dtype=np.float64))]
         _norms(centers[0][1][None, :])  # fail fast on a zero-norm seed
         trajectory: list[tuple[int, int, float | None]] = [(1, centers[0][0], None)]
@@ -217,8 +220,6 @@ def kcenter_select(
                 cand = cand[1:]
             if len(rows) < p and not cand:
                 break  # corpus exhausted before reaching k
-    finally:
-        src.unpersist()
 
     out = spark.createDataFrame(
         [(r, cid, mc) for r, cid, mc in trajectory],
@@ -278,7 +279,12 @@ def mmr_select(
     base = fan(emb, id_col, BYTES_PER_TASK).select(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
     )
-    qrow = base.orderBy(F.col(id_col).asc()).limit(1).collect()[0]
+    first = base.orderBy(F.col(id_col).asc()).limit(1).collect()
+    if not first:  # an empty corpus has no query row and selects nothing
+        return spark.createDataFrame(
+            [], "step int, selected_id bigint, mmr_score double"
+        )
+    qrow = first[0]
     qid = int(qrow[id_col])
     qv = np.array(qrow["__v"], dtype=np.float64)
     qn = float(_norms(qv[None, :])[0])
@@ -299,8 +305,8 @@ def mmr_select(
 
     src = base.mapInArrow(
         rel_kern, schema=f"{id_col} bigint, __v array<double>, __rel double"
-    ).persist()
-    try:
+    )
+    with pinned(src):
         selected: list[tuple[int, np.ndarray]] = []
         trajectory: list[tuple[int, int, float]] = []
         while len(trajectory) < k:
@@ -404,8 +410,6 @@ def mmr_select(
                 cand = cand[1:]
             if len(rows) < p and not cand:
                 break  # corpus exhausted before reaching k
-    finally:
-        src.unpersist()
 
     out = spark.createDataFrame(
         trajectory, schema="step int, selected_id bigint, __score double"

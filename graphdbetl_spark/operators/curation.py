@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from graphdbetl_spark.operators.dedup import _tokens, _word_ngram_hashes, _word_ngrams
-from graphdbetl_spark.operators.skew import fan, iterate_partitions
+from graphdbetl_spark.operators.skew import fan, iterate_partitions, pinned
 from graphdbetl_spark.operators.sampling import hash_bucket
 
 # PII patterns chosen to be portable between Java regex (Spark) and
@@ -1071,9 +1071,8 @@ def _logreg_fit(
     # (documented ~1e-14 order noise).
     try:
         feats = feats.repartition(iterate_partitions(feats))
-    except Exception:  # non-classic sessions: cache as-is
+    except Exception:  # non-classic sessions: pin as-is
         pass
-    feats = feats.cache()
     # AQE adds a per-stage re-plan break to every round's job; for
     # this loop each job is a FIXED 2-stage global scalar aggregation
     # over the cached frame (5 doubles cross the shuffle), so adaptive
@@ -1086,36 +1085,33 @@ def _logreg_fit(
     # running another query without AQE — r9 ADVICE).
     from graphdbetl_spark.session import conf_override
 
-    try:
-        with conf_override(
-            df.sparkSession, "spark.sql.adaptive.enabled", "false"
-        ):
-            w = [0.0] * 5
-            for _ in range(iters):
-                z = F.lit(w[0])
-                for j in range(4):
-                    z = z + F.lit(w[j + 1]) * F.col(f"x{j + 1}")
-                e = (F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")).alias("e")
-                # N rides along in the gradient aggregation (one job per
-                # round, total iters jobs — no separate count() job; the
-                # first round's agg also materializes the feature cache)
-                round_q = feats.select(e, "x1", "x2", "x3", "x4").agg(
-                    F.sum("e").alias("g0"),
-                    F.sum(F.col("e") * F.col("x1")).alias("g1"),
-                    F.sum(F.col("e") * F.col("x2")).alias("g2"),
-                    F.sum(F.col("e") * F.col("x3")).alias("g3"),
-                    F.sum(F.col("e") * F.col("x4")).alias("g4"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                # per-round plan-evidence hook — see coreset.PLAN_PROBE
-                from graphdbetl_spark.operators import coreset as _c
+    with pinned(feats), conf_override(
+        df.sparkSession, "spark.sql.adaptive.enabled", "false"
+    ):
+        w = [0.0] * 5
+        for _ in range(iters):
+            z = F.lit(w[0])
+            for j in range(4):
+                z = z + F.lit(w[j + 1]) * F.col(f"x{j + 1}")
+            e = (F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")).alias("e")
+            # N rides along in the gradient aggregation (one job per
+            # round, total iters jobs — no separate count() job; the
+            # first round's agg also materializes the feature cache)
+            round_q = feats.select(e, "x1", "x2", "x3", "x4").agg(
+                F.sum("e").alias("g0"),
+                F.sum(F.col("e") * F.col("x1")).alias("g1"),
+                F.sum(F.col("e") * F.col("x2")).alias("g2"),
+                F.sum(F.col("e") * F.col("x3")).alias("g3"),
+                F.sum(F.col("e") * F.col("x4")).alias("g4"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            # per-round plan-evidence hook — see coreset.PLAN_PROBE
+            from graphdbetl_spark.operators import coreset as _c
 
-                if _c.PLAN_PROBE is not None:
-                    _c.PLAN_PROBE("logreg_round", round_q)
-                row = round_q.first()
-                w = [w[k] - lr * row[k] / row["n"] for k in range(5)]
-    finally:
-        feats.unpersist()
+            if _c.PLAN_PROBE is not None:
+                _c.PLAN_PROBE("logreg_round", round_q)
+            row = round_q.first()
+            w = [w[k] - lr * row[k] / row["n"] for k in range(5)]
     return w
 
 

@@ -240,11 +240,10 @@ def minhash_near_duplicates(
     # Shingle strings are hashed to 31-bit ints IMMEDIATELY (string
     # hashing dominates cost; everything downstream — signatures AND
     # exact-Jaccard verification — needs only the hashes), so the
-    # cached table and the two verification-join shuffles carry 8-byte
-    # longs, not ~30-byte gram strings.
-    # cache(): the hashed-shingle table feeds the bucket self-join AND
-    # both sides of the verification join — uncached, shingling runs 4×.
-    # (At warehouse scale, persist signatures as a table instead.)
+    # checkpointed table and the two verification-join shuffles carry
+    # 8-byte longs, not ~30-byte gram strings.
+    # Checkpointed (skew.pinned, form 1): the table feeds the bucket
+    # self-join AND both verification sides — else shingling runs 4×.
     p = (1 << 31) - 1  # Mersenne prime
     sh = (
         df.repartition(F.col(id_col))
@@ -258,7 +257,7 @@ def minhash_near_duplicates(
             ).alias("hs"),
         )
         .filter(F.size("hs") > 0)
-        .cache()
+        .localCheckpoint(eager=True)
     )
 
     # k minhashes from the shingle hashes with the classic universal
@@ -296,7 +295,8 @@ def minhash_near_duplicates(
     buckets = (
         with_sig.select(id_col, F.explode(band_cols).alias("bk"))
         .select(id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-        .cache()  # consumed by both sides of the candidate self-join
+        # consumed by both sides of the candidate self-join
+        .localCheckpoint(eager=True)
     )
 
     a, b_ = buckets.alias("a"), buckets.alias("b")
@@ -382,14 +382,17 @@ def dedup_keep_list(
     hashed = df.select(
         F.col(id_col), F.sha2(F.col(text_col), 256).alias("__sha")
     )
-    keep_exact = hashed.groupBy("__sha").agg(F.min(id_col).alias(id_col)).cache()
+    # keep_exact and survivors each feed two branches of the returned
+    # frame: checkpointed (skew.pinned, form 1), so the base scan +
+    # digest don't recompute per consumer
+    keep_exact = hashed.groupBy("__sha").agg(F.min(id_col).alias(id_col))
+    keep_exact = keep_exact.localCheckpoint(eager=True)
     exact_dropped = hashed.join(keep_exact, [id_col, "__sha"], "left_anti").select(
         F.col(id_col), F.lit(False).alias("keep"), F.lit("exact_dup").alias("reason")
     )
 
-    # survivors feeds the pair generation AND the kept-list anti-join —
-    # cache so the base scan + digest don't recompute per consumer
-    survivors = df.join(keep_exact.select(id_col), id_col, "left_semi").cache()
+    survivors = df.join(keep_exact.select(id_col), id_col, "left_semi")
+    survivors = survivors.localCheckpoint(eager=True)  # pairs + kept list
     pairs = ngram_jaccard_pairs(
         survivors, text_col, id_col, n=3, threshold=near_threshold,
         block_cols=block_cols, max_gram_df=max_gram_df,
@@ -918,32 +921,27 @@ def _minhash_md5_sig_buckets(
     shingle_n: int,
     num_hashes: int,
     bands: int,
-    materialize: str | None = "cache",
+    materialize: bool = True,
 ):
     """Shared md5-family MinHash pipeline front half: shingle sets and
     banded signature buckets for one input. Returns (sh, buckets) —
     ``sh``: (id, sh: array of distinct shingles); ``buckets``: (id,
-    band, bh) with one row per band. ``materialize`` picks the reuse
-    strategy for the two outputs (each is consumed twice downstream —
-    candidate join + verification — and the corpus index is reused
-    across probe batches):
+    band, bh) with one row per band. Each output is consumed twice
+    downstream (candidate join + verification), and a corpus index is
+    reused across probe batches:
 
-    - ``"cache"`` (corpus-side default): both cached; caller owns the
-      lifetime (unpersist/clearCache).
-    - ``"checkpoint"``: lineage-owned ``localCheckpoint`` blocks the
-      ContextCleaner frees when the caller's DataFrames go out of
-      scope — the leak-free choice for fire-and-forget calls.
+    - ``materialize=True`` (corpus side): both are lineage-owned
+      ``localCheckpoint`` blocks (skew.pinned, form 1), freed by the
+      ContextCleaner once the caller's DataFrames go out of scope.
       ``sh`` checkpoints FIRST and ``buckets`` derives from the
       checkpointed ``sh``, so the expensive shingle+signature
       derivation runs exactly once (checkpointing an independently
       built ``buckets`` would re-derive the whole pipeline: the r5
       ADVICE finding).
-    - ``None`` (per-batch probe side): no materialization — the
-      ``repartition(id)`` exchange below is identical in every
+    - ``materialize=False`` (per-batch probe side): no materialization
+      — the ``repartition(id)`` exchange below is identical in every
       consumer branch, so ReuseExchange covers the shared work within
-      one query, and nothing is left pinned in storage memory after
-      the batch's job finishes (a long-running stream would otherwise
-      accumulate one dead cached pair per micro-batch)."""
+      one query, and no per-batch job runs before the batch's own."""
     r = num_hashes // bands
     coeffs = minhash_coeffs(num_hashes)
     p = MINHASH_PRIME
@@ -952,9 +950,7 @@ def _minhash_md5_sig_buckets(
         .select(F.col(id_col), _shingles(F.col(text_col), shingle_n).alias("sh"))
         .filter(F.size("sh") > 0)
     )
-    if materialize == "cache":
-        sh = sh.cache()
-    elif materialize == "checkpoint":
+    if materialize:
         sh = sh.localCheckpoint(eager=True)
     base = lambda s: F.pmod(  # noqa: E731
         F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"), F.lit(p)
@@ -981,9 +977,7 @@ def _minhash_md5_sig_buckets(
     buckets = with_sig.select(
         id_col, F.explode(F.array(*band_structs)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    if materialize == "cache":
-        buckets = buckets.cache()
-    elif materialize == "checkpoint":
+    if materialize:
         # derives from the already-checkpointed sh: only the (cheap)
         # signature/band projection over the vocabulary-sized sh runs
         buckets = buckets.localCheckpoint(eager=True)
@@ -1044,7 +1038,6 @@ def minhash_incremental_md5(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.6,
-    cache_corpus: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup screening of a new ingest batch against an
     existing corpus — the MinHash analogue of exact-digest
@@ -1066,28 +1059,19 @@ def minhash_incremental_md5(
     n_matches) where n_matches counts distinct corpus documents with
     verified Jaccard ≥ threshold.
 
-    ``cache_corpus`` (r4 ADVICE: the corpus side pinned two cached
-    datasets with no opt-out while the batch side was uncached):
-    True (default) caches the index — right when the caller reuses it
-    or accepts CacheManager entries living until clearCache/unpersist;
-    False swaps the cache for lineage-owned ``localCheckpoint`` blocks
-    that the ContextCleaner frees once the caller's DataFrame goes out
-    of scope — the leak-free choice for fire-and-forget calls in a
-    long session. Either way the expensive shingle+signature
-    derivation materializes exactly once: in checkpoint mode ``sh``
-    checkpoints first and the bucket projection derives FROM the
-    checkpointed ``sh`` (r5 ADVICE — checkpointing an independently
-    built bucket plan would re-run the whole derivation a second
-    time; ReuseExchange alone re-derives it per consumer branch —
-    measured 3.0 s vs 1.1 s at sf0.1). Callers that reuse the index
-    across many probe batches should build it once with
-    :func:`_minhash_md5_sig_buckets` (materialize="cache") and call
-    :func:`minhash_probe_md5` per batch, as the streaming screen does
-    — owning the cache lifetime explicitly.
+    The corpus index is two lineage-owned checkpoints (see
+    :func:`_minhash_md5_sig_buckets`): the expensive shingle+signature
+    derivation materializes exactly once, and the ContextCleaner frees
+    the blocks once the returned frame goes out of scope, so a long
+    session accumulates no cache entries (ReuseExchange alone
+    re-derives the index per consumer branch — measured 3.0 s vs
+    1.1 s at sf0.1). Callers that reuse the index across many probe
+    batches should build it once with :func:`_minhash_md5_sig_buckets`
+    and call :func:`minhash_probe_md5` per batch, as the streaming
+    screen does.
     """
     sh_c, bk_c = _minhash_md5_sig_buckets(
-        corpus, text_col, id_col, shingle_n, num_hashes, bands,
-        materialize="cache" if cache_corpus else "checkpoint",
+        corpus, text_col, id_col, shingle_n, num_hashes, bands
     )
     return minhash_probe_md5(
         sh_c, bk_c, batch, text_col, id_col, shingle_n, num_hashes, bands, threshold
@@ -1108,16 +1092,14 @@ def minhash_probe_md5(
     """Probe half of the incremental MinHash screen: given a corpus's
     PRE-BUILT signature index (``sh_c``/``bk_c`` from
     :func:`_minhash_md5_sig_buckets` — built once, reused across
-    batches; the streaming ingest path materializes them cached), sign
-    just the new batch and screen it. See
+    batches), sign just the new batch and screen it. See
     :func:`minhash_incremental_md5` for semantics and the returned
-    schema. The batch side is built UNCACHED: this runs once per
-    micro-batch in a potentially unbounded stream, and per-call
-    ``cache()`` with no unpersist hook would pin one dead block pair
-    per batch in executor storage; ReuseExchange dedups the batch's
-    repartition across the candidate/verify branches instead."""
+    schema. The batch side is built unmaterialized: this runs once per
+    micro-batch in a potentially unbounded stream, and ReuseExchange
+    dedups the batch's repartition across the candidate/verify
+    branches."""
     sh_b, bk_b = _minhash_md5_sig_buckets(
-        batch, text_col, id_col, shingle_n, num_hashes, bands, materialize=None
+        batch, text_col, id_col, shingle_n, num_hashes, bands, materialize=False
     )
     candidates = (
         bk_b.select(
@@ -1146,8 +1128,9 @@ def minhash_probe_md5(
         batch.select(F.col(id_col))
         # matches is a per-batch-doc aggregate (≤ batch rows by
         # construction), so broadcasting it is safe whenever the batch
-        # itself is probe-sized; the hint matters now that the batch
-        # side is uncached and the static planner sees no size stats.
+        # itself is probe-sized; the hint matters because the batch
+        # side is unmaterialized and the static planner sees no size
+        # stats.
         .join(
             F.broadcast(matches.withColumnRenamed("__bid", id_col)), id_col, "left"
         )
@@ -1183,8 +1166,6 @@ def minhash_persist_index(
     )
     sh.write.mode("overwrite").parquet(f"{path}/shingles")
     bk.write.mode("overwrite").parquet(f"{path}/buckets")
-    sh.unpersist()
-    bk.unpersist()
 
 
 def minhash_load_index(spark, path: str) -> tuple[DataFrame, DataFrame]:

@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from graphdbetl_spark.operators.skew import pinned
+
 
 def connected_components_star(
     edges: DataFrame,
@@ -299,28 +301,29 @@ def bfs_depths(
     # and with a flat edge list every round exchanges edge-sized rows
     # into the frontier join. Packed, the per-round join carries
     # vertex-sized rows; only MATCHED adjacency rows explode, straight
-    # into the frontier distinct. cache() (compressed columnar,
-    # disk-spilling) rather than localCheckpoint: checkpointing stores
+    # into the frontier distinct. Pinned (the compressed, disk-spilling
+    # columnar cache) rather than localCheckpoint: checkpointing stores
     # raw rows and OOMed the 8g local heap on the 60M-edge 30× replica,
-    # while the columnar cache spills cleanly.
+    # while the columnar cache spills cleanly. Every round's ``dist`` is
+    # an eager checkpoint, so the returned frame no longer reads ``adj``.
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     adj = (
         e.repartition(_adj_build_partitions(e), "u")
         .groupBy("u")
         .agg(F.collect_list("v").alias("__vs"))
-        .cache()
     )
     frontier = dist.select("id")
-    for d in range(1, max_depth + 1):
-        nxt = (
-            adj.join(frontier.hint("shuffle_hash"), adj["u"] == frontier["id"])
-            .select(F.explode("__vs").alias("id"))
-            .distinct()
-            .join(dist.select("id"), "id", "left_anti")
-            .localCheckpoint()
-        )
-        dist = dist.union(nxt.withColumn("depth", F.lit(d))).localCheckpoint()
-        frontier = nxt
+    with pinned(adj):
+        for d in range(1, max_depth + 1):
+            nxt = (
+                adj.join(frontier.hint("shuffle_hash"), adj["u"] == frontier["id"])
+                .select(F.explode("__vs").alias("id"))
+                .distinct()
+                .join(dist.select("id"), "id", "left_anti")
+                .localCheckpoint()
+            )
+            dist = dist.union(nxt.withColumn("depth", F.lit(d))).localCheckpoint()
+            frontier = nxt
     return dist
 
 
@@ -346,20 +349,24 @@ def kcore_peel(
     Returns (id, degree): vertices surviving ``rounds`` peels with
     their induced-subgraph degree from the LAST recomputation.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).cache()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-    live = deg.filter(F.col("degree") >= k).select(F.col("u").alias("id"))
-    for _ in range(rounds - 1):
-        live = live.localCheckpoint()
-        kept = (
-            e.join(live.withColumnRenamed("id", "u"), "u", "left_semi")
-            .join(live.withColumnRenamed("id", "v"), "v", "left_semi")
-        )
-        deg = kept.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    with pinned(e):
+        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
         live = deg.filter(F.col("degree") >= k).select(F.col("u").alias("id"))
-    return deg.filter(F.col("degree") >= k).select(
-        F.col("u").alias("id"), F.col("degree").cast("long").alias("degree")
-    )
+        for _ in range(rounds - 1):
+            live = live.localCheckpoint()
+            kept = (
+                e.join(live.withColumnRenamed("id", "u"), "u", "left_semi")
+                .join(live.withColumnRenamed("id", "v"), "v", "left_semi")
+            )
+            deg = kept.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+            live = deg.filter(F.col("degree") >= k).select(F.col("u").alias("id"))
+        # checkpoint the vertex-sized result before ``e`` is released:
+        # checkpointing ``e`` itself took 2 more jobs and more CPU cold
+        # at sf0.1, and raw edge rows are what OOMed bfs_depths at 30×
+        return deg.filter(F.col("degree") >= k).select(
+            F.col("u").alias("id"), F.col("degree").cast("long").alias("degree")
+        ).localCheckpoint(eager=True)
 
 
 def sssp_bounded(
@@ -383,9 +390,9 @@ def sssp_bounded(
     Returns (id, dist): minimum path weight within ``rounds`` hops;
     unreached vertices are absent.
     """
-    # Packed weighted adjacency (u, [(v, w)…]) — see bfs_depths: the
-    # per-round relaxation join carries vertex-sized rows and only
-    # matched neighbor lists explode into the min-fold.
+    # Packed weighted adjacency (u, [(v, w)…]), pinned for the rounds —
+    # see bfs_depths: the per-round relaxation join carries vertex-sized
+    # rows and only matched neighbor lists explode into the min-fold.
     e = edges.select(
         F.col(src).alias("u"),
         F.struct(F.col(dst).alias("v"), F.col(weight).alias("w")).alias("__e"),
@@ -394,7 +401,6 @@ def sssp_bounded(
         e.repartition(_adj_build_partitions(e), "u")
         .groupBy("u")
         .agg(F.collect_list("__e").alias("__es"))
-        .cache()
     )
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("id"))
@@ -411,25 +417,26 @@ def sssp_bounded(
     # 3.33× data at the 100× replica; delta relaxation restores the
     # bounded-frontier cost model of bfs_depths).
     frontier = dist
-    for _ in range(rounds):
-        relaxed = (
-            adj.join(frontier.hint("shuffle_hash"), adj["u"] == frontier["id"])
-            .select(F.explode("__es").alias("__e"), "dist")
-            .select(
-                F.col("__e.v").alias("id"),
-                (F.col("dist") + F.col("__e.w")).alias("dist"),
+    with pinned(adj):
+        for _ in range(rounds):
+            relaxed = (
+                adj.join(frontier.hint("shuffle_hash"), adj["u"] == frontier["id"])
+                .select(F.explode("__es").alias("__e"), "dist")
+                .select(
+                    F.col("__e.v").alias("id"),
+                    (F.col("dist") + F.col("__e.w")).alias("dist"),
+                )
             )
-        )
-        new_dist = (
-            dist.unionAll(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        frontier = new_dist.join(
-            dist.withColumnRenamed("dist", "__old"), "id", "left"
-        ).filter(
-            F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
-        ).select("id", "dist")
-        dist = new_dist
+            new_dist = (
+                dist.unionAll(relaxed)
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint()
+            )
+            frontier = new_dist.join(
+                dist.withColumnRenamed("dist", "__old"), "id", "left"
+            ).filter(
+                F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
+            ).select("id", "dist")
+            dist = new_dist
     return dist

@@ -621,15 +621,12 @@ def maintenance_compact_execute(spark: SparkSession, sf: str) -> DataFrame:
     plan was arithmetic-correct. Same shape as the sink_* entries:
     the write targets a temp dir, the returned frame is the read-back.
     """
-    import os
     import tempfile
 
     from graphdbetl_spark.etl.maintenance import compact_execute
 
     docs = T(spark, sf, "documents").select("lang", "doc_id", "n_chars")
-    out = os.path.join(
-        tempfile.gettempdir(), f"graft_compactexec_{os.path.basename(sf)}"
-    )
+    out = tempfile.mkdtemp(prefix="graft_compactexec_")
     compact_execute(docs, out, "lang", "doc_id", "n_chars", target_bins=36)
     back = spark.read.parquet(out)
     return back.groupBy(

@@ -7,7 +7,6 @@ function waves.
 
 from __future__ import annotations
 
-import os
 import re
 import tempfile
 
@@ -29,7 +28,7 @@ def sink_parquet(spark: SparkSession, sf: str) -> DataFrame:
     (subsumes the reference's row-append sink and block-insert TODO,
     graph_db_builder.py:491-543, D8)."""
     df = T(spark, sf, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"graft_sinkpq_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_sinkpq_")
     df.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -39,7 +38,7 @@ def sink_csv(spark: SparkSession, sf: str) -> DataFrame:
     """D6: CSV serialization (reference serialize_data stub,
     graph_db_builder.py:407-408) with schema-preserving read-back."""
     df = T(spark, sf, "region")
-    out = os.path.join(tempfile.gettempdir(), f"graft_sinkcsv_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_sinkcsv_")
     df.write.mode("overwrite").option("header", "true").csv(out)
     return spark.read.schema(df.schema).option("header", "true").csv(out)
 
@@ -50,7 +49,7 @@ def sink_json(spark: SparkSession, sf: str) -> DataFrame:
     read-back (the interchange format training-data pipelines emit);
     partition-parallel like every sink."""
     df = T(spark, sf, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"graft_sinkjson_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_sinkjson_")
     df.write.mode("overwrite").json(out)
     return spark.read.schema(df.schema).json(out)
 
@@ -59,7 +58,7 @@ def sink_json(spark: SparkSession, sf: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf: str) -> DataFrame:
     """D5: another columnar format behind the same source abstraction."""
     df = T(spark, sf, "supplier")
-    out = os.path.join(tempfile.gettempdir(), f"graft_orc_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_orc_")
     df.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -670,7 +669,7 @@ def scan_text(spark: SparkSession, sf: str) -> DataFrame:
     read-back must reproduce the corpus exactly (fixture texts are
     newline-free, making line<->document a bijection)."""
     d = T(spark, sf, "documents")
-    out = os.path.join(tempfile.gettempdir(), f"graft_text_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_text_")
     d.select(F.col("text").alias("value")).write.mode("overwrite").text(out)
     return spark.read.text(out)
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from graphdbetl_spark.functions.text import quality_score, token_count
 from graphdbetl_spark.functions.vectors import cosine_similarity
+from graphdbetl_spark.operators.skew import pinned
 from graphdbetl_spark.plans.registry import query
 from graphdbetl_spark.sources.catalog import load_table as T
 
@@ -265,55 +266,55 @@ def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
             .alias("e")
         )
         .select(F.col("e.s").alias("u"), F.col("e.t").alias("v"))
-        .cache()  # reused 3·J times across the sliced wedge-close joins
     )
-    n_edges = edges.count()
-    # J derived, not hand-pinned (r7 verdict #5 — the old 6M-edges-
-    # per-slice constant encoded THIS host). Sizing rule: each slice
-    # holds two hashed edge sets at once — the shuffled-hash build and
-    # the broadcast closing slice, ~n_edges/J rows each — plus a skew
-    # allowance of one max-out-degree vertex landing in the slice
-    # (degree orientation bounds out-degree by ~sqrt(2m), so the
-    # allowance needs no measuring job). Budget ~5% of the JVM heap
-    # per slice at ~64 B hashed per (long,long) edge: local mode reads
-    # the real heap via Runtime.maxMemory() (driver IS the executor);
-    # on a cluster the same JVM call on an executor sees its own heap,
-    # so the rule is one code path. 8 GB heap + 122M edges -> J=21,
-    # within noise of r7's hand-pinned 20 (BASELINE.md r8 rung).
-    try:
-        heap = int(
-            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-        )
-    except Exception:  # non-JVM-bridged session: assume the test default
-        heap = 8 << 30
-    budget = max(64 << 20, heap // 20)
-    cap = budget // 64 - int((2 * n_edges) ** 0.5 + 1)
-    n_slices = max(1, -(-n_edges // max(1, cap)))
-    apex = F.pmod(F.xxhash64("u"), F.lit(n_slices))
-    triangles = 0
-    for j in range(n_slices):
-        ej = edges.filter(apex == j)
-        e1, e2, e3 = ej.alias("e1"), edges.alias("e2"), ej.alias("e3")
-        triangles += (
-            e1.hint("shuffle_hash")
-            .join(e2, F.col("e1.v") == F.col("e2.u"))
-            .join(
-                F.broadcast(e3),
-                (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+    # Pinned: reused 3·J times across the sliced wedge-close joins, and
+    # both outputs are driver-side ints, so the blocks go at return — a
+    # long-lived session (the walls campaign runs the whole registry in
+    # one JVM) carries no ~2 GB of dead storage into later jobs.
+    with pinned(edges):
+        n_edges = edges.count()
+        # J derived, not hand-pinned (r7 verdict #5 — the old 6M-edges-
+        # per-slice constant encoded THIS host). Sizing rule: each slice
+        # holds two hashed edge sets at once — the shuffled-hash build and
+        # the broadcast closing slice, ~n_edges/J rows each — plus a skew
+        # allowance of one max-out-degree vertex landing in the slice
+        # (degree orientation bounds out-degree by ~sqrt(2m), so the
+        # allowance needs no measuring job). Budget ~5% of the JVM heap
+        # per slice at ~64 B hashed per (long,long) edge: local mode reads
+        # the real heap via Runtime.maxMemory() (driver IS the executor);
+        # on a cluster the same JVM call on an executor sees its own heap,
+        # so the rule is one code path. 8 GB heap + 122M edges -> J=21,
+        # within noise of r7's hand-pinned 20 (BASELINE.md r8 rung).
+        try:
+            heap = int(
+                spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
             )
-            .count()
-        )
-        # Each slice's closing-edge broadcast (~300 MB hashed) would
-        # otherwise accumulate for the whole loop — on a cluster those
-        # blocks are evictable storage per executor, but a single local
-        # JVM runs out of execution memory around slice 3 of 20. A GC
-        # nudge lets the ContextCleaner destroy the dead broadcast
-        # before the next slice materializes its own.
-        spark.sparkContext._jvm.System.gc()
-    # Both outputs are already driver-side ints; drop the edge cache so
-    # a long-lived session (the walls campaign runs the whole registry
-    # in one JVM) doesn't carry ~2 GB of dead storage into later jobs.
-    edges.unpersist()
+        except Exception:  # non-JVM-bridged session: assume the test default
+            heap = 8 << 30
+        budget = max(64 << 20, heap // 20)
+        cap = budget // 64 - int((2 * n_edges) ** 0.5 + 1)
+        n_slices = max(1, -(-n_edges // max(1, cap)))
+        apex = F.pmod(F.xxhash64("u"), F.lit(n_slices))
+        triangles = 0
+        for j in range(n_slices):
+            ej = edges.filter(apex == j)
+            e1, e2, e3 = ej.alias("e1"), edges.alias("e2"), ej.alias("e3")
+            triangles += (
+                e1.hint("shuffle_hash")
+                .join(e2, F.col("e1.v") == F.col("e2.u"))
+                .join(
+                    F.broadcast(e3),
+                    (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+                )
+                .count()
+            )
+            # Each slice's closing-edge broadcast (~300 MB hashed) would
+            # otherwise accumulate for the whole loop — on a cluster those
+            # blocks are evictable storage per executor, but a single local
+            # JVM runs out of execution memory around slice 3 of 20. A GC
+            # nudge lets the ContextCleaner destroy the dead broadcast
+            # before the next slice materializes its own.
+            spark.sparkContext._jvm.System.gc()
     return spark.createDataFrame([(n_edges, triangles)], "n_edges long, n_triangles long")
 
 

@@ -13,7 +13,6 @@ Conventions for oracle hash-match (SURVEY.md §5.1):
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pyspark.sql.functions as F
@@ -50,7 +49,7 @@ def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
     """CSV round-trip with explicit schema (D5: non-MySQL flat-file
     sources, graph_db_builder.py:13-14,193-194)."""
     df = T(spark, sf, "region")
-    out = os.path.join(tempfile.gettempdir(), f"graft_csv_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_csv_")
     df.write.mode("overwrite").option("header", "true").csv(out)
     return spark.read.schema(df.schema).option("header", "true").csv(out)
 
@@ -59,7 +58,7 @@ def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
 def scan_json(spark: SparkSession, sf: str) -> DataFrame:
     """JSON-lines scan with explicit schema (D5 non-MySQL source surface)."""
     df = T(spark, sf, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"graft_json_{os.path.basename(sf)}")
+    out = tempfile.mkdtemp(prefix="graft_json_")
     df.write.mode("overwrite").json(out)
     return spark.read.schema(df.schema).json(out)
 

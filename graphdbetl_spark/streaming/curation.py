@@ -3,8 +3,8 @@ quarantine datasets by benchmark-contamination status as they arrive.
 
 The streaming form of operators/curation.py's decontamination: the
 eval-benchmark gram set is computed ONCE from a static DataFrame,
-cached, and broadcast into every micro-batch's semi-join — each batch
-is scanned map-side, never shuffled, so per-batch latency is
+checkpointed, and broadcast into every micro-batch's semi-join — each
+batch is scanned map-side, never shuffled, so per-batch latency is
 independent of corpus history (state lives in the output datasets, not
 in the stream). foreachBatch is required because the flagging path
 uses a distinct aggregation (unsupported in continuous append mode).
@@ -13,10 +13,35 @@ uses a distinct aggregation (unsupported in continuous append mode).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from graphdbetl_spark.operators.curation import decontaminate_against_eval
+from graphdbetl_spark.operators.skew import pinned
+from graphdbetl_spark.streaming import txn_sink
+
+
+def _write_routed(
+    routed: DataFrame,
+    ok: Column,
+    batch_id: int,
+    ok_path: str,
+    flagged_path: str,
+    flag_cols: tuple[str, ...],
+    audit_cols: tuple[str, ...] = (),
+) -> None:
+    """One micro-batch's two exactly-once sink commits (``ok`` rows to
+    ``ok_path``, the rest to ``flagged_path``), with ``routed`` pinned
+    across both. ``flag_cols`` leave both outputs, ``audit_cols`` only
+    the ok one. The sink is looked up per call, so a crash-injecting
+    replacement of ``txn_sink.write_batch_exactly_once`` is seen."""
+    with pinned(routed):
+        txn_sink.write_batch_exactly_once(
+            routed.filter(ok).drop(*flag_cols, *audit_cols), batch_id, ok_path
+        )
+        txn_sink.write_batch_exactly_once(
+            routed.filter(~ok).drop(*flag_cols), batch_id, flagged_path
+        )
 
 
 def start_streaming_decontamination(
@@ -41,28 +66,16 @@ def start_streaming_decontamination(
     the at-least-once double-append a bare ``mode("append")`` pair
     gives. Readers see the routed sets as ``batch=<id>``-partitioned
     parquet datasets."""
-    from graphdbetl_spark.streaming.txn_sink import write_batch_exactly_once
-
-    # Materialize the (small) eval side once, not once per batch.
-    eval_cached = eval_df.select(id_col, text_col).cache()
-    eval_cached.count()
+    # Materialize the (small) eval side once, not once per batch; the
+    # stream's batches read it for the stream's lifetime (form 1).
+    eval_side = eval_df.select(id_col, text_col).localCheckpoint(eager=True)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        flags = decontaminate_against_eval(batch, text_col, id_col, eval_cached, n=n)
-        routed = batch.join(flags, id_col).cache()
-        try:
-            write_batch_exactly_once(
-                routed.filter(~F.col("contaminated")).drop("contaminated"),
-                batch_id,
-                clean_path,
-            )
-            write_batch_exactly_once(
-                routed.filter(F.col("contaminated")).drop("contaminated"),
-                batch_id,
-                quarantine_path,
-            )
-        finally:
-            routed.unpersist()
+        flags = decontaminate_against_eval(batch, text_col, id_col, eval_side, n=n)
+        _write_routed(
+            batch.join(flags, id_col), ~F.col("contaminated"), batch_id,
+            clean_path, quarantine_path, ("contaminated",),
+        )
 
     writer = doc_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
@@ -88,48 +101,37 @@ def start_streaming_neardup_screen(
     a static reference corpus.
 
     The corpus's signature index (shingle sets + band buckets) is built
-    ONCE, cached, and probed by every micro-batch — per-batch work is
-    proportional to the batch, not the corpus, which is the shape that
-    keeps a 100 TB reference corpus out of the per-batch critical path
-    (in production the index is a persisted table bucketed by band
-    bucket and this cache is a scan of it). Batch-internal duplicates
-    are not this gate's job; they collapse in the batch's own
-    self-dedup downstream.
+    ONCE, checkpointed, and probed by every micro-batch — per-batch
+    work is proportional to the batch, not the corpus, which is the
+    shape that keeps a 100 TB reference corpus out of the per-batch
+    critical path (in production the index is a persisted table
+    bucketed by band bucket and this checkpoint is a scan of it).
+    Batch-internal duplicates are not this gate's job; they collapse in
+    the batch's own self-dedup downstream.
 
     Both sinks commit through :func:`write_batch_exactly_once`, so a
     crash between the two writes + checkpoint replay re-commits only
     the missed sink (exactly-once effect on both outputs); the probe's
-    batch-side signatures are built uncached, so a long-running stream
-    pins no per-batch storage blocks.
+    batch-side signatures are built unmaterialized, and each batch's
+    routed frame is released after its writes, so a long-running
+    stream pins no per-batch storage blocks.
     """
     from graphdbetl_spark.operators.dedup import (
         _minhash_md5_sig_buckets,
         minhash_probe_md5,
     )
-    from graphdbetl_spark.streaming.txn_sink import write_batch_exactly_once
 
     sh_c, bk_c = _minhash_md5_sig_buckets(corpus_df, text_col, id_col, 3, 16, 4)
-    sh_c.count()  # materialize both caches before the stream starts
-    bk_c.count()
 
     def process(batch: DataFrame, batch_id: int) -> None:
         flags = minhash_probe_md5(
             sh_c, bk_c, batch, text_col, id_col, threshold=threshold
         )
-        routed = batch.join(flags.select(id_col, "is_near_dup"), id_col).cache()
-        try:
-            write_batch_exactly_once(
-                routed.filter(~F.col("is_near_dup")).drop("is_near_dup"),
-                batch_id,
-                unique_path,
-            )
-            write_batch_exactly_once(
-                routed.filter(F.col("is_near_dup")).drop("is_near_dup"),
-                batch_id,
-                dup_path,
-            )
-        finally:
-            routed.unpersist()
+        _write_routed(
+            batch.join(flags.select(id_col, "is_near_dup"), id_col),
+            ~F.col("is_near_dup"), batch_id, unique_path, dup_path,
+            ("is_near_dup",),
+        )
 
     writer = doc_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
@@ -164,7 +166,6 @@ def start_streaming_quality_gate(
     every router here).
     """
     from graphdbetl_spark.operators.curation import char_entropy, gopher_quality
-    from graphdbetl_spark.streaming.txn_sink import write_batch_exactly_once
 
     def process(batch: DataFrame, batch_id: int) -> None:
         g = gopher_quality(batch, text_col, id_col).select(id_col, "passes")
@@ -181,22 +182,11 @@ def start_streaming_quality_gate(
                     F.when(F.col("low_entropy"), F.lit("low_entropy")),
                 ),
             )
-            .cache()
         )
-        ok = F.col("passes") & ~F.col("low_entropy")
-        try:
-            write_batch_exactly_once(
-                routed.filter(ok).drop("passes", "low_entropy", "reject_reason"),
-                batch_id,
-                pass_path,
-            )
-            write_batch_exactly_once(
-                routed.filter(~ok).drop("passes", "low_entropy"),
-                batch_id,
-                reject_path,
-            )
-        finally:
-            routed.unpersist()
+        _write_routed(
+            routed, F.col("passes") & ~F.col("low_entropy"), batch_id,
+            pass_path, reject_path, ("passes", "low_entropy"), ("reject_reason",),
+        )
 
     writer = doc_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
@@ -223,43 +213,29 @@ def start_streaming_semantic_screen(
     :func:`start_streaming_decontamination` — catches paraphrased eval
     leakage that shares no n-gram).
 
-    The eval side is cached once and broadcast into every micro-batch's
-    max-cosine pass (operators/curation.py semantic_decontaminate), so
-    per-batch work is one scan of the batch — independent of corpus
-    history AND of how long the stream has run; no per-batch state
+    The eval side is checkpointed once and broadcast into every
+    micro-batch's max-cosine pass (operators/curation.py
+    semantic_decontaminate), so per-batch work is one scan of the batch
+    — independent of corpus history AND of how long the stream has
+    run; no per-batch state
     accumulates. Both sinks commit through
     :func:`write_batch_exactly_once` (batch_id-keyed staging + commit
     markers): a crash between the writes + checkpoint replay re-commits
     only the missed sink."""
     from graphdbetl_spark.operators.curation import semantic_decontaminate
-    from graphdbetl_spark.streaming.txn_sink import write_batch_exactly_once
 
-    eval_cached = eval_df.select(id_col, vec_col).cache()
-    eval_cached.count()
+    eval_side = eval_df.select(id_col, vec_col).localCheckpoint(eager=True)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         flags = semantic_decontaminate(
-            batch, eval_cached, id_col, vec_col, threshold=threshold
+            batch, eval_side, id_col, vec_col, threshold=threshold
         )
         # left join: an empty eval set flags no row, so every row is clean
-        routed = (
-            batch.join(flags.select(id_col, "contaminated"), id_col, "left")
-            .na.fill(False, ["contaminated"])
-            .cache()
+        routed = batch.join(flags.select(id_col, "contaminated"), id_col, "left")
+        _write_routed(
+            routed.na.fill(False, ["contaminated"]), ~F.col("contaminated"),
+            batch_id, clean_path, quarantine_path, ("contaminated",),
         )
-        try:
-            write_batch_exactly_once(
-                routed.filter(~F.col("contaminated")).drop("contaminated"),
-                batch_id,
-                clean_path,
-            )
-            write_batch_exactly_once(
-                routed.filter(F.col("contaminated")).drop("contaminated"),
-                batch_id,
-                quarantine_path,
-            )
-        finally:
-            routed.unpersist()
 
     writer = vec_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint

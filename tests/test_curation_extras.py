@@ -406,13 +406,13 @@ def test_minhash_persisted_index_probe_never_rereads_corpus(spark, tmp_path):
     assert all("text" not in s for s in schemas), schemas
 
 
-def test_minhash_checkpoint_mode_equivalent_and_single_derivation(spark):
-    """cache_corpus=False (checkpoint mode) must (a) return the same
-    screen as cache mode, (b) leave nothing pinned in storage memory,
-    and (c) derive the bucket checkpoint FROM the checkpointed shingle
-    set instead of re-running the shingle+signature pipeline (r5
-    ADVICE: an independently built bucket plan re-derived everything).
-    The derivation-count proxy: the buckets checkpoint job must be a
+def test_minhash_corpus_index_single_derivation(spark):
+    """The corpus index (the default, checkpointed path) must (a) screen
+    the batch, (b) leave nothing in the CacheManager, and (c) derive
+    the bucket checkpoint FROM the checkpointed shingle set instead of
+    re-running the shingle+signature pipeline (r5 ADVICE: an
+    independently built bucket plan re-derived everything). The
+    derivation-count proxy: the buckets checkpoint job must be a
     single map-only stage over sh's existing RDD — a re-derivation
     would drag the repartition exchange back in (>= 2 stages)."""
     from graphdbetl_spark.operators.dedup import (
@@ -433,32 +433,18 @@ def test_minhash_checkpoint_mode_equivalent_and_single_derivation(spark):
         "doc_id long, text string",
     )
     spark.catalog.clearCache()
-    cached = {
+    got = {
         r["doc_id"]: (r["is_near_dup"], r["n_matches"])
         for r in minhash_incremental_md5(cdf, bdf, "text", "doc_id").collect()
     }
-    spark.catalog.clearCache()
-    ckpt = {
-        r["doc_id"]: (r["is_near_dup"], r["n_matches"])
-        for r in minhash_incremental_md5(
-            cdf, bdf, "text", "doc_id", cache_corpus=False
-        ).collect()
-    }
-    assert ckpt == cached
-    # nothing pinned via cache() in checkpoint mode
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getRDDStorageInfo() is not None  # API sanity
-    cached_named = [
-        i for i in jsc.getRDDStorageInfo() if "ItemizedCache" in str(i.name())
-    ]
-    assert not cached_named
+    assert got[1][0] and got[1][1] > 0
+    assert got[2] == (False, 0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     sc = spark.sparkContext
-    sc.setJobGroup("mh_ckpt_build", "checkpoint-mode index build")
+    sc.setJobGroup("mh_ckpt_build", "corpus index build")
     try:
-        _minhash_md5_sig_buckets(
-            cdf, "text", "doc_id", 3, 16, 4, materialize="checkpoint"
-        )
+        _minhash_md5_sig_buckets(cdf, "text", "doc_id", 3, 16, 4)
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()

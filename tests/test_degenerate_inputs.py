@@ -4,6 +4,7 @@ import re
 import shutil
 
 import duckdb
+import pytest
 
 from graphdbetl_spark.plans.registry import all_oracles, all_queries
 
@@ -89,3 +90,19 @@ def test_semantic_decontaminate_empty_eval_set(spark):
         empty = fn(corpus, corpus.limit(0))
         assert empty.schema == full.schema
         assert empty.collect() == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "select_kcenter_coreset",
+        "select_kcenter_coreset_batched",
+        "select_mmr_diverse",
+        "select_mmr_diverse_batched",
+    ],
+)
+def test_selection_on_empty_embeddings_matches_oracle(spark, tmp_path, name):
+    """An empty corpus selects nothing: no seed row, no rounds."""
+    want, got = _answers_on(spark, tmp_path, name, ["embeddings"])
+    assert want == []
+    assert got == want

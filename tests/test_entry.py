@@ -3,9 +3,13 @@
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_entry_returns_rows(spark):
@@ -29,3 +33,34 @@ def test_all_queries_buildable_lazily(spark):
     for name, fn in entrymod.queries().items():
         df = fn(spark, "/root/testdata/sf0.001")
         assert df.schema is not None, name
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "scan_csv",
+        "scan_json",
+        "sink_parquet",
+        "sink_csv",
+        "sink_json",
+        "scan_orc",
+        "scan_text",
+        "maintenance_compact_execute",
+    ],
+)
+def test_round_trip_entry_survives_a_second_run(spark, name):
+    """Each run of a write-then-read-back entry writes its own temporary
+    directory, so a second run leaves the first run's frame readable."""
+    import duckdb
+
+    from tools.verify_local import table_hash
+
+    fn = entrymod.queries()[name]
+    first = fn(spark, SF_DIR)
+    fn(spark, SF_DIR).collect()
+    con = duckdb.connect()
+    for t in Path(SF_DIR).glob("*.parquet"):
+        con.execute(f"CREATE VIEW {t.stem} AS SELECT * FROM read_parquet('{t}')")
+    res = con.execute(entrymod.oracle_sql()[name])
+    want = table_hash(res.fetchall(), [d[0] for d in res.description])
+    assert table_hash(first.collect(), first.columns) == want

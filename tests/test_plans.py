@@ -498,3 +498,35 @@ def test_countmin_sketch_bounded_exchange_and_takeordered(spark):
     assert node_count(plan, "BroadcastHashJoin") >= 1
     assert "HashAggregate" in plan and "partial_count" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_package_materializes_only_through_skew_pinned():
+    """No ``cache``, ``persist`` or ``unpersist`` call anywhere in the
+    package outside ``skew.pinned``: a frame a returned DataFrame reads
+    is a lineage-owned checkpoint, and a frame only the function's own
+    actions read is pinned for their duration (skew.pinned's rule)."""
+    import ast
+    from pathlib import Path
+
+    import graphdbetl_spark
+
+    root = Path(graphdbetl_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "operators/skew.py":
+            pinned = [
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "pinned"
+            ]
+            allowed = {id(n) for n in ast.walk(pinned[0])}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("cache", "persist", "unpersist")
+                and id(node) not in allowed
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno} {node.func.attr}")
+    assert found == []

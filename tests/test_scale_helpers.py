@@ -1,6 +1,7 @@
 """Tests for the skew-mitigation and partition-sizing helpers."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from graphdbetl_spark.operators.skew import replicated_skew_join, salted_count_sum
 
@@ -128,3 +129,45 @@ def test_arrow_matrix_rejects_ragged_and_null():
         arrow_matrix(rb([[1.0, 2.0], None]), "__v")
     with pytest.raises(ValueError, match="null elements"):
         arrow_matrix(rb([[1.0, None], [2.0, 3.0]]), "__v")
+
+
+def test_pinned_releases_on_exception(spark):
+    from graphdbetl_spark.operators.skew import pinned
+
+    df = spark.range(10)
+    with pytest.raises(RuntimeError):
+        with pinned(df):
+            assert df.is_cached
+            raise RuntimeError("body failed")
+    assert not df.is_cached
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # the curation_batch benchmark's four ops
+        "sim_cosine_topk",
+        "dedup_image_hamming",
+        "select_kcenter_coreset",
+        "dedup_minhash",
+        "dedup_minhash_md5",
+        "dedup_minhash_incremental",
+        "dedup_keep_list",
+        "graph_bfs_depth",
+        "graph_sssp_bounded",
+        "graph_kcore",
+        "graph_triangle_count",
+        "maintenance_zorder_key",
+        "train_quality_classifier",
+    ],
+)
+def test_entry_leaves_the_cache_manager_empty(spark, name):
+    """Built and written, an entry leaves nothing in the CacheManager:
+    its returned frame reads checkpoints, and what it pinned for its own
+    actions is released (skew.pinned's rule)."""
+    from graphdbetl_spark.plans.registry import all_queries
+
+    spark.catalog.clearCache()
+    df = all_queries()[name](spark, "/root/testdata/sf0.001")
+    df.write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -13,13 +13,20 @@ data directory); with no NAME the bench headline set is dumped, and
 the name ALL dumps every registry entry (so a plan-identity claim can
 cover the whole registry).
 
+``diff OUT_SUBDIR`` compares the two tags' files pair by pair after
+normalizing the session-global counters (expression ids ``#12L``,
+``plan_id=7``, ``RDD[42]``) and prints the entries whose plans differ,
+so a plan-identity claim is one command.
+
 Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...|ALL]
        (TAG = before|after)
+       python tools/dump_plans.py diff OUT_SUBDIR
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -45,11 +52,47 @@ def _fmt(df) -> str:
     )
 
 
+PLANS = Path(__file__).resolve().parent.parent / "plans"
+COUNTERS = [
+    (re.compile(r"#[0-9]+L?"), "#N"),
+    (re.compile(r"plan_id=[0-9]+"), "plan_id=N"),
+    (re.compile(r"RDD\[[0-9]+\]"), "RDD[N]"),
+]
+
+
+def normalized(path: Path) -> str:
+    text = path.read_text()
+    for pattern, repl in COUNTERS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def diff(sub: str) -> None:
+    """Print every before/after pair under plans/<sub> whose normalized
+    plans differ, then a one-line count (unpaired files are listed too)."""
+    out_dir = PLANS / sub
+    before = {p.name[: -len("_before.txt")] for p in out_dir.glob("*_before.txt")}
+    after = {p.name[: -len("_after.txt")] for p in out_dir.glob("*_after.txt")}
+    differ = [
+        stem for stem in sorted(before & after)
+        if normalized(out_dir / f"{stem}_before.txt")
+        != normalized(out_dir / f"{stem}_after.txt")
+    ]
+    for stem in differ:
+        print(f"differs: {stem}")
+    for stem in sorted(before ^ after):
+        print(f"unpaired: {stem}")
+    print(f"# {len(before & after) - len(differ)} identical, {len(differ)} differ, "
+          f"{len(before ^ after)} unpaired")
+
+
 def main() -> None:
+    if len(sys.argv) == 3 and sys.argv[1] == "diff":
+        return diff(sys.argv[2])
     if len(sys.argv) < 3 or "SPARK_GRAFT_SF_DIR" not in os.environ:
         raise SystemExit(__doc__)
     sub, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / sub
+    out_dir = PLANS / sub
     out_dir.mkdir(parents=True, exist_ok=True)
     if not names:
         import bench

@@ -3,10 +3,10 @@ near-dup screen and the quality gate for a few hundred micro-batches
 and PROVE two properties the unit tests can't see:
 
 1. FLAT STORAGE: executor storage memory holds exactly the corpus
-   index (2 cached datasets for the near-dup screen, 0 for the
+   index (2 checkpointed datasets for the near-dup screen, 0 for the
    stateless gate) no matter how many batches run — the r4 ADVICE
    cache-leak class (one dead cached pair pinned per micro-batch)
-   would show as cached-RDD count growing with batch count.
+   would show as persisted-RDD count growing with batch count.
 2. EXACTLY-ONCE UNDER CRASHES: a foreachBatch that dies before the
    first sink commit, between the two sink commits, and after both
    commits (before the checkpoint records the batch) must, after
@@ -33,6 +33,19 @@ import pyspark.sql.functions as F
 from graphdbetl_spark.session import get_spark
 
 SCHEMA = "doc_id long, text string"
+
+
+def release_unreferenced(spark) -> None:
+    """Let the ContextCleaner free the blocks of frames the driver no
+    longer references: Python GC drops the py4j handles, JVM GC then
+    collects the RDDs (two rounds: a stopped stream's batch function
+    holds the index frames until its JVM proxy is collected)."""
+    import gc
+
+    for _ in range(2):
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(1.0)
 
 
 def storage_snapshot(spark):
@@ -167,7 +180,7 @@ def run_neardup_soak(spark, root: str, n_batches: int) -> None:
     got_dup_ids = {r["doc_id"] for r in dd.select("doc_id").collect()}
     assert got_dup_ids == {d for d, v in flags.items() if v}
     # 2 corpus-index datasets + at most ONE transient in-flight routed
-    # batch (cached in process(), unpersisted in its finally) — growth
+    # batch (pinned in process() for its two writes) — growth
     # WITH batch count is the leak signature, a bounded +1 is not
     peak = max(s[1] for s in samples)
     assert peak <= 3, f"cached-RDD count grew to {peak} (index 2 + 1 in-flight)"
@@ -183,9 +196,10 @@ def run_neardup_soak(spark, root: str, n_batches: int) -> None:
 def run_quality_soak(spark, root: str, n_batches: int) -> None:
     from graphdbetl_spark.streaming.curation import start_streaming_quality_gate
 
-    # the near-dup phase's corpus-index caches live for ITS stream's
-    # lifetime; this phase measures the stateless gate in isolation
-    spark.catalog.clearCache()
+    # the near-dup phase's corpus-index checkpoints live for ITS
+    # stream's lifetime; this phase measures the stateless gate in
+    # isolation
+    release_unreferenced(spark)
     src = os.path.join(root, "qg_src")
     make_batch_files(
         spark, src, os.path.join(root, "qg_stage"), n_batches, row_fn=_quality_row
@@ -244,13 +258,13 @@ def run_quality_soak(spark, root: str, n_batches: int) -> None:
 def run_concurrent_soak(spark, root: str, n_batches: int) -> None:
     """TWO routers sharing one session for n_batches micro-batches
     each (r5 verdict #6): the stateless quality gate and the
-    decontamination router (which owns a cached eval-gram reference)
-    run CONCURRENTLY, and midway the checkpoint-mode incremental
-    near-dup screen (minhash_incremental_md5 cache_corpus=False — the
-    lineage-owned localCheckpoint path of commit ab36fd1) fires three
-    times as a fire-and-forget batch job. Proves (a) both streams
+    decontamination router (which owns a checkpointed eval reference)
+    run CONCURRENTLY, and midway the incremental near-dup screen
+    (minhash_incremental_md5, whose corpus index is two lineage-owned
+    localCheckpoints) fires three times as a fire-and-forget batch
+    job. Proves (a) both streams
     route exactly as their batch operators, (b) storage stays flat at
-    the decontamination eval cache (+bounded in-flight transients),
+    the decontamination eval checkpoint (+bounded in-flight transients),
     and (c) the localCheckpoint lifecycle frees its blocks instead of
     interacting with — or leaking into — the concurrent consumers."""
     import gc
@@ -260,7 +274,7 @@ def run_concurrent_soak(spark, root: str, n_batches: int) -> None:
         start_streaming_quality_gate,
     )
 
-    spark.catalog.clearCache()
+    release_unreferenced(spark)
     src_q = os.path.join(root, "cc_q_src")
     src_d = os.path.join(root, "cc_d_src")
     make_batch_files(spark, src_q, os.path.join(root, "cc_q_stage"),
@@ -309,8 +323,7 @@ def run_concurrent_soak(spark, root: str, n_batches: int) -> None:
                 # checkpoint-mode screen mid-flight; drop refs + GC so
                 # the ContextCleaner can free the checkpointed blocks
                 out = minhash_incremental_md5(
-                    ckpt_corpus, ckpt_batch, "text", "doc_id",
-                    cache_corpus=False,
+                    ckpt_corpus, ckpt_batch, "text", "doc_id"
                 ).collect()
                 assert {r["doc_id"]: r["is_near_dup"] for r in out} == {
                     1: True, 2: False
@@ -357,13 +370,13 @@ def run_concurrent_soak(spark, root: str, n_batches: int) -> None:
     assert (n_p, n_r) == (exp_p, exp_r), "concurrent quality routing diverged"
     assert (n_c, n_qr) == (exp_clean, exp_quar), "concurrent decon routing diverged"
     assert n_p > 0 and n_r > 0 and n_c > 0 and n_qr > 0
-    # storage budget: 1 eval cache + <=1 in-flight routed batch per
+    # storage budget: 1 eval checkpoint + <=1 in-flight routed batch per
     # stream + <=2 localCheckpoint blocks from a just-fired
     # checkpoint-mode screen (the ContextCleaner frees those
     # asynchronously after the refs drop — a bounded transient, not a
     # leak). The leak signatures are (a) the budget exceeded, (b) the
     # post-firing snapshots RATCHETING by ~2 per firing (blocks never
-    # freed), or (c) anything but the eval cache surviving both
+    # freed), or (c) anything but the eval checkpoint surviving both
     # streams' end.
     peak = max(s[2] for s in samples)
     assert peak <= 5, f"concurrent streams pinned {peak} datasets (budget 5)"
@@ -374,7 +387,7 @@ def run_concurrent_soak(spark, root: str, n_batches: int) -> None:
         "localCheckpoint blocks ratcheted across firings: "
         f"{[c[0] for c in ckpt_after]}"
     )
-    print("  FLAT: eval cache only at end; localCheckpoint firings left no residue")
+    print("  FLAT: eval checkpoint only at end; localCheckpoint firings left no residue")
 
 
 def run_crash_matrix(spark, root: str) -> None:
@@ -462,6 +475,8 @@ def run_crash_matrix(spark, root: str) -> None:
 
 
 def main() -> int:
+    if sys.argv[1:] and not sys.argv[1].isdigit():
+        raise SystemExit(__doc__)
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     root = tempfile.mkdtemp(prefix="graft_soak_")
     spark = get_spark("streaming-soak")
