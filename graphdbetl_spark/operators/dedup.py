@@ -206,124 +206,6 @@ def winnow_fingerprints(
     return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fp long")
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash-LSH over n-gram shingles,
-    built entirely from DataFrame built-ins (no cross join anywhere):
-
-    shingle → k minhash values (min of a seeded xxhash64 per shingle)
-    → b bands of r=k/b rows → band-bucket equi-join for candidates
-    (AND-OR construction: a pair collides iff some band matches on all
-    r rows, P = 1-(1-j^r)^b) → exact Jaccard verification on the
-    candidates → filter ≥ threshold.
-
-    Spark ML's MinHashLSH is OR-only (any single hash match is a
-    candidate), which degenerates to ~all-pairs on corpora with shared
-    vocabulary; the AND-banding here keeps the candidate set near the
-    true near-dup set — the property that survives 100 TB. Returned
-    pairs are verified over the hashed shingle sets (jaccard is exact
-    up to 31-bit shingle-hash collisions, ~|sh|²/2³² relative error per
-    pair — the standard hashed-shingle treatment); recall < 1 per the
-    collision curve.
-    """
-    r = num_hashes // bands
-    # Repartition by id before the (CPU-heavy) k×|shingles| hashing:
-    # test inputs arrive as one parquet file = one partition, which
-    # would serialize the signature computation on a single core.
-    # Shingle strings are hashed to 31-bit ints IMMEDIATELY (string
-    # hashing dominates cost; everything downstream — signatures AND
-    # exact-Jaccard verification — needs only the hashes), so the
-    # checkpointed table and the two verification-join shuffles carry
-    # 8-byte longs, not ~30-byte gram strings.
-    # Checkpointed (skew.pinned, form 1): the table feeds the bucket
-    # self-join AND both verification sides — else shingling runs 4×.
-    p = (1 << 31) - 1  # Mersenne prime
-    sh = (
-        df.repartition(F.col(id_col))
-        .select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(
-                    _shingles(F.col(text_col), shingle_n),
-                    lambda s: F.pmod(F.xxhash64(s), F.lit(p)),
-                )
-            ).alias("hs"),
-        )
-        .filter(F.size("hs") > 0)
-        .localCheckpoint(eager=True)
-    )
-
-    # k minhashes from the shingle hashes with the classic universal
-    # family h_i(x) = (a_i·x + b_i) mod p over a 31-bit prime —
-    # products stay < 2^62, so no ANSI long overflow, and the ops are
-    # cheap long arithmetic inside codegen.
-    rng = random.Random(42)
-    coeffs = [(rng.randrange(1, p), rng.randrange(p)) for _ in range(num_hashes)]
-    # Signatures via explode + k plain min aggregates rather than k
-    # array_min(transform(...)) lambdas: higher-order functions are
-    # interpreted per element, while the exploded form keeps all k·|hs|
-    # hash evaluations inside whole-stage codegen with map-side partial
-    # mins — measured ~2× on the whole operator at bench scale. The
-    # groupBy key equals the repartition key above, so Catalyst elides
-    # the exchange: still exactly one shuffle in the signature path.
-    ex = sh.select(F.col(id_col), F.explode("hs").alias("__h"))
-    mins = [
-        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % p).alias(f"__m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    with_sig = (
-        ex.groupBy(id_col)
-        .agg(*mins)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-    )
-
-    # explode into (band_idx, hash-of-r-rows) bucket keys
-    band_cols = F.array(*[
-        F.struct(F.lit(b).alias("band"), F.hash(F.slice(F.col("sig"), b * r + 1, r)).alias("bh"))
-        for b in range(bands)
-    ])
-    buckets = (
-        with_sig.select(id_col, F.explode(band_cols).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-        # consumed by both sides of the candidate self-join
-        .localCheckpoint(eager=True)
-    )
-
-    a, b_ = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    # exact Jaccard verification over hashed shingle sets
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("hs").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("hs").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash fingerprint per document, built from built-ins.
 
@@ -997,10 +879,18 @@ def minhash_near_duplicates_md5(
     base hash = first 8 hex chars of md5 (32 bits), band bucket = md5 of
     the comma-joined band signature — every step replayable bit-for-bit
     in any engine with md5, which makes the WHOLE pipeline (candidate
-    generation included) ORACLE-CHECKABLE, unlike the xxhash64 fast
-    path (``minhash_near_duplicates``). Same AND-OR banding structure
-    and exact-Jaccard verification; use this variant for cross-engine
-    reproducibility, the xxhash64 one for raw speed.
+    generation included) ORACLE-CHECKABLE. The package's one MinHash
+    implementation (dedup_minhash, dedup_minhash_md5, the incremental
+    and persisted-index paths all run these signatures).
+
+    AND-OR banding: shingle → k minhashes → b bands of r=k/b rows →
+    band-bucket equi-join for candidates (a pair collides iff some band
+    matches on all r rows, P = 1-(1-j^r)^b) → exact Jaccard
+    verification on the candidates → filter ≥ threshold. Spark ML's
+    MinHashLSH is OR-only (any single hash match is a candidate), which
+    degenerates to ~all-pairs on corpora with shared vocabulary; the
+    AND-banding keeps the candidate set near the true near-dup set.
+    Recall < 1 per the collision curve.
     """
     sh, buckets = _minhash_md5_sig_buckets(
         df, text_col, id_col, shingle_n, num_hashes, bands

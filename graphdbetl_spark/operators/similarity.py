@@ -2,9 +2,12 @@
 
 Brute-force cosine top-k is the correctness baseline (and is exactly
 right when the query set is small: broadcast queries × corpus scan =
-one pass, no shuffle). The scale path for all-pairs / large query sets
-is LSH bucketing (random hyperplane signatures → equi-join on bucket),
-which keeps candidate generation linear in corpus size.
+one pass, no shuffle). The scale paths are one implementation per ANN
+family, each md5-deterministic so its full output replays in the DuckDB
+oracle: IVF (md5-sampled cells, :func:`ivf_cosine_topk_md5`), LSH
+(md5-derived hyperplanes → equi-join on bucket,
+:func:`lsh_cosine_topk_md5`), PQ and IVF-PQ (md5-sampled codebooks,
+:func:`pq_cosine_topk`, :func:`ivfpq_cosine_topk_md5`).
 """
 
 from __future__ import annotations
@@ -14,9 +17,7 @@ from pyspark.sql import DataFrame, Window
 
 from graphdbetl_spark.functions.vectors import (
     arrow_matrix,
-    cosine_similarity,
     fold_dots,
-    l2_norm,
     list_column,
     seq_sum,
     sign_buckets,
@@ -156,171 +157,22 @@ def cosine_topk_bruteforce(
     )
 
 
-def ivf_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 6,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate neighbors via an IVF (inverted-file) index: k-means
-    partitions the corpus into cells; each query scores only its
-    ``n_probe`` nearest cells.
-
-    Recall depends on how clustered the corpus is: uniform-random
-    vectors (the synthetic testdata) are IVF's worst case (~0.6-0.7
-    recall@10 at 6/16 probes); real embedding corpora cluster and land
-    far higher at the same probe fraction.
-
-    The candidate join is an equi-join on cell id — per query, work is
-    (n_probe/n_clusters) of the corpus instead of all of it, and the
-    cell assignment is a one-off index build (at 100 TB: persist the
-    assignment as a bucketed table and this becomes a co-located join).
-    Recall < 1 for vectors whose true neighbors sit in unprobed cells.
-    """
-    corpus_cells, centroids = ivf_build_index(corpus, id_col, vec_col, n_clusters, seed)
-    return ivf_query(corpus_cells, centroids, queries, id_col, vec_col, k, n_probe)
-
-
 def _unit_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     """Unit-normalize an array column JVM-side via ml.feature.Normalizer.
 
     NOT the obvious ``transform(x -> x / fold-norm)``: that interpreted
     HOF re-evaluates the whole norm fold PER ELEMENT once
     CollapseProject inlines the projection (SCALING.md "the kernel
-    ladder") — O(d²) per row, measured ~12 s per 50k×64 corpus pass,
-    and ML iterative fits re-execute the projection every iteration
-    (the r7 recall-floor profile: 38 s of k-means on 50k rows was
-    almost entirely re-interpreted normalization). Normalizer runs in
-    the JVM with the same sequential sum-of-squares norm and per-element
-    divide, so values are unchanged."""
+    ladder") — O(d²) per row, measured ~12 s per 50k×64 corpus pass.
+    Normalizer runs in the JVM with the same sequential sum-of-squares
+    norm and per-element divide, so values are unchanged. The package's
+    only ``pyspark.ml`` use."""
     from pyspark.ml.feature import Normalizer
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     v = df.withColumn("__fv", array_to_vector(F.col(vec_col).cast("array<double>")))
     out = Normalizer(inputCol="__fv", outputCol="__nv", p=2.0).transform(v)
     return out.withColumn("__unit", vector_to_array(F.col("__nv"))).drop("__fv", "__nv")
-
-
-def ivf_build_index(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """One-off IVF index build: k-means the unit-normalized corpus into
-    cells; returns (corpus_cells, centroids). The build cost amortizes
-    over every subsequent query batch — at 100 TB, persist
-    ``corpus_cells`` as a table bucketed by cell so ``ivf_query``'s
-    candidate join is co-located and exchange-free."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = _unit_vectors(corpus, vec_col).withColumn(
-        "features", array_to_vector(F.col("__unit"))
-    )
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="features", predictionCol="cell")
-    model = km.fit(c)
-    corpus_cells = model.transform(c).select(
-        F.col(id_col).alias("neighbor_id"), F.col("__unit").alias("__cv"), "cell"
-    )
-    # Tiny centroid table (n_clusters × dim) — broadcast; each query
-    # ranks cells by cosine to the centroid and keeps the top n_probe.
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-        ["cell", "centroid"],
-    )
-    return corpus_cells, centroids
-
-
-def ivf_query(
-    corpus_cells: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 6,
-) -> DataFrame:
-    """Query phase against a prebuilt IVF index (see ivf_build_index):
-    per query, only n_probe cells of the corpus are scored."""
-    q = _unit_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("__unit").alias("__qv")
-    )
-    cell_rank = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell"))
-    probed = (
-        q.join(F.broadcast(centroids))
-        .withColumn("cell_cos", cosine_similarity(F.col("__qv"), F.col("centroid")))
-        .withColumn("cell_rn", F.row_number().over(cell_rank))
-        .filter(F.col("cell_rn") <= n_probe)
-        .select("query_id", "__qv", "cell")
-    )
-
-    scored = probed.join(corpus_cells, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    # unit vectors: cosine = dot product
-    dot_col = F.aggregate(
-        F.zip_with("__qv", "__cv", lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("cosine", dot_col)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def lsh_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    bucket_length: float = 2.0,
-    num_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate neighbors via BucketedRandomProjectionLSH.
-
-    Candidate pairs come from equi-joins on (table, bucket) keys —
-    linear candidate generation, the strategy that survives a 100×
-    corpus. Returns (query_id, neighbor_id, cosine, rank) like the
-    brute-force variant; recall < 1 by construction.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    def prep(df: DataFrame, alias: str) -> DataFrame:
-        # JVM-side normalize (see _unit_vectors — the interpreted HOF
-        # form re-evaluates the norm fold per element, and the LSH
-        # candidate join re-executes the projection on both sides)
-        return _unit_vectors(df, vec_col).select(
-            F.col(id_col).alias(alias), array_to_vector("__unit").alias("features")
-        )
-
-    c = prep(corpus, "neighbor_id")
-    q = prep(queries, "query_id")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes", bucketLength=bucket_length,
-        numHashTables=num_tables, seed=seed,
-    )
-    model = lsh.fit(c)
-    # Euclidean distance on unit vectors ↔ cosine: cos = 1 - d²/2.
-    pairs = model.approxSimilarityJoin(q, c, 2.0, distCol="euclid")
-    scored = pairs.select(
-        F.col("datasetA.query_id").alias("query_id"),
-        F.col("datasetB.neighbor_id").alias("neighbor_id"),
-        (F.lit(1.0) - F.col("euclid") * F.col("euclid") / F.lit(2.0)).alias("cosine"),
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def pca_project(
@@ -833,19 +685,21 @@ def ivf_cosine_topk_md5(
     seed: str = "42",
 ) -> DataFrame:
     """IVF ANN with the md5-sampled deterministic coarse quantizer —
-    the ORACLE-CHECKABLE member of the IVF family (r5 verdict #1c, the
-    sim_pq_topk_md5 treatment): cells are the n_cells corpus vectors
-    ranked first by md5(seed:id) (the PQ donor pattern), assignment is
-    the broadcast struct-min argmax, and each query scores only its
-    n_probe max-dot cells. Every step is md5-seeded DataFrame algebra,
-    so candidate restriction AND final ranking replay bit-for-bit in
-    any md5-capable engine; the k-means build (``ivf_cosine_topk``)
-    stays the quality path for clustered corpora, recall-floor-checked.
+    the package's one IVF implementation (the sim_pq_topk_md5
+    treatment): cells are the n_cells corpus vectors ranked first by
+    md5(seed:id) (the PQ donor pattern), assignment is the max-dot
+    argmax kernel, and each query scores only its n_probe max-dot
+    cells. Every step is md5-seeded, so candidate restriction AND
+    final ranking replay bit-for-bit in any md5-capable engine
+    (sim_ivf_topk's oracle), and sim_ivf_recall_floor gates its
+    recall@10 against brute force at ≥ 0.3. Sampled cells are not
+    refined: on uniform vectors recall trails a k-means quantizer
+    (0.62 vs 0.74 at sf0.1, docs/SCALING.md "ANN recall").
 
-    Scale shape: identical to ivf_query — candidates come from an
-    equi-join on cell id ((n_probe/n_cells) of the corpus per query;
-    at 100 TB persist the assignment bucketed by cell), the centroid
-    table broadcasts, and the only shuffle is the final top-k window.
+    Scale shape: candidates come from an equi-join on cell id
+    ((n_probe/n_cells) of the corpus per query; at 100 TB persist the
+    assignment bucketed by cell), the centroid table broadcasts, and
+    the only shuffle is the final top-k window.
 
     Returns (query_id, neighbor_id, rank) — integer-only output keeps
     the driver hash float-free.
@@ -896,8 +750,9 @@ def lsh_cosine_topk_md5(
     come from equi-joins on (table, bucket), and survivors score by
     exact unit-vector dot. The planes are plan literals from
     :func:`lsh_hyperplanes`, so buckets, candidates, and ranking all
-    replay in the oracle; the BucketedRandomProjectionLSH path
-    (``lsh_cosine_topk``) stays recall-floor-checked.
+    replay in the oracle (sim_lsh_topk), and sim_lsh_recall_floor
+    gates recall@10 against brute force at ≥ 0.15. The package's one
+    LSH implementation.
 
     Scale shape: linear candidate generation (equi-join per table),
     bucket count 2^(n_planes/n_tables) grows with the corpus via the
@@ -997,9 +852,9 @@ def ivfpq_cosine_topk_md5(
     verdict #1c): each query reads only the PQ codes of its n_probe
     cells and scores them with the per-query LUT fold. Candidate
     restriction, code assignment, LUT build, ADC scores, and ranking
-    all replay bit-for-bit in the DuckDB oracle; the k-means/xxhash
-    composition (``ivfpq_cosine_topk``) stays the clustered-corpus
-    quality path, pytest recall-floor-checked.
+    all replay bit-for-bit in the DuckDB oracle (sim_ivfpq_topk). The
+    package's one IVF-PQ implementation; its recall floor is pinned
+    in pytest against brute force.
 
     Returns (query_id, neighbor_id, rank)."""
     _pq_check(dim, m)
@@ -1047,24 +902,15 @@ def ivfpq_cosine_topk_md5(
     )
 
 
-def _dot_unrolled(vec, base, cent, sub: int):
-    """Σ_i vec[base+i] · cent[i] as a plain left-associated arithmetic
-    chain — no inner lambda, so the per-codeword work inside the
-    (interpreted) outer transforms is raw expression eval. The
-    left-to-right order is what the DuckDB oracle replays."""
-    expr = F.element_at(vec, base + 1) * F.element_at(cent, 1)
-    for i in range(1, sub):
-        expr = expr + F.element_at(vec, base + i + 1) * F.element_at(cent, i + 1)
-    return expr
-
-
 def _dot_unrolled_sql(vec: str, base: str, cent: str, sub: int) -> str:
-    """SQL-text twin of :func:`_dot_unrolled` for the F.expr-built PQ
-    projections below. Building the m × k_codes score matrix through
-    the Column API costs ~2000 py4j round-trips (~0.7 s of driver time
-    PER QUERY CONSTRUCTION); one F.expr parses the identical tree —
-    same operators, same left-associated float order, bit-identical
-    results — in a single call. Construction cost is driver-side only,
+    """Σ_i vec[base+i] · cent[i] as SQL text: a plain left-associated
+    arithmetic chain — no inner lambda, so the per-codeword work inside
+    the (interpreted) outer transforms of the F.expr-built PQ
+    projections below is raw expression eval, in the left-to-right
+    order the DuckDB oracle replays. Building the m × k_codes score
+    matrix through the Column API costs ~2000 py4j round-trips (~0.7 s
+    of driver time PER QUERY CONSTRUCTION); one F.expr parses the same
+    tree in a single call. Construction cost is driver-side only,
     but it is paid per planned query, so it matters for short
     interactive batches as much as the executed plan does."""
     terms = [
@@ -1111,10 +957,9 @@ def pq_build_codebooks_md5(
     md5 rank, no global sort, no single-partition window); assignment
     joins the corpus against the ONE broadcast codebook row and picks
     argmin sub-distances in a higher-order projection — the corpus is
-    scanned once and never shuffled. On clustered real-world corpora a
-    k-means codebook (``pq_build_codebooks``) buys extra recall at the
-    cost of m MLlib fits; on uniform-random data the sampled codebook
-    measures within noise of it at a fraction of the build cost.
+    scanned once and never shuffled. Sampled codewords are not refined
+    (no k-means): on uniform-random data they measured within noise of
+    an m-fit MLlib k-means codebook at a fraction of the build cost.
 
     Returns ``(codes, codebooks)``: ``codes`` has one (id, m-int-array)
     row per corpus vector; ``codebooks`` is the (sub, code, centroid)
@@ -1202,7 +1047,8 @@ def pq_assign_codes(
     import numpy as np
 
     cb_rows = codebooks.collect()  # bounded: m × k_codes index rows
-    k_codes = max(r["code"] for r in cb_rows) + 1
+    # an empty corpus has no donors: a 0-code book, and no row to assign
+    k_codes = max((r["code"] for r in cb_rows), default=-1) + 1
     cb = np.zeros((m, k_codes, sub))
     for r in cb_rows:
         cb[r["sub"], r["code"], :] = r["centroid"]
@@ -1327,242 +1173,11 @@ def pq_cosine_topk(
     k_codes: int = 16,
     seed: str = "42",
 ) -> DataFrame:
-    """Build + query convenience wrapper (mirrors ivf_cosine_topk)."""
+    """Build + query convenience wrapper: md5 codebooks, then ADC top-k."""
     codes, codebooks = pq_build_codebooks_md5(
         corpus, id_col, vec_col, dim, m, k_codes, seed
     )
     return pq_adc_topk(codes, codebooks, queries, id_col, vec_col, k, dim, m)
-
-
-def pq_build_codebooks_kmeans(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    m: int = 8,
-    k_codes: int = 16,
-    seed: int = 42,
-    max_iter: int = 5,
-) -> DataFrame:
-    """K-means PQ codebooks — the quality path for clustered real-world
-    corpora (each subspace fit refines the sampled init Lloyd-style).
-    A driver loop over m INDEPENDENT small fits, each scanning only its
-    dim/m-wide slice; engine-hash-specific, so exercised by unit test
-    rather than oracle (the md5 sampled build is the oracle-checked
-    family member). Returns the (sub, code, centroid) codebook table
-    for pq_assign_codes / pq_adc_topk.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    _pq_check(dim, m)
-    sub = dim // m
-    c = _unit_vectors(corpus, vec_col).select(
-        F.col(id_col),
-        *[
-            array_to_vector(F.slice("__unit", j * sub + 1, sub)).alias(f"__s{j}")
-            for j in range(m)
-        ],
-    )
-    books: list[tuple[int, int, list[float]]] = []
-    for j in range(m):
-        km = KMeans(
-            k=k_codes, seed=seed + j, maxIter=max_iter,
-            featuresCol=f"__s{j}", predictionCol=f"__c{j}",
-        )
-        model = km.fit(c)
-        books += [
-            (j, ci, [float(x) for x in ctr])
-            for ci, ctr in enumerate(model.clusterCenters())
-        ]
-    return corpus.sparkSession.createDataFrame(books, ["sub", "code", "centroid"])
-
-
-def ivfpq_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    dim: int = 64,
-    n_clusters: int = 16,
-    n_probe: int = 6,
-    m: int = 32,
-    k_codes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-PQ: the two-level ANN architecture of the FAISS IVFPQ index
-    (Jégou et al. 2011 §V) — an IVF coarse quantizer restricts each
-    query to ``n_probe`` cells, and within the probed cells candidates
-    are scored by PQ asymmetric distance instead of full float vectors.
-
-    Composition of the two existing indexes: the corpus is scanned once
-    per index build (cells + codes), and the per-query cost is
-    (n_probe/n_clusters) of the corpus at 1/8th the bytes — the shape
-    that serves billion-vector corpora. Candidate restriction is the
-    same equi-join on cell id as ivf_query; ADC scoring joins the
-    broadcast per-query LUT; one exchange total at query time (the
-    final top-k window). Recall compounds the two approximations
-    (unprobed-cell misses × quantization error); rows-only by
-    construction, with the brute-force recall floor pattern as its
-    quality check.
-    """
-    corpus_cells, centroids = ivf_build_index(corpus, id_col, vec_col, n_clusters, seed)
-    codes, codebooks = pq_build_codebooks_md5(
-        corpus, id_col, vec_col, dim, m, k_codes, str(seed)
-    )
-    cells = corpus_cells.select("neighbor_id", "cell").join(
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes"), "neighbor_id"
-    )
-    return ivfpq_query(
-        cells, centroids, codebooks, queries, id_col, vec_col, k, n_probe, dim, m
-    )
-
-
-def ivfpq_query(
-    cells: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 6,
-    dim: int = 64,
-    m: int = 32,
-) -> DataFrame:
-    """Query phase against a prebuilt IVF-PQ index (``cells`` =
-    (neighbor_id, cell, codes)): probe → per-query LUT → ADC score →
-    top-k. No code re-assignment, no KMeans, no read of the float
-    corpus — the per-batch cost is exactly the probed fraction of the
-    codes table."""
-    q = _unit_vectors(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("__unit")
-    )
-    cell_rank = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell"))
-    _pq_check(dim, m)
-    sub = dim // m
-    cbrow = F.broadcast(_pq_codebook_row(codebooks))
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.transform(
-            F.element_at("__cb", j + 1),
-            lambda c: _dot_unrolled(F.col("__unit"), j * F.lit(sub), c, sub),
-        ),
-    )
-    probed = (
-        q.join(F.broadcast(centroids))
-        .withColumn("cell_cos", cosine_similarity(F.col("__unit"), F.col("centroid")))
-        .withColumn("cell_rn", F.row_number().over(cell_rank))
-        .filter(F.col("cell_rn") <= n_probe)
-        .select("query_id", "__unit", "cell")
-    )
-    ql = q.crossJoin(cbrow).select("query_id", lut.alias("__lut"))
-    # Probe join carries ONLY (query_id, cell) — the broadcast join on
-    # the cell key is what drives dynamic partition pruning against a
-    # persisted cell-partitioned codes table; the per-query LUTs
-    # (bounded: one per query in the batch) ride in the scoring
-    # kernel's closure instead of being replicated onto every candidate
-    # row. Scoring itself is the same vectorized gather as pq_adc_topk
-    # (``seq_sum`` — fold-order exact); the interpreted fold join
-    # remains as the oversized-batch fallback.
-    lut_rows = ql.collect()  # bounded: one row per query
-    candidates = (
-        F.broadcast(probed.select("query_id", "cell"))
-        .join(cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "codes")
-    )
-    if len(lut_rows) <= 256:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        qset = pa.array([r["query_id"] for r in lut_rows])
-        L = np.array([r["__lut"] for r in lut_rows])  # (Q, m, k_codes)
-        jj = np.arange(m)
-        types = dict(candidates.dtypes)
-
-        def score_rows(batches):
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                cmat = arrow_matrix(rb, "codes", dtype=np.int32, width=m)
-                qcol = rb.column("query_id")
-                qi = pc.index_in(qcol, value_set=qset.cast(qcol.type)).to_numpy()
-                picked = L[qi[:, None], jj[None, :], cmat]  # (n, m)
-                yield pa.RecordBatch.from_arrays(
-                    [qcol, rb.column("neighbor_id"), pa.array(seq_sum(picked, axis=1))],
-                    names=["query_id", "neighbor_id", "adc_cosine"],
-                )
-
-        scored = candidates.mapInArrow(
-            score_rows,
-            schema=(
-                f"query_id {types['query_id']}, "
-                f"neighbor_id {types['neighbor_id']}, adc_cosine double"
-            ),
-        )
-    else:
-        score = _adc_score(m)
-        scored = candidates.join(F.broadcast(ql), "query_id").select(
-            "query_id", "neighbor_id", score.alias("adc_cosine")
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivfpq_persist_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_clusters: int = 16,
-    m: int = 32,
-    k_codes: int = 16,
-    seed: int = 42,
-) -> None:
-    """Build the IVF-PQ index ONCE and persist it — the first-class
-    serving shape: the corpus float vectors are scanned exactly once
-    (cell assignment + code assignment), then every subsequent query
-    batch reuses the index from disk via ``ivfpq_load_index`` with no
-    re-assignment work.
-
-    The codes table is written PARTITIONED BY cell, so a query batch's
-    probe join triggers dynamic partition pruning: Spark reads only the
-    probed cells' files — (n_probe/n_clusters) of an already 8-32×
-    compressed codes table, which is the FAISS-style serving I/O shape
-    at billion-vector scale. Codebooks and centroids are tiny side
-    tables (m×k_codes and n_clusters rows)."""
-    import os
-
-    corpus_cells, centroids = ivf_build_index(corpus, id_col, vec_col, n_clusters, seed)
-    codes, codebooks = pq_build_codebooks_md5(
-        corpus, id_col, vec_col, dim, m, k_codes, str(seed)
-    )
-    cells = corpus_cells.select("neighbor_id", "cell").join(
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes"), "neighbor_id"
-    )
-    cells.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, "codes")
-    )
-    codebooks.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-
-
-def ivfpq_load_index(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Load a persisted IVF-PQ index: returns (cells, centroids,
-    codebooks) ready for ``ivfpq_query``. The cells scan stays lazy —
-    partition pruning happens per query batch."""
-    import os
-
-    cells = spark.read.parquet(os.path.join(path, "codes"))
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    codebooks = spark.read.parquet(os.path.join(path, "codebooks"))
-    return cells, centroids, codebooks
 
 
 def cosine_range_search(

@@ -13,7 +13,7 @@ from graphdbetl_spark.operators.skew import (
     replicated_skew_join,
     salted_count_sum,
 )
-from graphdbetl_spark.plans.registry import query
+from graphdbetl_spark.plans.registry import query, scratch_dir
 from graphdbetl_spark.sources.catalog import load_table as T
 
 
@@ -621,12 +621,10 @@ def maintenance_compact_execute(spark: SparkSession, sf: str) -> DataFrame:
     plan was arithmetic-correct. Same shape as the sink_* entries:
     the write targets a temp dir, the returned frame is the read-back.
     """
-    import tempfile
-
     from graphdbetl_spark.etl.maintenance import compact_execute
 
     docs = T(spark, sf, "documents").select("lang", "doc_id", "n_chars")
-    out = tempfile.mkdtemp(prefix="graft_compactexec_")
+    out = scratch_dir("graft_compactexec_")
     compact_execute(docs, out, "lang", "doc_id", "n_chars", target_bins=36)
     back = spark.read.parquet(out)
     return back.groupBy(

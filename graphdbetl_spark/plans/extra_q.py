@@ -8,7 +8,6 @@ function waves.
 from __future__ import annotations
 
 import re
-import tempfile
 
 import numpy as np
 import pyarrow as pa
@@ -16,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphdbetl_spark.functions.text import tokens
-from graphdbetl_spark.plans.registry import query
+from graphdbetl_spark.plans.registry import query, scratch_dir
 from graphdbetl_spark.sources.catalog import load_table as T
 
 # ------------------------------------------------------------- sinks
@@ -28,7 +27,7 @@ def sink_parquet(spark: SparkSession, sf: str) -> DataFrame:
     (subsumes the reference's row-append sink and block-insert TODO,
     graph_db_builder.py:491-543, D8)."""
     df = T(spark, sf, "nation")
-    out = tempfile.mkdtemp(prefix="graft_sinkpq_")
+    out = scratch_dir("graft_sinkpq_")
     df.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -38,7 +37,7 @@ def sink_csv(spark: SparkSession, sf: str) -> DataFrame:
     """D6: CSV serialization (reference serialize_data stub,
     graph_db_builder.py:407-408) with schema-preserving read-back."""
     df = T(spark, sf, "region")
-    out = tempfile.mkdtemp(prefix="graft_sinkcsv_")
+    out = scratch_dir("graft_sinkcsv_")
     df.write.mode("overwrite").option("header", "true").csv(out)
     return spark.read.schema(df.schema).option("header", "true").csv(out)
 
@@ -49,7 +48,7 @@ def sink_json(spark: SparkSession, sf: str) -> DataFrame:
     read-back (the interchange format training-data pipelines emit);
     partition-parallel like every sink."""
     df = T(spark, sf, "nation")
-    out = tempfile.mkdtemp(prefix="graft_sinkjson_")
+    out = scratch_dir("graft_sinkjson_")
     df.write.mode("overwrite").json(out)
     return spark.read.schema(df.schema).json(out)
 
@@ -58,7 +57,7 @@ def sink_json(spark: SparkSession, sf: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf: str) -> DataFrame:
     """D5: another columnar format behind the same source abstraction."""
     df = T(spark, sf, "supplier")
-    out = tempfile.mkdtemp(prefix="graft_orc_")
+    out = scratch_dir("graft_orc_")
     df.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -669,7 +668,7 @@ def scan_text(spark: SparkSession, sf: str) -> DataFrame:
     read-back must reproduce the corpus exactly (fixture texts are
     newline-free, making line<->document a bijection)."""
     d = T(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="graft_text_")
+    out = scratch_dir("graft_text_")
     d.select(F.col("text").alias("value")).write.mode("overwrite").text(out)
     return spark.read.text(out)
 

@@ -6,7 +6,11 @@ gate's contract with ``__spark_entry__.py``).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import importlib
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -58,6 +62,21 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="graft_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a write-then-read-back entry. The returned
+    frame reads it lazily, so it must outlive the call (and a second
+    run of the entry must not delete it): every such directory sits
+    under one per-process parent that is removed at interpreter exit."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def _load() -> None:

@@ -13,13 +13,11 @@ Conventions for oracle hash-match (SURVEY.md §5.1):
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphdbetl_spark.operators.joins import asof_join, topk_per_group
-from graphdbetl_spark.plans.registry import query
+from graphdbetl_spark.plans.registry import query, scratch_dir
 from graphdbetl_spark.sources.catalog import load_table as T
 
 # ---------------------------------------------------------------- scans
@@ -49,7 +47,7 @@ def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
     """CSV round-trip with explicit schema (D5: non-MySQL flat-file
     sources, graph_db_builder.py:13-14,193-194)."""
     df = T(spark, sf, "region")
-    out = tempfile.mkdtemp(prefix="graft_csv_")
+    out = scratch_dir("graft_csv_")
     df.write.mode("overwrite").option("header", "true").csv(out)
     return spark.read.schema(df.schema).option("header", "true").csv(out)
 
@@ -58,7 +56,7 @@ def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
 def scan_json(spark: SparkSession, sf: str) -> DataFrame:
     """JSON-lines scan with explicit schema (D5 non-MySQL source surface)."""
     df = T(spark, sf, "nation")
-    out = tempfile.mkdtemp(prefix="graft_json_")
+    out = scratch_dir("graft_json_")
     df.write.mode("overwrite").json(out)
     return spark.read.schema(df.schema).json(out)
 

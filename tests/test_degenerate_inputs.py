@@ -20,18 +20,19 @@ def test_pagerank_without_vertices_is_empty(spark):
     assert empty.collect() == []
 
 
-def _answers_on(spark, tmp_path, name, empty, kept=()):
+def _answers_on(spark, tmp_path, name, cut, kept=(), rows=0):
     """(oracle rows, Spark rows) of entry ``name`` over ``SF_DIR``'s
-    tables, with every table in ``empty`` cut to its schema."""
+    tables, with every table in ``cut`` cut to its first ``rows`` rows
+    (to its schema alone by default)."""
     for t in kept:
         shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
     con = duckdb.connect()
-    for t in empty:
+    for t in cut:
         con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet') LIMIT 0) "
+            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet') LIMIT {rows}) "
             f"TO '{tmp_path}/{t}.parquet' (FORMAT PARQUET)"
         )
-    for t in (*empty, *kept):
+    for t in (*cut, *kept):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
         )
@@ -103,6 +104,27 @@ def test_semantic_decontaminate_empty_eval_set(spark):
 )
 def test_selection_on_empty_embeddings_matches_oracle(spark, tmp_path, name):
     """An empty corpus selects nothing: no seed row, no rounds."""
+    want, got = _answers_on(spark, tmp_path, name, ["embeddings"])
+    assert want == []
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "name", ["sim_ivf_recall_floor", "sim_lsh_recall_floor", "sim_pq_recall_floor"]
+)
+@pytest.mark.parametrize("rows", [0, 1])
+def test_recall_floor_on_degenerate_embeddings_matches_oracle(spark, tmp_path, name, rows):
+    """No corpus, or one vector that is its own only query: the floor
+    counts the query set and holds vacuously, with no true neighbour
+    to divide by."""
+    want, got = _answers_on(spark, tmp_path, name, ["embeddings"], rows=rows)
+    assert want == [(rows, True)]
+    assert got == want
+
+
+@pytest.mark.parametrize("name", ["sim_pq_topk_md5", "sim_ivfpq_topk"])
+def test_pq_family_on_empty_embeddings_matches_oracle(spark, tmp_path, name):
+    """An empty corpus has no codebook donors: no codes, no neighbours."""
     want, got = _answers_on(spark, tmp_path, name, ["embeddings"])
     assert want == []
     assert got == want

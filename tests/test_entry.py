@@ -64,3 +64,29 @@ def test_round_trip_entry_survives_a_second_run(spark, name):
     res = con.execute(entrymod.oracle_sql()[name])
     want = table_hash(res.fetchall(), [d[0] for d in res.description])
     assert table_hash(first.collect(), first.columns) == want
+
+
+def test_round_trip_directories_are_removed_at_exit(tmp_path):
+    """The round-trip entries' directories sit under one per-process
+    parent that is removed when the interpreter exits: a process that
+    made and filled two of them leaves no graft_* directory behind."""
+    import os
+    import subprocess
+
+    code = (
+        "from graphdbetl_spark.plans.registry import scratch_dir\n"
+        "for prefix in ('graft_csv_', 'graft_orc_'):\n"
+        "    d = scratch_dir(prefix)\n"
+        "    open(d + '/part-0', 'w').write('x')\n"
+        "    print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert len(out) == 2 and all(d.startswith(str(tmp_path)) for d in out)
+    assert list(tmp_path.glob("graft_*")) == []

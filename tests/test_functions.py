@@ -101,24 +101,6 @@ class TestDedup:
         out = {r.doc_id: r.dup_count for r in dedup_exact_text(df, "text", "doc_id").collect()}
         assert out == {1: 2, 3: 1}
 
-    def test_minhash_xxhash_fast_path_finds_near_dups(self, spark):
-        """The xxhash64 banded-LSH fast path (no oracle — registry's
-        dedup_minhash now points at the md5 family) must still flag
-        high-Jaccard pairs and skip disjoint ones."""
-        from graphdbetl_spark.operators.dedup import minhash_near_duplicates
-
-        df = spark.createDataFrame(
-            [
-                (1, "the quick brown fox jumps over the lazy dog today"),
-                (2, "the quick brown fox jumps over the lazy dog tonight"),
-                (3, "entirely different words compose this third document here"),
-            ],
-            ["doc_id", "text"],
-        )
-        pairs = minhash_near_duplicates(df, "text", "doc_id", threshold=0.5).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
-        assert pairs[0].jaccard >= 0.5
-
     def test_simhash_identical_docs_share_fingerprint(self, spark):
         df = spark.createDataFrame(
             [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "zz qq ww ee rr tt")],

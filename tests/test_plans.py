@@ -433,6 +433,49 @@ def test_package_crosses_the_python_boundary_through_arrow_only():
     assert found == []
 
 
+def test_package_has_one_implementation_per_ann_and_minhash_family():
+    """``pyspark.ml`` is imported only by ``similarity._unit_vectors``
+    (the JVM Normalizer), and none of the deleted seeded twins — the
+    MLlib k-means IVF and IVF-PQ, the BucketedRandomProjection LSH and
+    the xxhash64 MinHash — is defined again: each ANN and MinHash family
+    has its md5-deterministic implementation only."""
+    import ast
+    from pathlib import Path
+
+    import graphdbetl_spark
+
+    deleted = {
+        "ivf_cosine_topk", "ivf_build_index", "ivf_query", "lsh_cosine_topk",
+        "pq_build_codebooks_kmeans", "ivfpq_cosine_topk", "ivfpq_query",
+        "ivfpq_persist_index", "ivfpq_load_index", "minhash_near_duplicates",
+    }
+    root = Path(graphdbetl_spark.__file__).parent
+    ml, defined = [], []
+
+    def walk(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if child.name in deleted:
+                    defined.append(f"{rel}:{child.lineno} {child.name}")
+                walk(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Import):
+                mods = [a.name for a in child.names]
+            elif isinstance(child, ast.ImportFrom):
+                mods = [child.module or ""]
+            else:
+                mods = []
+            if any(m == "pyspark.ml" or m.startswith("pyspark.ml.") for m in mods):
+                ml.append((rel, owner))
+            walk(child, rel, owner)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        walk(ast.parse(path.read_text(), str(path)), rel, None)
+    assert defined == []
+    assert ml == [("operators/similarity.py", "_unit_vectors")] * 2
+
+
 def test_repeated_ngram_scrub_broadcasts_filtered_grams(spark):
     """Span scrub: the df>=2-filtered repeated-gram table (a sliver of
     the vocabulary) lands on the broadcast side of the join back, and

@@ -15,8 +15,8 @@ cover the whole registry).
 
 ``diff OUT_SUBDIR`` compares the two tags' files pair by pair after
 normalizing the session-global counters (expression ids ``#12L``,
-``plan_id=7``, ``RDD[42]``) and prints the entries whose plans differ,
-so a plan-identity claim is one command.
+``plan_id=7``, ``RDD[42]``, lambda variables ``x_540``) and prints the
+entries whose plans differ, so a plan-identity claim is one command.
 
 Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...|ALL]
        (TAG = before|after)
@@ -57,6 +57,8 @@ COUNTERS = [
     (re.compile(r"#[0-9]+L?"), "#N"),
     (re.compile(r"plan_id=[0-9]+"), "plan_id=N"),
     (re.compile(r"RDD\[[0-9]+\]"), "RDD[N]"),
+    # pyspark names each lambda variable from one process-wide counter
+    (re.compile(r"(lambda [A-Za-z]+)_[0-9]+"), r"\1_N"),
 ]
 
 
