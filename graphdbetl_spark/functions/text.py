@@ -48,18 +48,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Approximate subword token count: split on word/number/punct
-    boundaries (a BPE-ish regex), the standard cheap proxy for LLM
-    token budgeting."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda t: (t != "") & (t != " "),
-        )
-    )
-
-
 def quality_score(text: Column) -> Column:
     """Heuristic document quality in [0,1] from length, punctuation
     density, and mean word length — all JVM-side expressions.
@@ -172,12 +160,14 @@ def rolling_fingerprint(text: Column, base: int = 257, mod: int = (1 << 61) - 1)
 
 # RE2-compatible subword proxy: alnum runs or single non-alnum,
 # non-space chars (CJK text counts per character). No lookarounds, so
-# the DuckDB oracle replays the pattern verbatim (unlike the
-# lookaround-based bpe_ish_token_count).
+# the DuckDB oracle replays the pattern verbatim.
 PORTABLE_SUBWORD_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
 
 
 def portable_subword_token_count(text: Column) -> Column:
+    """Approximate subword token count: word/number runs plus single
+    punctuation marks, the standard cheap proxy for LLM token
+    budgeting."""
     return F.size(F.regexp_extract_all(text, F.lit(PORTABLE_SUBWORD_PATTERN), F.lit(0)))
 
 

@@ -3,7 +3,7 @@ from graphdbetl_spark.operators.dedup import (
     dedup_exact_text,
     dedup_keep_list,
     minhash_near_duplicates_md5,
-    simhash_fingerprints,
+    simhash_fingerprints_md5,
     ngram_jaccard_pairs,
 )
 from graphdbetl_spark.operators.joins import asof_join, topk_per_group
@@ -19,7 +19,7 @@ __all__ = [
     "dedup_exact_text",
     "dedup_keep_list",
     "minhash_near_duplicates_md5",
-    "simhash_fingerprints",
+    "simhash_fingerprints_md5",
     "ngram_jaccard_pairs",
     "asof_join",
     "topk_per_group",

@@ -1243,83 +1243,6 @@ def logreg_train_score_oracle_sql(iters: int = 10, lr: float = 0.5) -> str:
     FROM fx, w{iters} w"""
 
 
-def bigram_lm_persist(df: DataFrame, text_col: str, id_col: str, path: str) -> None:
-    """Build the Laplace-smoothed bigram LM ONCE and persist it:
-    (a, b, __lp) under ``path``. The serving shape for repeat scoring —
-    after this, every batch scores via :func:`bigram_lm_score` and the
-    training corpus is never re-read (the minhash_persist_index
-    posture applied to LM filtering). At warehouse scale write it
-    ``bucketBy(a, b)`` into a catalog table; plain parquet keeps the
-    test path self-contained."""
-    toks = _tokens(F.col(text_col))
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, m),
-        F.slice(toks, 2, m),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-    )
-    ex = fan(df, id_col).select(
-        F.col(id_col), F.explode(pairs).alias("p")
-    ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-    # NOTE (r11): measured NOT worth making size-conditional — without
-    # the materialization the five corpus re-expansions cost more than
-    # the checkpoint job even at sf0.1 (paired A/B: 1.42 -> 1.80 s).
-    c2 = (
-        ex.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("__c2"))
-        .localCheckpoint(eager=True)
-    )
-    c1col = F.sum("__c2").over(Window.partitionBy("a"))
-    v = (
-        c2.select(F.col("a").alias("t"))
-        .union(c2.select(F.col("b").alias("t")))
-        .agg(F.countDistinct("t").alias("__v"))
-    )
-    (
-        c2.withColumn("__c1", c1col)
-        .crossJoin(F.broadcast(v))
-        .select(
-            "a", "b",
-            F.log((F.col("__c2") + 1) / (F.col("__c1") + F.col("__v"))).alias("__lp"),
-        )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def bigram_lm_score(
-    spark, lm_path: str, df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """Score a batch against a PERSISTED bigram LM: one batch scan
-    (shifted-zip bigrams), one broadcast join against the LM table,
-    one per-doc aggregate — no LM rebuild, no corpus access. Bigrams
-    unseen at training time are smoothed P = 1/V-ish via the LM's
-    floor? No: absent pairs get NULL and are DROPPED from the mean
-    (matching the in-plan operator, which only scores observed pairs
-    when corpus == batch; for out-of-corpus batches the inner join
-    scores the KNOWN bigrams — the fraction scored is itself a
-    coverage signal). Returns (id_col, n_bigrams, mean_logprob)."""
-    lm = spark.read.parquet(lm_path)
-    toks = _tokens(F.col(text_col))
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, m),
-        F.slice(toks, 2, m),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-    )
-    ex = df.select(F.col(id_col), F.explode(pairs).alias("p")).select(
-        id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b")
-    )
-    return (
-        ex.join(F.broadcast(lm), ["a", "b"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("__lp"), 6).alias("mean_logprob"),
-        )
-    )
-
-
 def semantic_decontaminate(
     corpus: DataFrame,
     eval_df: DataFrame,

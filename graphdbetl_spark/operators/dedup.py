@@ -206,41 +206,6 @@ def winnow_fingerprints(
     return src.mapInArrow(kern, schema=f"{id_col} {id_type}, fp long")
 
 
-def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
-    """64-bit SimHash fingerprint per document, built from built-ins.
-
-    Token → xxhash64 → per-bit ±1 votes → sign of vote sum per bit →
-    fingerprint. Entirely JVM-side: explode + groupBy(id) with 64
-    conditional sums would shuffle wide, so instead the vote loop runs
-    as a higher-order ``aggregate`` over the token array — zero
-    shuffles beyond the final projection. Near-dups share fingerprints
-    (group on fingerprint, or on fingerprint bands for hamming<k).
-    """
-    df = df.repartition(F.col(id_col))  # parallelize the per-doc bit votes
-    tok = _tokens(F.col(text_col))
-    # Bit masks as Python literals (shiftleft needs a literal count);
-    # the top bit uses Long.MIN_VALUE to stay in signed-64 range.
-    masks = [1 << i for i in range(bits - 1)] + [-(1 << (bits - 1))]
-    zero = F.array_repeat(F.lit(0), bits)
-    # votes: array of per-bit ±1 sums, folded over tokens JVM-side.
-    votes = F.aggregate(
-        tok,
-        zero,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(F.xxhash64(t).bitwiseAND(F.lit(m)) != 0, 1).otherwise(-1)
-                for m in masks
-            ]),
-            lambda a, b: a + b,
-        ),
-    )
-    bits_col = F.transform(votes, lambda v: F.when(v > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"))
-    # fold the bit array into one 64-bit long (top bit wraps, two's complement)
-    fp = F.aggregate(bits_col, F.lit(0).cast("long"), lambda acc, b: F.shiftleft(acc, 1) + b)
-    return df.select(F.col(id_col), fp.alias("simhash"))
-
-
 def dedup_keep_list(
     df: DataFrame,
     text_col: str,
@@ -295,13 +260,20 @@ def dedup_keep_list(
 def simhash_fingerprints_md5(
     df: DataFrame, text_col: str, id_col: str, bits: int = 48
 ) -> DataFrame:
-    """SimHash over an engine-portable hash family: token hash = first
-    12 hex chars of md5 (48 bits), available bit-identically in any
-    engine with md5 — which makes the fingerprint ORACLE-CHECKABLE,
-    unlike the xxhash64 variant (xxhash64 exists only in Spark).
-    Same vote/fold structure as simhash_fingerprints.
+    """SimHash fingerprint per document over an engine-portable hash
+    family: token hash = first 12 hex chars of md5 (48 bits), available
+    bit-identically in any engine with md5, which makes the fingerprint
+    ORACLE-CHECKABLE.
+
+    Token → md5 bits → per-bit ±1 votes → sign of vote sum per bit →
+    fingerprint. Entirely JVM-side: explode + groupBy(id) with one
+    conditional sum per bit would shuffle wide, so instead the vote
+    loop runs as a higher-order ``aggregate`` over the token array —
+    zero shuffles beyond the final projection. Near-dups share
+    fingerprints (group on fingerprint, or on fingerprint bands for
+    hamming<k).
     """
-    df = df.repartition(F.col(id_col))
+    df = df.repartition(F.col(id_col))  # parallelize the per-doc bit votes
     tok = _tokens(F.col(text_col))
     masks = [1 << i for i in range(bits)]
     zero = F.array_repeat(F.lit(0), bits)

@@ -11,8 +11,7 @@ across edges and keeps the minimum seen; converges in O(diameter)
 rounds. Driver-side loop with localCheckpoint per round to break
 lineage (without it the plan doubles every iteration and analysis cost
 explodes — the classic iterative-Spark trap). Each round is one shuffle
-join + one aggregation; at cluster scale swap in the large-star/
-small-star variant for skewed high-degree components.
+join + one aggregation.
 """
 
 from __future__ import annotations
@@ -21,75 +20,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from graphdbetl_spark.operators.skew import pinned
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 12,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds vs O(diameter) for plain label
-    propagation, and each round's joins key on the CURRENT parent, so
-    a high-degree hub's edges spread across its children instead of
-    re-colliding on one reducer: the skew-safe variant for power-law
-    graphs.
-
-    State: a parent pointer per vertex (forest). large-star hangs every
-    neighbor larger than the minimum onto the component minimum;
-    small-star flattens two-level chains. Returns (id, component).
-    """
-    both = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col(src) != F.col(dst)
-    )
-    # edge list as (u,v) with u<v canonical
-    e = both.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    ).distinct().localCheckpoint()
-
-    parent = (
-        e.select(F.col("u").alias("id")).union(e.select("v")).distinct()
-        .withColumn("p", F.col("id"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iter):
-        # resolve each endpoint to its current parent
-        pu = parent.select(F.col("id").alias("u"), F.col("p").alias("pu"))
-        pv = parent.select(F.col("id").alias("v"), F.col("p").alias("pv"))
-        g = e.join(pu, "u").join(pv, "v")
-        # union-by-min on parent pairs: every vertex adopts the min
-        # parent seen across its incident (pu, pv) pairs
-        cand = (
-            g.select(F.col("pu").alias("id"), F.col("pv").alias("cand"))
-            .union(g.select(F.col("pv").alias("id"), F.col("pu").alias("cand")))
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new_parent = (
-            parent.join(cand, "id", "left")
-            .select("id", F.least(F.col("p"), F.coalesce("cand", F.col("p"))).alias("p"))
-        )
-        # pointer-jumping (path halving): p = parent(parent(id))
-        pp = new_parent.select(F.col("id").alias("p_id"), F.col("p").alias("pp"))
-        jumped = (
-            new_parent.join(pp, new_parent.p == pp.p_id, "left")
-            .select("id", F.coalesce("pp", "p").alias("p"))
-            .localCheckpoint()
-        )
-        changed = (
-            jumped.alias("n")
-            .join(parent.alias("o"), "id")
-            .filter(F.col("n.p") != F.col("o.p"))
-            .limit(1)
-            .count()
-        )
-        parent = jumped
-        if changed == 0:
-            break
-    return parent.select("id", F.col("p").alias("component"))
 
 
 def connected_components(

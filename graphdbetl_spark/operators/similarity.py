@@ -175,42 +175,6 @@ def _unit_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     return out.withColumn("__unit", vector_to_array(F.col("__nv"))).drop("__fv", "__nv")
 
 
-def pca_project(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    out_dim: int = 8,
-) -> DataFrame:
-    """Project embeddings onto their top principal components — the
-    standard dimensionality-reduction step before ANN indexing or
-    visualization (and the rotation half of OPQ).
-
-    Distributed/driver split done the only way that scales: the
-    covariance accumulates as ONE aggregation of d·(d+1)/2 running
-    sums (posexplode to (i, j≥i) pairs → partial-agg shuffle keyed by
-    the bounded dim-pair space — never by row), the eigendecomposition
-    runs driver-side on the resulting d×d matrix (64×64 floats — a few
-    KB; numpy eigh, deterministic), and the projection matrix
-    broadcasts back into a map-only zip_with projection. The corpus is
-    scanned twice and collected never; driver memory is O(d²)
-    regardless of corpus size.
-
-    Eigenvector sign is fixed by making each component's
-    largest-|loading| coordinate positive (eigh's sign is otherwise
-    arbitrary), so output is deterministic. Engine-specific float
-    reductions (LAPACK) make the projected VALUES non-replayable in an
-    oracle; the registry entry therefore attests the operator through
-    distributed PCA invariants instead (see plans/llm_q.py
-    embedding_pca_project), and pytest pins orthonormality, variance
-    ordering, and reconstruction error.
-
-    Returns (id_col, proj: array<double>[out_dim]).
-    """
-    mu, comps = pca_fit(df, id_col, vec_col, dim, out_dim)
-    return pca_apply(df, id_col, vec_col, mu, comps)
-
-
 def pca_fit(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -218,10 +182,31 @@ def pca_fit(
     dim: int = 64,
     out_dim: int = 8,
 ):
-    """Fit half of :func:`pca_project`: distributed covariance
-    accumulation + driver-side eigh. Returns ``(mu, comps)`` numpy
-    arrays — mu is the d-vector of column means, comps the
-    (out_dim × dim) orthonormal projector with deterministic signs."""
+    """Fit the top ``out_dim`` principal components of the embeddings —
+    the standard dimensionality-reduction step before ANN indexing or
+    visualization (and the rotation half of OPQ); :func:`pca_apply`
+    projects onto them.
+
+    Distributed/driver split done the only way that scales: the
+    covariance accumulates as bounded-key aggregations of d means and
+    d·(d+1)/2 running sums (posexplode to (i, j≥i) pairs → partial-agg
+    shuffle keyed by the dim-pair space — never by row), and the
+    eigendecomposition runs driver-side on the resulting d×d matrix
+    (64×64 floats — a few KB; numpy eigh). The corpus is scanned twice
+    and collected never; driver memory is O(d²) regardless of corpus
+    size.
+
+    Eigenvector sign is fixed by making each component's
+    largest-|loading| coordinate positive (eigh's sign is otherwise
+    arbitrary), so output is deterministic. Engine-specific float
+    reductions (LAPACK) make the projected VALUES non-replayable in an
+    oracle; the registry entry therefore attests the operator through
+    distributed PCA invariants instead (see plans/llm_q.py
+    embedding_pca_project).
+
+    Returns ``(mu, comps)`` numpy arrays — mu is the d-vector of
+    column means, comps the (out_dim × dim) orthonormal projector.
+    Raises ValueError when ``df`` has no vectors."""
     import numpy as np
 
     pairs = (
@@ -235,6 +220,8 @@ def pca_fit(
         F.avg("__x").alias("mu"), F.count(F.lit(1)).alias("n")
     )
     mu_rows = means.orderBy("i").collect()  # d rows — bounded, not data-sized
+    if not mu_rows:
+        raise ValueError("pca_fit: the input has no vectors to fit")
     mu = np.array([r["mu"] for r in mu_rows])
     n = mu_rows[0]["n"]
     x2 = (
@@ -261,8 +248,8 @@ def pca_fit(
 def pca_apply(
     df: DataFrame, id_col: str, vec_col: str, mu, comps
 ) -> DataFrame:
-    """Projection half of :func:`pca_project`: mu/comps broadcast as
-    plan literals into a map-only zip_with projection (how a fitted
+    """Project onto the components :func:`pca_fit` returned: mu/comps
+    broadcast as plan literals into a map-only zip_with projection (how a fitted
     rotation ships to a 1000-executor projection job)."""
     out_dim = len(comps)
     mu_lit = F.array(*[F.lit(float(v)) for v in mu])
@@ -485,44 +472,25 @@ def md5_sampled_centroids(
     return base.join(ranks, id_col).select("cell", F.col(vec_col).alias("centroid"))
 
 
-def md5_sampled_centroids_raw(
-    corpus: DataFrame, id_col: str, vec_col: str, k: int, seed: str = "42"
-) -> DataFrame:
-    """:func:`md5_sampled_centroids` semantics fed from the RAW corpus:
-    pick the k md5-ranked rows first (the rank key is the id alone),
-    THEN unit-normalize the k survivors. Normalizing before the top-k
-    pays an interpreted transform over the WHOLE corpus just to keep k
-    rows — 26–29 s per 200k × 64 pass at the 100× replica once
-    CollapseProject inlines the scan projection into the lambda.
-
-    The k survivors are COLLECTED (bounded by construction — the PQ
-    codebook-closure pattern) and normalized driver-side with the same
-    left-fold sum-of-squares + IEEE sqrt/divide the JVM Normalizer
-    applies, so values stay bit-identical while the per-call cost
-    drops to ONE TakeOrdered job + k rows of numpy: the previous
-    DataFrame form (ML Normalizer transform + a rank self-join on the
-    k rows) paid a fixed multi-job pipeline setup on EVERY index
-    build, the r7 sim_ivf_append bench regression (r8 ask #3). The
-    result is a LocalRelation, broadcast-free for downstream probe
-    joins. Ranking matches md5_sampled_centroids: cell = position in
-    (md5 key ASC, id ASC) order; zero-norm survivors keep their raw
-    values (Normalizer's norm!=0 contract).
-
-    Callers that only ASSIGN (no probe join) should take
-    :func:`md5_sampled_centroid_list` directly — re-collecting even an
-    8-row LocalRelation costs a ~0.4 s driver round-trip per call."""
-    return corpus.sparkSession.createDataFrame(
-        md5_sampled_centroid_list(corpus, id_col, vec_col, k, seed),
-        schema="cell int, centroid array<double>",
-    )
-
-
 def md5_sampled_centroid_list(
     corpus: DataFrame, id_col: str, vec_col: str, k: int, seed: str = "42"
 ) -> list[tuple[int, list[float]]]:
-    """Driver-side form of :func:`md5_sampled_centroids_raw`: the
-    (cell, centroid) pairs as plain Python, for kernels that embed the
-    centroid matrix in their closure."""
+    """:func:`md5_sampled_centroids` semantics fed from the RAW corpus,
+    as plain Python (cell, centroid) pairs for kernels that embed the
+    centroid matrix in their closure: pick the k md5-ranked rows first
+    (the rank key is the id alone), THEN unit-normalize the k
+    survivors. Normalizing before the top-k pays an interpreted
+    transform over the WHOLE corpus just to keep k rows — 26–29 s per
+    200k × 64 pass at the 100× replica once CollapseProject inlines
+    the scan projection into the lambda.
+
+    The k survivors are COLLECTED (bounded by construction) and
+    normalized driver-side with the same left-fold sum-of-squares +
+    IEEE sqrt/divide the JVM Normalizer applies, so values stay
+    bit-identical at the cost of ONE TakeOrdered job + k rows of
+    numpy. Ranking matches md5_sampled_centroids: cell = position in
+    (md5 key ASC, id ASC) order; zero-norm survivors keep their raw
+    values (Normalizer's norm!=0 contract)."""
     import numpy as np
 
     rows = (
@@ -1120,6 +1088,8 @@ def pq_adc_topk(
     if len(lut_rows) <= 256:
         import numpy as np
 
+        if not lut_rows:  # no queries: the usual plan over no codes
+            codes = codes.limit(0)
         qids = [r["query_id"] for r in lut_rows]
         L = np.array([r["__lut"] for r in lut_rows])  # (Q, m, k_codes)
         jj = np.arange(m)

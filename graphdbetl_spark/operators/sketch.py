@@ -1,11 +1,14 @@
-"""KMV (K-minimum-values) distinct-count sketch as pure DataFrame ops.
+"""KMV (K-minimum-values) distinct-count and Count-Min sketches as pure
+DataFrame ops over the engine-portable md5 hash family, so every hex
+string, order statistic and estimate replays bit-for-bit in any
+md5-capable engine.
 
-The sketch of a set is its K smallest 64-bit hash values; the distinct
-count estimate is (K-1) / (kth_min / 2^63 normalized to (0,1]). KMV is
-MERGEABLE — sketch(A ∪ B) = k-smallest of (sketch(A) ∪ sketch(B)) —
-which is the property that matters at 100 TB: per-partition/per-day
-sketches combine without touching raw data, like HLL but trivially
-implementable on any engine that can keep a sorted top-K array.
+The KMV sketch of a set is its K smallest hash values; the distinct
+count estimate is (K-1) / unit(kth_min), unit(h) = first 15 hex digits
+of md5 as an integer / 16^15, a point in [0, 1). KMV is MERGEABLE —
+sketch(A ∪ B) = k-smallest of (sketch(A) ∪ sketch(B)) — so
+per-partition/per-day sketches combine without touching raw data
+(:func:`kmv_jaccard_md5` merges two that way).
 
 Estimator: E[D] ≈ (K-1)/U_(K) where U_(K) is the Kth order statistic
 of D uniform(0,1] draws; relative error ~ 1/sqrt(K-2).
@@ -14,58 +17,25 @@ of D uniform(0,1] draws; relative error ~ 1/sqrt(K-2).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-
-# Map xxhash64's signed 64-bit output into (0, 1]: (h + 2^63 + 1) / 2^64.
-_TWO63 = float(1 << 63)
-_TWO64 = float(1 << 64)
+from pyspark.sql import Column, DataFrame, Window
 
 
-def _unit_hash(col: Column) -> Column:
-    return (F.xxhash64(col).cast("double") + (_TWO63 + 1.0)) / _TWO64
-
-
-def kmv_sketch(df: DataFrame, group_cols: list[str], value_col: str, k: int = 256) -> DataFrame:
-    """Build a KMV sketch per group: the K smallest unit-hashes of the
-    value column. One hash aggregation; sketch size is K doubles per
-    group regardless of group cardinality."""
-    u = _unit_hash(F.col(value_col))
-    return df.groupBy(*group_cols).agg(
-        F.slice(F.sort_array(F.collect_set(u)), 1, k).alias("kmv")
+def _kmv_estimate(k_used: Column, max_h: Column, k: int) -> Column:
+    """(k-1) / unit(kth_min) from a k-minimum sketch's size and largest
+    md5 hex string; the exact count when the set had fewer than k
+    values."""
+    unit = F.conv(F.substring(max_h, 1, 15), 16, 10).cast("double") / float(16**15)
+    return F.when(k_used == k, F.lit(float(k - 1)) / unit).otherwise(
+        k_used.cast("double")
     )
-
-
-def kmv_merge(sketches: DataFrame, group_cols: list[str], k: int = 256) -> DataFrame:
-    """Merge sketches of the same group (e.g. per-partition or per-day
-    partials): union the hash sets, keep the K smallest."""
-    return sketches.groupBy(*group_cols).agg(
-        F.slice(
-            F.sort_array(F.array_distinct(F.flatten(F.collect_list("kmv")))), 1, k
-        ).alias("kmv")
-    )
-
-
-def kmv_estimate(sketches: DataFrame, k: int = 256) -> DataFrame:
-    """Distinct-count estimate per group from a sketch column."""
-    n = F.size("kmv")
-    kth = F.element_at("kmv", n)  # largest retained hash
-    # exact when the group had fewer than k distinct values
-    est = F.when(n < k, n.cast("double")).otherwise((F.lit(k - 1)) / kth)
-    return sketches.withColumn("distinct_est", F.round(est, 1)).drop("kmv")
 
 
 def kmv_distinct_md5(df: DataFrame, value_col: str, k: int = 64) -> DataFrame:
-    """Corpus-wide KMV distinct estimate over the engine-portable md5
-    family — ORACLE-CHECKABLE, unlike the xxhash64 sketch above: DuckDB
-    reproduces the k-minimum hex strings bit-for-bit.
+    """Corpus-wide KMV distinct estimate: DuckDB reproduces the
+    k-minimum hex strings and the estimate bit-for-bit.
 
     Plan shape: distinct (one shuffle) → TakeOrdered(k) on the hex
-    string (no full sort) → single-row estimate. At 100 TB use the
-    per-partition kmv_sketch/kmv_merge path instead; this variant
-    exists to pin the estimator's arithmetic against an oracle.
-
-    Estimate = (k-1) / unit(kth_min), unit(h) = first 15 hex digits of
-    md5 as an integer / 16^15; exact count when fewer than k values.
+    string (no full sort) → single-row estimate.
     """
     h = df.select(F.md5(F.col(value_col)).alias("hh")).distinct()
     kmin = h.orderBy("hh").limit(k)
@@ -73,37 +43,23 @@ def kmv_distinct_md5(df: DataFrame, value_col: str, k: int = 64) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("k_used"),
         F.max("hh").alias("max_h"),
     )
-    unit = F.conv(F.substring("max_h", 1, 15), 16, 10).cast("double") / float(16**15)
-    est = F.when(F.col("k_used") == k, F.lit(float(k - 1)) / unit).otherwise(
-        F.col("k_used").cast("double")
-    )
+    est = _kmv_estimate(F.col("k_used"), F.col("max_h"), k)
     return agg.select("k_used", F.round(est, 4).alias("est_distinct"))
 
 
 def kmv_distinct_md5_grouped(
     df: DataFrame, group_cols: list[str], value_col: str, k: int = 64
 ) -> DataFrame:
-    """Per-group KMV distinct estimate over the engine-portable md5
-    family — the grouped, ORACLE-CHECKABLE sibling of
-    :func:`kmv_distinct_md5` (same estimator arithmetic) and the
-    portable counterpart of the xxhash64 :func:`kmv_sketch` path.
+    """Per-group KMV distinct estimate — the grouped sibling of
+    :func:`kmv_distinct_md5` (same estimator arithmetic).
 
     Plan shape: distinct (one partial-agg shuffle keyed by
     (group, hash)) → per-group k-minimum via a rank window that
     Spark's WindowGroupLimit rewrites into per-partition partial
     top-k BEFORE the shuffle, so the exchange carries at most k rows
-    per group per map task — no full per-group sort, no unbounded
-    collect_set (the kmv_sketch form holds a group's whole distinct
-    hash set in one aggregation buffer; this one never does). At
-    100 TB the mergeable per-partition kmv_sketch/kmv_merge path still
-    applies when sketches must persist; this variant exists to pin the
-    grouped estimator against an oracle.
-
-    Estimate = (k-1) / unit(kth_min), unit(h) = first 15 hex digits of
-    md5 as an integer / 16^15; exact count when fewer than k values.
+    per group per map task — no full per-group sort, and no
+    aggregation buffer ever holds a group's whole distinct hash set.
     """
-    from pyspark.sql import Window
-
     h = df.select(
         *group_cols, F.md5(F.col(value_col).cast("string")).alias("hh")
     ).distinct()
@@ -113,10 +69,7 @@ def kmv_distinct_md5_grouped(
         F.count(F.lit(1)).cast("long").alias("k_used"),
         F.max("hh").alias("max_h"),
     )
-    unit = F.conv(F.substring("max_h", 1, 15), 16, 10).cast("double") / float(16**15)
-    est = F.when(F.col("k_used") == k, F.lit(float(k - 1)) / unit).otherwise(
-        F.col("k_used").cast("double")
-    )
+    est = _kmv_estimate(F.col("k_used"), F.col("max_h"), k)
     return agg.select(*group_cols, "k_used", F.round(est, 4).alias("est_distinct"))
 
 
@@ -232,7 +185,7 @@ def kmv_jaccard_md5(
     top-k, so the exchange carries ≤ k rows per set per task), then
     ONE single-row aggregation collects both ≤ k-element sketches as
     sorted arrays and the union sketch merges them as an array
-    expression (the :func:`kmv_merge` idiom) — deriving the union as a
+    expression (k smallest of the concatenation) — deriving the union as a
     second DataFrame branch would re-run the corpus distinct when
     ReuseExchange misses, so everything past the k-cut stays inside
     one row. Every hex string, order statistic, and division replays
@@ -245,20 +198,8 @@ def kmv_jaccard_md5(
     — inclusion–exclusion noise can dip negative on disjoint sets).
     """
     h = df.select(set_col, F.md5(F.col(value_col)).alias("hh")).distinct()
-    from pyspark.sql import Window
-
     w = Window.partitionBy(set_col).orderBy("hh")
     kmin = h.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
-
-    def unit(max_h: Column) -> Column:
-        return F.conv(F.substring(max_h, 1, 15), 16, 10).cast("double") / float(
-            16**15
-        )
-
-    def est(k_used: Column, max_h: Column) -> Column:
-        return F.when(k_used == k, F.lit(float(k - 1)) / unit(max_h)).otherwise(
-            k_used.cast("double")
-        )
 
     tag = F.col(set_col)
     one = kmin.groupBy().agg(
@@ -280,9 +221,9 @@ def kmv_jaccard_md5(
         F.size(uarr).cast("long").alias("k_u"),
         last(uarr).alias("__mh_u"),
     )
-    est_a = est(F.col("k_a"), F.col("__mh_a"))
-    est_b = est(F.col("k_b"), F.col("__mh_b"))
-    est_u = est(F.col("k_u"), F.col("__mh_u"))
+    est_a = _kmv_estimate(F.col("k_a"), F.col("__mh_a"), k)
+    est_b = _kmv_estimate(F.col("k_b"), F.col("__mh_b"), k)
+    est_u = _kmv_estimate(F.col("k_u"), F.col("__mh_u"), k)
     inter = F.greatest(F.lit(0.0), est_a + est_b - est_u)
     jac = F.when(est_u > 0, inter / est_u).otherwise(F.lit(0.0))
     return one.select(

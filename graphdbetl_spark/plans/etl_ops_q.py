@@ -550,9 +550,8 @@ def maintenance_zorder_key(spark: SparkSession, sf: str) -> DataFrame:
     """Z-order layout key over (price-cents, quantity) with exact
     type-1 (discrete, integer-arithmetic) percentile bounds — attests
     the bucket + Morton-interleave math behind write_zordered
-    bit-for-bit (the production write path keeps the approxQuantile
-    sketch, which a value oracle can't replay; interpolated percentile
-    is engine-convention-dependent — see etl/maintenance.py
+    bit-for-bit (discrete, because interpolated percentile is
+    engine-convention-dependent — see etl/maintenance.py
     zorder_rank_exact). The bounds pass is a distributed two-phase
     prefix sum (range-partitioned cum-count + tiny offset aggregate),
     so no task sorts a whole column's distinct values; bucketing +
@@ -597,7 +596,7 @@ def maintenance_compact_plan(spark: SparkSession, sf: str) -> DataFrame:
     size max(4096, total_bytes // 36), so the output file count stays
     ~constant as data grows instead of file size — by exclusive
     running byte total, and emit the rewrite manifest (rows/bytes/key-range
-    per output file) — the plan side of compact_dataset's staged
+    per output file) — the plan side of compact_execute's staged
     rewrite. The running total is a distributed two-phase prefix sum
     whose slice id is a pure function of the key (no sampled range
     seam, no .persist pin), so the planner holds where a naive

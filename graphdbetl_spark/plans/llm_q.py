@@ -304,11 +304,9 @@ def _simhash_oracle(bits: int) -> str:
 @query("dedup_simhash", oracle=_simhash_oracle(32))
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash fingerprints; fingerprint-equal docs are near-dups. The
-    registry name points at the md5 hash family at 32 bits (r5 verdict
-    #1b) so the fingerprint — every vote and the bit fold — replays in
-    the oracle; the 48-bit sibling below covers the wider operating
-    point, and the xxhash64 64-bit fast path stays as
-    operators/dedup.py simhash_fingerprints, pytest-covered."""
+    md5 hash family at 32 bits, so the fingerprint — every vote and
+    the bit fold — replays in the oracle; the 48-bit sibling below
+    covers the wider operating point."""
     from graphdbetl_spark.operators.dedup import simhash_fingerprints_md5
 
     return simhash_fingerprints_md5(
@@ -798,9 +796,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     e = T(spark, sf, "embeddings")
     norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
     # Centroid sample picks its 8 md5-ranked rows FIRST, then pays the
-    # JVM unit-normalize on those 8 only (the md5_sampled_centroids_raw
-    # shape — selection never looks at the vectors, so the centroids
-    # are bit-identical to the normalize-everything form).
+    # JVM unit-normalize on those 8 only (selection never looks at the
+    # vectors, so the centroids are bit-identical to the
+    # normalize-everything form).
     picked = (
         e.select(
             "vec_id",
@@ -1741,10 +1739,8 @@ def text_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
 def text_tokens(spark: SparkSession, sf: str) -> DataFrame:
     """Token counting two ways: whitespace words and a subword split
     (LLM token-budget proxy). The subword column uses the
-    RE2-compatible PORTABLE_SUBWORD_PATTERN (r5 verdict #1b: the
-    registry name now points at the portable split so both counts
-    replay in the oracle); the lookaround-based BPE-ish split stays as
-    functions/text.py bpe_ish_token_count, pytest-covered."""
+    RE2-compatible PORTABLE_SUBWORD_PATTERN, so both counts replay in
+    the oracle."""
     from graphdbetl_spark.functions.text import portable_subword_token_count
 
     d = T(spark, sf, "documents")

@@ -124,12 +124,9 @@ def rollup_hourly(spark: SparkSession, sf: str) -> DataFrame:
 )
 def sketch_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """Per-group KMV distinct-count estimates (customers per order
-    status). The registry name points at the md5 hash family (r5
-    verdict #1b) so every k-minimum hex string and the estimator
-    arithmetic replay in the oracle; the mergeable xxhash64
-    collect_set/sort/slice sketch stays as operators/sketch.py
-    kmv_sketch/kmv_merge/kmv_estimate, pytest-covered (error bound and
-    mergeability)."""
+    status) over the md5 hash family, so every k-minimum hex string
+    and the estimator arithmetic replay in the oracle. See
+    operators/sketch.py kmv_distinct_md5_grouped."""
     from graphdbetl_spark.operators.sketch import kmv_distinct_md5_grouped
 
     o = T(spark, sf, "orders")
@@ -155,9 +152,8 @@ def sketch_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
 )
 def sketch_kmv_md5(spark: SparkSession, sf: str) -> DataFrame:
     """KMV distinct-token estimate over the engine-portable md5 family:
-    the estimator arithmetic is ORACLE-CHECKED bit-for-bit (the
-    xxhash64 sketch above stays rows-only). TakeOrdered(64), no full
-    sort; at 100 TB the mergeable per-partition path applies."""
+    the estimator arithmetic is ORACLE-CHECKED bit-for-bit.
+    TakeOrdered(64), no full sort."""
     from graphdbetl_spark.functions.text import tokens
     from graphdbetl_spark.operators.sketch import kmv_distinct_md5
 

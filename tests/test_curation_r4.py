@@ -268,39 +268,3 @@ def test_logreg_train_matches_numpy_reference(spark):
     # the weak label is learnable: post-training loss beats iteration 0
     p = 1.0 / (1.0 + np.exp(-(x @ w)))
     assert np.mean((p > 0.5) == (y > 0.5)) >= 0.75
-
-
-def test_bigram_lm_persist_then_score_no_rebuild(spark, tmp_path):
-    from graphdbetl_spark.operators.curation import (
-        bigram_logprob,
-        bigram_lm_persist,
-        bigram_lm_score,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "a b c a b"), (2, "b c d"), (3, "a b x y")], ["doc_id", "text"]
-    )
-    lm_path = str(tmp_path / "lm")
-    bigram_lm_persist(corpus, "text", "doc_id", lm_path)
-
-    # scoring the corpus itself through the persisted LM == in-plan op
-    inplan = {
-        (r["doc_id"], r["n_bigrams"], r["mean_logprob"])
-        for r in bigram_logprob(corpus, "text", "doc_id").collect()
-    }
-    scored = bigram_lm_score(spark, lm_path, corpus, "text", "doc_id")
-    got = {
-        (r["doc_id"], r["n_bigrams"], r["mean_logprob"]) for r in scored.collect()
-    }
-    assert got == inplan
-
-    # the scoring plan reads the persisted LM; it contains NO LM-build
-    # aggregation (the __c1/__c2 columns never appear) and no corpus scan
-    plan = scored._jdf.queryExecution().executedPlan().toString()
-    assert "__c1" not in plan and "__c2" not in plan
-    assert lm_path.split("/")[-1] in plan or "lm" in plan
-
-    # a second batch with an unseen bigram scores only the known pairs
-    batch = spark.createDataFrame([(9, "a b zz qq")], ["doc_id", "text"])
-    rows = bigram_lm_score(spark, lm_path, batch, "text", "doc_id").collect()
-    assert rows[0]["n_bigrams"] == 1  # only (a,b) is in the LM

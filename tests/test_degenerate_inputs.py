@@ -93,6 +93,26 @@ def test_semantic_decontaminate_empty_eval_set(spark):
         assert empty.collect() == []
 
 
+def test_pq_adc_topk_empty_query_set(spark):
+    """No queries over a non-empty corpus: no LUT rows to gather from,
+    so no neighbours, in the usual (query_id, neighbor_id, adc_cosine,
+    rank) schema."""
+    from graphdbetl_spark.operators.similarity import pq_cosine_topk
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    empty = pq_cosine_topk(e, e.limit(0))
+    assert empty.schema == pq_cosine_topk(e, e.limit(1)).schema
+    assert empty.collect() == []
+
+
+def test_pca_fit_without_vectors_raises_value_error(spark):
+    from graphdbetl_spark.operators.similarity import pca_fit
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    with pytest.raises(ValueError, match="no vectors"):
+        pca_fit(e.limit(0))
+
+
 @pytest.mark.parametrize(
     "name",
     [

@@ -39,31 +39,6 @@ def test_components_match_union_find(spark):
         assert got[node] == comp
 
 
-def test_star_variant_matches_union_find(spark):
-    from graphdbetl_spark.operators.graph import connected_components_star
-
-    rng = random.Random(11)
-    edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(70)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.id: r.component for r in connected_components_star(df).collect()}
-    exp = _uf_components(edges)
-    assert set(got) == set(exp)
-    for node, comp in exp.items():
-        assert got[node] == comp
-
-
-def test_star_variant_long_chain_logarithmic_rounds(spark):
-    from graphdbetl_spark.operators.graph import connected_components_star
-
-    # diameter-100 chain: label propagation needs ~100 rounds; the
-    # star variant's pointer jumping converges within max_iter=12
-    chain = [(i, i + 1) for i in range(100)]
-    df = spark.createDataFrame(chain, "src long, dst long")
-    got = {r.id: r.component for r in connected_components_star(df, max_iter=12).collect()}
-    assert set(got.values()) == {0}
-
-
 def test_chain_collapses_to_one_component(spark):
     from graphdbetl_spark.operators.graph import connected_components
 

@@ -1,22 +1,13 @@
-"""Compaction and Z-order layout tests: file counts and per-file
-min/max tightness (the property data skipping depends on)."""
+"""Dataset maintenance tests: Z-order per-file min/max tightness (the
+property data skipping depends on), retention pruning and dynamic
+partition overwrite."""
 
 import glob
 
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
-from graphdbetl_spark.etl.maintenance import compact_dataset, write_zordered
-
-
-def test_compaction_reduces_file_count(spark, tmp_path):
-    path = str(tmp_path / "fragmented")
-    spark.range(10000).toDF("x").repartition(64).write.parquet(path)
-    assert len(glob.glob(f"{path}/*.parquet")) == 64
-    compact_dataset(spark, path, target_file_bytes=10 * 1024 * 1024)
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(files) <= 2
-    assert spark.read.parquet(path).count() == 10000  # no rows lost
+from graphdbetl_spark.etl.maintenance import write_zordered
 
 
 def _file_ranges(path, col):

@@ -433,12 +433,17 @@ def test_package_crosses_the_python_boundary_through_arrow_only():
     assert found == []
 
 
-def test_package_has_one_implementation_per_ann_and_minhash_family():
+def test_package_has_one_implementation_per_operator_family():
     """``pyspark.ml`` is imported only by ``similarity._unit_vectors``
-    (the JVM Normalizer), and none of the deleted seeded twins — the
-    MLlib k-means IVF and IVF-PQ, the BucketedRandomProjection LSH and
-    the xxhash64 MinHash — is defined again: each ANN and MinHash family
-    has its md5-deterministic implementation only."""
+    (the JVM Normalizer), and none of the deleted twins is defined
+    again: the seeded ANN twins (MLlib k-means IVF and IVF-PQ,
+    BucketedRandomProjection LSH), the xxhash64 MinHash, SimHash and
+    KMV sketch, the star-contraction connected components, the
+    whole-dataset compaction, the approxQuantile Z-order key, the PCA
+    pass-through wrapper, the raw-frame centroid sample, the lookaround
+    subword count and the persisted bigram LM. Each operator family has
+    the one implementation the registry serves, and ``operators/sketch.py``
+    hashes with md5 only."""
     import ast
     from pathlib import Path
 
@@ -448,9 +453,14 @@ def test_package_has_one_implementation_per_ann_and_minhash_family():
         "ivf_cosine_topk", "ivf_build_index", "ivf_query", "lsh_cosine_topk",
         "pq_build_codebooks_kmeans", "ivfpq_cosine_topk", "ivfpq_query",
         "ivfpq_persist_index", "ivfpq_load_index", "minhash_near_duplicates",
+        "simhash_fingerprints", "_unit_hash", "kmv_sketch", "kmv_merge",
+        "kmv_estimate", "_TWO63", "_TWO64", "connected_components_star",
+        "compact_dataset", "zorder_rank", "pca_project",
+        "md5_sampled_centroids_raw", "bpe_ish_token_count",
+        "bigram_lm_persist", "bigram_lm_score",
     }
     root = Path(graphdbetl_spark.__file__).parent
-    ml, defined = [], []
+    ml, defined, xxhash = [], [], []
 
     def walk(node, rel, owner):
         for child in ast.iter_child_nodes(node):
@@ -459,6 +469,13 @@ def test_package_has_one_implementation_per_ann_and_minhash_family():
                     defined.append(f"{rel}:{child.lineno} {child.name}")
                 walk(child, rel, child.name)
                 continue
+            if isinstance(child, ast.Name) and isinstance(child.ctx, ast.Store):
+                if child.id in deleted:
+                    defined.append(f"{rel}:{child.lineno} {child.id}")
+            if rel == "operators/sketch.py" and isinstance(child, ast.Call):
+                fn = child.func
+                if getattr(fn, "attr", getattr(fn, "id", None)) == "xxhash64":
+                    xxhash.append(child.lineno)
             if isinstance(child, ast.Import):
                 mods = [a.name for a in child.names]
             elif isinstance(child, ast.ImportFrom):
@@ -473,6 +490,7 @@ def test_package_has_one_implementation_per_ann_and_minhash_family():
         rel = path.relative_to(root).as_posix()
         walk(ast.parse(path.read_text(), str(path)), rel, None)
     assert defined == []
+    assert xxhash == []
     assert ml == [("operators/similarity.py", "_unit_vectors")] * 2
 
 

@@ -7,7 +7,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
-from graphdbetl_spark.operators.sketch import kmv_estimate, kmv_merge, kmv_sketch
+from graphdbetl_spark.operators.sketch import kmv_distinct_md5_grouped
 from graphdbetl_spark.sources.catalog import load_table
 from graphdbetl_spark.streaming.rollup import (
     bucket_partials,
@@ -80,8 +80,8 @@ class TestRollup:
 class TestKMV:
     def test_estimate_within_error_bound(self, spark):
         orders = load_table(spark, SF_DIR, "orders")
-        sk = kmv_sketch(orders, ["o_orderstatus"], "o_custkey", k=256)
-        est = {r.o_orderstatus: r.distinct_est for r in kmv_estimate(sk, k=256).collect()}
+        sk = kmv_distinct_md5_grouped(orders, ["o_orderstatus"], "o_custkey", k=64)
+        est = {r.o_orderstatus: r.est_distinct for r in sk.collect()}
         exact = {
             r.o_orderstatus: r.n
             for r in orders.groupBy("o_orderstatus")
@@ -93,23 +93,8 @@ class TestKMV:
 
     def test_small_groups_exact(self, spark):
         df = spark.createDataFrame([(1, i % 7) for i in range(100)], "g int, v int")
-        est = kmv_estimate(kmv_sketch(df, ["g"], "v", k=64), k=64).first()
-        assert est.distinct_est == 7.0
-
-    def test_mergeability(self, spark):
-        orders = load_table(spark, SF_DIR, "orders")
-        a = orders.filter(F.col("o_orderkey") % 2 == 0)
-        b = orders.filter(F.col("o_orderkey") % 2 == 1)
-        merged = kmv_merge(
-            kmv_sketch(a, ["o_orderstatus"], "o_custkey").unionByName(
-                kmv_sketch(b, ["o_orderstatus"], "o_custkey")
-            ),
-            ["o_orderstatus"],
-        )
-        direct = kmv_sketch(orders, ["o_orderstatus"], "o_custkey")
-        m = {r.o_orderstatus: r.kmv for r in merged.collect()}
-        d = {r.o_orderstatus: r.kmv for r in direct.collect()}
-        assert m == d  # sketch(A ∪ B) == merge(sketch(A), sketch(B))
+        est = kmv_distinct_md5_grouped(df, ["g"], "v", k=64).first()
+        assert (est.k_used, est.est_distinct) == (7, 7.0)
 
 
 class TestKMVMd5:

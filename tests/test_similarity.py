@@ -86,7 +86,7 @@ def test_pca_project_invariants(spark):
     import numpy as np
     import pyspark.sql.functions as F
 
-    from graphdbetl_spark.operators.similarity import pca_project
+    from graphdbetl_spark.operators.similarity import pca_apply, pca_fit
 
     rng = np.random.default_rng(7)
     # anisotropic cloud: variance concentrated in the first dims
@@ -96,8 +96,8 @@ def test_pca_project_invariants(spark):
         [(i, [float(x) for x in row]) for i, row in enumerate(data)],
         ["vec_id", "embedding"],
     )
-    out = pca_project(df, "vec_id", "embedding", dim=16, out_dim=4)
-    rows = out.orderBy("vec_id").collect()
+    mu, comps = pca_fit(df, "vec_id", "embedding", dim=16, out_dim=4)
+    rows = pca_apply(df, "vec_id", "embedding", mu, comps).orderBy("vec_id").collect()
     proj = np.array([r["proj"] for r in rows])
     assert proj.shape == (300, 4)
     # component variances must be in decreasing order and capture the
@@ -106,7 +106,8 @@ def test_pca_project_invariants(spark):
     assert all(var[i] >= var[i + 1] - 1e-9 for i in range(3))
     assert var[0] > 50  # ~10² scale dominates
     # deterministic across invocations (sign fix + eigh determinism)
-    rows2 = pca_project(df, "vec_id", "embedding", dim=16, out_dim=4).orderBy("vec_id").collect()
+    mu2, comps2 = pca_fit(df, "vec_id", "embedding", dim=16, out_dim=4)
+    rows2 = pca_apply(df, "vec_id", "embedding", mu2, comps2).orderBy("vec_id").collect()
     assert np.allclose(proj, np.array([r["proj"] for r in rows2]))
 
 
