@@ -92,18 +92,15 @@ HEADLINE = [
     "sim_ivf_append",
     # DSIR selection: two LMs from one count shuffle + top-k cut
     "select_importance_resampling",
-    # r7 additions: diversity coreset (8 map-only trajectory rounds)
+    # r7 additions: diversity coreset (batch-admitted trajectory rounds)
     # and the prefix-sum compaction planner — benched cold.
     "select_kcenter_coreset",
     "maintenance_compact_plan",
     # r8 additions: the manifest EXECUTED (staged rewrite + read-back
-    # re-aggregation) and the batched k-center fast path — benched
-    # cold like every new family.
+    # re-aggregation) — benched cold like every new family.
     "maintenance_compact_execute",
-    "select_kcenter_coreset_batched",
     # MMR diversity re-rank (relevance-weighted k-center sibling) —
-    # benched cold like every new family; the batched form shares the
-    # oracle and is covered by the parity test.
+    # benched cold like every new family.
     "select_mmr_diverse",
     # asymmetric n-gram containment (sub-document duplication) —
     # shares the Jaccard candidate core, benched cold.

@@ -1,53 +1,60 @@
 """Coreset / diversity selection for training-data curation.
 
-Greedy k-center (farthest-point traversal, Gonzalez 1985) over an
-embedding column: pick the point whose distance to the already-selected
-set is LARGEST, k times. The dual of importance resampling
-(select_importance_resampling matches a target DISTRIBUTION; k-center
-maximizes COVERAGE) — the classic coreset recipe for picking a small,
-diverse fine-tuning or eval slice out of a large corpus.
+Two greedy selections over an embedding column, one round loop
+(``_greedy``):
 
-Scale shape: each of the k rounds is ONE map-only corpus pass (a
-vectorized Arrow kernel scoring every row against the ≤k selected
-centers — the PQ codebook-closure pattern: the center matrix lives in
-the kernel closure, bounded by construction) feeding a
-TakeOrderedAndProject(1) — no shuffle ever carries more than one row
-per partition, and the driver receives exactly one (id, vector, score)
-row per round.  k sequential jobs total, the same synchronous-trajectory
-cost model as train_quality_classifier's gradient rounds.
+- k-center (farthest-point traversal, Gonzalez 1985): pick the point
+  whose cosine distance to the already-selected set is LARGEST, k
+  times. The dual of importance resampling (select_importance_resampling
+  matches a target DISTRIBUTION; k-center maximizes COVERAGE) — the
+  classic coreset recipe for picking a small, diverse fine-tuning or
+  eval slice out of a large corpus.
+- MMR (Maximal Marginal Relevance): the relevance-weighted sibling,
+  see ``mmr_select``.
+
+Each operator hands the loop its first pick and its per-row score over
+a NON-EMPTY selected set, a function of the row's max-cosine to that
+set; the loop picks the argmax of the score with ties to the LOWER id.
+
+Scale shape: each round is ONE map-only corpus pass (a vectorized
+Arrow kernel scoring every unpicked row against the selected set — the
+PQ codebook-closure pattern: the set's matrix lives in the kernel
+closure, bounded by k) with a per-batch top-p cut feeding a
+TakeOrderedAndProject(p), where p is the number of picks still to
+make. No shuffle carries more than p rows per partition.
+
+Batch admission: once the selected set is non-empty, adding a pick can
+only RAISE a row's max-cosine to the set, hence only LOWER its score,
+so the p-th collected score upper-bounds every row NOT in the list for
+the rest of the pass. The pass's first admit is the exact global
+argmax; the remaining candidates are then re-verified driver-side —
+each folds the newest admit into its max-cosine as a running max,
+bit-identical to a fold over every admit because ``fold_dots`` computes
+each pair on its own and IEEE max is exact — and admitted for as long
+as the updated argmax stays STRICTLY above the bound. A list shorter
+than p IS the whole remaining corpus, so the trajectory finishes
+driver-side with no bound and no further pass. The first pick is made
+before any bound is used: over an EMPTY set the monotonicity does not
+hold (a negative cosine to MMR's first pick raises a score above its
+0.5·rel). The trajectory is the one-pick-per-pass trajectory, in
+about k/p passes.
 
 Determinism / oracle parity (the sim_cosine_topk conventions):
 - distance is cosine distance 1 − dot/(‖a‖·‖b‖), the dot and both
   squared norms accumulated dimension-major over raw doubles (TRUE left
   folds, ``fold_dots``/``seq_sum``) and divided by the PRODUCT of the
   two norms — bit-identical to DuckDB's ``list_cosine_similarity``;
-- max-over-centers is exact (IEEE max has no rounding);
-- the next center is argmin of max-cosine with ties to the LOWER id,
-  via a (score ASC, id ASC) total order both engines replay;
-- the seed is the minimum id, so the whole trajectory is a pure
-  function of the data and unrolls into a DuckDB CTE chain.
+- max-over-selected is exact (IEEE max has no rounding);
+- the (score DESC, id ASC) total order is replayed by both engines;
+- the first pick is a pure function of the data (k-center: the
+  minimum id), so the whole trajectory unrolls into a DuckDB CTE chain.
 
 Precondition: every embedding must have a nonzero norm — cosine
 distance is undefined at the origin, and a NaN score would order
 differently across numpy lexsort (NaN last), Spark orderBy (NaN
 greatest) and DuckDB list_cosine_similarity, silently desyncing the
-trajectory from the oracle. Both the kernel and the center-matrix
-build FAIL FAST on a zero-norm vector instead.
-
-Batch mode (``batch_p``): greedy farthest-point admits provably-safe
-batch selection. One pass collects the top-``p`` candidates under the
-(score ASC, id ASC) order; the p-th score is a LOWER BOUND on every
-out-of-list point's distance-to-centers (adding centers only raises a
-point's max-similarity, never lowers it), so candidates can be
-admitted driver-side in sequence — each re-verified against the
-centers admitted earlier in the same batch with the identical
-dim-major fold — for as long as the updated argmin stays STRICTLY
-below that bound. The resulting trajectory is bit-identical to the
-sequential form (parity-tested), but the k sequential jobs collapse
-to ~k/p passes — the regime a real coreset needs (k in the
-thousands). When a pass returns fewer than p rows the candidate list
-IS the whole remaining corpus, so the rest of the trajectory finishes
-driver-side with no further passes.
+trajectory from the oracle. Both the kernels and the driver-side norm
+of the first pick FAIL FAST on a zero-norm vector instead.
 """
 
 from __future__ import annotations
@@ -72,8 +79,8 @@ PLAN_PROBE = None
 
 
 def _arrow_out(id_col: str, ids, vecs, extra: dict):
-    """Output record batch (id_col, __v, *extra) for the trajectory
-    kernels' per-batch top-p rows."""
+    """Output record batch (id_col, __v, *extra) for the kernels'
+    per-batch rows."""
     import pyarrow as pa
 
     cols = [pa.array(ids, type=pa.int64()), list_column(vecs)]
@@ -102,12 +109,109 @@ def _norms(m):
 
 def _max_cos(v, vn, cm, cn):
     """Max cosine of each row of ``v`` (norms ``vn``) against the
-    center matrix ``cm`` (norms ``cn``). Dim-major left-fold dots —
-    the SINGLE shared kernel arithmetic, so the executor pass and the
-    driver-side batch re-verify produce bit-identical scores (IEEE
-    max over a set is order-independent; each pairwise dot folds the
-    dimensions in the same sequence on both paths)."""
+    matrix ``cm`` (norms ``cn``). Dim-major left-fold dots — the
+    SINGLE shared kernel arithmetic, so the executor pass and the
+    driver-side re-verify produce bit-identical scores (IEEE max over
+    a set is order-independent; each pairwise dot folds the dimensions
+    in the same sequence on both paths)."""
     return (fold_dots(v, cm) / (vn[:, None] * cn[None, :])).max(axis=1)
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, __v) with the embedding cast to doubles, fanned out by
+    bytes per task."""
+    return fan(emb, id_col, BYTES_PER_TASK).select(
+        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
+    )
+
+
+def _greedy(src, id_col, first, score, carry, k, label):
+    """The greedy round loop both selections share (module docstring).
+
+    ``src`` is the caller-pinned (id_col, __v, *carry) frame, ``carry``
+    the names of its per-row double columns; ``first`` is the first
+    pick as (id, vector, score), or None for an empty corpus;
+    ``score(mc, *carry)`` maps a row's max-cosine to the non-empty
+    selected set to the score the loop maximizes, ties to the lower
+    id. Returns the trajectory as [(step, id, score)]."""
+    import numpy as np
+
+    if first is None:
+        return []
+    fid, fv, fs = first
+    _norms(fv[None, :])  # fail fast on a zero-norm first pick
+    width = fv.shape[0]
+    sel_ids, sel_vecs = [fid], [fv]
+    trajectory = [(1, fid, fs)]
+    schema = ", ".join(
+        [f"{id_col} bigint", "__v array<double>"]
+        + [f"{c} double" for c in (*carry, "__mc", "__s")]
+    )
+    while len(trajectory) < k:
+        p = k - len(trajectory)
+        cm = np.array(sel_vecs, dtype=np.float64)
+        cn = _norms(cm)
+        picked = np.array(sel_ids, dtype=np.int64)
+
+        def kern(batches, cm=cm, cn=cn, picked=picked, p=p):
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                ids = rb.column(id_col).to_numpy(zero_copy_only=False)
+                v = arrow_matrix(rb, "__v", width=width)
+                keep = ~np.isin(ids, picked)
+                if not keep.any():
+                    continue
+                ids, v = ids[keep], v[keep]
+                cols = [rb.column(c).to_numpy(zero_copy_only=False)[keep] for c in carry]
+                mc = _max_cos(v, _norms(v), cm, cn)
+                s = score(mc, *cols)
+                # partial cut: only each batch's top-p by the global
+                # (s DESC, id ASC) order reach the TakeOrdered
+                # exchange. Safe for the bound: a suppressed row sits
+                # at or below its batch's p-th emitted row, which sits
+                # at or below the global p-th collected row.
+                top = np.lexsort((ids, -s))[:p]
+                extra = {c: x[top] for c, x in zip(carry, cols)}
+                extra.update(__mc=mc[top], __s=s[top])
+                yield _arrow_out(id_col, ids[top], v[top], extra)
+
+        round_q = (
+            src.mapInArrow(kern, schema=schema)
+            .orderBy(F.col("__s").desc(), F.col(id_col).asc())
+            .limit(p)
+        )
+        if PLAN_PROBE is not None:
+            PLAN_PROBE(label, round_q)
+        rows = round_q.collect()
+        if not rows:  # k exceeds the corpus — trajectory ends early
+            break
+        # A short list is the whole remaining corpus: no bound.
+        bound = rows[-1]["__s"] if len(rows) == p else -np.inf
+        ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+        v = np.array([r["__v"] for r in rows], dtype=np.float64)
+        vn = _norms(v)
+        mc = np.array([r["__mc"] for r in rows], dtype=np.float64)
+        cols = [np.array([r[c] for r in rows], dtype=np.float64) for c in carry]
+        s = np.array([r["__s"] for r in rows], dtype=np.float64)
+        admits = 0
+        while ids.size and len(trajectory) < k:
+            i = np.lexsort((ids, -s))[0]
+            if admits and not s[i] > bound:
+                break  # later admits are exact only STRICTLY above it
+            sel_ids.append(int(ids[i]))
+            sel_vecs.append(v[i])
+            trajectory.append((len(trajectory) + 1, int(ids[i]), float(s[i])))
+            admits += 1
+            newest, newest_n = v[i : i + 1], vn[i : i + 1]
+            rest = np.arange(ids.size) != i
+            ids, v, vn, mc = ids[rest], v[rest], vn[rest], mc[rest]
+            cols = [c[rest] for c in cols]
+            mc = np.maximum(mc, _max_cos(v, vn, newest, newest_n))
+            s = score(mc, *cols)
+        if len(rows) < p:
+            break  # the corpus is exhausted
+    return trajectory
 
 
 def kcenter_select(
@@ -115,120 +219,37 @@ def kcenter_select(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
-    batch_p: int | None = None,
 ) -> DataFrame:
     """Greedy k-center selection; returns one row per round:
     (step, center_id, radius) where radius is the selected point's
     cosine distance to the previously-selected set (NULL for the
-    seed), rounded to 4 decimals JVM-side (ties-away on both engines;
-    np.round would be half-even — SCALING.md r6 invariant).
+    seed, the minimum id), rounded to 4 decimals JVM-side (ties-away
+    on both engines; np.round would be half-even — SCALING.md r6
+    invariant).
 
-    ``batch_p=None`` runs the classic one-pick-per-pass loop (k
-    sequential jobs); ``batch_p=p`` admits up to p provably-exact
-    picks per pass (see module docstring) — the same trajectory in
-    ~k/p jobs. Embeddings must have nonzero norm (fail-fast)."""
+    The loop maximizes −max-cosine, so the radius 1 − mc is 1 + score
+    (IEEE x − y is x + (−y), exactly). Embeddings must have nonzero
+    norm (fail-fast)."""
     import numpy as np
 
-    p = max(1, int(batch_p)) if batch_p else 1
-    spark = emb.sparkSession
-    src = fan(emb, id_col, BYTES_PER_TASK).select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
-    )
+    src = _vectors(emb, id_col, vec_col)
     with pinned(src):
-        first = src.orderBy(F.col(id_col).asc()).limit(1).collect()
-        if not first:  # an empty corpus selects nothing
-            return spark.createDataFrame(
-                [], "step int, center_id bigint, radius double"
-            )
-        seed = first[0]
-        centers = [(int(seed[id_col]), np.array(seed["__v"], dtype=np.float64))]
-        _norms(centers[0][1][None, :])  # fail fast on a zero-norm seed
-        trajectory: list[tuple[int, int, float | None]] = [(1, centers[0][0], None)]
-
-        while len(trajectory) < k:
-            cm = np.array([v for _, v in centers], dtype=np.float64)
-            cn = _norms(cm)
-            picked = frozenset(cid for cid, _ in centers)
-
-            picked_arr = np.fromiter(picked, dtype=np.int64, count=len(picked))
-
-            def kern(batches, cm=cm, cn=cn, picked_arr=picked_arr, p=p):
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    ids = rb.column(id_col).to_numpy(zero_copy_only=False)
-                    v = arrow_matrix(rb, "__v", width=cm.shape[1])
-                    keep = ~np.isin(ids, picked_arr)
-                    if not keep.any():
-                        continue
-                    ids, v = ids[keep], v[keep]
-                    vn = _norms(v)
-                    mc = _max_cos(v, vn, cm, cn)
-                    # partial cut: only each batch's top-p candidates
-                    # (by the global (mc ASC, id ASC) order) survive
-                    # to the TakeOrdered exchange. Safe for the batch
-                    # bound below: a suppressed row sits at or above
-                    # its batch's p-th emitted row, which sits at or
-                    # above the global p-th collected row.
-                    top = np.lexsort((ids, mc))[:p]
-                    yield _arrow_out(id_col, ids[top], v[top], {"__mc": mc[top]})
-
-            round_q = (
-                src.mapInArrow(
-                    kern, schema=f"{id_col} bigint, __v array<double>, __mc double"
-                )
-                .orderBy(F.col("__mc").asc(), F.col(id_col).asc())
-                .limit(p)
-            )
-            if PLAN_PROBE is not None:
-                PLAN_PROBE("kcenter_round", round_q)
-            rows = round_q.collect()
-            if not rows:  # k exceeds the corpus — trajectory ends early
-                break
-            # The p-th collected score lower-bounds every point NOT in
-            # the candidate list (adding centers never lowers a point's
-            # max-similarity). A short list means the list IS the whole
-            # remaining corpus — no bound needed, finish driver-side.
-            bound = float(rows[-1]["__mc"]) if len(rows) == p else float("inf")
-            cand = [
-                (int(r[id_col]), np.array(r["__v"], dtype=np.float64), float(r["__mc"]))
-                for r in rows
-            ]
-            admitted: list[np.ndarray] = []
-            while cand and len(trajectory) < k:
-                if admitted:
-                    bm = np.array(admitted, dtype=np.float64)
-                    bn = _norms(bm)
-                    cand = [
-                        (
-                            cid,
-                            cv,
-                            max(s, float(_max_cos(cv[None, :], _norms(cv[None, :]), bm, bn)[0])),
-                        )
-                        for cid, cv, s in cand
-                    ]
-                cand.sort(key=lambda t: (t[2], t[0]))
-                cid, cv, s = cand[0]
-                # First admit of a pass is the exact global argmin.
-                # Later admits stay exact only while STRICTLY below the
-                # out-of-list lower bound.
-                if admitted and not (s < bound):
-                    break
-                centers.append((cid, cv))
-                trajectory.append((len(trajectory) + 1, cid, s))
-                admitted.append(cv)
-                cand = cand[1:]
-            if len(rows) < p and not cand:
-                break  # corpus exhausted before reaching k
-
-    out = spark.createDataFrame(
-        [(r, cid, mc) for r, cid, mc in trajectory],
-        schema="step int, center_id bigint, __mc double",
+        seed = src.orderBy(F.col(id_col).asc()).limit(1).collect()
+        first = (
+            (int(seed[0][id_col]), np.array(seed[0]["__v"], dtype=np.float64), None)
+            if seed
+            else None
+        )
+        trajectory = _greedy(
+            src, id_col, first, lambda mc: -mc, (), k, "kcenter_round"
+        )
+    out = emb.sparkSession.createDataFrame(
+        trajectory, schema="step int, center_id bigint, __s double"
     )
     return out.select(
         "step",
         "center_id",
-        F.round(F.lit(1.0) - F.col("__mc"), 4).alias("radius"),
+        F.round(F.lit(1.0) + F.col("__s"), 4).alias("radius"),
     )
 
 
@@ -237,7 +258,6 @@ def mmr_select(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
-    batch_p: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein
     1998): greedily pick the point maximizing
@@ -245,28 +265,19 @@ def mmr_select(
         mmr(d) = 0.5·cos(q, d) − 0.5·max_{s∈S} cos(d, s)
 
     where q is the query vector (the minimum-id row, per the
-    sim_cosine_topk seed convention) and S the already-selected set —
-    the relevance-weighted sibling of k-center (λ=1 recovers pure
-    top-k retrieval, λ=0 pure farthest-point diversity). λ is pinned
-    to 0.5 because multiplying by a power of two is IEEE-exact, so
-    the combined score is bit-replayable on any engine whose cosine
-    matches (the DuckDB oracle's list_cosine_similarity does, per the
-    dim-major left-fold convention).
+    sim_cosine_topk seed convention, excluded from the candidates) and
+    S the already-selected set — the relevance-weighted sibling of
+    k-center (λ=1 recovers pure top-k retrieval, λ=0 pure
+    farthest-point diversity). λ is pinned to 0.5 because multiplying
+    by a power of two is IEEE-exact, so the combined score is
+    bit-replayable on any engine whose cosine matches (the DuckDB
+    oracle's list_cosine_similarity does, per the dim-major left-fold
+    convention). Over the empty S the score is 0.5·rel: the first
+    pick is the argmax of 0.5·rel, ties to the lower id.
 
-    Scale shape (the kcenter_select cost model): the relevance term
-    is round-invariant, so it is computed ONCE in a single map-only
-    pass and persisted alongside the vectors; each of the k rounds is
-    then one map-only Arrow-kernel pass (selected-set matrix in the
-    kernel closure, bounded by k) with a per-batch partial top-p cut
-    into a TakeOrdered(p) — no shuffle ever carries more than p rows
-    per partition, and the driver receives at most p rows per round.
-
-    ``batch_p=p`` admits up to p provably-exact picks per pass:
-    adding centers only RAISES a point's max-similarity, hence only
-    LOWERS its mmr score, so the p-th collected score is an UPPER
-    bound on every out-of-list point — candidates re-verified against
-    the batch's earlier admits stay exact while STRICTLY above that
-    bound (the mirror of kcenter_select's lower-bound admission).
+    The relevance term rel = cos(q, d) is round-invariant, so it is
+    computed ONCE in a single map-only pass, held alongside the
+    vectors and carried through the rounds of the shared loop.
 
     Returns one row per round: (step, selected_id, mmr_score) with
     the score rounded to 4 decimals JVM-side. Embeddings must have
@@ -274,146 +285,57 @@ def mmr_select(
     """
     import numpy as np
 
-    p = max(1, int(batch_p)) if batch_p else 1
-    spark = emb.sparkSession
-    base = fan(emb, id_col, BYTES_PER_TASK).select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("__v")
-    )
-    first = base.orderBy(F.col(id_col).asc()).limit(1).collect()
-    if not first:  # an empty corpus has no query row and selects nothing
-        return spark.createDataFrame(
-            [], "step int, selected_id bigint, mmr_score double"
+    base = _vectors(emb, id_col, vec_col)
+    q = base.orderBy(F.col(id_col).asc()).limit(1).collect()
+    trajectory = []
+    if q:  # an empty corpus has no query row and selects nothing
+        qid = int(q[0][id_col])
+        qv = np.array(q[0]["__v"], dtype=np.float64)
+        qn = _norms(qv[None, :])
+
+        def rel_kern(batches):
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                ids = rb.column(id_col).to_numpy(zero_copy_only=False)
+                v = arrow_matrix(rb, "__v", width=qv.shape[0])
+                keep = ids != qid
+                if not keep.any():
+                    continue
+                ids, v = ids[keep], v[keep]
+                rel = _max_cos(v, _norms(v), qv[None, :], qn)
+                yield _arrow_out(id_col, ids, v, {"__rel": rel})
+
+        src = base.mapInArrow(
+            rel_kern, schema=f"{id_col} bigint, __v array<double>, __rel double"
         )
-    qrow = first[0]
-    qid = int(qrow[id_col])
-    qv = np.array(qrow["__v"], dtype=np.float64)
-    qn = float(_norms(qv[None, :])[0])
-
-    def rel_kern(batches, qv=qv, qn=qn, qid=qid):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column(id_col).to_numpy(zero_copy_only=False)
-            v = arrow_matrix(rb, "__v", width=qv.shape[0])
-            keep = ids != qid
-            if not keep.any():
-                continue
-            ids, v = ids[keep], v[keep]
-            vn = _norms(v)
-            rel = _max_cos(v, vn, qv[None, :], np.array([qn]))
-            yield _arrow_out(id_col, ids, v, {"__rel": rel})
-
-    src = base.mapInArrow(
-        rel_kern, schema=f"{id_col} bigint, __v array<double>, __rel double"
-    )
-    with pinned(src):
-        selected: list[tuple[int, np.ndarray]] = []
-        trajectory: list[tuple[int, int, float]] = []
-        while len(trajectory) < k:
-            if selected:
-                cm = np.array([v for _, v in selected], dtype=np.float64)
-                cn = _norms(cm)
-            else:
-                cm = cn = None
-            picked = frozenset(cid for cid, _ in selected)
-
-            picked_arr = np.fromiter(picked, dtype=np.int64, count=len(picked))
-
-            def kern(batches, cm=cm, cn=cn, picked_arr=picked_arr, p=p):
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    ids = rb.column(id_col).to_numpy(zero_copy_only=False)
-                    v = arrow_matrix(rb, "__v", width=qv.shape[0])
-                    rel = rb.column(
-                        rb.schema.get_field_index("__rel")
-                    ).to_numpy(zero_copy_only=False).astype(np.float64)
-                    keep = ~np.isin(ids, picked_arr)
-                    if not keep.any():
-                        continue
-                    ids, v, rel = ids[keep], v[keep], rel[keep]
-                    if cm is not None:
-                        mc = _max_cos(v, _norms(v), cm, cn)
-                        score = 0.5 * rel - 0.5 * mc
-                    else:
-                        score = 0.5 * rel
-                    # partial cut: each batch's top-p by the global
-                    # (score DESC, id ASC) order — a suppressed row
-                    # sits at or below its batch's p-th emitted row.
-                    top = np.lexsort((ids, -score))[:p]
-                    yield _arrow_out(
-                        id_col, ids[top], v[top],
-                        {"__rel": rel[top], "__score": score[top]},
-                    )
-
-            round_q = (
-                src.mapInArrow(
-                    kern,
-                    schema=(
-                        f"{id_col} bigint, __v array<double>,"
-                        " __rel double, __score double"
-                    ),
-                )
-                .orderBy(F.col("__score").desc(), F.col(id_col).asc())
-                .limit(p)
+        with pinned(src):
+            top = (
+                src.orderBy((F.col("__rel") * 0.5).desc(), F.col(id_col).asc())
+                .limit(1)
+                .collect()
             )
-            if PLAN_PROBE is not None:
-                PLAN_PROBE("mmr_round", round_q)
-            rows = round_q.collect()
-            if not rows:  # k exceeds the corpus — trajectory ends early
-                break
-            # The p-th collected score UPPER-bounds every out-of-list
-            # point (adding centers never raises an mmr score). A
-            # short list is the whole remaining corpus — finish
-            # driver-side with no bound.
-            bound = float(rows[-1]["__score"]) if len(rows) == p else float("-inf")
-            cand = [
+            first = (
                 (
-                    int(r[id_col]),
-                    np.array(r["__v"], dtype=np.float64),
-                    float(r["__rel"]),
-                    float(r["__score"]),
+                    int(top[0][id_col]),
+                    np.array(top[0]["__v"], dtype=np.float64),
+                    0.5 * top[0]["__rel"],
                 )
-                for r in rows
-            ]
-            admitted: list[np.ndarray] = []
-            while cand and len(trajectory) < k:
-                if admitted:
-                    bm = np.array(admitted, dtype=np.float64)
-                    bn = _norms(bm)
-                    cand = [
-                        (
-                            cid,
-                            cv,
-                            rl,
-                            min(
-                                s,
-                                0.5 * rl
-                                - 0.5
-                                * float(
-                                    _max_cos(cv[None, :], _norms(cv[None, :]), bm, bn)[0]
-                                ),
-                            ),
-                        )
-                        for cid, cv, rl, s in cand
-                    ]
-                cand.sort(key=lambda t: (-t[3], t[0]))
-                cid, cv, rl, s = cand[0]
-                # First admit of a pass is the exact global argmax;
-                # later admits stay exact only while STRICTLY above
-                # the out-of-list upper bound.
-                if admitted and not (s > bound):
-                    break
-                selected.append((cid, cv))
-                trajectory.append((len(trajectory) + 1, cid, s))
-                admitted.append(cv)
-                cand = cand[1:]
-            if len(rows) < p and not cand:
-                break  # corpus exhausted before reaching k
-
-    out = spark.createDataFrame(
-        trajectory, schema="step int, selected_id bigint, __score double"
+                if top
+                else None
+            )
+            trajectory = _greedy(
+                src,
+                id_col,
+                first,
+                lambda mc, rel: 0.5 * rel - 0.5 * mc,
+                ("__rel",),
+                k,
+                "mmr_round",
+            )
+    out = emb.sparkSession.createDataFrame(
+        trajectory, schema="step int, selected_id bigint, __s double"
     )
     return out.select(
-        "step", "selected_id", F.round(F.col("__score"), 4).alias("mmr_score")
+        "step", "selected_id", F.round(F.col("__s"), 4).alias("mmr_score")
     )

@@ -16,7 +16,6 @@ from pyspark.sql import Column, DataFrame, Window
 
 from graphdbetl_spark.operators.dedup import _tokens, _word_ngram_hashes, _word_ngrams
 from graphdbetl_spark.operators.skew import fan, iterate_partitions, pinned
-from graphdbetl_spark.operators.sampling import hash_bucket
 
 # PII patterns chosen to be portable between Java regex (Spark) and
 # RE2 (DuckDB oracle): no lookarounds, no backreferences.
@@ -1264,7 +1263,7 @@ def semantic_decontaminate(
     streams ONCE through a numpy Arrow kernel that emits one (id, max)
     row per corpus vector, independent of |eval|, with no shuffle. For
     eval sets that grow with the corpus, block both sides with the
-    hyperplane-bucket machinery (dedup_embedding_lsh_blocked) instead.
+    hyperplane-bucket machinery (dedup_embedding_cosine) instead.
 
     Returns (id_col, max_eval_cosine rounded 6, contaminated bool);
     the threshold compares the UNROUNDED max on both engines.

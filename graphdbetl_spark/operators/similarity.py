@@ -1167,7 +1167,7 @@ def cosine_range_search(
     |corpus|·|queries| like any exact multi-query scan: right while
     the query batch is bounded; for query sets that grow with the
     corpus, block both sides with the hyperplane-bucket machinery
-    (dedup_embedding_lsh_blocked) instead.
+    (dedup_embedding_cosine) instead.
     Returns (query_id, neighbor_id, cosine rounded 6), self-pairs
     excluded.
 

@@ -708,14 +708,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     return _embedding_blocked_pairs(spark, sf)
 
 
-@query("dedup_embedding_lsh_blocked", oracle=_embedding_lsh_oracle())
-def dedup_embedding_lsh_blocked(spark: SparkSession, sf: str) -> DataFrame:
-    """Alias surface for the hyperplane-blocked pair generator (kept so
-    callers who adopted the explicit r2 name keep working); see
-    _embedding_blocked_pairs for the plan and scale argument."""
-    return _embedding_blocked_pairs(spark, sf)
-
-
 def _semantic_clusters_oracle(k: int = 8, n_planes: int = 8, threshold: float = 0.2) -> str:
     planes = _lsh_hyperplanes(n_planes)
     bucket_terms = " + ".join(

@@ -81,7 +81,7 @@ def dedup_embedding_keep_blocked(spark: SparkSession, sf: str) -> DataFrame:
     min-id-survives rule of dedup_embedding_keep running on the
     (label x 256-sign-bucket) candidate space that stays linear when
     label cardinality is fixed — the keep policy whose pair stage
-    actually survives 10x (see dedup_embedding_lsh_blocked and the
+    actually survives 10x (see dedup_embedding_cosine and the
     BASELINE.md blocking-cardinality finding). Near-identical vectors
     land in the same bucket (identical ones always do), so clone
     collapse — the dedup case that matters — is preserved."""

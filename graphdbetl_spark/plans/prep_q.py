@@ -447,34 +447,20 @@ def select_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
     (farthest-point traversal) over the embedding corpus — the
     coverage-maximizing dual of select_importance_resampling's
     distribution matching, the standard recipe for carving a small,
-    maximally-diverse eval/fine-tune slice. Each of the 8 rounds is
-    one map-only Arrow-kernel corpus pass (centers live in the kernel
+    maximally-diverse eval/fine-tune slice. Each round is one
+    map-only Arrow-kernel corpus pass (centers live in the kernel
     closure, bounded by k) with a per-batch partial cut into a
-    TakeOrdered(1) — the synchronous-trajectory cost model of
-    train_quality_classifier. Cosine math follows the
-    sim_cosine_topk bit-parity conventions; the full greedy
-    trajectory (seed = min id) unrolls into the DuckDB CTE chain."""
+    TakeOrdered(p), p = picks left; driver-side batch admission keeps
+    every pick above the p-th-score bound exact (operators/coreset.py).
+    The 7 picks after the seed took 6 passes at sf0.01 and sf0.1, not
+    7; k=64 at the 1000x replica (2M vectors) took 227 s one pick per
+    pass and 33.7 s at 64 candidates per pass (BASELINE.md r8). Cosine
+    math follows the sim_cosine_topk bit-parity conventions; the full
+    greedy trajectory (seed = min id) unrolls into the DuckDB CTE
+    chain."""
     from graphdbetl_spark.operators.coreset import kcenter_select
 
     return kcenter_select(T(spark, sf, "embeddings"), "vec_id", "embedding", k=8)
-
-
-@query("select_kcenter_coreset_batched", oracle=_kcenter_oracle(8))
-def select_kcenter_coreset_batched(spark: SparkSession, sf: str) -> DataFrame:
-    """The batched k-center fast path (r7 verdict #4) under the SAME
-    oracle as the sequential form — provably-safe batch admission
-    makes the trajectory bit-identical, so the unrolled CTE chain
-    attests the batching logic itself, not just the arithmetic. One
-    pass collects the top-p farthest candidates; driver-side admission
-    re-verifies each against the batch's earlier admits and stops at
-    the p-th-score lower bound (see operators/coreset.py). k=64 at the
-    1000x replica (2M vectors): 227 s sequential -> 33.7 s at p=64
-    (BASELINE.md r8)."""
-    from graphdbetl_spark.operators.coreset import kcenter_select
-
-    return kcenter_select(
-        T(spark, sf, "embeddings"), "vec_id", "embedding", k=8, batch_p=4
-    )
 
 
 def _mmr_oracle(k: int) -> str:
@@ -526,27 +512,13 @@ def select_mmr_diverse(spark: SparkSession, sf: str) -> DataFrame:
     top-k retrieval, λ=0 pure farthest-point diversity), the standard
     recipe for building a relevant-but-non-redundant context or
     fine-tuning slice around a query. The round-invariant relevance
-    term is computed in ONE map-only pass and persisted; each of the
-    8 rounds is then one map-only Arrow-kernel pass with a per-batch
-    partial top-1 cut into a TakeOrdered(1). Cosine math follows the
+    term is computed in ONE map-only pass and persisted; the rounds
+    then run select_kcenter_coreset's loop (one map-only Arrow-kernel
+    pass with a per-batch top-p cut into a TakeOrdered(p), p = picks
+    left, and driver-side batch admission). Cosine math follows the
     sim_cosine_topk bit-parity conventions; the full greedy
     trajectory unrolls into the DuckDB CTE chain."""
     from graphdbetl_spark.operators.coreset import mmr_select
 
     return mmr_select(T(spark, sf, "embeddings"), "vec_id", "embedding", k=8)
 
-
-@query("select_mmr_diverse_batched", oracle=_mmr_oracle(8))
-def select_mmr_diverse_batched(spark: SparkSession, sf: str) -> DataFrame:
-    """The batched MMR fast path under the SAME oracle as the
-    sequential form: adding picks only LOWERS an mmr score, so the
-    p-th collected score is an UPPER bound on every out-of-list point
-    — driver-side admission re-verifies each candidate against the
-    batch's earlier admits and stops at that bound (the exact mirror
-    of select_kcenter_coreset_batched's lower-bound rule), making the
-    trajectory bit-identical in ~k/p corpus passes."""
-    from graphdbetl_spark.operators.coreset import mmr_select
-
-    return mmr_select(
-        T(spark, sf, "embeddings"), "vec_id", "embedding", k=8, batch_p=4
-    )

@@ -113,19 +113,22 @@ def test_pca_fit_without_vectors_raises_value_error(spark):
         pca_fit(e.limit(0))
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "select_kcenter_coreset",
-        "select_kcenter_coreset_batched",
-        "select_mmr_diverse",
-        "select_mmr_diverse_batched",
-    ],
-)
+@pytest.mark.parametrize("name", ["select_kcenter_coreset", "select_mmr_diverse"])
 def test_selection_on_empty_embeddings_matches_oracle(spark, tmp_path, name):
     """An empty corpus selects nothing: no seed row, no rounds."""
     want, got = _answers_on(spark, tmp_path, name, ["embeddings"])
     assert want == []
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "name, picks", [("select_kcenter_coreset", 1), ("select_mmr_diverse", 0)]
+)
+def test_selection_on_one_row_embeddings_matches_oracle(spark, tmp_path, name, picks):
+    """One vector: k-center selects it as the seed with a NULL radius;
+    MMR takes it as the query, which is never a candidate."""
+    want, got = _answers_on(spark, tmp_path, name, ["embeddings"], rows=1)
+    assert len(want) == picks
     assert got == want
 
 

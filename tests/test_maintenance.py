@@ -5,7 +5,6 @@ partition overwrite."""
 import glob
 
 import pyarrow.parquet as pq
-import pyspark.sql.functions as F
 
 from graphdbetl_spark.etl.maintenance import write_zordered
 

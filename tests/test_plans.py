@@ -443,11 +443,14 @@ def test_package_has_one_implementation_per_operator_family():
     pass-through wrapper, the raw-frame centroid sample, the lookaround
     subword count and the persisted bigram LM. Each operator family has
     the one implementation the registry serves, and ``operators/sketch.py``
-    hashes with md5 only."""
+    hashes with md5 only. The greedy selections have one round loop:
+    no ``batch_p`` parameter in ``operators/coreset.py``, and neither
+    the ``_batched`` twins nor the hyperplane-blocking alias is served."""
     import ast
     from pathlib import Path
 
     import graphdbetl_spark
+    from graphdbetl_spark.plans.registry import all_queries
 
     deleted = {
         "ivf_cosine_topk", "ivf_build_index", "ivf_query", "lsh_cosine_topk",
@@ -460,7 +463,7 @@ def test_package_has_one_implementation_per_operator_family():
         "bigram_lm_persist", "bigram_lm_score",
     }
     root = Path(graphdbetl_spark.__file__).parent
-    ml, defined, xxhash = [], [], []
+    ml, defined, xxhash, batch_p = [], [], [], []
 
     def walk(node, rel, owner):
         for child in ast.iter_child_nodes(node):
@@ -472,6 +475,9 @@ def test_package_has_one_implementation_per_operator_family():
             if isinstance(child, ast.Name) and isinstance(child.ctx, ast.Store):
                 if child.id in deleted:
                     defined.append(f"{rel}:{child.lineno} {child.id}")
+            if rel == "operators/coreset.py" and isinstance(child, ast.arg):
+                if child.arg == "batch_p":
+                    batch_p.append(f"{owner}:{child.lineno}")
             if rel == "operators/sketch.py" and isinstance(child, ast.Call):
                 fn = child.func
                 if getattr(fn, "attr", getattr(fn, "id", None)) == "xxhash64":
@@ -491,6 +497,12 @@ def test_package_has_one_implementation_per_operator_family():
         walk(ast.parse(path.read_text(), str(path)), rel, None)
     assert defined == []
     assert xxhash == []
+    assert batch_p == []
+    assert not {
+        "select_kcenter_coreset_batched",
+        "select_mmr_diverse_batched",
+        "dedup_embedding_lsh_blocked",
+    } & set(all_queries())
     assert ml == [("operators/similarity.py", "_unit_vectors")] * 2
 
 

@@ -1,5 +1,5 @@
-"""Round-8 hardening: batched k-center (exact-parity fast path),
-zero-norm fail-fast, and compact_plan schema/type consistency."""
+"""Round-8 hardening: selection zero-norm fail-fast and greedy MMR
+semantics, and compact_plan schema/type consistency."""
 
 import pytest
 
@@ -15,28 +15,6 @@ def _toy_corpus(spark, n=48, d=4):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_kcenter_batch_matches_sequential(spark):
-    """batch_p collapses passes but must reproduce the sequential
-    trajectory BIT-FOR-BIT (same centers, same radii, same order) —
-    the provably-safe admission rule, not an approximation."""
-    emb = _toy_corpus(spark)
-    seq = kcenter_select(emb, k=12).collect()
-    for p in (3, 4, 8, 64):
-        bat = kcenter_select(emb, k=12, batch_p=p).collect()
-        assert [tuple(r) for r in bat] == [tuple(r) for r in seq], f"p={p}"
-
-
-def test_kcenter_batch_short_list_finishes_driver_side(spark):
-    """When a pass returns fewer than p rows the candidate list is the
-    whole remaining corpus — the trajectory must finish exactly (and
-    end early when k exceeds the corpus), with no bound to respect."""
-    emb = _toy_corpus(spark, n=5)
-    seq = kcenter_select(emb, k=9).collect()
-    bat = kcenter_select(emb, k=9, batch_p=16).collect()
-    assert [tuple(r) for r in bat] == [tuple(r) for r in seq]
-    assert len(bat) == 5
 
 
 def test_kcenter_zero_norm_fails_fast(spark):
@@ -110,19 +88,6 @@ def test_compact_plan_empty_schema_matches_nonempty(spark):
     assert full.count() == 1
     # and the two genuinely union (the downstream shape that broke)
     assert empty.unionByName(full).count() == 1
-
-
-def test_mmr_batch_matches_sequential(spark):
-    """MMR batch admission (upper-bound rule, the mirror of
-    k-center's) must reproduce the sequential trajectory bit-for-bit."""
-    from graphdbetl_spark.operators.coreset import mmr_select
-
-    emb = _toy_corpus(spark)
-    seq = mmr_select(emb, k=12).collect()
-    assert len(seq) == 12
-    for p in (3, 4, 8, 64):
-        bat = mmr_select(emb, k=12, batch_p=p).collect()
-        assert [tuple(r) for r in bat] == [tuple(r) for r in seq], f"p={p}"
 
 
 def test_mmr_greedy_semantics(spark):

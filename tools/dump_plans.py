@@ -15,8 +15,10 @@ cover the whole registry).
 
 ``diff OUT_SUBDIR`` compares the two tags' files pair by pair after
 normalizing the session-global counters (expression ids ``#12L``,
-``plan_id=7``, ``RDD[42]``, lambda variables ``x_540``) and prints the
-entries whose plans differ, so a plan-identity claim is one command.
+``plan_id=7``, ``RDD[42]``, lambda variables ``x_540``) and the
+per-process scratch directory names (``graft_<prefix>_<random>``) and
+prints the entries whose plans differ, so a plan-identity claim is one
+command.
 
 Usage: SPARK_GRAFT_SF_DIR=DIR python tools/dump_plans.py OUT_SUBDIR TAG [NAME...|ALL]
        (TAG = before|after)
@@ -39,9 +41,7 @@ from graphdbetl_spark.session import get_spark
 # entries whose per-round job plan is the real evidence
 ITERATIVE = {
     "select_kcenter_coreset",
-    "select_kcenter_coreset_batched",
     "select_mmr_diverse",
-    "select_mmr_diverse_batched",
     "train_quality_classifier",
 }
 
@@ -59,6 +59,8 @@ COUNTERS = [
     (re.compile(r"RDD\[[0-9]+\]"), "RDD[N]"),
     # pyspark names each lambda variable from one process-wide counter
     (re.compile(r"(lambda [A-Za-z]+)_[0-9]+"), r"\1_N"),
+    # write-then-read-back entries stage under a per-process temp dir
+    (re.compile(r"graft_[a-z0-9_]+"), "graft_X"),
 ]
 
 

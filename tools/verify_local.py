@@ -3,8 +3,10 @@
 Runs every ``queries()`` entry on Spark and, where an oracle exists,
 the oracle SQL on DuckDB over the same parquet tables; compares row
 count, column names, and an order-insensitive value hash (values
-normalized to strings, rows sorted). Approximations of the real
-driver, conservative on purpose.
+normalized to strings, rows sorted). PASS and rows-only lines carry
+the entry's value hash and a mismatch FAIL carries both, so results
+can be compared across commits from the output alone. Approximations
+of the real driver, conservative on purpose.
 
 Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
@@ -83,7 +85,8 @@ def main() -> int:
             continue
         if name not in oracles:
             n_rows_only += 1
-            print(f"rows  {name}: {len(srows)} rows ({time.time()-t0:.1f}s) [no oracle]")
+            sn, sh = table_hash(srows, scols)
+            print(f"rows  {name}: {sn} rows {sh} ({time.time()-t0:.1f}s) [no oracle]")
             continue
         try:
             res = con.execute(oracles[name])
@@ -99,7 +102,7 @@ def main() -> int:
         ok_cols = sorted(scols) == sorted(ocols)
         if sn == on and sh == oh and ok_cols:
             n_pass += 1
-            print(f"PASS  {name}: {sn} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS  {name}: {sn} rows {sh} ({time.time()-t0:.1f}s)")
         else:
             n_fail += 1
             failures.append(name)
