@@ -106,11 +106,10 @@ HEADLINE = [
     # shares the Jaccard candidate core, benched cold.
     "dedup_containment",
     # r9 additions: IVF-cell-restricted semantic decontamination (the
-    # eval-grows-with-corpus scale path), CCNet perplexity terciles,
-    # and bottom-k-screened containment — benched cold.
+    # eval-grows-with-corpus scale path) and CCNet perplexity terciles
+    # — benched cold.
     "decontaminate_semantic_ivf",
     "curation_ccnet_buckets",
-    "dedup_containment_screened",
     # r10 addition: HLL two-hop reach with in-plan error-bound
     # attestation — benched cold like every new family.
     "graph_two_hop_approx",

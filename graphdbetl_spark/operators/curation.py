@@ -32,7 +32,6 @@ def decontaminate_against_eval(
     id_col: str,
     eval_df: DataFrame,
     n: int = 5,
-    force_broadcast: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: flag every candidate-training document
     that shares at least one word ``n``-gram with any document in
@@ -48,20 +47,17 @@ def decontaminate_against_eval(
     false-positive rate of ~|eval|·|corpus|/2^64, vanishing against the
     filter's own n-gram-overlap noise.
 
-    The broadcast is ADAPTIVE by default: AQE broadcasts the eval-gram
-    set when its measured size allows and falls back to a shuffle
-    semi-join when it doesn't — a forced broadcast measured 36× wall at
-    30× corpus on the synthetic benchmark (whose eval split grows with
-    the corpus) and is a driver-OOM hazard whenever the eval side isn't
-    actually small. ``force_broadcast=True`` restores the hint for the
-    production case of a fixed, known-small benchmark suite.
+    The broadcast is ADAPTIVE: AQE broadcasts the eval-gram set when
+    its measured size allows and falls back to a shuffle semi-join when
+    it doesn't — a forced broadcast measured 36× wall at 30× corpus on
+    the synthetic benchmark (whose eval split grows with the corpus)
+    and is a driver-OOM hazard whenever the eval side isn't actually
+    small.
 
     Returns (id_col, contaminated: boolean) for candidate documents.
     """
     grams = F.array_distinct(_word_ngram_hashes(_tokens(F.col(text_col)), n))
     eval_grams = eval_df.select(F.explode(grams).alias("gfp")).distinct()
-    if force_broadcast:
-        eval_grams = F.broadcast(eval_grams)
     doc_grams = fan(df, id_col).select(
         F.col(id_col), F.explode(grams).alias("gfp")
     )

@@ -330,7 +330,7 @@ def ngram_jaccard_pairs(
     return shared.select("id_a", "id_b", jacc).filter(F.col("jaccard") >= threshold)
 
 
-def _capped_gram_slim(
+def _capped_gram_index(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -338,11 +338,29 @@ def _capped_gram_slim(
     block_cols: list[str] | None,
     max_gram_df: int | None,
 ) -> DataFrame:
-    """The post-cap exploded gram index WITHOUT the per-doc count
-    window: (id, [blocks], gh). Factored out of
-    :func:`_capped_gram_index` for consumers that derive per-doc
-    counts from a grouped-array form instead (the screened containment
-    path) — the window is an index-wide sort they never need."""
+    """The post-cap exploded gram index shared by every exact n-gram
+    pair measure: (id, [blocks], gh, gram_count) — distinct n-grams
+    per doc FINGERPRINTED to a 60-bit md5 integer in the scan stage
+    (engine-portable: the oracle computes the identical
+    ``('0x' || substr(md5(gram), 1, 15))::BIGINT``), stop-grams
+    (document frequency > cap) removed, per-doc post-cap set size
+    attached. Gram STRINGS never leave the scan: carrying them
+    through the materialized index and the self-join GC-thrashed the
+    8 g heap at the 30× replica (stage-level GCLocker stalls — ~70 s
+    where the hashed index runs the same plan in a fraction; strings
+    were also the sort keys). Fingerprint equality stands in for gram
+    equality on BOTH engines identically, so results replay bit-for-
+    bit; collisions are the usual ~|grams|²/2⁶¹ and shared by the
+    oracle. The slim (id, gh) explode is MATERIALIZED once, EAGERLY
+    (localCheckpoint in its own job, body comment): with lazy
+    materialization the checkpoint builds INSIDE the first consuming
+    job, where a self-join's two sides race to compute-and-persist
+    the same partitions concurrently (measured ~70 s at the 30×
+    replica vs ~16 s materialized-first — GCLocker stalls from the
+    duplicated in-flight state). The cap anti-join + per-doc window
+    re-derive lazily from that checkpoint per consumer (fixed-width
+    longs — seconds); a second resident copy of the full index
+    doubled heap pressure under the 8 g default."""
     grams = F.array_distinct(_word_ngrams(_tokens(F.col(text_col)), n))
     base_cols = [F.col(id_col), grams.alias("grams")] + [F.col(c) for c in (block_cols or [])]
     # tokenize+explode is the CPU of the whole family and small test
@@ -375,41 +393,6 @@ def _capped_gram_slim(
             .select("gh")
         )
         ex = ex.join(F.broadcast(common), "gh", "left_anti")
-    return ex
-
-
-def _capped_gram_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    block_cols: list[str] | None,
-    max_gram_df: int | None,
-) -> DataFrame:
-    """The post-cap exploded gram index shared by every exact n-gram
-    pair measure: (id, [blocks], gh, gram_count) — distinct n-grams
-    per doc FINGERPRINTED to a 60-bit md5 integer in the scan stage
-    (engine-portable: the oracle computes the identical
-    ``('0x' || substr(md5(gram), 1, 15))::BIGINT``), stop-grams
-    (document frequency > cap) removed, per-doc post-cap set size
-    attached. Gram STRINGS never leave the scan: carrying them
-    through the materialized index and the self-join GC-thrashed the
-    8 g heap at the 30× replica (stage-level GCLocker stalls — ~70 s
-    where the hashed index runs the same plan in a fraction; strings
-    were also the sort keys). Fingerprint equality stands in for gram
-    equality on BOTH engines identically, so results replay bit-for-
-    bit; collisions are the usual ~|grams|²/2⁶¹ and shared by the
-    oracle. The slim (id, gh) explode is MATERIALIZED once, EAGERLY
-    (localCheckpoint in its own job, body comment): with lazy
-    materialization the checkpoint builds INSIDE the first consuming
-    job, where a self-join's two sides race to compute-and-persist
-    the same partitions concurrently (measured ~70 s at the 30×
-    replica vs ~16 s materialized-first — GCLocker stalls from the
-    duplicated in-flight state). The cap anti-join + per-doc window
-    re-derive lazily from that checkpoint per consumer (fixed-width
-    longs — seconds); a second resident copy of the full index
-    doubled heap pressure under the 8 g default."""
-    ex = _capped_gram_slim(df, text_col, id_col, n, block_cols, max_gram_df)
     # post-cap set size per doc (== size(grams) when nothing is capped);
     # window over the uniform doc-id key, not a second join. NOT
     # checkpointed again: the anti-join + window re-derive from the
@@ -483,163 +466,6 @@ def ngram_containment_pairs(
     """
     shared = _ngram_shared_counts(df, text_col, id_col, n, block_cols, max_gram_df)
     # tie (equal sizes) orients to id_a, which is < id_b by the join
-    smaller_is_a = F.col("count_a") <= F.col("count_b")
-    cont = (F.col("shared") / F.least("count_a", "count_b")).alias("containment")
-    return (
-        shared.select(
-            F.when(smaller_is_a, F.col("id_a")).otherwise(F.col("id_b")).alias("contained_id"),
-            F.when(smaller_is_a, F.col("id_b")).otherwise(F.col("id_a")).alias("container_id"),
-            cont,
-        )
-        .filter(F.col("containment") >= threshold)
-    )
-
-
-def containment_screened_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    sample_k: int = 16,
-    block_cols: list[str] | None = None,
-    max_gram_df: int | None = 10_000,
-) -> DataFrame:
-    """Containment pairs via a BOTTOM-K GRAM-SAMPLE screen.
-    MinHash-LSH is the WRONG screen here: banded minhash recalls by
-    JACCARD, and the sub-document pairs containment exists to catch
-    (500 grams inside 50k) sit at Jaccard ~0.01 — exactly what LSH is
-    tuned to drop.
-
-    MEASURED NEGATIVE RESULT (r10, BASELINE.md "r10: containment
-    screen verdict"): this screen was built as the scale path for
-    :func:`ngram_containment_pairs` on the theory that the exact
-    form's Σ_gram df² join volume is the wall. Measured min-of-3 at
-    FOUR corpus shapes — sf0.1 (52-gram docs), the 30×/100× replicas,
-    a 3000-gram long-doc fixture, and a 150-clone big-group fixture
-    whose exact join volume is 670M rows — the exact form wins or
-    ties EVERYWHERE (e.g. 16.5 s vs 31.4 s at 30×; 28.3 s vs 45.9 s
-    at big-clone). The reason: sort-merge join + map-side partial
-    aggregation amortizes exact's per-pair-row cost to ~15 ns, while
-    ANY per-pair verify re-touches each doc's gram set once per pair
-    (array re-shuffle + per-row hash-set build) and cannot beat that
-    constant. The screen's probe-volume reduction (k/avg_grams) is
-    real but buys nothing because candidate generation was never the
-    binding term. `dedup_containment` (exact) IS the scale path;
-    this form is retained as the attested negative result and for
-    the screen machinery itself (deterministic bottom-k sampling,
-    oracle-replayed).
-
-    Screen: each document contributes only its ``sample_k``
-    smallest-by-md5 post-cap grams to the probe side of the index
-    join (a deterministic bottom-k sample — uniform over the doc's
-    grams, identical in any md5-capable engine); the build side is
-    the full index. A pair is a candidate iff some sampled gram of
-    one side appears in the other. For a true containment pair at
-    threshold c, each sampled gram of the contained doc lies in the
-    container with probability ≥ c, so the miss probability is
-    ≤ (1−c)^k — at c=0.5, k=16 that is ~1.5e-5, and the screen is
-    DETERMINISTIC, so the oracle replays the exact candidate set and
-    the driver hash still matches bit-for-bit (approximation without
-    attestation loss, the sim_ivf_topk discipline).
-
-    Verify: per-doc GRAM ARRAYS, not index joins. Candidates
-    (distinct, id_a < id_b) join the grouped one-row-per-doc form on
-    each side and the shared count is ``size(array_intersect)`` — so
-    the verify moves |cand| rows (the r9 shipped form joined
-    candidates back to the FULL index, materializing |cand|·avg_grams
-    rows ≈ 188M at the 30× replica, 7× the exact form's whole Σ df²
-    join volume — measured 39.5 s vs 18.3 s exact; the screen's probe
-    reduction was being erased by a verify that re-expanded every
-    candidate to gram granularity). The grouped form also yields the
-    bottom-k sample in-row (array_sort + slice — no index-wide window
-    sort) and the per-doc count (size — no count window), collapsing
-    the old 4-consumer checkpoint to one doc-sized materialization.
-    """
-    blocks = [F.col(c) for c in (block_cols or [])]
-    ex = _capped_gram_slim(df, text_col, id_col, n, block_cols, max_gram_df)
-    # One row per doc: post-cap gram set + deterministic bottom-k
-    # sample, sorted by (60-bit md5('cs:'||gh) fingerprint, gh) — the
-    # same engine-portable numeric key discipline as gh itself, so the
-    # oracle replays the sample with the identical expression. Numeric,
-    # not the 32-char md5 STRING: the sort key rides the collect_list
-    # shuffle, and 16 bytes/gram vs ~50 cut the garr build ~3× at the
-    # 30× replica. Doc-sized (~avg_grams longs per row) — materialized
-    # once, consumed three times (sample explode + both verify sides).
-    key = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("cs:"), F.col("gh").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    garr = (
-        ex.select(id_col, *(block_cols or []), F.col("gh"), key.alias("__k"))
-        .groupBy(id_col, *(block_cols or []))
-        .agg(F.array_sort(F.collect_list(F.struct("__k", "gh"))).alias("__kg"))
-        .select(
-            F.col(id_col),
-            *(block_cols or []),
-            F.col("__kg").getField("gh").alias("__ghs"),
-            F.transform(
-                F.slice("__kg", 1, sample_k), lambda s: s["gh"]
-            ).alias("__sample"),
-            F.size("__kg").alias("gram_count"),
-        )
-    )
-    # size-conditional: same rationale as _capped_gram_slim — the
-    # doc-sized materialization is the scale device; at tiny scale the
-    # three consumers recompute the deterministic grouped form cheaper
-    # than the checkpoint job costs.
-    garr = checkpoint_if_scaled(garr, size_of=df)
-    s = garr.select(
-        F.col(id_col).alias("__sid"),
-        *(F.col(c).alias(f"__s_{c}") for c in (block_cols or [])),
-        F.explode("__sample").alias("__sgh"),
-    )
-    # probe the full post-cap index with the samples; build the
-    # SAMPLE side (k/doc — the smaller side by construction, and
-    # shuffle-hash avoids sorting the corpus-sized index by gram)
-    b = ex.alias("b")
-    cond = (F.col("__sgh") == F.col("b.gh")) & (
-        F.col("__sid") != F.col(f"b.{id_col}")
-    )
-    for c in block_cols or []:
-        cond = cond & (F.col(f"__s_{c}") == F.col(f"b.{c}"))
-    cand = (
-        s.hint("shuffle_hash").join(b, cond)
-        .select(
-            F.least(F.col("__sid"), F.col(f"b.{id_col}")).alias("id_a"),
-            F.greatest(F.col("__sid"), F.col(f"b.{id_col}")).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # verify joins need no block predicates: a doc's garr row carries
-    # its single block value, so matching on the doc id pins the block.
-    # shuffle-hash with garr as build side: garr is one row per doc;
-    # cand must never broadcast (AQE promoted a 1 GB broadcast of the
-    # 100× candidate set and OOM'd the driver in the r8 exact form).
-    ga = garr.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__ghs").alias("__ga"),
-        F.col("gram_count").alias("count_a"),
-    )
-    gb = garr.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__ghs").alias("__gb"),
-        F.col("gram_count").alias("count_b"),
-    )
-    shared = (
-        cand.join(ga.hint("shuffle_hash"), "id_a")
-        .join(gb.hint("shuffle_hash"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "count_a",
-            "count_b",
-            F.size(F.array_intersect("__ga", "__gb")).cast("long").alias("shared"),
-        )
-    )
     smaller_is_a = F.col("count_a") <= F.col("count_b")
     cont = (F.col("shared") / F.least("count_a", "count_b")).alias("containment")
     return (

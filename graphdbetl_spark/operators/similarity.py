@@ -545,12 +545,11 @@ def ivf_assign_cells_md5(
     u: DataFrame,
     id_col: str,
     cents,  # DataFrame(cell, centroid) or list[(cell, centroid)]
+    vec_col: str,
     passthrough: bool = False,
-    vec_col: str = "__unit",
-    normalize: bool = False,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Assign every unit vector to its max-dot centroid (ties to the
+    """Assign every vector to its max-dot centroid (ties to the
     lowest cell id). Returns (id, cell), or (id, __unit, cell) with
     ``passthrough`` — which spares the caller a corpus-sized self-join
     to re-attach the vectors (sim_ivf_topk's shape). ``keep`` carries
@@ -563,9 +562,9 @@ def ivf_assign_cells_md5(
     lambda folds cost ~2 µs per element (SCALING.md r2 lesson), and
     |corpus|·n_cells 64-element dots put the DataFrame form at 55.7 s
     for 1.6M dots on the 100× replica — numpy does the identical
-    arithmetic per Arrow batch in under a second. With ``normalize``
-    the kernel also unit-normalizes the raw ``vec_col`` itself,
-    removing the OTHER interpreted hot pass: a JVM
+    arithmetic per Arrow batch in under a second. The kernel also
+    unit-normalizes the raw ``vec_col`` itself, removing the OTHER
+    interpreted hot pass: a JVM
     ``transform(x -> x / fold-norm)`` over a wide corpus re-evaluates
     its argument tree per element once CollapseProject inlines the
     scan projection into the lambda (measured 26–29 s per 200k × 64
@@ -600,8 +599,7 @@ def ivf_assign_cells_md5(
             if rb.num_rows == 0:
                 continue
             v = arrow_matrix(rb, vec_col, width=cm.shape[1])
-            if normalize:
-                v = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
+            v = v / np.sqrt(seq_sum(v * v, axis=1))[:, None]
             cell = pa.array(cells[np.argmax(fold_dots(v, cm), axis=1)])
             yield pa.RecordBatch.from_arrays(
                 [
@@ -676,7 +674,7 @@ def ivf_cosine_topk_md5(
     cents = corpus.sparkSession.createDataFrame(
         cent_list, schema="cell int, centroid array<double>"
     )
-    # normalize=True keeps the corpus-wide unit pass inside the kernel;
+    # the assign kernel does the corpus-wide unit pass itself;
     # passthrough carries __unit through the assignment, sparing a
     # corpus-sized self-join to re-attach the vectors; the assign
     # kernel takes the driver-side list (no LocalRelation re-collect)
@@ -686,7 +684,6 @@ def ivf_cosine_topk_md5(
         cent_list,
         passthrough=True,
         vec_col=vec_col,
-        normalize=True,
     ).select(F.col(id_col).alias("neighbor_id"), F.col("__unit").alias("__cv"), "cell")
     probed = _probe_cells_md5(queries, vec_col, id_col, cents, n_probe)
     w = Window.partitionBy("query_id").orderBy(F.col("__s").desc(), F.col("neighbor_id"))
@@ -836,7 +833,6 @@ def ivfpq_cosine_topk_md5(
         id_col,
         cent_list,
         vec_col=vec_col,
-        normalize=True,
     )
     codes, codebooks = pq_build_codebooks_md5(
         corpus, id_col, vec_col, dim, m, k_codes, seed
@@ -1295,7 +1291,6 @@ def ivf_append_report(
         id_col,
         cent_list,
         vec_col=vec_col,
-        normalize=True,
         keep=("__new",),
     )
     c = tagged.groupBy("cell").agg(

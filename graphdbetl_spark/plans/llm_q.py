@@ -324,11 +324,14 @@ def dedup_simhash_md5(spark: SparkSession, sf: str) -> DataFrame:
     return simhash_fingerprints_md5(T(spark, sf, "documents"), "text", "doc_id")
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle="""
-    WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
-               FROM documents),
+def _gram_index_ctes(src: str = "documents") -> str:
+    """The exact gram index the n-gram pair oracles replay, as the CTE
+    chain ``t, g, e0, eh, gdf, e`` over ``src`` (no leading WITH):
+    whitespace tokens, distinct 3-grams, the 60-bit md5 fingerprint
+    ``gh``, the df > 10 000 stop-gram cap and the per-doc post-cap count
+    ``gc`` — operators/dedup.py _capped_gram_index on DuckDB."""
+    return f"""t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
+               FROM {src}),
     g AS (SELECT doc_id, lang,
             list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
@@ -338,13 +341,40 @@ def dedup_simhash_md5(spark: SparkSession, sf: str) -> DataFrame:
                   ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
     gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
     e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf)),
-    shared AS (
+          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf))"""
+
+
+# lang-blocked shared-gram counts per pair (_ngram_shared_counts)
+_GRAM_SHARED_CTE = """shared AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gc AS ca, b.gc AS cb,
                CAST(COUNT(*) AS BIGINT) AS shared
         FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
                          AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, 3, 4)
+        GROUP BY 1, 2, 3, 4)"""
+
+# the Jaccard >= 0.1 pair graph and its reachability closure, shared by
+# the two cluster oracles (ngram_jaccard_pairs -> connected_components)
+_JACCARD_REACH_CTES = f"""WITH RECURSIVE pairs AS (
+        WITH {_gram_index_ctes()}
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
+                         AND a.doc_id < b.doc_id
+        GROUP BY 1, 2, a.gc, b.gc
+        HAVING COUNT(*)::DOUBLE / (a.gc + b.gc - COUNT(*)) >= 0.1
+    ), sym AS (
+        SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs
+    ), reach(id, root) AS (
+        SELECT a, a FROM sym
+        UNION
+        SELECT s.b, r.root FROM reach r JOIN sym s ON s.a = r.id
+    )"""
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=f"""
+    WITH {_gram_index_ctes()},
+    {_GRAM_SHARED_CTE}
     SELECT id_a, id_b, ROUND(shared::DOUBLE / (ca + cb - shared), 6) AS jaccard
     FROM shared WHERE shared::DOUBLE / (ca + cb - shared) >= 0.1
     """,
@@ -361,25 +391,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "dedup_containment",
-    oracle="""
-    WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
-               FROM documents),
-    g AS (SELECT doc_id, lang,
-            list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-          FROM t),
-    e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-    eh AS (SELECT doc_id, lang,
-                  ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-    gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-    e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf)),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gc AS ca, b.gc AS cb,
-               CAST(COUNT(*) AS BIGINT) AS shared
-        FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
-                         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, 3, 4)
+    oracle=f"""
+    WITH {_gram_index_ctes()},
+    {_GRAM_SHARED_CTE}
     SELECT CASE WHEN ca <= cb THEN id_a ELSE id_b END AS contained_id,
            CASE WHEN ca <= cb THEN id_b ELSE id_a END AS container_id,
            ROUND(shared::DOUBLE / LEAST(ca, cb), 6) AS containment
@@ -406,70 +420,8 @@ def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @query(
-    "dedup_containment_screened",
-    oracle="""
-    WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
-               FROM documents),
-    g AS (SELECT doc_id, lang,
-            list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-          FROM t),
-    e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-    eh AS (SELECT doc_id, lang,
-                  ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-    gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-    e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf)),
-    sm AS (SELECT doc_id, lang, gh,
-                  row_number() OVER (PARTITION BY doc_id, lang
-                                     ORDER BY ('0x' || substr(md5('cs:' || CAST(gh AS VARCHAR)), 1, 15))::BIGINT, gh) AS rk
-           FROM e),
-    sampled AS (SELECT doc_id, lang, gh FROM sm WHERE rk <= 16),
-    cand AS (SELECT DISTINCT LEAST(s.doc_id, b.doc_id) AS id_a,
-                    GREATEST(s.doc_id, b.doc_id) AS id_b
-             FROM sampled s JOIN e b ON s.gh = b.gh AND s.lang = b.lang
-                                    AND s.doc_id <> b.doc_id),
-    shared AS (
-        SELECT c.id_a, c.id_b, ga.gc AS ca, gb.gc AS cb,
-               CAST(COUNT(*) AS BIGINT) AS shared
-        FROM cand c
-        JOIN e ga ON ga.doc_id = c.id_a
-        JOIN e gb ON gb.doc_id = c.id_b AND gb.gh = ga.gh
-        GROUP BY 1, 2, 3, 4)
-    SELECT CASE WHEN ca <= cb THEN id_a ELSE id_b END AS contained_id,
-           CASE WHEN ca <= cb THEN id_b ELSE id_a END AS container_id,
-           ROUND(shared::DOUBLE / LEAST(ca, cb), 6) AS containment
-    FROM shared WHERE shared::DOUBLE / LEAST(ca, cb) >= 0.5
-    """,
-)
-def dedup_containment_screened(spark: SparkSession, sf: str) -> DataFrame:
-    """Containment via the bottom-k gram-sample screen. Each doc
-    probes the index with only its 16 smallest-by-md5-key grams; a
-    threshold-0.5 pair's miss probability is ≤ 0.5^16 ≈ 1.5e-5 per
-    pair AND the sample is deterministic, so the oracle replays the
-    exact candidate set (screen + verify both attested — the
-    sim_ivf_topk discipline). MinHash-LSH is NOT the screen here: it
-    recalls by Jaccard, and sub-document containment pairs sit at
-    Jaccard ~0.01 by construction. MEASURED at four corpus shapes in
-    r10 the exact `dedup_containment` wins everywhere — that exact
-    form is the scale path; this entry stays as the attested negative
-    result (BASELINE.md "r10: containment screen verdict"). See
-    operators/dedup.py containment_screened_pairs."""
-    from graphdbetl_spark.operators.dedup import containment_screened_pairs
-
-    out = containment_screened_pairs(
-        T(spark, sf, "documents"), "text", "doc_id", n=3, threshold=0.5,
-        sample_k=16, block_cols=["lang"],
-    )
-    return out.select(
-        "contained_id", "container_id",
-        F.round("containment", 6).alias("containment"),
-    )
-
-
-@query(
     "dedup_containment_collapsed",
-    oracle=r"""
+    oracle=rf"""
     WITH corpus AS (
         SELECT doc_id, lang, text FROM documents
         UNION ALL
@@ -488,24 +440,8 @@ def dedup_containment_screened(spark: SparkSession, sf: str) -> DataFrame:
     ), surv AS (
         SELECT c.doc_id, c.lang, c.text
         FROM corpus c JOIN grp ON grp.keep_id = c.doc_id
-    ), t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks
-             FROM surv),
-    g AS (SELECT doc_id, lang,
-            list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-          FROM t),
-    e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-    eh AS (SELECT doc_id, lang,
-                  ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-    gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-    e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf)),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gc AS ca, b.gc AS cb,
-               CAST(COUNT(*) AS BIGINT) AS shared
-        FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
-                         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, 3, 4),
+    ), {_gram_index_ctes("surv")},
+    {_GRAM_SHARED_CTE},
     pairs AS (
         SELECT CASE WHEN ca <= cb THEN id_a ELSE id_b END AS contained_id,
                CASE WHEN ca <= cb THEN id_b ELSE id_a END AS container_id,
@@ -906,7 +842,7 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "dedup_keep_list",
-    oracle="""
+    oracle=f"""
     WITH keepx AS (
         SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY sha256(text)
     ),
@@ -914,17 +850,7 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf: str) -> DataFrame:
         SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM keepx)
     ),
     surv AS (SELECT * FROM documents WHERE doc_id IN (SELECT doc_id FROM keepx)),
-    t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks FROM surv),
-    g AS (SELECT doc_id, lang,
-            list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-          FROM t),
-    e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-    eh AS (SELECT doc_id, lang,
-                  ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-    gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-    e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-          FROM eh WHERE gh NOT IN (SELECT gh FROM gdf)),
+    {_gram_index_ctes("surv")},
     pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gc AS ca, b.gc AS cb,
                COUNT(*) AS shared
@@ -955,32 +881,8 @@ def dedup_keep_list_q(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "dedup_cluster_components",
-    oracle="""
-    WITH RECURSIVE pairs AS (
-        WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
-                   FROM documents),
-        g AS (SELECT doc_id, lang,
-                list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-              FROM t),
-        e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-        eh AS (SELECT doc_id, lang,
-                      ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-        gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-        e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-              FROM eh WHERE gh NOT IN (SELECT gh FROM gdf))
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
-                         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, a.gc, b.gc
-        HAVING COUNT(*)::DOUBLE / (a.gc + b.gc - COUNT(*)) >= 0.1
-    ), sym AS (
-        SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs
-    ), reach(id, root) AS (
-        SELECT a, a FROM sym
-        UNION
-        SELECT s.b, r.root FROM reach r JOIN sym s ON s.a = r.id
-    )
+    oracle=f"""
+    {_JACCARD_REACH_CTES}
     SELECT id, CAST(MIN(root) AS BIGINT) AS component FROM reach GROUP BY id
     """,
 )
@@ -2612,32 +2514,8 @@ def dedup_video_signature(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "dedup_cluster_keep_best",
-    oracle="""
-    WITH RECURSIVE pairs AS (
-        WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
-                   FROM documents),
-        g AS (SELECT doc_id, lang,
-                list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS grams
-              FROM t),
-        e0 AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-        eh AS (SELECT doc_id, lang,
-                      ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh FROM e0),
-        gdf AS (SELECT gh FROM eh GROUP BY gh HAVING COUNT(*) > 10000),
-        e AS (SELECT doc_id, lang, gh, COUNT(*) OVER (PARTITION BY doc_id) AS gc
-              FROM eh WHERE gh NOT IN (SELECT gh FROM gdf))
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM e a JOIN e b ON a.gh = b.gh AND a.lang = b.lang
-                         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, a.gc, b.gc
-        HAVING COUNT(*)::DOUBLE / (a.gc + b.gc - COUNT(*)) >= 0.1
-    ), sym AS (
-        SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs
-    ), reach(id, root) AS (
-        SELECT a, a FROM sym
-        UNION
-        SELECT s.b, r.root FROM reach r JOIN sym s ON s.a = r.id
-    ), comp AS (
+    oracle=f"""
+    {_JACCARD_REACH_CTES}, comp AS (
         SELECT id, CAST(MIN(root) AS BIGINT) AS component FROM reach GROUP BY id
     )
     SELECT d.doc_id,

@@ -27,6 +27,18 @@ def test_registry_shapes():
     assert len(oracles) >= 0.8 * len(qs)
 
 
+def test_attestation_map_matches_the_registry():
+    """COVERAGE.md's attestation map is what tools/gen_attestation.py
+    renders from the registry and the committed CORRECTNESS_r*.json
+    files: one row per entry, and the entry, oracle and driver-green
+    counts it reports are the current ones."""
+    from tools.gen_attestation import render
+
+    block = render()[0]
+    coverage = Path(__file__).resolve().parent.parent / "COVERAGE.md"
+    assert block in coverage.read_text(), "run python tools/gen_attestation.py"
+
+
 def test_all_queries_buildable_lazily(spark):
     """Every query constructs a DataFrame (plan analysis only, no
     execution) on sf0.001."""

@@ -445,7 +445,12 @@ def test_package_has_one_implementation_per_operator_family():
     the one implementation the registry serves, and ``operators/sketch.py``
     hashes with md5 only. The greedy selections have one round loop:
     no ``batch_p`` parameter in ``operators/coreset.py``, and neither
-    the ``_batched`` twins nor the hyperplane-blocking alias is served."""
+    the ``_batched`` twins nor the hyperplane-blocking alias is served.
+    The exact n-gram pair measures reach one gram index: no containment
+    screen or second gram-index entry point, and the oracles spell the
+    stop-gram cap once. ``decontaminate_against_eval`` has no
+    ``force_broadcast`` knob and ``ivf_assign_cells_md5`` no
+    ``normalize`` knob."""
     import ast
     from pathlib import Path
 
@@ -461,9 +466,14 @@ def test_package_has_one_implementation_per_operator_family():
         "compact_dataset", "zorder_rank", "pca_project",
         "md5_sampled_centroids_raw", "bpe_ish_token_count",
         "bigram_lm_persist", "bigram_lm_score",
+        "containment_screened_pairs", "_capped_gram_slim",
+    }
+    knobs = {
+        ("operators/curation.py", "decontaminate_against_eval"): "force_broadcast",
+        ("operators/similarity.py", "ivf_assign_cells_md5"): "normalize",
     }
     root = Path(graphdbetl_spark.__file__).parent
-    ml, defined, xxhash, batch_p = [], [], [], []
+    ml, defined, xxhash, batch_p, knob = [], [], [], [], []
 
     def walk(node, rel, owner):
         for child in ast.iter_child_nodes(node):
@@ -478,6 +488,8 @@ def test_package_has_one_implementation_per_operator_family():
             if rel == "operators/coreset.py" and isinstance(child, ast.arg):
                 if child.arg == "batch_p":
                     batch_p.append(f"{owner}:{child.lineno}")
+            if isinstance(child, ast.arg) and knobs.get((rel, owner)) == child.arg:
+                knob.append(f"{rel}:{owner}({child.arg})")
             if rel == "operators/sketch.py" and isinstance(child, ast.Call):
                 fn = child.func
                 if getattr(fn, "attr", getattr(fn, "id", None)) == "xxhash64":
@@ -498,11 +510,15 @@ def test_package_has_one_implementation_per_operator_family():
     assert defined == []
     assert xxhash == []
     assert batch_p == []
+    assert knob == []
     assert not {
         "select_kcenter_coreset_batched",
         "select_mmr_diverse_batched",
         "dedup_embedding_lsh_blocked",
+        "dedup_containment_screened",
     } & set(all_queries())
+    cap = "HAVING COUNT(*) > 10000"
+    assert sum(f.read_text().count(cap) for f in (root / "plans").glob("*.py")) == 1
     assert ml == [("operators/similarity.py", "_unit_vectors")] * 2
 
 

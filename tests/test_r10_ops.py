@@ -1,5 +1,5 @@
 """Round-10 operator tests: ccnet approx-cutpoint buckets (r9 verdict
-#4), screened-containment sub-document recall (r9 verdict #1), and the
+#4), exact containment's sub-document recall (r9 verdict #1), and the
 production n_cells scaling for IVF semantic decontamination (#5)."""
 
 from __future__ import annotations
@@ -80,19 +80,15 @@ def test_ccnet_approx_plan_has_no_per_language_score_sort(spark):
             assert "mean_logprob" not in line, line
 
 
-# ---------- screened containment: sub-document recall ----------
+# ---------- exact containment: sub-document recall ----------
 
 
-def test_screened_containment_recalls_embedded_subdocument(spark):
-    """The property dedup_containment_screened EXISTS for (r9 verdict
-    #1): a small doc embedded whole in a much larger one (containment
-    ~1.0, Jaccard ~0.01 — invisible to MinHash-LSH) must survive the
-    bottom-k gram-sample screen and come back at containment 1.0.
+def test_containment_recalls_embedded_subdocument(spark):
+    """The property containment exists for (r9 verdict #1): a small doc
+    embedded whole in a much larger one (containment ~1.0, Jaccard
+    ~0.01 — invisible to MinHash-LSH) comes back at containment 1.0.
     Fixture: a ~500-gram doc inside a ~50k-gram doc."""
-    from graphdbetl_spark.operators.dedup import (
-        containment_screened_pairs,
-        ngram_containment_pairs,
-    )
+    from graphdbetl_spark.operators.dedup import ngram_containment_pairs
 
     # deterministic vocabulary large enough that no gram hits the df cap
     words = [f"w{(i * 2654435761) % 99991:05d}" for i in range(50_002)]
@@ -105,19 +101,11 @@ def test_screened_containment_recalls_embedded_subdocument(spark):
     )
     got = {
         (r["contained_id"], r["container_id"]): r["containment"]
-        for r in containment_screened_pairs(
-            df, "text", "doc_id", n=3, threshold=0.5, sample_k=16
-        ).collect()
-    }
-    assert got == {(1, 2): 1.0}
-    # and the screen agrees with the exact form on this fixture
-    exact = {
-        (r["contained_id"], r["container_id"]): r["containment"]
         for r in ngram_containment_pairs(
             df, "text", "doc_id", n=3, threshold=0.5
         ).collect()
     }
-    assert got == exact
+    assert got == {(1, 2): 1.0}
 
 
 # ---------- IVF decontamination: production n_cells scaling ----------

@@ -20,7 +20,9 @@ BEGIN = "<!-- ATTESTATION-MAP:BEGIN (generated by tools/gen_attestation.py) -->"
 END = "<!-- ATTESTATION-MAP:END -->"
 
 
-def main() -> int:
+def render() -> tuple[str, int, int, int]:
+    """The attestation block for the current registry and the committed
+    CORRECTNESS_r*.json files: (block, entries, driver-green, oracles)."""
     sys.path.insert(0, str(REPO))
     import __spark_entry__ as entry
 
@@ -63,8 +65,11 @@ def main() -> int:
         "",
         END,
     ]
-    block = "\n".join(lines)
+    return "\n".join(lines), len(qs), n_green, len(oracles & set(qs))
 
+
+def main() -> int:
+    block, n_qs, n_green, n_oracles = render()
     cov = (REPO / "COVERAGE.md").read_text()
     if BEGIN in cov:
         cov = re.sub(
@@ -73,8 +78,8 @@ def main() -> int:
     else:
         cov = cov.rstrip() + "\n\n" + block + "\n"
     (REPO / "COVERAGE.md").write_text(cov)
-    print(f"attestation map: {n_green}/{len(qs)} driver-green, "
-          f"{len(qs) - len(oracles & set(qs))} without oracle")
+    print(f"attestation map: {n_green}/{n_qs} driver-green, "
+          f"{n_qs - n_oracles} without oracle")
     return 0
 
 

@@ -9,8 +9,9 @@ Each copy i > 0 gets vec_id offset by i·10M and a deterministic
 per-(copy, vector) Gaussian perturbation (numpy default_rng seeded by
 the copy index) of ~7% relative magnitude — large enough that copies
 form their own neighborhoods, small enough that the distribution
-stays comparable. Copy 0 is the original bytes, so sf0.1-level
-results embed unchanged.
+stays comparable. Copy 0 is the original values, so sf0.1-level
+results embed unchanged. ``write_embeddings`` is the one embeddings
+replication recipe; tools/gen_scaled.py writes its embeddings with it.
 
 Usage: python tools/gen_embeddings_scaled.py [out_dir] [copies]
        (default: testdata_emb1000, 1000)
@@ -29,17 +30,16 @@ SRC = "/root/testdata/sf0.1/embeddings.parquet"
 OFF = 10_000_000
 
 
-def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "testdata_emb1000"
-    copies = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
-    os.makedirs(out_dir, exist_ok=True)
-    t = pq.read_table(SRC)
+def write_embeddings(dest: str, copies: int, src: str = SRC) -> int:
+    """Write ``copies`` copies of ``src``'s embeddings to the parquet file
+    ``dest``: copy i > 0 offsets vec_id by i·OFF and adds its perturbation,
+    copy 0 keeps the original values. Returns the number of rows."""
+    t = pq.read_table(src)
     vec_id = t.column("vec_id").to_numpy()
     emb = np.array(t.column("embedding").to_pylist(), dtype=np.float32)
     label = t.column("label").to_numpy()
     scale = 0.07 * float(np.sqrt((emb.astype(np.float64) ** 2).sum(axis=1)).mean())
 
-    dest = os.path.join(out_dir, "embeddings.parquet")
     writer = None
     for i in range(copies):
         if i == 0:
@@ -59,7 +59,16 @@ def main() -> None:
         writer.write_table(batch)
     assert writer is not None
     writer.close()
-    print(f"{copies * len(vec_id)} rows -> {dest}", flush=True)
+    return copies * len(vec_id)
+
+
+def main() -> None:
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else "testdata_emb1000"
+    copies = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
+    os.makedirs(out_dir, exist_ok=True)
+    dest = os.path.join(out_dir, "embeddings.parquet")
+    rows = write_embeddings(dest, copies)
+    print(f"{rows} rows -> {dest}", flush=True)
 
 
 if __name__ == "__main__":

@@ -12,7 +12,11 @@ keeps the original), so each copy carries its own vocabulary: the
 near-dup/contamination workload scales linearly (N independent
 corpora), instead of every doc gaining 9 exact clones and the
 candidate-pair count scaling quadratically — which would measure a
-different (adversarial-clone) workload, not scale-up.
+different (adversarial-clone) workload, not scale-up. Embeddings
+follow the same rule through tools/gen_embeddings_scaled.py's
+``write_embeddings``: each copy i > 0 offsets ``vec_id`` and adds its own
+deterministic Gaussian perturbation (copy 0 keeps the original values),
+so a query's neighbours are not its own exact clones from other copies.
 
 Usage: python tools/gen_scaled.py [out_dir] [copies]   (default: testdata_sf1, 10)
 """
@@ -23,6 +27,7 @@ import os
 import sys
 
 import duckdb
+from gen_embeddings_scaled import write_embeddings
 
 SRC = "/root/testdata/sf0.1"
 OFF = 10_000_000  # > any key in sf0.1; per-copy key stride
@@ -38,7 +43,6 @@ OFFSETS: dict[str, list[str]] = {
     "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
     "events": ["event_id", "user_id"],
     "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
 }
 
 
@@ -70,6 +74,9 @@ def main() -> None:
         con.execute(f"COPY ({union}) TO '{dest}' (FORMAT PARQUET)")
         rows = con.execute(f"SELECT count(*) FROM '{dest}'").fetchone()[0]
         print(f"{table}: {rows} rows -> {dest}", flush=True)
+    dest = os.path.join(out_dir, "embeddings.parquet")
+    rows = write_embeddings(dest, copies, src=f"{SRC}/embeddings.parquet")
+    print(f"embeddings: {rows} rows -> {dest}", flush=True)
 
 
 if __name__ == "__main__":
